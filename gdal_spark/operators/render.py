@@ -14,17 +14,32 @@ Composite order: ascending image id, last writer wins (mirrors
 gdalbuildvrt default source order, apps/gdalbuildvrt_lib.cpp).
 
 Scale notes: per-tile work is bounded (<= 256*256 px x images-on-
-tile); hot tiles (many overlapping images) are the skew axis ->
-AQE skew-join splitting plus optional salting upstream. The z-1
-overview pass shuffles only rendered tile payloads (256KB/tile),
-grouped 4->1 per level, mirroring the reference's per-level barrier.
+tile), but it is Python work: decode, warp and checksum cost
+milliseconds per row while the row itself is a few KiB of payload or
+one 64 KiB band plane. AQE sizes coalesced shuffle partitions by
+bytes (max(1 MiB, shuffle bytes / defaultParallelism)), so a level
+whose shuffle is under 1 MiB becomes ONE task and one core renders
+it while the rest idle; larger levels are cut by bytes, not work. Every tile-keyed applyInPandas here therefore
+groups through `_tile_groups`, an explicit hash repartition on the
+tile keys: AQE never coalesces a repartition-by-number, and the hash
+partitioning already satisfies the groupBy, so it is still the ONE
+shuffle. The count is one partition per core, raised to one per
+PAIRS_PER_TASK covering pairs when the caller knows the level's size
+(build_pyramid counts it): each Arrow Python task pays a fixed worker
+set-up cost (~0.25 s of CPU when PySpark is imported from its zip
+archive), so small levels run best as a single wave, while large
+levels need more, smaller tasks for load balance and for committed
+files whose row groups a reader can hold. Hot tiles (many
+overlapping images) remain the skew axis. The z-1 overview pass
+shuffles only rendered band planes, grouped 4->1 per level,
+mirroring the reference's per-level barrier.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, GroupedData
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -35,6 +50,21 @@ from gdal_spark.tiles import tilemath as tm
 
 TILE = tm.TILE_SIZE
 BANDS = 3
+
+
+# (image, tile) pairs one Python task renders before a level gets more
+# tasks than cores; bounds task time and the rows of a committed file
+PAIRS_PER_TASK = 256
+
+
+def _tile_groups(df: DataFrame, keys: tuple[str, ...] = ("tile_x", "tile_y"),
+                 extra: tuple[str, ...] = (), pairs: int = 0) -> GroupedData:
+    """Group `df` by keys + extra, hash-partitioned on `keys` into one
+    partition per core, or one per PAIRS_PER_TASK of the level's
+    expected `pairs` if that is more (see Scale notes)."""
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    n = max(cores, -(-pairs // PAIRS_PER_TASK))
+    return df.repartition(n, *keys).groupBy(*keys, *extra)
 
 
 def covering_tiles(images: DataFrame, z: int) -> DataFrame:
@@ -59,8 +89,12 @@ def render_tiles(
     decode_payload: bool = False,
     sort_field: str = "i",
     ascending: bool = True,
+    pairs: int = 0,
 ) -> DataFrame:
     """Warp-composite images into 256x256x3 tile rasters at zoom z.
+
+    `pairs`, if known, is the count of covering (image, tile) pairs;
+    it sizes the tile shuffle (at least one partition per core).
 
     sort_field/ascending control composite order (last writer wins),
     the GTI mosaic SORT_FIELD / SORT_FIELD_ASC option
@@ -155,12 +189,8 @@ def render_tiles(
         cols += ["bytes", "fmt"]
     if sort_field not in cols:
         cols.append(sort_field)
-    return (
-        covering_tiles(images, z)
-        .select(*cols)
-        .groupBy("tile_x", "tile_y")
-        .applyInPandas(composite, schema)
-    )
+    tiles = covering_tiles(images, z).select(*cols)
+    return _tile_groups(tiles, pairs=pairs).applyInPandas(composite, schema)
 
 
 def render_tiles_stats(
@@ -230,12 +260,10 @@ def render_tiles_stats(
                 )
         return pd.DataFrame(recs)
 
-    return (
-        covering_tiles(images, z)
-        .select("tile_x", "tile_y", "i", "w", "h", "xmin", "ymax")
-        .groupBy("tile_x", "tile_y")
-        .applyInPandas(composite, schema)
+    tiles = covering_tiles(images, z).select(
+        "tile_x", "tile_y", "i", "w", "h", "xmin", "ymax"
     )
+    return _tile_groups(tiles).applyInPandas(composite, schema)
 
 
 UTM_RES = 30.0  # m/px of the synthetic UTM sources (Landsat-ish)
@@ -358,12 +386,10 @@ def render_tiles_utm(
             recs.append(rec)
         return pd.DataFrame(recs)
 
-    return (
-        covering_tiles(boxed, z)
-        .select("tile_x", "tile_y", "i", "w", "h", "e0", "n0")
-        .groupBy("tile_x", "tile_y")
-        .applyInPandas(composite, schema)
+    tiles = covering_tiles(boxed, z).select(
+        "tile_x", "tile_y", "i", "w", "h", "e0", "n0"
     )
+    return _tile_groups(tiles).applyInPandas(composite, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -513,12 +539,10 @@ def render_tiles_proj(
             recs.append(rec)
         return pd.DataFrame(recs)
 
-    return (
-        covering_tiles(boxed, z)
-        .select("tile_x", "tile_y", "i", "w", "h", "e0", "n0")
-        .groupBy("tile_x", "tile_y")
-        .applyInPandas(composite, schema)
+    tiles = covering_tiles(boxed, z).select(
+        "tile_x", "tile_y", "i", "w", "h", "e0", "n0"
     )
+    return _tile_groups(tiles).applyInPandas(composite, schema)
 
 
 def encode_tiles(
@@ -581,7 +605,7 @@ def encode_tiles(
             ]
         )
 
-    return tiles.groupBy("tile_x", "tile_y").applyInPandas(encode, out_schema)
+    return _tile_groups(tiles).applyInPandas(encode, out_schema)
 
 
 def write_tile_tree(tiles: DataFrame, out_dir: str,
@@ -689,10 +713,16 @@ def build_pyramid(
     tiles). Each level is a stage barrier, exactly as in the
     reference. If out_dir is given, every level commits through the
     resumable snapshot writer (restart skips finished tiles — the
-    tile-exists rule :377)."""
+    tile-exists rule :377).
+
+    One Column-math job (no Python) first counts the base level's
+    covering (image, tile) pairs; that count sizes every level's tile
+    shuffle, since no coarser level has more tiles."""
     spark = images.sparkSession
     levels: dict[int, DataFrame] = {}
-    current = render_tiles(images, z_max, resampling=resampling, with_data=True)
+    pairs = covering_tiles(images, z_max).count()
+    current = render_tiles(images, z_max, resampling=resampling, with_data=True,
+                           pairs=pairs)
     current = current.where(F.col("n_px") > 0).drop("n_px")
     for z in range(z_max, z_min - 1, -1):
         if out_dir is not None:
@@ -707,11 +737,12 @@ def build_pyramid(
             )
         levels[z] = current
         if z > z_min:
-            current = overview_tiles(current, with_data=True)
+            current = overview_tiles(current, with_data=True, pairs=pairs)
     return levels
 
 
-def overview_tiles(tiles: DataFrame, with_data: bool = False) -> DataFrame:
+def overview_tiles(tiles: DataFrame, with_data: bool = False,
+                   pairs: int = 0) -> DataFrame:
     """One overview level: z-1 tiles from their (up to) 4 children by
     2x2 round-half-up average (overview.cpp:1667 semantics; missing
     children contribute zeros, mirroring the reference's
@@ -719,7 +750,8 @@ def overview_tiles(tiles: DataFrame, with_data: bool = False) -> DataFrame:
     apps/gdalalg_raster_tile.cpp:930-1023).
 
     Input needs (tile_x, tile_y, band, data). Iterating this operator
-    z_max -> z_min is the reference's per-level loop (:3080).
+    z_max -> z_min is the reference's per-level loop (:3080). `pairs`
+    sizes the shuffle as in render_tiles.
     """
     fields = [
         T.StructField("tile_x", T.IntegerType()),
@@ -750,9 +782,9 @@ def overview_tiles(tiles: DataFrame, with_data: bool = False) -> DataFrame:
             rec["data"] = parent.tobytes()
         return pd.DataFrame([rec])
 
-    return (
-        tiles.withColumn("ptx", (F.col("tile_x") / 2).cast("int"))
-        .withColumn("pty", (F.col("tile_y") / 2).cast("int"))
-        .groupBy("ptx", "pty", "band")
-        .applyInPandas(build, schema)
+    children = tiles.withColumn(
+        "ptx", (F.col("tile_x") / 2).cast("int")
+    ).withColumn("pty", (F.col("tile_y") / 2).cast("int"))
+    return _tile_groups(children, ("ptx", "pty"), ("band",), pairs).applyInPandas(
+        build, schema
     )

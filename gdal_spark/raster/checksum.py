@@ -16,9 +16,11 @@ assertion — our pixel-parity gate.
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 import numpy as np
 
-_PRIMES = np.array([7, 11, 13, 17, 19, 23, 29, 31, 37, 41, 43], dtype=np.int64)
+_PRIMES = np.array([7, 11, 13, 17, 19, 23, 29, 31, 37, 41, 43], dtype=np.uint8)
 
 
 def _int_from_double(vals: np.ndarray) -> np.ndarray:
@@ -35,6 +37,15 @@ def _int_from_double(vals: np.ndarray) -> np.ndarray:
     return out
 
 
+@lru_cache(maxsize=16)
+def _prime_grid(h: int, w: int) -> np.ndarray:
+    """Read-only (h, w) grid of primes[(y * w + x) % 11]; uint8, so a
+    cached grid costs one byte per pixel."""
+    grid = _PRIMES[np.arange(h * w) % 11].reshape(h, w)
+    grid.flags.writeable = False
+    return grid
+
+
 def gdal_checksum(band: np.ndarray) -> int:
     """Checksum of one 2-D band (any dtype), full-window semantics."""
     band = np.asarray(band)
@@ -43,9 +54,8 @@ def gdal_checksum(band: np.ndarray) -> int:
         ints = _int_from_double(band.astype(np.float64))
     else:
         ints = band.astype(np.int64)
-    primes = _PRIMES[(np.arange(h * w, dtype=np.int64)) % 11].reshape(h, w)
-    # C truncated modulo: sign follows the dividend
-    mods = np.where(ints >= 0, ints % primes, -((-ints) % primes))
+    # fmod is C truncated modulo on integers: sign follows the dividend
+    mods = np.fmod(ints, _prime_grid(h, w))
     return int(mods.sum()) & 0xFFFF
 
 

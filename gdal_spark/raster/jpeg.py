@@ -15,6 +15,7 @@ parallelized across tasks.
 from __future__ import annotations
 
 import struct
+from functools import lru_cache
 
 import numpy as np
 
@@ -596,8 +597,13 @@ class _BitReader:
         return v
 
 
-def _build_decode_table(bits, vals):
-    """Flat 16-bit-peek table: index -> (symbol << 5) | code_length."""
+@lru_cache(maxsize=16)
+def _build_decode_table(bits: tuple, vals: tuple) -> tuple:
+    """Flat 16-bit-peek table: index -> (symbol << 5) | code_length.
+
+    Building one costs ~5 ms of Python, more than decoding a small
+    image, and nearly every file carries the same few DHT tables, so
+    tables are memoized per (bits, vals); they are read-only tuples."""
     table = [0] * 65536
     code = 0
     k = 0
@@ -610,7 +616,7 @@ def _build_decode_table(bits, vals):
             code += 1
             k += 1
         code <<= 1
-    return table
+    return tuple(table)
 
 
 def _huff_decode(br: _BitReader, table) -> int:
@@ -818,9 +824,9 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             bpos = 0
             while bpos < len(body):
                 tc_th = body[bpos]
-                bits = list(body[bpos + 1 : bpos + 17])
+                bits = tuple(body[bpos + 1 : bpos + 17])
                 nvals = sum(bits)
-                vals = list(body[bpos + 17 : bpos + 17 + nvals])
+                vals = tuple(body[bpos + 17 : bpos + 17 + nvals])
                 htables[(tc_th >> 4, tc_th & 0xF)] = _build_decode_table(bits, vals)
                 bpos += 17 + nvals
         elif marker == 0xDD:

@@ -1,6 +1,9 @@
 """GDAL checksum parity (semantics: alg/gdalchecksum.cpp:48-175)."""
 
 import numpy as np
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from hypothesis.extra.numpy import arrays
 
 from gdal_spark.raster.checksum import gdal_checksum, gdal_checksum_image
 
@@ -52,3 +55,26 @@ def test_multiband():
     arr = rng.integers(0, 256, (8, 9, 3)).astype(np.uint8)
     cs = gdal_checksum_image(arr)
     assert cs == [brute_checksum(arr[:, :, b]) for b in range(3)]
+
+
+_shapes = st.tuples(st.integers(1, 12), st.integers(1, 12))
+
+
+@settings(max_examples=80, deadline=None)
+@given(st.sampled_from([np.uint8, np.uint16, np.bool_, np.int16, np.int32,
+                        np.int64, np.float32, np.float64]).flatmap(
+    lambda dt: _shapes.flatmap(lambda s: arrays(dt, s))))
+def test_every_dtype_matches_reference_loop(band):
+    assert gdal_checksum(band) == brute_checksum(band)
+
+
+def test_prime_grid_is_shared_read_only_and_one_byte_per_pixel():
+    from gdal_spark.raster.checksum import _prime_grid
+
+    band = np.full((256, 256), 200, dtype=np.uint8)
+    first = gdal_checksum(band)
+    grid = _prime_grid(256, 256)
+    assert not grid.flags.writeable
+    assert _prime_grid(256, 256) is grid
+    assert grid.nbytes == band.nbytes
+    assert gdal_checksum(band) == first == brute_checksum(band)

@@ -160,3 +160,14 @@ def test_ace2_filename_georef():
         decode_ace2(encode_ace2(f), "30X120W_5M")
     with pytest.raises(ValueError, match="grid token"):
         decode_ace2(encode_ace2(f)[:-8], "30S120W_5M")
+
+
+def test_jdem_angle_snaps_half_seconds_up():
+    from gdal_spark.raster.rawformats import _jdem_angle_str
+
+    # 35deg 0m 4.5s: deg * 3600 == 126004.5 exactly; half-to-even
+    # rounding would give ...04, the oracle's floor(x + 0.5) gives ...05
+    deg = 35 + 4.5 / 3600
+    assert deg * 3600 == 126004.5
+    assert _jdem_angle_str(deg) == "0350005"
+    assert _jdem_angle_str(35 + 3.5 / 3600) == "0350004"

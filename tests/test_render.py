@@ -273,3 +273,74 @@ def test_kernel_shapes_match_reference_formulas():
     assert abs(rs.lanczos_kernel(np.array([1.0]))[0]) < 1e-12
     assert abs(rs.lanczos_kernel(np.array([2.0]))[0]) < 1e-12
     assert rs.lanczos_kernel(np.array([3.0]))[0] == 0.0
+
+
+def _tile_stage_frames(spark):
+    """render -> encode and render -> overview over decoded payloads."""
+    from pyspark.sql import functions as F
+
+    from gdal_spark.fixtures.images import build_images
+    from gdal_spark.operators.render import encode_tiles, overview_tiles, render_tiles
+
+    images = build_images(spark, n=6, with_payload=True)
+    rendered = render_tiles(images, 12, with_data=True, decode_payload=True)
+    base = rendered.where(F.col("n_px") > 0)
+    return {
+        "render_tiles": rendered,
+        "encode_tiles": encode_tiles(base, 12),
+        "overview_tiles": overview_tiles(base.drop("n_px"), with_data=True),
+    }
+
+
+def test_tile_stages_run_one_partition_per_core(spark):
+    """AQE would coalesce these byte-light, Python-heavy shuffles into
+    one task; the tile stages keep one partition per core."""
+    cores = spark.sparkContext.defaultParallelism
+    for name, df in _tile_stage_frames(spark).items():
+        assert df.rdd.getNumPartitions() == cores, name
+
+
+def test_tile_stages_grow_past_one_partition_per_core(spark, monkeypatch):
+    """A level known to hold more than PAIRS_PER_TASK pairs per core
+    gets one partition per PAIRS_PER_TASK; build_pyramid counts the
+    base level's covering pairs and sizes every level with it."""
+    from gdal_spark.fixtures.images import build_images
+    from gdal_spark.operators import render
+
+    cores = spark.sparkContext.defaultParallelism
+    images = build_images(spark, n=6)
+    big = cores * render.PAIRS_PER_TASK + 1
+    assert render.render_tiles(images, 12, pairs=big).rdd.getNumPartitions() == cores + 1
+
+    monkeypatch.setattr(render, "PAIRS_PER_TASK", 1)
+    pairs = render.covering_tiles(images, 12).count()
+    levels = render.build_pyramid(images, 12, 11)
+    for z in (12, 11):
+        assert levels[z].rdd.getNumPartitions() == max(cores, pairs), z
+
+
+def test_tile_stages_shuffle_once_per_group(spark):
+    """The per-core repartition is the groupBy's own exchange, not an
+    extra one: one shuffle exchange per FlatMapGroupsInPandas (the
+    payload fixture's broadcast exchange is not a shuffle)."""
+    cores = spark.sparkContext.defaultParallelism
+    for name, df in _tile_stage_frames(spark).items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        groups = plan.count("FlatMapGroupsInPandas")
+        exchanges = [ln for ln in plan.splitlines() if "+- Exchange " in ln]
+        assert groups >= 1 and len(exchanges) == groups, (name, plan)
+        for ln in exchanges:
+            assert f", {cores}), REPARTITION_BY_NUM" in ln, (name, ln)
+
+
+def test_decode_jpeg_same_on_cold_and_warm_table_cache():
+    from gdal_spark.raster import jpeg
+
+    arr = georef.np_image_pixels(4, 64, 64)
+    blob = jpeg.encode_jpeg(arr, quality=90)
+    jpeg._build_decode_table.cache_clear()
+    cold = jpeg.decode_jpeg(blob)
+    assert jpeg._build_decode_table.cache_info().currsize > 0
+    warm = jpeg.decode_jpeg(blob)
+    assert jpeg._build_decode_table.cache_info().hits > 0
+    assert cold.dtype == warm.dtype and (cold == warm).all()

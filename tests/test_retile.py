@@ -1,6 +1,7 @@
 """gdal_retile semantics (osgeo_utils/gdal_retile.py)."""
 
 import numpy as np
+import pytest
 
 from gdal_spark.fixtures.georef import np_image_pixels
 from gdal_spark.operators.retile import (
@@ -95,3 +96,13 @@ def test_grid_df_matches_kernel(spark):
         assert (r["ox"], r["oy"], r["tile_w"], r["tile_h"]) == (ox, oy, cw, ch)
         iid = src[key[0]][2]
         assert r["location"] == f"{iid}_{key[1]}_{key[2]}"
+
+
+def test_overlap_not_below_tile_raises():
+    for overlap in (96, 120, -1):
+        with pytest.raises(ValueError, match="overlap"):
+            tile_counts(500, 96, overlap)
+        with pytest.raises(ValueError, match="overlap"):
+            list(tile_grid(500, 500, 96, 96, overlap))
+    with pytest.raises(ValueError, match="overlap"):
+        retile_grid_df(None, 96, 48, overlap=48)
