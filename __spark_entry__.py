@@ -5128,6 +5128,9 @@ def q_raw_fleet2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _o_raw_fleet2() -> str:
+    # ngsgeoid's origin mirrors decode_ngsgeoid's operation order:
+    # slat = lat/2 - h*dlat, then slat + nlat*dlat - dlat/2
+    d01, d005 = tm.sql_double(0.01), tm.sql_double(0.005)
     img = georef.sql_images_cte(
         "o_orderkey",
         f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
@@ -5177,7 +5180,8 @@ SELECT image_id, fmt, cast(band as int) AS band,
                          as bigint)
     WHEN 'snodas' THEN cast(floor(lat_c * 1e6) as bigint)
     WHEN 'sigdem' THEN cast(floor(lat_c * 1e6) as bigint)
-    WHEN 'ngsgeoid' THEN cast(floor((lat_c / 2 - 0.005) * 1e6) as bigint)
+    WHEN 'ngsgeoid' THEN cast(floor(
+      (((lat_c / 2 - h * {d01}) + h * {d01}) - {d005}) * 1e6) as bigint)
     ELSE 0 END AS y0_q6
 FROM px
 GROUP BY image_id, fmt, band, lon_c, lat_c, h

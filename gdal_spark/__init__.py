@@ -15,5 +15,3 @@ applyInPandas). No per-row Python UDFs anywhere.
 """
 
 __version__ = "0.1.0"
-
-from gdal_spark.session import get_spark  # noqa: F401

@@ -113,12 +113,13 @@ def write_kml_superoverlay(tiles: DataFrame, out_dir: str,
     from gdal_spark.operators.render import write_tile_tree
 
     n = write_tile_tree(kml_superoverlay_entries(tiles, fmt), out_dir)
-    root = tiles.agg(
-        F.min("tile_z"), F.min("tile_x"), F.min("tile_y")
+    # root at a tile that was written: the first by (z, x, y), not the
+    # per-column minima (an L-shaped level has no tile at (min x, min y))
+    root = tiles.select("tile_z", "tile_x", "tile_y").orderBy(
+        "tile_z", "tile_x", "tile_y"
     ).first()
     os.makedirs(out_dir, exist_ok=True)
-    z0, x0, y0 = (int(root[0]), int(root[1]), int(root[2])) \
-        if root[0] is not None else (0, 0, 0)
+    z0, x0, y0 = (int(v) for v in root) if root is not None else (0, 0, 0)
     doc = (
         f'<kml xmlns="{_KML_NS}"><Document>'
         "<NetworkLink><open>1</open>"

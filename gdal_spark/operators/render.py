@@ -25,12 +25,12 @@ tile keys: AQE never coalesces a repartition-by-number, and the hash
 partitioning already satisfies the groupBy, so it is still the ONE
 shuffle. The count is one partition per core, raised to one per
 PAIRS_PER_TASK covering pairs when the caller knows the level's size
-(build_pyramid counts it): each Arrow Python task pays a fixed worker
-set-up cost (~0.25 s of CPU when PySpark is imported from its zip
-archive), so small levels run best as a single wave, while large
-levels need more, smaller tasks for load balance and for committed
-files whose row groups a reader can hold. Hot tiles (many
-overlapping images) remain the skew axis. The z-1 overview pass
+(build_pyramid counts it): small levels run best as a single wave
+(two and three tasks per core measured 14% and 30% slower on a
+14-image pyramid, and no faster on 300 images), while large levels
+need more, smaller tasks for load balance and for committed files
+whose row groups a reader can hold. Hot tiles (many overlapping
+images) remain the skew axis. The z-1 overview pass
 shuffles only rendered band planes, grouped 4->1 per level,
 mirroring the reference's per-level barrier.
 """

@@ -11,6 +11,18 @@ is chosen so the same code scales to 1000 executors:
   ogr/ogrsf_frmts/generic/ogrlayerarrow.cpp).
 - shuffle.partitions defaults to 2x cores locally; on a real cluster
   set it to ~2-3x total executor cores (AQE coalesces the excess).
+- Python workers start from `gdal_spark.worker`, not `pyspark.daemon`
+  (`spark.python.daemon.module`). Spark puts its own `pyspark.zip` and
+  `spark-core` jar first on the worker path, and PySpark's per-task
+  `importlib.invalidate_caches()` then makes every cached zipimporter
+  re-read its archive's directory: ~0.1 s of CPU per Arrow task before
+  any user code runs, paid by every applyInPandas/mapInPandas stage.
+  The daemon imports the install's unpacked pyspark instead and drops
+  the jar, so that cost is gone. Spark starts the daemon before any
+  `--py-files` reach the workers, so it is pinned only where the
+  workers can already import `gdal_spark`: local mode on a JVM whose
+  PYTHONPATH holds the repo (the JVM this process launches itself).
+  Under spark-submit, or on a cluster, workers keep `pyspark.daemon`.
 """
 
 from __future__ import annotations
@@ -57,6 +69,25 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
     )
+    if _workers_import_repo(master):
+        builder = builder.config(
+            "spark.python.daemon.module", "gdal_spark.worker"
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _workers_import_repo(master: str) -> bool:
+    """Whether the session's Python workers can import `gdal_spark` as
+    soon as they start: its executors are the driver JVM (local mode),
+    and this process launches that JVM, with the repo on PYTHONPATH.
+    Under spark-submit the JVM is already running (PYSPARK_GATEWAY_PORT
+    is set) with an environment this process did not build."""
+    from pyspark import SparkContext
+
+    return (
+        (master == "local" or master.startswith("local["))
+        and SparkContext._gateway is None
+        and "PYSPARK_GATEWAY_PORT" not in os.environ
+    )

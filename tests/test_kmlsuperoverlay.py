@@ -50,3 +50,20 @@ def test_doc_kml_points_at_root_tile(spark):
     doc = open(os.path.join(root, "doc.kml")).read()
     assert "<href>2/1/1.kml</href>" in doc
     assert "onRegion" in doc and "minLodPixels" in doc
+
+
+def test_doc_kml_roots_at_written_tile_of_l_shaped_set(spark):
+    from gdal_spark.raster.png import encode_png
+
+    # minima per column would be (3, 1, 1), which is not written
+    tiles = [(3, 1, 2), (3, 2, 2), (3, 2, 1)]
+    rows = [(z, x, y, bytearray(encode_png(np.zeros((8, 8, 3), np.uint8))))
+            for z, x, y in tiles]
+    df = spark.createDataFrame(
+        rows, "tile_z int, tile_x int, tile_y int, payload binary"
+    )
+    root = os.path.join(tempfile.mkdtemp(), "so3")
+    write_kml_superoverlay(df, root)
+    doc = open(os.path.join(root, "doc.kml")).read()
+    assert "<href>3/1/2.kml</href>" in doc
+    assert os.path.exists(os.path.join(root, "3", "1", "2.kml"))

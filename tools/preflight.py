@@ -1,9 +1,12 @@
 """One-command preflight before handing the repo to the driver:
 
 1. contract invariants (every query has an oracle),
-2. entry() smoke at sf0.001,
-3. a fast sampled oracle subset at sf0.01 (one query per family),
-4. bench importability.
+2. Python workers import the unpacked PySpark, not Spark's
+   pyspark.zip (gdal_spark/worker.py; a Spark upgrade that changes
+   the install layout fails here, before the benchmark slows down),
+3. entry() smoke at sf0.001,
+4. a fast sampled oracle subset at sf0.01 (one query per family),
+5. bench importability.
 
 Usage: python tools/preflight.py          (~2 min)
        python tools/preflight.py --full   (adds the complete gate)
@@ -98,9 +101,16 @@ def main() -> None:
           f"{FRESH_DAYS} days")
 
     from gdal_spark.session import get_spark
+    from gdal_spark.worker import worker_imports
 
     spark = get_spark("preflight", master="local[8]", shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
+    where = worker_imports(spark).file
+    assert ".zip" not in where, (
+        f"Python workers import PySpark from a zip ({where}): "
+        "gdal_spark/worker.py no longer finds the unpacked install"
+    )
+    print(f"[ok] worker imports PySpark from {where}")
     n = entry.entry(spark).count()
     print(f"[ok] entry() smoke: {n} rows")
     spark.stop()
