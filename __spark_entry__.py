@@ -2555,8 +2555,8 @@ def q_tile_render_utm(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SURVEY.md §3.2; the reference's own benchmark workload shape,
     autotest/benchmark/test_gdalwarp.py)."""
     ids = _image_ids(spark, sf_dir).where(F.col("i") % UTM_MOD == 0)
-    images = render.utm_image_geo(ids)
-    out = render.render_tiles_utm(images, UTM_Z)
+    images = render.proj_image_geo(ids, 32631)
+    out = render.render_tiles(images, UTM_Z, crs=32631)
     return out.where(F.col("n_px") > 0).select(
         F.col("tile_x").cast("int"),
         F.col("tile_y").cast("int"),
@@ -11747,7 +11747,7 @@ def q_tile_render_albers(spark: SparkSession, sf_dir: str) -> DataFrame:
     null datum transform for this pair too)."""
     ids = _image_ids(spark, sf_dir).where(F.col("i") % UTM_MOD == 0)
     images = render.proj_image_geo(ids, 5070)
-    out = render.render_tiles_proj(images, ALBERS_Z, 5070)
+    out = render.render_tiles(images, ALBERS_Z, crs=5070)
     return out.where(F.col("n_px") > 0).select(
         F.col("tile_x").cast("int"),
         F.col("tile_y").cast("int"),
@@ -11763,7 +11763,7 @@ def q_tile_render_polar(spark: SparkSession, sf_dir: str) -> DataFrame:
     away from the pole so footprints stay inside |lat| <= 85."""
     ids = _image_ids(spark, sf_dir).where(F.col("i") % UTM_MOD == 0)
     images = render.proj_image_geo(ids, 3031)
-    out = render.render_tiles_proj(images, POLAR_Z, 3031)
+    out = render.render_tiles(images, POLAR_Z, crs=3031)
     return out.where(F.col("n_px") > 0).select(
         F.col("tile_x").cast("int"),
         F.col("tile_y").cast("int"),
@@ -11782,7 +11782,7 @@ def q_tile_render_cassini(spark: SparkSession, sf_dir: str) -> DataFrame:
     no meter Helmert exists — see geo/datum.py)."""
     ids = _image_ids(spark, sf_dir).where(F.col("i") % UTM_MOD == 0)
     images = render.proj_image_geo(ids, 30200)
-    out = render.render_tiles_proj(images, CASSINI_Z, 30200)
+    out = render.render_tiles(images, CASSINI_Z, crs=30200)
     return out.where(F.col("n_px") > 0).select(
         F.col("tile_x").cast("int"),
         F.col("tile_y").cast("int"),
@@ -11793,7 +11793,7 @@ def q_tile_render_cassini(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _o_tile_render_proj(code: int, z: int) -> str:
-    """Oracle for render_tiles_proj: same staged shape as
+    """Oracle for render_tiles(crs=code): same staged shape as
     _o_tile_render_utm — suggest samples through the SQL inverse,
     covering tiles, per-pixel SQL forward, max_by composite,
     GDAL checksum."""
@@ -14672,8 +14672,9 @@ FROM vals GROUP BY 1, 2, 3
 
 def _o_tile_render_utm() -> str:
     from gdal_spark.geo import crs
-    from gdal_spark.operators.render import UTM_RES
+    from gdal_spark.operators.render import PROJ_RENDER
 
+    UTM_RES = PROJ_RENDER[32631]["res"]
     zone = 31
     z = UTM_Z
     res_z = tm.sql_double(tm.resolution(z))

@@ -151,16 +151,18 @@ def main():
     )
 
     from gdal_spark.operators.overlay import overlay_join
-    from gdal_spark.operators.render import render_tiles_utm, utm_image_geo
+    from gdal_spark.operators.render import proj_image_geo
 
     timed(
         "overlay",
         lambda: overlay_join(zones, zones).agg(F.count("*"), F.sum("inter_e4")).collect(),
     )
-    utm_imgs = utm_image_geo(images.where(F.col("i") % 1999 == 0).select("i"))
+    utm_imgs = proj_image_geo(images.where(F.col("i") % 1999 == 0).select("i"), 32631)
     timed(
         "utm_warp",
-        lambda: render_tiles_utm(utm_imgs, 11).agg(F.count("*"), F.sum("checksum")).collect(),
+        lambda: render_tiles(utm_imgs, 11, crs=32631)
+        .agg(F.count("*"), F.sum("checksum"))
+        .collect(),
     )
 
     # training-data ops: dedup + ANN on documents/embeddings

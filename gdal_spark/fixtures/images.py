@@ -63,34 +63,3 @@ def build_images(
         _gen_payloads, schema=_PAYLOAD_SCHEMA
     )
     return geo.join(payloads, "i")
-
-
-def build_images_local(ids: list[int]) -> pd.DataFrame:
-    """Driver-side twin for tiny golden tests (no Spark)."""
-    from gdal_spark.fixtures.georef import (
-        FMT_CYCLE,
-        H_CYCLE,
-        JPEG_QUALITY,
-        W_CYCLE,
-        np_image_pixels,
-        np_phash,
-    )
-
-    rows = []
-    for i in ids:
-        w = W_CYCLE[i % 5]
-        h = H_CYCLE[i % 5]
-        fmt = FMT_CYCLE[i % 3]
-        arr = np_image_pixels(i, w, h)
-        rows.append(
-            {
-                "i": i,
-                "image_id": f"img_{i:012d}",
-                "w": w,
-                "h": h,
-                "fmt": fmt,
-                "bytes": encode_image(arr, fmt, quality=JPEG_QUALITY),
-                "phash": np_phash(arr),
-            }
-        )
-    return pd.DataFrame(rows)

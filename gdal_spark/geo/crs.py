@@ -90,27 +90,6 @@ def _atanh(x: str) -> str:
     return f"(ln((1.0 + ({x})) / (1.0 - ({x}))) / 2.0)"
 
 
-def sql_utm_forward(lon_deg: str, lat_deg: str, zone: int) -> tuple[str, str]:
-    """(easting, northing) SQL expressions from degree expressions.
-    Mirrors utm_forward term for term."""
-    e = float(np.sqrt(WGS84_F * (2.0 - WGS84_F)))
-    lon0 = float(np.radians(zone * 6.0 - 183.0))
-    lam = f"(radians({lon_deg}) - {_d(lon0)})"
-    phi = f"radians({lat_deg})"
-    sphi = f"sin({phi})"
-    t = _sinh(f"{_atanh(sphi)} - {_d(e)} * {_atanh(f'{_d(e)} * {sphi}')}")
-    xi = f"atan2({t}, cos({lam}))"
-    eta = _atanh(f"sin({lam}) / sqrt(1.0 + ({t}) * ({t}))")
-    xs = f"({xi})"
-    es = f"({eta})"
-    for j, a in enumerate(_ALPHA, start=1):
-        xs = f"({xs} + {_d(a)} * sin({2*j} * ({xi})) * {_cosh(f'{2*j} * ({eta})')})"
-        es = f"({es} + {_d(a)} * cos({2*j} * ({xi})) * {_sinh(f'{2*j} * ({eta})')})"
-    easting = f"({_d(FALSE_EASTING)} + {_d(K0 * _A)} * {es})"
-    northing = f"({_d(K0 * _A)} * {xs})"
-    return easting, northing
-
-
 def sql_utm_inverse(easting: str, northing: str, zone: int) -> tuple[str, str]:
     """(lon_deg, lat_deg) SQL expressions; mirrors utm_inverse."""
     xi = f"(({northing}) / {_d(K0 * _A)})"

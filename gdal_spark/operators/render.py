@@ -9,6 +9,24 @@ Pipeline shape (SURVEY.md §2.10, §3.3; apps/gdalalg_raster_tile.cpp):
          -> tiles table (checksum / png bytes)
   z-1 pass: groupBy(parent tile) of 4 children -> 2x2 average
 
+One warp kernel, as the reference has one (GDALWarpKernel fed by the
+GenImgProj transformer chain, SURVEY.md §3.2): `render_tiles` takes a
+tile's sources in paint order, gets their pixels (decoded payload or
+the synthetic formula), maps every destination pixel centre to
+continuous source pixel coords, samples, paints last-writer-wins and
+emits per-band checksums. Only that grid step depends on the source
+CRS (`_source_grid`):
+
+- EPSG:3857 sources (xmin, ymax at georef.RES0 m/px): rs.inverse_grid.
+- projected sources (top-left e0, n0 in a PROJ_RENDER CRS): tile pixel
+  centres run 3857 -> lon/lat -> projzoo.forward once per tile, then
+  (E - e0)/res, (n0 - N)/res per source; covering tiles come from the
+  21-point suggested-output bbox (`_suggest_bbox`,
+  GDALSuggestedWarpOutput2, alg/gdaltransformer.cpp:3031).
+
+`render_tiles_stats` shares the composite loop (`_paint_sources`),
+footprint grid and band records; it paints its own stat planes.
+
 Warp semantics per gdalwarpkernel.cpp (see raster/resample.py).
 Composite order: ascending image id, last writer wins (mirrors
 gdalbuildvrt default source order, apps/gdalbuildvrt_lib.cpp).
@@ -37,6 +55,8 @@ mirroring the reference's per-level barrier.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, GroupedData
@@ -50,6 +70,34 @@ from gdal_spark.tiles import tilemath as tm
 
 TILE = tm.TILE_SIZE
 BANDS = 3
+WEBMERC = 3857
+
+# samplers over continuous source coords; "average" samples each dst
+# pixel's source footprint instead (_footprint)
+_SAMPLERS = {
+    "near": rs.sample_nearest,
+    "bilinear": rs.sample_bilinear,
+    "cubic": rs.sample_cubic,
+    "cubicspline": rs.sample_cubicspline,
+    "lanczos": rs.sample_lanczos,
+}
+
+# synthetic per-CRS georeference rules for projected sources (top-left
+# anchored; the polar window is an annulus away from the pole so
+# footprints stay inside Web Mercator's |lat| <= 85 domain)
+PROJ_RENDER = {
+    # WGS 84 / UTM zone 31N at 30 m/px (Landsat-ish)
+    32631: dict(res=30.0, x0=300000.0, xstep=400.0,
+                y0=3800000.0, ystep=400.0),
+    5070: dict(res=100.0, x0=-1800000.0, xstep=3000.0,
+               y0=2800000.0, ystep=-2000.0),
+    3031: dict(res=200.0, x0=1000000.0, xstep=2000.0,
+               y0=-1000000.0, ystep=-2000.0),
+    # Trinidad 1903 / Cassini — axis unit is CLARKE'S LINKS
+    # (500 links/px ~ 100.6 m/px); sources stay inside the grid zone
+    30200: dict(res=500.0, x0=350000.0, xstep=120.0,
+                y0=420000.0, ystep=-100.0),
+}
 
 
 # (image, tile) pairs one Python task renders before a level gets more
@@ -80,341 +128,6 @@ def covering_tiles(images: DataFrame, z: int) -> DataFrame:
     )
 
 
-def render_tiles(
-    images: DataFrame,
-    z: int,
-    resampling: str = "near",
-    with_data: bool = False,
-    src_res: float | None = None,
-    decode_payload: bool = False,
-    sort_field: str = "i",
-    ascending: bool = True,
-    pairs: int = 0,
-) -> DataFrame:
-    """Warp-composite images into 256x256x3 tile rasters at zoom z.
-
-    `pairs`, if known, is the count of covering (image, tile) pairs;
-    it sizes the tile shuffle (at least one partition per core).
-
-    sort_field/ascending control composite order (last writer wins),
-    the GTI mosaic SORT_FIELD / SORT_FIELD_ASC option
-    (frmts/gti/gdaltileindexdataset.cpp:87-110): sources paint in
-    ascending sort order, so the LAST one in that order shows on top.
-
-    `images` needs columns (i, xmin, ymax, w, h). Source pixels:
-
-    - decode_payload=True — the REAL pipeline: the `bytes` column is
-      decoded per image via raster/codecs.decode_image (fmt-dispatch
-      PNG/JPEG/TIFF), i.e. decode -> warp -> composite end-to-end
-      (gdal_translate feeding gdalwarp). Requires (bytes, fmt)
-      columns; JPEG sources decode lossily, so pixel-exact oracles
-      must exclude them (fixture rule: i % 3 == 1).
-    - decode_payload=False — synthetic fast path for formula oracles:
-      pixels regenerate from value(x,y,c) = (x+y+i+phase_c) % 256
-      (georef.np_image_pixels; bit-identical to the decoded lossless
-      payloads by construction).
-
-    Returns one row per (tile, band) with the GDAL 16-bit checksum
-    and the count of source-covered pixels.
-    """
-    res0 = src_res if src_res is not None else georef.RES0
-    res_z = tm.resolution(z)
-    fields = [
-        T.StructField("tile_x", T.IntegerType()),
-        T.StructField("tile_y", T.IntegerType()),
-        T.StructField("band", T.IntegerType()),
-        T.StructField("checksum", T.IntegerType()),
-        T.StructField("n_px", T.LongType()),
-    ]
-    if with_data:
-        fields.append(T.StructField("data", T.BinaryType()))
-    schema = T.StructType(fields)
-
-    def composite(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty = int(key[0]), int(key[1])
-        buf = np.zeros((TILE, TILE, BANDS), dtype=np.uint8)
-        covered = np.zeros((TILE, TILE), dtype=bool)
-        for _, row in pdf.sort_values(sort_field, ascending=ascending).iterrows():
-            i, w, h = int(row["i"]), int(row["w"]), int(row["h"])
-            if decode_payload:
-                from gdal_spark.raster.codecs import decode_image
-
-                src = decode_image(bytes(row["bytes"]), str(row["fmt"]))
-            else:
-                src = georef.np_image_pixels(i, w, h)
-            dfx, dfy = rs.inverse_grid(
-                tx, ty, z, float(row["xmin"]), float(row["ymax"]),
-                res0, tm.ORIGIN, res_z,
-            )
-            if resampling == "bilinear":
-                vals, mask = rs.sample_bilinear(src, dfx, dfy)
-                vals = rs.round_to_byte(vals)
-            elif resampling == "cubic":
-                vals, mask = rs.sample_cubic(src, dfx, dfy)
-                vals = rs.round_to_byte(vals)
-            elif resampling == "cubicspline":
-                vals, mask = rs.sample_cubicspline(src, dfx, dfy)
-                vals = rs.round_to_byte(vals)
-            elif resampling == "lanczos":
-                vals, mask = rs.sample_lanczos(src, dfx, dfy)
-                vals = rs.round_to_byte(vals)
-            elif resampling == "average":
-                px = np.arange(TILE, dtype=np.float64)
-                wx0 = -tm.ORIGIN + (tx * TILE + px) * res_z
-                wy_top = tm.ORIGIN - (ty * TILE + px) * res_z
-                x0 = np.broadcast_to(((wx0 - float(row["xmin"])) / res0)[None, :], (TILE, TILE))
-                x1 = x0 + res_z / res0
-                y0 = np.broadcast_to(((float(row["ymax"]) - wy_top) / res0)[:, None], (TILE, TILE))
-                y1 = y0 + res_z / res0
-                vals, mask = rs.sample_average(src, x0, x1, y0, y1)
-                vals = rs.round_to_byte(vals)
-            else:
-                vals, mask = rs.sample_nearest(src, dfx, dfy)
-            buf[mask] = vals[mask]
-            covered |= mask
-        n_px = int(covered.sum())
-        recs = []
-        for b in range(BANDS):
-            rec = {
-                "tile_x": tx, "tile_y": ty, "band": b,
-                "checksum": gdal_checksum(buf[:, :, b]), "n_px": n_px,
-            }
-            if with_data:
-                rec["data"] = buf[:, :, b].tobytes()
-            recs.append(rec)
-        return pd.DataFrame(recs)
-
-    cols = ["tile_x", "tile_y", "i", "w", "h", "xmin", "ymax"]
-    if decode_payload:
-        cols += ["bytes", "fmt"]
-    if sort_field not in cols:
-        cols.append(sort_field)
-    tiles = covering_tiles(images, z).select(*cols)
-    return _tile_groups(tiles, pairs=pairs).applyInPandas(composite, schema)
-
-
-def render_tiles_stats(
-    images: DataFrame,
-    z: int,
-    stats: tuple[str, ...] = rs.FOOTPRINT_STATS,
-    src_res: float | None = None,
-) -> DataFrame:
-    """The GWKAverageOrMode stat-resampler family (min/max/sum/rms/
-    med/q1/q3, gdalwarpkernel.cpp GWKAverageOrModeThread) in ONE
-    footprint-gather pass per tile: all stats share the tap window,
-    composite is last-writer (max image id) per pixel like the other
-    render paths. -> (tile_x, tile_y, band, stat, checksum, n_px)."""
-    res0 = src_res if src_res is not None else georef.RES0
-    res_z = tm.resolution(z)
-    schema = T.StructType(
-        [
-            T.StructField("tile_x", T.IntegerType()),
-            T.StructField("tile_y", T.IntegerType()),
-            T.StructField("band", T.IntegerType()),
-            T.StructField("stat", T.StringType()),
-            T.StructField("checksum", T.IntegerType()),
-            T.StructField("n_px", T.LongType()),
-        ]
-    )
-
-    def composite(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty = int(key[0]), int(key[1])
-        bufs = {
-            s: np.zeros((TILE, TILE, BANDS), dtype=np.float64) for s in stats
-        }
-        covered = np.zeros((TILE, TILE), dtype=bool)
-        px = np.arange(TILE, dtype=np.float64)
-        wx0 = -tm.ORIGIN + (tx * TILE + px) * res_z
-        wy_top = tm.ORIGIN - (ty * TILE + px) * res_z
-        for _, row in pdf.sort_values("i").iterrows():
-            i, w, h = int(row["i"]), int(row["w"]), int(row["h"])
-            src = georef.np_image_pixels(i, w, h)
-            x0 = np.broadcast_to(((wx0 - float(row["xmin"])) / res0)[None, :], (TILE, TILE))
-            x1 = x0 + res_z / res0
-            y0 = np.broadcast_to(((float(row["ymax"]) - wy_top) / res0)[:, None], (TILE, TILE))
-            y1 = y0 + res_z / res0
-            mask = None
-            for b in range(BANDS):
-                vals, mask = rs.sample_footprint_stats(
-                    src[:, :, b], x0, x1, y0, y1, stats
-                )
-                for s in stats:
-                    bufs[s][:, :, b][mask] = vals[s][mask]
-            covered |= mask
-        n_px = int(covered.sum())
-        recs = []
-        for s in stats:
-            for b in range(BANDS):
-                plane = bufs[s][:, :, b]
-                if s == "sum":
-                    byte = np.clip(np.floor(plane + 0.5), 0, 255).astype(np.uint8)
-                elif s == "rms":
-                    byte = rs.round_to_byte(plane)
-                else:
-                    byte = np.clip(plane, 0, 255).astype(np.uint8)
-                recs.append(
-                    {
-                        "tile_x": tx, "tile_y": ty, "band": b, "stat": s,
-                        "checksum": gdal_checksum(byte), "n_px": n_px,
-                    }
-                )
-        return pd.DataFrame(recs)
-
-    tiles = covering_tiles(images, z).select(
-        "tile_x", "tile_y", "i", "w", "h", "xmin", "ymax"
-    )
-    return _tile_groups(tiles).applyInPandas(composite, schema)
-
-
-UTM_RES = 30.0  # m/px of the synthetic UTM sources (Landsat-ish)
-
-
-def utm_image_geo(ids_df: DataFrame, id_col: str = "i") -> DataFrame:
-    """Synthetic UTM-georeferenced sources (zone-31 northern band):
-    deterministic top-left (e0, n0) from the row id — SQL-expressible
-    so the full reprojection warp has a value-level oracle."""
-    i = F.col(id_col).cast("long")
-    df = georef.with_image_geo(ids_df, id_col).select(id_col, "w", "h")
-    return (
-        df.withColumn("e0", F.lit(300000.0) + (i % 997).cast("double") * F.lit(400.0))
-        .withColumn("n0", F.lit(3800000.0) + ((i * 7) % 1009).cast("double") * F.lit(400.0))
-    )
-
-
-def render_tiles_utm(
-    images: DataFrame, z: int, zone: int = 31, with_data: bool = False
-) -> DataFrame:
-    """Full reprojection warp: UTM sources -> WebMercator tiles.
-
-    Mirrors the gdalwarp lifecycle (SURVEY.md §3.2): (1) suggested
-    output extent by 21-point boundary sampling through the inverse
-    transformer chain (GDALSuggestedWarpOutput2,
-    alg/gdaltransformer.cpp:3031); (2) covering-tile explode; (3) per
-    tile, dst pixel centers run dstPixel->merc->lonlat->UTM->srcPixel
-    (the GenImgProj chain, :2187) with nearest sampling.
-    """
-    from gdal_spark.geo import crs
-
-    res_z = tm.resolution(z)
-    bbox_schema = T.StructType(
-        [
-            T.StructField("i", T.LongType()),
-            T.StructField("w", T.IntegerType()),
-            T.StructField("h", T.IntegerType()),
-            T.StructField("e0", T.DoubleType()),
-            T.StructField("n0", T.DoubleType()),
-            T.StructField("xmin", T.DoubleType()),
-            T.StructField("ymin", T.DoubleType()),
-            T.StructField("xmax", T.DoubleType()),
-            T.StructField("ymax", T.DoubleType()),
-        ]
-    )
-
-    def suggest(batches):
-        ts = np.linspace(0.0, 1.0, 21)
-        for pdf in batches:
-            recs = []
-            for _, row in pdf.iterrows():
-                i, w, h = int(row["i"]), int(row["w"]), int(row["h"])
-                e0, n0 = float(row["e0"]), float(row["n0"])
-                ew, nh = w * UTM_RES, h * UTM_RES
-                es, ns = [], []
-                for (ea, na), (eb, nb) in (
-                    ((e0, n0), (e0 + ew, n0)),
-                    ((e0 + ew, n0), (e0 + ew, n0 - nh)),
-                    ((e0 + ew, n0 - nh), (e0, n0 - nh)),
-                    ((e0, n0 - nh), (e0, n0)),
-                ):
-                    es.append(ea + ts * (eb - ea))
-                    ns.append(na + ts * (nb - na))
-                lon, lat = crs.utm_inverse(np.concatenate(es), np.concatenate(ns), zone)
-                mx = tm.EARTH_RADIUS * np.radians(lon)
-                my = tm.EARTH_RADIUS * np.log(np.tan(np.pi / 4 + np.radians(lat) / 2))
-                recs.append(
-                    {
-                        "i": i, "w": w, "h": h, "e0": e0, "n0": n0,
-                        "xmin": float(mx.min()), "ymin": float(my.min()),
-                        "xmax": float(mx.max()), "ymax": float(my.max()),
-                    }
-                )
-            yield pd.DataFrame(recs, columns=[f.name for f in bbox_schema])
-
-    boxed = images.select("i", "w", "h", "e0", "n0").mapInPandas(suggest, bbox_schema)
-    fields = [
-        T.StructField("tile_x", T.IntegerType()),
-        T.StructField("tile_y", T.IntegerType()),
-        T.StructField("band", T.IntegerType()),
-        T.StructField("checksum", T.IntegerType()),
-        T.StructField("n_px", T.LongType()),
-    ]
-    if with_data:
-        fields.append(T.StructField("data", T.BinaryType()))
-    schema = T.StructType(fields)
-
-    def composite(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        from gdal_spark.raster.checksum import gdal_checksum as cks
-
-        tx, ty = int(key[0]), int(key[1])
-        buf = np.zeros((TILE, TILE, BANDS), dtype=np.uint8)
-        covered = np.zeros((TILE, TILE), dtype=bool)
-        px = np.arange(TILE, dtype=np.float64)
-        wx = -tm.ORIGIN + (tx * TILE + px + 0.5) * res_z
-        wy = tm.ORIGIN - (ty * TILE + px + 0.5) * res_z
-        lon = np.degrees(wx / tm.EARTH_RADIUS)
-        lat = np.degrees(2 * np.arctan(np.exp(wy / tm.EARTH_RADIUS)) - np.pi / 2)
-        LON = np.broadcast_to(lon[None, :], (TILE, TILE))
-        LAT = np.broadcast_to(lat[:, None], (TILE, TILE))
-        E, N = crs.utm_forward(LON, LAT, zone)
-        for _, row in pdf.sort_values("i").iterrows():
-            i, w, h = int(row["i"]), int(row["w"]), int(row["h"])
-            sx = np.floor((E - float(row["e0"])) / UTM_RES).astype(np.int64)
-            sy = np.floor((float(row["n0"]) - N) / UTM_RES).astype(np.int64)
-            mask = (sx >= 0) & (sx < w) & (sy >= 0) & (sy < h)
-            base = (sx + sy + i) % 256
-            for b, phase in enumerate((0, 85, 170)):
-                buf[:, :, b][mask] = ((base[mask] + phase) % 256).astype(np.uint8)
-            covered |= mask
-        n_px = int(covered.sum())
-        recs = []
-        for b in range(BANDS):
-            rec = {
-                "tile_x": tx, "tile_y": ty, "band": b,
-                "checksum": cks(buf[:, :, b]), "n_px": n_px,
-            }
-            if with_data:
-                rec["data"] = buf[:, :, b].tobytes()
-            recs.append(rec)
-        return pd.DataFrame(recs)
-
-    tiles = covering_tiles(boxed, z).select(
-        "tile_x", "tile_y", "i", "w", "h", "e0", "n0"
-    )
-    return _tile_groups(tiles).applyInPandas(composite, schema)
-
-
-# ---------------------------------------------------------------------------
-# Generalized reprojection warp through the projection-zoo registry
-# (gdal_spark/geo/projzoo.py): same GenImgProj lifecycle as
-# render_tiles_utm but with the source CRS dispatched by EPSG code —
-# the engine's counterpart of gdalwarp accepting any -s_srs the CRS
-# registry supports (alg/gdaltransformer.cpp:2187 chain).
-# ---------------------------------------------------------------------------
-
-# synthetic per-CRS georeference rules (top-left anchored; the polar
-# window is an annulus away from the pole so footprints stay inside
-# Web Mercator's |lat| <= 85 domain)
-PROJ_RENDER = {
-    5070: dict(res=100.0, x0=-1800000.0, xstep=3000.0,
-               y0=2800000.0, ystep=-2000.0),
-    3031: dict(res=200.0, x0=1000000.0, xstep=2000.0,
-               y0=-1000000.0, ystep=-2000.0),
-    # Trinidad 1903 / Cassini — axis unit is CLARKE'S LINKS
-    # (500 links/px ~ 100.6 m/px); sources stay inside the grid zone
-    30200: dict(res=500.0, x0=350000.0, xstep=120.0,
-                y0=420000.0, ystep=-100.0),
-}
-
-
 def proj_image_geo(ids_df: DataFrame, code: int, id_col: str = "i") -> DataFrame:
     """Synthetic sources georeferenced in the given projected CRS:
     deterministic top-left (e0, n0) from the row id — SQL-expressible
@@ -431,118 +144,253 @@ def proj_image_geo(ids_df: DataFrame, code: int, id_col: str = "i") -> DataFrame
     )
 
 
-def render_tiles_proj(
-    images: DataFrame, z: int, code: int, with_data: bool = False
-) -> DataFrame:
-    """Full reprojection warp: registry-CRS sources -> WebMercator
-    tiles.  Mirrors render_tiles_utm's three steps (21-point suggested
-    output, covering-tile explode, per-tile dst->src pixel chain) with
-    projzoo.forward/inverse as the transformer pair."""
-    res = PROJ_RENDER[code]["res"]
-    res_z = tm.resolution(z)
-    bbox_schema = T.StructType(
-        [
-            T.StructField("i", T.LongType()),
-            T.StructField("w", T.IntegerType()),
-            T.StructField("h", T.IntegerType()),
-            T.StructField("e0", T.DoubleType()),
-            T.StructField("n0", T.DoubleType()),
-            T.StructField("xmin", T.DoubleType()),
-            T.StructField("ymin", T.DoubleType()),
-            T.StructField("xmax", T.DoubleType()),
-            T.StructField("ymax", T.DoubleType()),
-        ]
+def _check_render(resampling: str, crs: int) -> None:
+    """Reject a warp render_tiles cannot do before any plan is built."""
+    if resampling not in _SAMPLERS and resampling != "average":
+        raise ValueError(f"unknown resampling {resampling!r}")
+    if crs != WEBMERC and crs not in PROJ_RENDER:
+        raise ValueError(f"no source georeference rule for EPSG:{crs}")
+    if crs != WEBMERC and resampling != "near":
+        raise ValueError(
+            f"resampling {resampling!r} needs EPSG:3857 sources; "
+            f"EPSG:{crs} sources render with 'near' only")
+
+
+def _suggest_bbox(images: DataFrame, crs: int, extra: tuple[str, ...]) -> DataFrame:
+    """Sources in a projected CRS with their EPSG:3857 bbox appended:
+    21 points per footprint edge through projzoo.inverse, then the
+    min/max of their mercator coords (GDALSuggestedWarpOutput2)."""
+    res = PROJ_RENDER[crs]["res"]
+    src = images.select("i", "w", "h", "e0", "n0", *extra)
+    bbox = ("xmin", "ymin", "xmax", "ymax")
+    schema = T.StructType(
+        src.schema.fields + [T.StructField(c, T.DoubleType()) for c in bbox]
     )
 
-    def suggest(batches):
+    def suggest(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from gdal_spark.geo import projzoo as pz
 
         ts = np.linspace(0.0, 1.0, 21)
         for pdf in batches:
-            recs = []
-            for _, row in pdf.iterrows():
-                i, w, h = int(row["i"]), int(row["w"]), int(row["h"])
-                e0, n0 = float(row["e0"]), float(row["n0"])
-                ew, nh = w * res, h * res
-                es, ns = [], []
-                for (ea, na), (eb, nb) in (
-                    ((e0, n0), (e0 + ew, n0)),
-                    ((e0 + ew, n0), (e0 + ew, n0 - nh)),
-                    ((e0 + ew, n0 - nh), (e0, n0 - nh)),
-                    ((e0, n0 - nh), (e0, n0)),
-                ):
-                    es.append(ea + ts * (eb - ea))
-                    ns.append(na + ts * (nb - na))
-                lon, lat = pz.inverse(code, np.concatenate(es), np.concatenate(ns))
+            boxes = []
+            for w, h, e0, n0 in zip(pdf["w"], pdf["h"], pdf["e0"], pdf["n0"]):
+                e0, n0, ew, nh = float(e0), float(n0), int(w) * res, int(h) * res
+                ring = [(e0, n0), (e0 + ew, n0), (e0 + ew, n0 - nh),
+                        (e0, n0 - nh), (e0, n0)]
+                es = np.concatenate([a[0] + ts * (b[0] - a[0]) for a, b in zip(ring, ring[1:])])
+                ns = np.concatenate([a[1] + ts * (b[1] - a[1]) for a, b in zip(ring, ring[1:])])
+                lon, lat = pz.inverse(crs, es, ns)
                 mx = tm.EARTH_RADIUS * np.radians(lon)
-                my = tm.EARTH_RADIUS * np.log(
-                    np.tan(np.pi / 4 + np.radians(lat) / 2)
-                )
-                recs.append(
-                    {
-                        "i": i, "w": w, "h": h, "e0": e0, "n0": n0,
-                        "xmin": float(mx.min()), "ymin": float(my.min()),
-                        "xmax": float(mx.max()), "ymax": float(my.max()),
-                    }
-                )
-            yield pd.DataFrame(recs, columns=[f.name for f in bbox_schema])
+                my = tm.EARTH_RADIUS * np.log(np.tan(np.pi / 4 + np.radians(lat) / 2))
+                boxes.append((mx.min(), my.min(), mx.max(), my.max()))
+            cols = np.array(boxes, dtype=np.float64).reshape(-1, 4).T
+            yield pdf.assign(**dict(zip(bbox, cols)))
 
-    boxed = images.select("i", "w", "h", "e0", "n0").mapInPandas(
-        suggest, bbox_schema
+    return src.mapInPandas(suggest, schema)
+
+
+def _covering_sources(images: DataFrame, z: int, crs: int,
+                      extra: tuple[str, ...] = ()) -> DataFrame:
+    """(tile, source) rows of a tile stage: each source with the
+    georeference columns its grid step reads, once per covering tile."""
+    if crs == WEBMERC:
+        geo, boxed = ("xmin", "ymax"), images
+    else:
+        geo, boxed = ("e0", "n0"), _suggest_bbox(images, crs, extra)
+    return covering_tiles(boxed, z).select(
+        "tile_x", "tile_y", "i", "w", "h", *geo, *extra
     )
+
+
+def _paint_sources(pdf: pd.DataFrame, paint, decode_payload: bool = False,
+                   ascending: bool = True) -> int:
+    """The composite loop: paint(row, pixels) -> covered mask for one
+    tile's sources by image id (the last painted wins); returns the
+    covered pixel count. Pixels: the decoded `bytes` payload, or
+    georef.np_image_pixels."""
+    covered = np.zeros((TILE, TILE), dtype=bool)
+    for _, row in pdf.sort_values("i", ascending=ascending).iterrows():
+        if decode_payload:
+            from gdal_spark.raster.codecs import decode_image
+
+            src = decode_image(bytes(row["bytes"]), str(row["fmt"]))
+        else:
+            src = georef.np_image_pixels(int(row["i"]), int(row["w"]), int(row["h"]))
+        covered |= paint(row, src)
+    return int(covered.sum())
+
+
+def _source_grid(crs: int, tx: int, ty: int, z: int):
+    """row -> (dfx, dfy): continuous source pixel coords of every
+    destination pixel centre of tile (tx, ty), for one source row —
+    the dst pixel -> 3857 -> [lon/lat -> source CRS] -> src pixel
+    chain (GenImgProjTransform, alg/gdaltransformer.cpp:2187)."""
+    res_z = tm.resolution(z)
+    if crs == WEBMERC:
+        return lambda row: rs.inverse_grid(
+            tx, ty, z, float(row["xmin"]), float(row["ymax"]),
+            georef.RES0, tm.ORIGIN, res_z,
+        )
+    from gdal_spark.geo import projzoo as pz
+
+    px = np.arange(TILE, dtype=np.float64)
+    lon, lat = tm.np_inv_merc(-tm.ORIGIN + (tx * TILE + px + 0.5) * res_z,
+                              tm.ORIGIN - (ty * TILE + px + 0.5) * res_z)
+    E, N = pz.forward(crs, np.broadcast_to(lon[None, :], (TILE, TILE)),
+                      np.broadcast_to(lat[:, None], (TILE, TILE)))
+    res = PROJ_RENDER[crs]["res"]
+    return lambda row: ((E - float(row["e0"])) / res, (float(row["n0"]) - N) / res)
+
+
+def _footprint(tx: int, ty: int, z: int, row: pd.Series):
+    """Source-space footprint [x0, x1) x [y0, y1) of every destination
+    pixel of tile (tx, ty) over an EPSG:3857 source
+    (GWKAverageOrMode's tap window)."""
+    res_z = tm.resolution(z)
+    px = np.arange(TILE, dtype=np.float64)
+    wx0 = -tm.ORIGIN + (tx * TILE + px) * res_z
+    wy_top = tm.ORIGIN - (ty * TILE + px) * res_z
+    x0 = np.broadcast_to(((wx0 - float(row["xmin"])) / georef.RES0)[None, :], (TILE, TILE))
+    y0 = np.broadcast_to(((float(row["ymax"]) - wy_top) / georef.RES0)[:, None], (TILE, TILE))
+    step = res_z / georef.RES0
+    return x0, x0 + step, y0, y0 + step
+
+
+def _band_schema(*extra: T.StructField, with_data: bool = False) -> T.StructType:
     fields = [
         T.StructField("tile_x", T.IntegerType()),
         T.StructField("tile_y", T.IntegerType()),
         T.StructField("band", T.IntegerType()),
+        *extra,
         T.StructField("checksum", T.IntegerType()),
         T.StructField("n_px", T.LongType()),
     ]
     if with_data:
         fields.append(T.StructField("data", T.BinaryType()))
-    schema = T.StructType(fields)
+    return T.StructType(fields)
+
+
+def _band_records(tx: int, ty: int, planes: np.ndarray, n_px: int,
+                  with_data: bool = False, **extra) -> list[dict]:
+    """One record per band of `planes` (TILE, TILE, BANDS) uint8: the
+    GDAL checksum, the covered pixel count and, if asked, the bytes."""
+    recs = []
+    for b in range(BANDS):
+        rec = {"tile_x": tx, "tile_y": ty, "band": b, **extra,
+               "checksum": gdal_checksum(planes[:, :, b]), "n_px": n_px}
+        if with_data:
+            rec["data"] = planes[:, :, b].tobytes()
+        recs.append(rec)
+    return recs
+
+
+def render_tiles(
+    images: DataFrame,
+    z: int,
+    resampling: str = "near",
+    with_data: bool = False,
+    decode_payload: bool = False,
+    ascending: bool = True,
+    pairs: int = 0,
+    crs: int = WEBMERC,
+) -> DataFrame:
+    """Warp-composite images into 256x256x3 tile rasters at zoom z.
+
+    `crs` is the sources' CRS. EPSG:3857 sources need columns
+    (i, w, h, xmin, ymin, xmax, ymax); sources in a PROJ_RENDER CRS
+    need (i, w, h, e0, n0) (see proj_image_geo) and render with
+    'near' only. `resampling` is one of near, bilinear, cubic,
+    cubicspline, lanczos, average; anything else raises ValueError.
+
+    `pairs`, if known, is the count of covering (image, tile) pairs;
+    it sizes the tile shuffle (at least one partition per core).
+
+    `ascending` sets the composite order (last writer wins), the GTI
+    mosaic SORT_FIELD_ASC option (frmts/gti/gdaltileindexdataset.cpp:
+    87-110): sources paint in image-id order, so the LAST one in that
+    order shows on top.
+
+    Source pixels:
+
+    - decode_payload=True — the REAL pipeline: the `bytes` column is
+      decoded per image via raster/codecs.decode_image (fmt-dispatch
+      PNG/JPEG/TIFF), i.e. decode -> warp -> composite end-to-end
+      (gdal_translate feeding gdalwarp). Requires (bytes, fmt)
+      columns; JPEG sources decode lossily, so pixel-exact oracles
+      must exclude them (fixture rule: i % 3 == 1).
+    - decode_payload=False — synthetic fast path for formula oracles:
+      pixels regenerate from value(x,y,c) = (x+y+i+phase_c) % 256
+      (georef.np_image_pixels; bit-identical to the decoded lossless
+      payloads by construction).
+
+    Returns one row per (tile, band) with the GDAL 16-bit checksum
+    and the count of source-covered pixels.
+    """
+    _check_render(resampling, crs)
+    schema = _band_schema(with_data=with_data)
+    sample = _SAMPLERS.get(resampling)
 
     def composite(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        from gdal_spark.geo import projzoo as pz
-        from gdal_spark.raster.checksum import gdal_checksum as cks
-
         tx, ty = int(key[0]), int(key[1])
+        grid = _source_grid(crs, tx, ty, z)
         buf = np.zeros((TILE, TILE, BANDS), dtype=np.uint8)
-        covered = np.zeros((TILE, TILE), dtype=bool)
-        px = np.arange(TILE, dtype=np.float64)
-        wx = -tm.ORIGIN + (tx * TILE + px + 0.5) * res_z
-        wy = tm.ORIGIN - (ty * TILE + px + 0.5) * res_z
-        lon = np.degrees(wx / tm.EARTH_RADIUS)
-        lat = np.degrees(
-            2 * np.arctan(np.exp(wy / tm.EARTH_RADIUS)) - np.pi / 2
-        )
-        LON = np.broadcast_to(lon[None, :], (TILE, TILE))
-        LAT = np.broadcast_to(lat[:, None], (TILE, TILE))
-        E, N = pz.forward(code, LON, LAT)
-        for _, row in pdf.sort_values("i").iterrows():
-            i, w, h = int(row["i"]), int(row["w"]), int(row["h"])
-            sx = np.floor((E - float(row["e0"])) / res).astype(np.int64)
-            sy = np.floor((float(row["n0"]) - N) / res).astype(np.int64)
-            mask = (sx >= 0) & (sx < w) & (sy >= 0) & (sy < h)
-            base = (sx + sy + i) % 256
-            for b, phase in enumerate((0, 85, 170)):
-                buf[:, :, b][mask] = ((base[mask] + phase) % 256).astype(np.uint8)
-            covered |= mask
-        n_px = int(covered.sum())
-        recs = []
-        for b in range(BANDS):
-            rec = {
-                "tile_x": tx, "tile_y": ty, "band": b,
-                "checksum": cks(buf[:, :, b]), "n_px": n_px,
-            }
-            if with_data:
-                rec["data"] = buf[:, :, b].tobytes()
-            recs.append(rec)
-        return pd.DataFrame(recs)
 
-    tiles = covering_tiles(boxed, z).select(
-        "tile_x", "tile_y", "i", "w", "h", "e0", "n0"
+        def paint(row: pd.Series, src: np.ndarray) -> np.ndarray:
+            if resampling == "average":
+                vals, mask = rs.sample_average(src, *_footprint(tx, ty, z, row))
+            else:
+                vals, mask = sample(src, *grid(row))
+            if resampling != "near":
+                vals = rs.round_to_byte(vals)
+            buf[mask] = vals[mask]
+            return mask
+
+        n_px = _paint_sources(pdf, paint, decode_payload, ascending)
+        recs = _band_records(tx, ty, buf, n_px, with_data)
+        return pd.DataFrame(recs, columns=schema.fieldNames())
+
+    extra = ("bytes", "fmt") if decode_payload else ()
+    tiles = _covering_sources(images, z, crs, extra)
+    return _tile_groups(tiles, pairs=pairs).applyInPandas(composite, schema)
+
+
+def render_tiles_stats(
+    images: DataFrame,
+    z: int,
+    stats: tuple[str, ...] = rs.FOOTPRINT_STATS,
+) -> DataFrame:
+    """The GWKAverageOrMode stat-resampler family (min/max/sum/rms/
+    med/q1/q3, gdalwarpkernel.cpp GWKAverageOrModeThread) in ONE
+    footprint-gather pass per tile over EPSG:3857 synthetic sources:
+    all stats share the tap window, composite is last-writer (max
+    image id) per pixel like render_tiles.
+    -> (tile_x, tile_y, band, stat, checksum, n_px)."""
+    schema = _band_schema(T.StructField("stat", T.StringType()))
+
+    def composite(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        tx, ty = int(key[0]), int(key[1])
+        bufs = {s: np.zeros((TILE, TILE, BANDS), dtype=np.float64) for s in stats}
+
+        def paint(row: pd.Series, src: np.ndarray) -> np.ndarray:
+            x0, x1, y0, y1 = _footprint(tx, ty, z, row)
+            for b in range(BANDS):
+                vals, mask = rs.sample_footprint_stats(src[:, :, b], x0, x1, y0, y1, stats)
+                for s in stats:
+                    bufs[s][:, :, b][mask] = vals[s][mask]
+            return mask
+
+        n_px = _paint_sources(pdf, paint)
+        recs = []
+        for s in stats:
+            # sum and rms round half-up to bytes; the others truncate
+            planes = (rs.round_to_byte(bufs[s]) if s in ("sum", "rms")
+                      else np.clip(bufs[s], 0, 255).astype(np.uint8))
+            recs += _band_records(tx, ty, planes, n_px, stat=s)
+        return pd.DataFrame(recs, columns=schema.fieldNames())
+
+    return _tile_groups(_covering_sources(images, z, WEBMERC)).applyInPandas(
+        composite, schema
     )
-    return _tile_groups(tiles).applyInPandas(composite, schema)
 
 
 def encode_tiles(
@@ -560,6 +408,8 @@ def encode_tiles(
     (:348-352). Input: render_tiles(..., with_data=True) rows."""
     if fmt not in ("png", "jpeg", "webp", "gtiff"):
         raise ValueError(f"unsupported tile format: {fmt}")
+    if convention not in ("xyz", "tms"):
+        raise ValueError(f"unknown tile y convention: {convention}")
     ext = {"png": "png", "jpeg": "jpg", "webp": "webp", "gtiff": "tif"}[fmt]
     out_schema = T.StructType(
         [
@@ -586,12 +436,11 @@ def encode_tiles(
             # tile's mercator bounds (gdalalg_raster_tile.cpp writes
             # whatever --output-format the raster driver supports)
             from gdal_spark.raster.tiff import encode_tiff
-            from gdal_spark.tiles import tilemath as _tm
 
-            res = _tm.resolution(z)
+            res = tm.resolution(z)
             span = res * TILE
-            gt = (-_tm.ORIGIN + tx * span, res, 0.0,
-                  _tm.ORIGIN - ty * span, 0.0, -res)
+            gt = (-tm.ORIGIN + tx * span, res, 0.0,
+                  tm.ORIGIN - ty * span, 0.0, -res)
             payload = encode_tiff(arr, geo=(gt, 3857))
         else:
             payload = encode_image(arr, fmt, quality=quality)
@@ -653,8 +502,6 @@ def read_tile_tree(spark: SparkSession, root: str,
     exactly as in the reference."""
     import os
     import re
-
-    import pandas as pd
 
     pattern = os.path.join(root, str(z) if z is not None else "*",
                            "*", "*.*")
@@ -718,6 +565,7 @@ def build_pyramid(
     One Column-math job (no Python) first counts the base level's
     covering (image, tile) pairs; that count sizes every level's tile
     shuffle, since no coarser level has more tiles."""
+    _check_render(resampling, WEBMERC)
     spark = images.sparkSession
     levels: dict[int, DataFrame] = {}
     pairs = covering_tiles(images, z_max).count()

@@ -78,14 +78,6 @@ def hot_keys(df: DataFrame, keys: list[str], threshold: int) -> DataFrame:
 # catalog drops in by swapping read/write paths for table idents)
 # ---------------------------------------------------------------------------
 
-def committed_keys(spark: SparkSession, path: str, keys: list[str]) -> DataFrame | None:
-    """Key set of an existing snapshot, or None if absent/empty."""
-    try:
-        return spark.read.parquet(path).select(*keys).dropDuplicates(keys)
-    except Exception:
-        return None
-
-
 def pending_work(work: DataFrame, done: DataFrame | None, keys: list[str]) -> DataFrame:
     """The resume anti-join: drop work whose keys are committed."""
     if done is None:

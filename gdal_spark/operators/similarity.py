@@ -84,11 +84,6 @@ def sign_signature(vec: str = "embedding") -> F.Column:
     return F.expr(" + ".join(terms)).cast("int")
 
 
-# legacy alias used by earlier call sites
-def lsh_bucket(vec: str = "embedding") -> F.Column:
-    return sign_signature(vec)
-
-
 def _band_rows(df: DataFrame, sig: str, keep: list) -> DataFrame:
     """Explode (id cols, sig) into N_BANDS (band, bucket) rows."""
     parts = []
@@ -379,10 +374,6 @@ def duck_signature(vec: str) -> str:
         for i in range(N_PLANES)
     ]
     return "cast(" + " + ".join(terms) + " as int)"
-
-
-def duck_lsh_bucket(vec: str) -> str:  # legacy alias
-    return duck_signature(vec)
 
 
 def sql_cosine_topk(query_filter: str, k: int, bucketed: bool = False,

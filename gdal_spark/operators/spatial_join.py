@@ -3,9 +3,8 @@
 Semantics: the reference's FilterGeometry ladder applied layer-wide
 (ogr/ogrsf_frmts/generic/ogrlayer.cpp:2253-2325):
   1. bbox reject                      -> native Column predicates
-  2. envelope-contains fast accept    -> inside PreparedPolygon
-  3. point-in-envelope accept (points)-> inside PreparedPolygon
-  4. exact prepared-geometry refine   -> vectorized even-odd test
+  2-4. envelope accepts + exact refine -> even-odd crossing parity
+       over the zone's edges (Column math; the accepts are subsumed)
 
 Distribution strategy (SURVEY.md §2.4): both sides are keyed by
 WebMercator quadtree cells at an index zoom (the engine's S2/H3-style
@@ -14,25 +13,17 @@ broadcast or shuffle-hash, AQE splits skewed cells. Points land in
 exactly one cell (no dedupe needed); polygons explode to their
 covering cells.
 
-At 10^12 rows: the cell join is the only shuffle. Two refine
-implementations:
-
-- "edges" (default): polygon edges are exploded ONCE into a tiny
-  (zone, edge) table, broadcast, and the even-odd crossing test runs
-  as pure Column math with map-side partial aggregation — the whole
-  join stays inside whole-stage codegen, scales linearly with cores.
-- "prepared": Arrow-batched mapInPandas with per-partition prepared-
-  geometry caching (mirrors ogrlayer.cpp:2168's prepared-geometry
-  reuse); candidates are sorted by zone within partitions so each
-  polygon is prepared once per task. Use when polygons are huge
-  (1000s of vertices) and the edge fan-out would dominate.
+At 10^12 rows: the cell join is the only shuffle. The refine explodes
+polygon edges ONCE into a tiny (zone, edge) table, broadcasts it, and
+runs the even-odd crossing test as pure Column math with map-side
+partial aggregation — the whole join stays inside whole-stage
+codegen and scales linearly with cores.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -75,31 +66,6 @@ def with_bbox_cells(
     return df.withColumn(
         "cell", F.col("_tx").cast("long") * F.lit(1 << zoom) + F.col("_ty").cast("long")
     ).drop("_tx", "_ty")
-
-
-def _refine_factory(pk: str, zk: str, px: str, py: str):
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from gdal_spark.geo.geom import PreparedPolygon
-
-        cache: dict = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf[[pk, zk]]
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            xs = pdf[px].to_numpy(dtype=np.float64)
-            ys = pdf[py].to_numpy(dtype=np.float64)
-            grouped = pdf.groupby(zk, sort=False).indices
-            for zid, idx in grouped.items():
-                prep = cache.get(zid)
-                if prep is None:
-                    prep = PreparedPolygon(bytes(pdf["geometry"].iloc[idx[0]]))
-                    if len(cache) < 65536:
-                        cache[zid] = prep
-                keep[idx] = prep.contains_points(xs[idx], ys[idx])
-            yield pdf.loc[keep, [pk, zk]]
-
-    return refine
 
 
 _EDGE_SCHEMA = T.StructType(
@@ -150,22 +116,20 @@ def pip_join(
     zone_bbox: tuple[str, str, str, str] = ("zxmin", "zymin", "zxmax", "zymax"),
     index_zoom: int = DEFAULT_INDEX_ZOOM,
     broadcast_zones: bool = False,
-    method: str = "edges",
 ) -> DataFrame:
     """Point-in-polygon join -> DataFrame(point_key, zone_key).
 
     zones_df needs (zone_key, geometry WKB, bbox columns in degrees).
-    method: "edges" (all-JVM even-odd crossing parity, default) or
-    "prepared" (Arrow-batched prepared-geometry refine).
+    The refine is all-JVM even-odd crossing parity over the zones'
+    broadcast edge table.
     """
     zxmin, zymin, zxmax, zymax = zone_bbox
     pts = with_point_cell(points_df, point_lon, point_lat, index_zoom).select(
         point_key, point_lon, point_lat, "cell"
     )
-    # the edges path never ships WKB through the candidate join
-    zcols = [zone_key, *zone_bbox] if method == "edges" else [zone_key, "geometry", *zone_bbox]
+    # WKB never ships through the candidate join; only the edges do
     zn = with_bbox_cells(
-        zones_df.select(*zcols), zxmin, zymin, zxmax, zymax, index_zoom,
+        zones_df.select(zone_key, *zone_bbox), zxmin, zymin, zxmax, zymax, index_zoom,
     )
     if broadcast_zones:
         zn = F.broadcast(zn)
@@ -177,26 +141,18 @@ def pip_join(
         & (F.col(point_lat) >= F.col(zymin))
         & (F.col(point_lat) <= F.col(zymax))
     )
-    if method == "edges":
-        cand = cand.select(point_key, point_lon, point_lat, zone_key)
-        edges = F.broadcast(zone_edges(zones_df, zone_key))
-        px, py = F.col(point_lon), F.col(point_lat)
-        straddles = (F.col("ey1") > py) != (F.col("ey2") > py)
-        xint = F.col("ex1") + (py - F.col("ey1")) * (
-            F.col("ex2") - F.col("ex1")
-        ) / (F.col("ey2") - F.col("ey1"))
-        crossing = F.when(straddles & (px < xint), F.lit(1)).otherwise(F.lit(0))
-        joined = cand.join(edges, cand[zone_key] == edges["_zk"])
-        return (
-            joined.groupBy(point_key, zone_key)
-            .agg(F.sum(crossing).alias("_crossings"))
-            .where(F.col("_crossings") % 2 == 1)
-            .select(point_key, zone_key)
-        )
-    cand = cand.select(point_key, point_lon, point_lat, zone_key, "geometry")
-    out_schema = T.StructType(
-        [cand.schema[point_key], cand.schema[zone_key]]
+    cand = cand.select(point_key, point_lon, point_lat, zone_key)
+    edges = F.broadcast(zone_edges(zones_df, zone_key))
+    px, py = F.col(point_lon), F.col(point_lat)
+    straddles = (F.col("ey1") > py) != (F.col("ey2") > py)
+    xint = F.col("ex1") + (py - F.col("ey1")) * (
+        F.col("ex2") - F.col("ex1")
+    ) / (F.col("ey2") - F.col("ey1"))
+    crossing = F.when(straddles & (px < xint), F.lit(1)).otherwise(F.lit(0))
+    joined = cand.join(edges, cand[zone_key] == edges["_zk"])
+    return (
+        joined.groupBy(point_key, zone_key)
+        .agg(F.sum(crossing).alias("_crossings"))
+        .where(F.col("_crossings") % 2 == 1)
+        .select(point_key, zone_key)
     )
-    refine = _refine_factory(point_key, zone_key, point_lon, point_lat)
-    # cluster candidates by zone so each task prepares a polygon once
-    return cand.sortWithinPartitions(zone_key).mapInPandas(refine, schema=out_schema)

@@ -67,9 +67,3 @@ def tile_counts(assigned: DataFrame) -> DataFrame:
     return assigned.groupBy("tile_z", "tile_x", "tile_y").agg(
         F.count("*").alias("n_images")
     )
-
-
-def with_quadkey(assigned: DataFrame, z: int) -> DataFrame:
-    return assigned.withColumn(
-        "quadkey", tm.quadkey_col(F.col("tile_x"), F.col("tile_y"), z)
-    )

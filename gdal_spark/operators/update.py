@@ -36,7 +36,7 @@ def raster_update(dst_bytes: bytes, src_bytes: bytes,
     """Warp ``src`` into ``dst`` (both georeferenced GTiff bytes);
     returns the updated destination bytes.  Same-CRS path; a CRS
     mismatch must go through the transformer-chain warp
-    (operators/render.render_tiles_proj) first, like the reference
+    (operators/render.render_tiles(crs=...)) first, like the reference
     delegating to GDALWarp's reprojection."""
     if resampling not in _SAMPLERS:
         raise ValueError(f"raster update: unknown resampling {resampling!r}")
@@ -48,7 +48,7 @@ def raster_update(dst_bytes: bytes, src_bytes: bytes,
     if dst_epsg != src_epsg:
         raise ValueError(
             "raster update: CRS mismatch — reproject the source first "
-            "(render_tiles_proj transformer chain)")
+            "(render_tiles(crs=...) transformer chain)")
     if src_gt[2] or src_gt[4] or dst_gt[2] or dst_gt[4]:
         raise ValueError("raster update: rotated geotransforms unsupported")
     dst = decode_tiff(dst_bytes)

@@ -21,15 +21,7 @@ exactness, hue preservation, idempotence) like the dither kernel.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import types as T
-
-from gdal_spark.raster.checksum import gdal_checksum
-from gdal_spark.raster.codecs import decode_image
 
 F32 = np.float32
 
@@ -72,48 +64,3 @@ def hsv_merge(rgb: np.ndarray, gray: np.ndarray) -> np.ndarray:
     h, s = rgb_to_hs(rgb)
     return hsv_to_rgb(h, s, gray.astype(np.uint8))
 
-
-MERGE_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType()),
-        T.StructField("band", T.IntegerType()),
-        T.StructField("checksum", T.IntegerType()),
-        T.StructField("vsum", T.LongType()),
-    ]
-)
-
-
-def color_merge(images: DataFrame, gray_fn=None) -> DataFrame:
-    """Per decoded payload: merge a grayscale plane (default: the
-    red/green mean, a deterministic stand-in pan band) into the RGB
-    payload; emit per-band checksums.  Narrow Arrow map."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for _, row in pdf.iterrows():
-                arr = decode_image(bytes(row["bytes"]), row["fmt"])
-                if arr.ndim == 2:
-                    arr = np.repeat(arr[:, :, None], 3, axis=2)
-                gray = (
-                    gray_fn(arr)
-                    if gray_fn is not None
-                    else ((arr[:, :, 0].astype(np.int32)
-                           + arr[:, :, 1].astype(np.int32)) // 2)
-                ).astype(np.uint8)
-                out = hsv_merge(arr[:, :, :3], gray)
-                for band in range(3):
-                    plane = out[:, :, band]
-                    recs.append(
-                        {
-                            "image_id": row["image_id"],
-                            "band": band,
-                            "checksum": int(gdal_checksum(plane)),
-                            "vsum": int(plane.sum(dtype=np.int64)),
-                        }
-                    )
-            yield pd.DataFrame(recs, columns=[f.name for f in MERGE_SCHEMA])
-
-    return images.select("image_id", "fmt", "bytes").mapInPandas(
-        kernel, MERGE_SCHEMA
-    )

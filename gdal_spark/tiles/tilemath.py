@@ -97,22 +97,6 @@ def tile_range_cols(
     return min_tx, min_ty, max_tx, max_ty
 
 
-def intersects_matrix(
-    xmin: Column, ymin: Column, xmax: Column, ymax: Column, z: int
-) -> Column:
-    """The reference's pre-clamp intersection test (:319-331)."""
-    tile_span = resolution(z) * TILE_SIZE
-    n = float(1 << z)
-    dmin_tx = (xmin - F.lit(-ORIGIN)) / F.lit(tile_span)
-    dmax_tx = (xmax - F.lit(-ORIGIN)) / F.lit(tile_span)
-    dmin_ty = (F.lit(ORIGIN) - ymax) / F.lit(tile_span)
-    dmax_ty = (F.lit(ORIGIN) - ymin) / F.lit(tile_span)
-    return (
-        (dmin_tx <= F.lit(n)) & (dmax_tx >= F.lit(0.0))
-        & (dmin_ty <= F.lit(n)) & (dmax_ty >= F.lit(0.0))
-    )
-
-
 def file_y(y: Column, z: int, convention: str = "xyz") -> Column:
     """XYZ keeps y; TMS flips (apps/gdalalg_raster_tile.cpp:348-352)."""
     if convention == "xyz":
@@ -148,10 +132,6 @@ def cell_id(x: Column, y: Column, z: int) -> Column:
     return (x.cast("long") * F.lit(1 << z) + y.cast("long")).alias("cell")
 
 
-def cell_to_xy(cell: int, z: int) -> tuple[int, int]:
-    return cell >> z if False else (cell // (1 << z), cell % (1 << z))
-
-
 def auto_max_zoom(native_res: float, tile_size: int = TILE_SIZE) -> int:
     """Smallest z whose res(z) <= native_res (rel eps 1e-8), then round
     to the closest of z/z-1 by resolution ratio
@@ -172,14 +152,6 @@ def auto_max_zoom(native_res: float, tile_size: int = TILE_SIZE) -> int:
 # ---------------------------------------------------------------------------
 # numpy twins (used inside pandas UDFs for per-tile pixel math)
 # ---------------------------------------------------------------------------
-
-def np_merc(lon, lat):
-    import numpy as np
-
-    x = EARTH_RADIUS * np.radians(lon)
-    y = EARTH_RADIUS * np.log(np.tan(np.pi / 4.0 + np.radians(lat) / 2.0))
-    return x, y
-
 
 def np_inv_merc(x, y):
     import numpy as np

@@ -159,20 +159,21 @@ def test_images_payload_roundtrip(spark):
 
 
 def test_pip_prepared_equals_edges(spark):
-    """Both refine implementations must agree exactly."""
-    from gdal_spark.fixtures.images import build_images
-    from gdal_spark.fixtures.zones import build_zones
-    from gdal_spark.operators.spatial_join import pip_join
+    """The edge-parity join equals PreparedPolygon.contains_points
+    evaluated in numpy over every (point, zone) pair."""
+    from gdal_spark.geo.geom import PreparedPolygon
 
     images = build_images(spark, n=3000, with_payload=False)
     zones = build_zones(spark, n=60)
     edges = {
-        (r["image_id"], r["fid"])
-        for r in pip_join(images, zones, method="edges").collect()
+        (r["image_id"], r["fid"]) for r in pip_join(images, zones).collect()
     }
-    prepared = {
-        (r["image_id"], r["fid"])
-        for r in pip_join(images, zones, method="prepared").collect()
-    }
+    pts = images.select("image_id", "lon_c", "lat_c").toPandas()
+    xs = pts["lon_c"].to_numpy(dtype=np.float64)
+    ys = pts["lat_c"].to_numpy(dtype=np.float64)
+    prepared = set()
+    for z in zones.select("fid", "geometry").collect():
+        inside = PreparedPolygon(bytes(z["geometry"])).contains_points(xs, ys)
+        prepared |= {(pts["image_id"][k], z["fid"]) for k in np.nonzero(inside)[0]}
     assert edges == prepared
     assert edges  # non-trivial

@@ -2,6 +2,7 @@
 overview.cpp semantics)."""
 
 import numpy as np
+import pytest
 
 from gdal_spark.fixtures import georef
 from gdal_spark.raster import resample as rs
@@ -225,20 +226,22 @@ def test_render_decoded_matches_formula(spark):
     from pyspark.sql import functions as F
 
     from gdal_spark.fixtures.images import build_images
-    from gdal_spark.operators.render import render_tiles
+    from gdal_spark.operators.render import proj_image_geo, render_tiles
 
     ids = spark.range(30).withColumnRenamed("id", "i")
     lossless = ids.where(F.col("i") % 3 != 1)
     imgs = build_images(spark, ids_df=lossless, with_payload=True)
-    dec = {
-        (r["tile_x"], r["tile_y"], r["band"]): (r["checksum"], r["n_px"])
-        for r in render_tiles(imgs, 12, decode_payload=True).collect()
-    }
-    ref = {
-        (r["tile_x"], r["tile_y"], r["band"]): (r["checksum"], r["n_px"])
-        for r in render_tiles(imgs, 12).collect()
-    }
-    assert dec == ref and len(dec) > 0
+    utm = imgs.join(proj_image_geo(lossless, 32631).select("i", "e0", "n0"), "i")
+    for images, z, crs in ((imgs, 12, 3857), (utm, 11, 32631)):
+        dec = {
+            (r["tile_x"], r["tile_y"], r["band"]): (r["checksum"], r["n_px"])
+            for r in render_tiles(images, z, decode_payload=True, crs=crs).collect()
+        }
+        ref = {
+            (r["tile_x"], r["tile_y"], r["band"]): (r["checksum"], r["n_px"])
+            for r in render_tiles(images, z, crs=crs).collect()
+        }
+        assert dec == ref and len(dec) > 0, crs
 
 
 def test_lanczos_integer_centers_identity():
@@ -280,13 +283,22 @@ def _tile_stage_frames(spark):
     from pyspark.sql import functions as F
 
     from gdal_spark.fixtures.images import build_images
-    from gdal_spark.operators.render import encode_tiles, overview_tiles, render_tiles
+    from gdal_spark.operators.render import (
+        encode_tiles,
+        overview_tiles,
+        proj_image_geo,
+        render_tiles,
+        render_tiles_stats,
+    )
 
     images = build_images(spark, n=6, with_payload=True)
     rendered = render_tiles(images, 12, with_data=True, decode_payload=True)
     base = rendered.where(F.col("n_px") > 0)
+    utm = proj_image_geo(spark.range(6).withColumnRenamed("id", "i"), 32631)
     return {
         "render_tiles": rendered,
+        "render_tiles_crs": render_tiles(utm, 11, crs=32631),
+        "render_tiles_stats": render_tiles_stats(images, 12),
         "encode_tiles": encode_tiles(base, 12),
         "overview_tiles": overview_tiles(base.drop("n_px"), with_data=True),
     }
@@ -344,3 +356,41 @@ def test_decode_jpeg_same_on_cold_and_warm_table_cache():
     warm = jpeg.decode_jpeg(blob)
     assert jpeg._build_decode_table.cache_info().hits > 0
     assert cold.dtype == warm.dtype and (cold == warm).all()
+
+
+def test_render_rejects_unknown_resampling(spark):
+    from gdal_spark.fixtures.images import build_images
+    from gdal_spark.operators.render import render_tiles
+
+    images = build_images(spark, n=2, with_payload=False)
+    with pytest.raises(ValueError, match="resampling 'nearest'"):
+        render_tiles(images, 12, resampling="nearest")
+
+
+def test_build_pyramid_rejects_unknown_resampling_before_any_job():
+    from gdal_spark.operators.render import build_pyramid
+
+    class NoPlan:
+        sparkSession = None  # any use of the input fails with AttributeError
+
+    with pytest.raises(ValueError, match="resampling 'bicubic'"):
+        build_pyramid(NoPlan(), 12, 10, resampling="bicubic")
+
+
+def test_encode_tiles_rejects_unknown_convention(spark):
+    from gdal_spark.fixtures.images import build_images
+    from gdal_spark.operators.render import encode_tiles, render_tiles
+
+    tiles = render_tiles(build_images(spark, n=2, with_payload=False), 12, with_data=True)
+    with pytest.raises(ValueError, match="convention: google"):
+        encode_tiles(tiles, 12, convention="google")
+
+
+def test_projected_render_is_nearest_only(spark):
+    from gdal_spark.operators.render import proj_image_geo, render_tiles
+
+    utm = proj_image_geo(spark.range(2).withColumnRenamed("id", "i"), 32631)
+    with pytest.raises(ValueError, match="'near' only"):
+        render_tiles(utm, 11, resampling="bilinear", crs=32631)
+    with pytest.raises(ValueError, match="EPSG:4326"):
+        render_tiles(utm, 11, crs=4326)
