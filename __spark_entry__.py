@@ -4,6 +4,15 @@ entry(spark)    — flagship pipeline on /root/testdata/sf0.001.
 queries()       — one entry per implemented operator (SURVEY.md §2).
 oracle_sql()    — DuckDB-equivalent SQL per query (correctness gate).
 
+A query is named once, in the _ORDER tuple at the end of this module.
+queries() maps each name to q_<name> in _ORDER's order; oracle_sql()
+maps each name that has an _o_<name> to the SQL text it returns.  An
+_o_<name> is a def, or a one-line binding (another oracle, or a
+functools.partial of a shared oracle builder) next to its query.
+Per-image pixel-rule queries run through _per_image (and
+_band_checksums); zones write -> read queries through
+_zones_roundtrip.
+
 The geo fixtures (images/zones/sites) carry no geo columns in the
 input; the engine derives them deterministically from row ids via an
 LCG rule that is expressible in BOTH Spark Column math and ANSI SQL
@@ -18,6 +27,7 @@ import os
 import sys
 import zipfile
 from collections.abc import Callable
+from functools import partial
 
 import pandas as pd  # module-top: pandas_udf type hints resolve here
 
@@ -113,6 +123,7 @@ RAST_CHECKSUM_Z = 4   # tile-checksum burn zoom (pixel-level oracle)
 RENDER_MOD = 499      # image-id subset modulus for render parity
 UTM_MOD = 1997        # tighter subset for the UTM warp oracle (exp-heavy SQL)
 UTM_Z = 11            # warp target zoom for the UTM query
+PALETTED_MOD = 499    # image-id subset modulus for the codec roundtrips
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -133,6 +144,99 @@ def _site_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _images_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     return build_images(spark, ids_df=_image_ids(spark, sf_dir), with_payload=False)
+
+
+def _per_image(
+    spark: SparkSession, sf_dir: str, residue: int, ddl: str,
+    rows: Callable, mod: int = PALETTED_MOD,
+    cols: tuple[str, ...] = ("i", "image_id", "w", "h"),
+) -> DataFrame:
+    """The per-image harness: for every image with ``i % mod ==
+    residue``, ``rows`` gets the image's ``cols`` values and yields
+    output tuples in the column order of the DDL schema ``ddl``; one
+    Arrow-batched mapInPandas runs it.
+
+    ``rows`` runs on the workers, which cannot import this module:
+    cloudpickle ships its module-level functions by reference.  So
+    ``rows`` is a closure nested in its q_* (or lives in gdal_spark/),
+    and nothing here that runs on a worker names a function of this
+    module."""
+    ids = _image_ids(spark, sf_dir).where(F.col("i") % mod == residue)
+    names = [c.split()[0] for c in ddl.split(",")]
+
+    def run(batches):
+        for pdf in batches:
+            out = [
+                r for img in pdf.itertuples(index=False) for r in rows(*img)
+            ]
+            yield pd.DataFrame(out, columns=names)
+
+    images = build_images(spark, ids_df=ids, with_payload=False)
+    return images.select(*cols).mapInPandas(run, ddl)
+
+
+def _band_checksums(
+    spark: SparkSession, sf_dir: str, residue: int, decode: Callable
+) -> DataFrame:
+    """(image_id, fmt, band, checksum) over the PALETTED_MOD subset:
+    ``decode(pixels)`` maps each format name to the array the pixel
+    rule decodes back to from that format's REAL bytes (H x W or
+    H x W x bands), and every band gets its GDAL checksum."""
+
+    def rows(i, image_id, w, h):
+        import numpy as np
+
+        from gdal_spark.fixtures.georef import np_image_pixels
+        from gdal_spark.raster.checksum import gdal_checksum
+
+        for fmt, out in decode(np_image_pixels(i, w, h)).items():
+            out = np.atleast_3d(out)
+            for b in range(out.shape[2]):
+                yield image_id, fmt, b, gdal_checksum(out[:, :, b])
+
+    return _per_image(
+        spark, sf_dir, residue,
+        "image_id string, fmt string, band int, checksum int", rows,
+    )
+
+
+def _band_checksum_oracle(
+    residue: int, nbands: dict[str, int], shift: dict[str, int] | None = None
+) -> str:
+    """DuckDB twin of _band_checksums when every format decodes to the
+    pixel rule itself: ``nbands[fmt]`` bands per format, each sample
+    plus the format's non-negative ``shift`` (default 0)."""
+    shift = shift or {}
+    fmts = ", ".join(
+        f"('{f}', {n}, {shift.get(f, 0)})" for f, n in nbands.items()
+    )
+    img = georef.sql_images_cte(
+        "o_orderkey",
+        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
+        f" = {residue})",
+    )
+    return f"""
+WITH img AS ({img}),
+fmts AS (SELECT * FROM (VALUES {fmts}) AS f(fmt, nb, shift)),
+bands AS (
+  SELECT f.fmt, f.shift, b.band,
+    CASE b.band WHEN 0 THEN 0 WHEN 1 THEN 85 ELSE 170 END AS phase
+  FROM fmts f JOIN range(0, 3) AS b(band) ON b.band < f.nb
+),
+px AS (
+  SELECT i.image_id, fb.fmt, fb.band,
+    (gx.x + gy.y + i.i + fb.phase) % 256 + fb.shift AS val,
+    gy.y * i.w + gx.x AS pidx
+  FROM img i
+  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
+  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
+  CROSS JOIN bands fb
+)
+SELECT image_id, fmt, cast(band as int) AS band,
+  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
+    AS checksum
+FROM px GROUP BY image_id, fmt, band
+"""
 
 
 # ---------------------------------------------------------------------------
@@ -275,7 +379,7 @@ def q_hex_cell_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _o_hex_cell(res: int, counts: bool) -> str:
+def _hex_cell_oracle(res: int, counts: bool) -> str:
     from gdal_spark.fixtures.georef import sql_images_cte
     from gdal_spark.tiles.hexcell import sql_hex_cell
 
@@ -288,6 +392,10 @@ def _o_hex_cell(res: int, counts: bool) -> str:
     else:
         final = "SELECT image_id, hex_cell FROM hcell"
     return f"WITH imgs AS ({imgs}),\n{hex_ctes}\n{final}"
+
+
+_o_hex_cell = partial(_hex_cell_oracle, HEX_RES, counts=False)
+_o_hex_cell_counts = partial(_hex_cell_oracle, HEX_COUNT_RES, counts=True)
 
 
 def _graph_edges(spark: SparkSession, sf_dir: str):
@@ -438,6 +546,18 @@ def _mdim_cube(spark: SparkSession, sf_dir: str) -> "mdim.MDArray":
     )
 
 
+_MDIM_CUBE_CTE = f"""
+cube AS (
+  SELECT cast(c_custkey // {MDIM_Y * MDIM_X} as bigint) AS t,
+         cast((c_custkey % {MDIM_Y * MDIM_X}) // {MDIM_X} as bigint) AS y,
+         cast(c_custkey % {MDIM_X} as bigint) AS x,
+         cast((7 * (c_custkey // {MDIM_Y * MDIM_X})
+             + 13 * ((c_custkey % {MDIM_Y * MDIM_X}) // {MDIM_X})
+             + 29 * (c_custkey % {MDIM_X}) + 3) % 251 as int) AS value
+  FROM customer
+)"""
+
+
 def q_mdim_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GetView basic slicing (gdalmultidim.cpp:5677): open-ended
     range, negative-step reversal, and strided range in one
@@ -450,6 +570,15 @@ def q_mdim_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("x").cast("long"),
         F.col("value").cast("int"),
     )
+
+
+def _o_mdim_view() -> str:
+    return f"""
+WITH {_MDIM_CUBE_CTE}
+SELECT t - 1 AS t, {MDIM_Y - 1} - y AS y, (x - 2) // 3 AS x, value
+FROM cube
+WHERE t >= 1 AND x >= 2 AND x < 9 AND (x - 2) % 3 = 0
+"""
 
 
 def q_mdim_transpose(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -466,6 +595,13 @@ def q_mdim_transpose(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _o_mdim_transpose() -> str:
+    return f"""
+WITH {_MDIM_CUBE_CTE}
+SELECT cast(0 as bigint) AS newdim0, x, t, y, value FROM cube
+"""
+
+
 def q_mdim_unscaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """View stack: GetView("[0]") slice then GetUnscaled
     (gdalmultidim.cpp:6634) — value*0.5+10 as Float64 (exact dyadics),
@@ -477,6 +613,17 @@ def q_mdim_unscaled(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("x").cast("long"),
         F.col("value").cast("double"),
     )
+
+
+def _o_mdim_unscaled() -> str:
+    return f"""
+WITH {_MDIM_CUBE_CTE}
+SELECT y, x,
+       CASE WHEN value = 17 THEN NULL
+            ELSE cast(value as double) * cast('0.5' as double)
+                 + cast('10.0' as double) END AS value
+FROM cube WHERE t = 0
+"""
 
 
 def q_mdim_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -493,6 +640,14 @@ def q_mdim_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _o_mdim_resample() -> str:
+    return f"""
+WITH {_MDIM_CUBE_CTE}
+SELECT t, y // 2 AS y, x // 5 AS x, max(value) AS value
+FROM cube GROUP BY 1, 2, 3
+"""
+
+
 def q_mdim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-slab (t) statistics over valid (non-nodata) cells — the
     ComputeStatistics analog; exact integer outputs."""
@@ -505,6 +660,15 @@ def q_mdim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vsum").cast("long"),
         F.col("n").cast("long"),
     )
+
+
+def _o_mdim_stats() -> str:
+    return f"""
+WITH {_MDIM_CUBE_CTE}
+SELECT t, min(value) AS vmin, max(value) AS vmax,
+       cast(sum(value) as bigint) AS vsum, count(*) AS n
+FROM cube WHERE value <> 17 GROUP BY t
+"""
 
 
 # ---------------------------------------------------------------------------
@@ -532,6 +696,16 @@ def _stac_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return read_stac_items(spark, _stac_pages(spark, sf_dir))
 
+
+from gdal_spark.fixtures.stacfix import sql_item_params as _sql_stac_params
+
+_STAC_VALID_CTE = f"""
+sp AS ({_sql_stac_params("c_custkey", "customer")}),
+sv AS (
+  SELECT i, collection, asset, 'EPSG:' || cast(epsg as varchar) AS crs,
+         rx, ry, w, h, x0 AS xmin, ymin, xmax, y0 AS ymax, datetime
+  FROM sp WHERE skip NOT IN (1, 2, 3, 4, 5)
+)"""
 
 _STAC_ITEM_ID = r"item_(\d+)"
 
@@ -592,6 +766,14 @@ def q_stac_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _o_stac_index() -> str:
+    return f"""
+WITH {_STAC_VALID_CTE}
+SELECT collection, asset, crs, i, datetime, xmin, ymin, xmax, ymax, w, h
+FROM sv
+"""
+
+
 def q_stac_mosaic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STACIT mosaic assembly (SetupDataset :430-520): per
     (collection, asset, CRS) group — item count, union bounds, and
@@ -628,6 +810,29 @@ def q_stac_mosaic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _o_stac_mosaic() -> str:
+    return f"""
+WITH {_STAC_VALID_CTE},
+g AS (
+  SELECT collection, asset, crs, count(*) AS n_items,
+         min(xmin) AS xmin, min(ymin) AS ymin,
+         max(xmax) AS xmax, max(ymax) AS ymax,
+         cast(sum(rx) as bigint) AS srx, cast(sum(ry) as bigint) AS sry,
+         min(rx) AS rxh, max(rx) AS rxl, min(ry) AS ryh, max(ry) AS ryl
+  FROM sv GROUP BY 1, 2, 3)
+SELECT collection, asset, crs, n_items, xmin, ymin, xmax, ymax,
+  cast(round((xmax - xmin) / (cast(srx as double) / n_items)) as bigint)
+    AS nx_avg,
+  cast(round((ymax - ymin) / (cast(sry as double) / n_items)) as bigint)
+    AS ny_avg,
+  cast(round(cast(xmax - xmin as double) / rxh) as bigint) AS nx_high,
+  cast(round(cast(ymax - ymin as double) / ryh) as bigint) AS ny_high,
+  cast(round(cast(xmax - xmin as double) / rxl) as bigint) AS nx_low,
+  cast(round(cast(ymax - ymin as double) / ryl) as bigint) AS ny_low
+FROM g
+"""
+
+
 def q_stac_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ascending-datetime compositing order (stacitdataset.cpp:582):
     for 200 probe points, the item on top of each (collection, asset,
@@ -654,6 +859,25 @@ def q_stac_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "top_datetime",
         F.col("n_cover").cast("long"),
     )
+
+
+def _o_stac_latest() -> str:
+    return f"""
+WITH {_STAC_VALID_CTE},
+probes AS (
+  SELECT p, 3000 + (p * 997) % 20000 AS px,
+         203000 + (p * 6007) % 20000 AS py
+  FROM range(0, 200) t(p)),
+cov AS (
+  SELECT pr.p, sv.collection, sv.asset, sv.crs, sv.i, sv.datetime
+  FROM probes pr JOIN sv
+    ON pr.px >= sv.xmin AND pr.px < sv.xmax
+   AND pr.py > sv.ymin AND pr.py <= sv.ymax)
+SELECT p, collection, asset, crs,
+       arg_max(i, datetime) AS top_i, max(datetime) AS top_datetime,
+       count(*) AS n_cover
+FROM cov GROUP BY 1, 2, 3, 4
+"""
 
 
 def q_ntv2_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1016,6 +1240,20 @@ def q_mbtiles_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return back.mapInPandas(decode, schema)
 
 
+def _o_mbtiles_roundtrip() -> str:
+    # Same closed form as the webp subset but summed over the covered
+    # pixels only (uncovered tile pixels decode to 0, contributing 0
+    # to the prime-mod sum), and no n_px (not recoverable from the
+    # decoded archive payload).
+    return f"""{_render_win_ctes(f" AND o_orderkey % {5 * RENDER_MOD} = 0")}
+SELECT cast(w.tx as int) AS tile_x, cast(w.ty as int) AS tile_y,
+       cast(b.band as int) AS band,
+       cast(sum(((w.base + b.phase) % 256) % ({_PRIMES_SQL})[((w.py * 256 + w.px) % 11) + 1]) % 65536 as int) AS checksum
+FROM win w CROSS JOIN bands b
+GROUP BY w.tx, w.ty, b.band
+"""
+
+
 def q_gpkg_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GeoPackage raster-tile pyramid IO (the reference's GPKG raster
     half, gdalgeopackagerasterband.cpp; DDL
@@ -1073,6 +1311,9 @@ def q_gpkg_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     return back.mapInPandas(decode, schema)
+
+
+_o_gpkg_tiles = _o_mbtiles_roundtrip  # same output contract
 
 
 def q_gtfs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1353,6 +1594,9 @@ def q_esric(spark: SparkSession, sf_dir: str) -> DataFrame:
     return back.mapInPandas(decode, schema)
 
 
+_o_esric = _o_mbtiles_roundtrip  # same output contract
+
+
 def q_kml_superoverlay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KML SuperOverlay pyramid (frmts/kmlsuperoverlay): rendered
     tiles write the {z}/{x}/{y}.kml + {y}.png tree — per-tile
@@ -1472,6 +1716,9 @@ def q_stacta(spark: SparkSession, sf_dir: str) -> DataFrame:
     return back.mapInPandas(decode, schema)
 
 
+_o_stacta = _o_mbtiles_roundtrip  # same output contract
+
+
 def q_pmtiles_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PMTiles v3 archive IO (the reference's PMTiles driver; format
     per the published v3 spec): rendered PNG tiles cluster into one
@@ -1527,6 +1774,9 @@ def q_pmtiles_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     return back.mapInPandas(decode, schema)
+
+
+_o_pmtiles_roundtrip = _o_mbtiles_roundtrip  # same output contract
 
 
 def q_tile_tree_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1587,6 +1837,9 @@ def q_tile_tree_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     return back.mapInPandas(decode, schema)
+
+
+_o_tile_tree_roundtrip = _o_mbtiles_roundtrip  # same output contract
 
 
 VRT_MOD = 223  # image subset for the VRT XML carrier oracle
@@ -1654,9 +1907,6 @@ def q_vrt_lut(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor(out*16) (a power-of-2 quantum: the only roundings are the
     LUT's slope division and interpolation multiply, identical IEEE
     ops on both engines)."""
-    import pandas as pd
-    from pyspark.sql import types as T2
-
     from gdal_spark.sources.vrt import parse_vrt
 
     doc = """<VRTDataset rasterXSize="8" rasterYSize="4">
@@ -1683,48 +1933,21 @@ def q_vrt_lut(spark: SparkSession, sf_dir: str) -> DataFrame:
         tuple(src["lut_in"]), tuple(src["lut_out"]),
     )
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 17)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("checksum", T2.IntegerType()),
-            T2.StructField("n_nodata", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def rows(i, image_id, w, h):
         import numpy as np
 
         from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.sources.vrt import apply_complex_source
 
-        ratio, off, nodata, li, lo = params
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                band = np_image_pixels(int(i), int(w), int(h))[:, :, 0]
-                out, valid = apply_complex_source(
-                    band, ratio, off, nodata, li, lo
-                )
-                q = np.where(valid, np.floor(out * 16.0), 0.0).astype(
-                    np.int64
-                )
-                rows.append(
-                    {
-                        "image_id": img_id,
-                        "checksum": gdal_checksum(q),
-                        "n_nodata": int((~valid).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        band = np_image_pixels(i, w, h)[:, :, 0]
+        out, valid = apply_complex_source(band, *params)
+        q = np.where(valid, np.floor(out * 16.0), 0.0).astype(np.int64)
+        yield image_id, gdal_checksum(q), int((~valid).sum())
 
-    return geo.mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 17, "image_id string, checksum int, n_nodata int", rows
+    )
 
 
 def _o_vrt_lut() -> str:
@@ -2058,6 +2281,17 @@ def q_tile_render_sortfield(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _o_tile_render_sortfield() -> str:
+    return f"""{_render_win_ctes(winner="min_by")}
+SELECT cast(w.tx as int) AS tile_x, cast(w.ty as int) AS tile_y,
+       cast(b.band as int) AS band,
+       cast(sum(((w.base + b.phase) % 256) % ({_PRIMES_SQL})[((w.py * 256 + w.px) % 11) + 1]) % 65536 as int) AS checksum,
+       count(*) AS n_px
+FROM win w CROSS JOIN bands b
+GROUP BY 1, 2, 3
+"""
+
+
 def q_translate_outsize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """gdal_translate -outsize / decimated RasterIO read
     (gcore/rasterio.cpp:774: src index = int((i + 0.5) * ratio +
@@ -2133,49 +2367,27 @@ def q_cog_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     data, overview payloads first), then DECODE THE BYTES back —
     decode_cog asserts the COG layout property — and checksum band 0
     of each decoded level against closed-form pixel formulas."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    from gdal_spark.raster.checksum import gdal_checksum
-    from gdal_spark.raster.cog import decode_cog, encode_cog
-    from gdal_spark.raster.resample import average_2x2
+    def rows(i, _id, w, h):
+        import numpy as np
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % RENDER_MOD == 0)
-    images = build_images(spark, ids_df=ids, with_payload=False)
-    schema = T2.StructType(
-        [
-            T2.StructField("i", T2.LongType()),
-            T2.StructField("level", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
+        from gdal_spark.fixtures.georef import np_image_pixels
+        from gdal_spark.raster.checksum import gdal_checksum
+        from gdal_spark.raster.cog import decode_cog, encode_cog
+        from gdal_spark.raster.resample import average_2x2
+
+        base = np_image_pixels(i, w, h)
+        ev_h, ev_w = (h // 2) * 2, (w // 2) * 2
+        ov = np.stack(
+            [average_2x2(base[:ev_h, :ev_w, c]) for c in range(3)], axis=-1
+        )
+        for lvl, arr in enumerate(decode_cog(encode_cog([base, ov]))):
+            yield i, lvl, gdal_checksum(arr[:, :, 0])
+
+    return _per_image(
+        spark, sf_dir, 0, "i bigint, level int, checksum int", rows,
+        mod=RENDER_MOD,
     )
-
-    def run(batches):
-        for pdf in batches:
-            recs = []
-            for i, w, h in zip(pdf["i"], pdf["w"], pdf["h"]):
-                i, w, h = int(i), int(w), int(h)
-                base = georef.np_image_pixels(i, w, h)
-                ev_h, ev_w = (h // 2) * 2, (w // 2) * 2
-                ov = np.stack(
-                    [
-                        average_2x2(base[:ev_h, :ev_w, c])
-                        for c in range(3)
-                    ],
-                    axis=-1,
-                )
-                levels = decode_cog(encode_cog([base, ov]))
-                for lvl, arr in enumerate(levels):
-                    recs.append(
-                        {
-                            "i": i, "level": lvl,
-                            "checksum": gdal_checksum(arr[:, :, 0]),
-                        }
-                    )
-            yield pd.DataFrame(recs, columns=["i", "level", "checksum"])
-
-    return images.select("i", "w", "h").mapInPandas(run, schema)
 
 
 def q_cog_compressed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2186,27 +2398,15 @@ def q_cog_compressed(spark: SparkSession, sf_dir: str) -> DataFrame:
     checksums equal the closed form exactly.  JPEG rows carry the
     sentinel checksum -1 plus a PSNR>=45dB verdict computed against
     smooth triangle-wave content (the codec's documented contract)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    from gdal_spark.raster.checksum import gdal_checksum
-    from gdal_spark.raster.cog import decode_cog, encode_cog
-    from gdal_spark.raster.resample import average_2x2
+    def rows(i, _id, w, h):
+        import numpy as np
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % RENDER_MOD == 0)
-    images = build_images(spark, ids_df=ids, with_payload=False)
-    schema = T2.StructType(
-        [
-            T2.StructField("i", T2.LongType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("level", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-            T2.StructField("psnr_ok", T2.BooleanType()),
-        ]
-    )
+        from gdal_spark.fixtures.georef import np_image_pixels
+        from gdal_spark.raster.checksum import gdal_checksum
+        from gdal_spark.raster.cog import decode_cog, encode_cog
+        from gdal_spark.raster.resample import average_2x2
 
-    def run(batches):
         def psnr(a, b):
             mse = np.mean(
                 (a.astype(np.float64) - b.astype(np.float64)) ** 2)
@@ -2220,35 +2420,29 @@ def q_cog_compressed(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             return [base, ov]
 
-        for pdf in batches:
-            recs = []
-            for i, w, h in zip(pdf["i"], pdf["w"], pdf["h"]):
-                i, w, h = int(i), int(w), int(h)
-                exact_levels = two_levels(georef.np_image_pixels(i, w, h))
-                xg = np.arange(w, dtype=np.int64)
-                yg = np.arange(h, dtype=np.int64)[:, None]
-                tri_levels = two_levels(
-                    np.stack(
-                        [np.abs(((xg + yg + i + p) % 510) - 255)
-                         for p in (0, 85, 170)],
-                        axis=-1).astype(np.uint8))
-                for fmt in ("deflate", "webp", "jpeg"):
-                    src = tri_levels if fmt == "jpeg" else exact_levels
-                    out = decode_cog(encode_cog(src, compression=fmt))
-                    for lvl, (dec, orig) in enumerate(zip(out, src)):
-                        recs.append(
-                            {
-                                "i": i, "fmt": fmt, "level": lvl,
-                                "checksum": -1 if fmt == "jpeg"
-                                else gdal_checksum(dec[:, :, 0]),
-                                "psnr_ok": bool(psnr(dec, orig) >= 45.0),
-                            }
-                        )
-            yield pd.DataFrame(
-                recs, columns=[f.name for f in schema.fields]
-            )
+        exact_levels = two_levels(np_image_pixels(i, w, h))
+        xg = np.arange(w, dtype=np.int64)
+        yg = np.arange(h, dtype=np.int64)[:, None]
+        tri_levels = two_levels(
+            np.stack(
+                [np.abs(((xg + yg + i + p) % 510) - 255)
+                 for p in (0, 85, 170)],
+                axis=-1).astype(np.uint8))
+        for fmt in ("deflate", "webp", "jpeg"):
+            src = tri_levels if fmt == "jpeg" else exact_levels
+            out = decode_cog(encode_cog(src, compression=fmt))
+            for lvl, (dec, orig) in enumerate(zip(out, src)):
+                yield (
+                    i, fmt, lvl,
+                    -1 if fmt == "jpeg" else gdal_checksum(dec[:, :, 0]),
+                    bool(psnr(dec, orig) >= 45.0),
+                )
 
-    return images.select("i", "w", "h").mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 0,
+        "i bigint, fmt string, level int, checksum int, psnr_ok boolean",
+        rows, mod=RENDER_MOD,
+    )
 
 
 def _o_cog_compressed() -> str:
@@ -2319,6 +2513,17 @@ def q_tile_render_decoded(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _o_tile_render_decoded() -> str:
+    return f"""{_render_win_ctes(" AND (o_orderkey % 3) <> 1")}
+SELECT cast(w.tx as int) AS tile_x, cast(w.ty as int) AS tile_y,
+       cast(b.band as int) AS band,
+       cast(sum(((w.base + b.phase) % 256) % ({_PRIMES_SQL})[((w.py * 256 + w.px) % 11) + 1]) % 65536 as int) AS checksum,
+       count(*) AS n_px
+FROM win w CROSS JOIN bands b
+GROUP BY 1, 2, 3
+"""
+
+
 KERN_MOD = 2999  # tighter subset for the 16/36-tap kernel oracles
 
 
@@ -2346,7 +2551,7 @@ q_tile_render_cubicspline = _kernel_render_q("cubicspline")
 q_tile_render_lanczos = _kernel_render_q("lanczos")
 
 
-def _o_kernel_render(resampling: str) -> str:
+def _kernel_render_oracle(resampling: str) -> str:
     """DuckDB twin of the generic filter sampler: same anchor/taps/
     renormalization; band 0; source value from the pixel formula."""
     img = georef.sql_images_cte(
@@ -2430,6 +2635,10 @@ SELECT cast(tx as int) AS tile_x, cast(ty as int) AS tile_y,
   count(*) AS n_px
 FROM win GROUP BY 1, 2
 """
+
+
+_o_tile_render_cubicspline = partial(_kernel_render_oracle, "cubicspline")
+_o_tile_render_lanczos = partial(_kernel_render_oracle, "lanczos")
 
 
 AVG_Z = 11  # 2x downsample from the native anchor zoom
@@ -2597,6 +2806,19 @@ def q_ogr_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _o_ogr_summary() -> str:
+    return """
+SELECT count(*) AS cnt,
+       round(sum(l_quantity), 2) AS sum_qty,
+       min(l_shipdate) AS min_ship,
+       max(l_shipdate) AS max_ship,
+       round(avg(l_extendedprice), 4) AS avg_price,
+       round(stddev_pop(l_discount), 6) AS std_disc,
+       count(DISTINCT l_returnflag) AS n_flags
+FROM lineitem
+"""
+
+
 def q_ogr_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OGR DISTINCT-list mode (SWQM_DISTINCT_LIST)."""
     return (
@@ -2604,6 +2826,10 @@ def q_ogr_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("c_mktsegment").alias("mktsegment"))
         .distinct()
     )
+
+
+def _o_ogr_distinct() -> str:
+    return "SELECT DISTINCT c_mktsegment AS mktsegment FROM customer"
 
 
 def q_ogr_first_match_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2631,6 +2857,23 @@ def q_ogr_first_match_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _o_ogr_first_match_join() -> str:
+    return """
+WITH first_li AS (
+  SELECT l_orderkey, l_partkey, l_quantity,
+         row_number() OVER (
+           PARTITION BY l_orderkey
+           ORDER BY l_linenumber, l_partkey, l_suppkey
+         ) AS rn
+  FROM lineitem
+)
+SELECT o.o_orderkey, f.l_partkey AS first_partkey,
+       round(f.l_quantity, 2) AS first_qty
+FROM orders o LEFT JOIN first_li f
+  ON o.o_orderkey = f.l_orderkey AND f.rn = 1
+"""
+
+
 def q_ogr_where_orderby_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WHERE + ORDER BY + LIMIT/OFFSET (ogr_gensql.cpp:605-628,
     2185-2404); deterministic tiebreak on the key."""
@@ -2644,11 +2887,25 @@ def q_ogr_where_orderby_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _o_ogr_where_orderby_limit() -> str:
+    return """
+SELECT p_partkey, p_name, round(p_retailprice, 2) AS price
+FROM part
+WHERE p_size BETWEEN 10 AND 20
+ORDER BY p_retailprice DESC, p_partkey ASC
+LIMIT 50 OFFSET 10
+"""
+
+
 def q_ogr_count_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SELECT COUNT(*) metadata shortcut (ogr_gensql.cpp:942-958
     delegates to GetFeatureCount; Catalyst reads parquet row-group
     counts without scanning data)."""
     return _read(spark, sf_dir, "lineitem").agg(F.count("*").alias("cnt"))
+
+
+def _o_ogr_count_star() -> str:
+    return "SELECT count(*) AS cnt FROM lineitem"
 
 
 def q_ogr_ilike_exclude(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2661,6 +2918,13 @@ def q_ogr_ilike_exclude(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _o_ogr_ilike_exclude() -> str:
+    return """
+SELECT * EXCLUDE (c_acctbal, c_nationkey)
+FROM customer WHERE c_mktsegment ILIKE '%build%'
+"""
+
+
 def q_events_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles (type-7) per event_type —
     engine-level addition beyond OGR's aggregate set."""
@@ -2670,6 +2934,16 @@ def q_events_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.expr("percentile(value, 0.9)") * 100).cast("long").alias("p90_cents"),
         F.count("*").alias("n"),
     ).select("event_type", "p50_cents", "p90_cents", F.col("n").cast("long"))
+
+
+def _o_events_quantiles() -> str:
+    return """
+SELECT event_type,
+  cast(floor(quantile_cont(value, 0.5) * 100) as bigint) AS p50_cents,
+  cast(floor(quantile_cont(value, 0.9) * 100) as bigint) AS p90_cents,
+  count(*) AS n
+FROM events GROUP BY event_type
+"""
 
 
 def q_ogr_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2685,6 +2959,14 @@ def q_ogr_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("s_name").alias("name"), F.lit("supplier").alias("src"))
     )
     return c.unionByName(s)
+
+
+def _o_ogr_union_all() -> str:
+    return """
+SELECT c_name AS name, 'customer' AS src FROM customer WHERE c_custkey % 100 = 0
+UNION ALL
+SELECT s_name AS name, 'supplier' AS src FROM supplier WHERE s_suppkey % 10 = 0
+"""
 
 
 _KIND_STYLE = {
@@ -2749,45 +3031,12 @@ def q_gpkg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     rowid-partitioned distributed scan, and the recovered features'
     attributes + geometry structure must match the zone fixture's
     closed forms."""
-    import pandas as pd
-    from pyspark.sql import types as T2
-
-    from gdal_spark.geo.wkb import parse_wkb
     from gdal_spark.sources.gpkg import read_gpkg, write_gpkg
 
-    zones = build_zones(spark, ids_df=_zone_ids(spark, sf_dir)).select(
-        "fid", "eas_id", "kind", "geometry"
-    )
-    path = _artifact_path(f"gpkg_{os.path.basename(sf_dir)}.gpkg")
-    write_gpkg(zones, path, "zones")
-    back = read_gpkg(spark, path, "zones")
-    schema = T2.StructType(
-        [
-            T2.StructField("fid", T2.LongType()),
-            T2.StructField("eas_id", T2.LongType()),
-            T2.StructField("kind", T2.StringType()),
-            T2.StructField("n_rings", T2.IntegerType()),
-        ]
-    )
-
-    def shape(batches):
-        for pdf in batches:
-            recs = []
-            for fid, eas, kind, wkb in zip(
-                pdf["fid"], pdf["eas_id"], pdf["kind"], pdf["geometry"]
-            ):
-                rings = parse_wkb(bytes(wkb)).all_rings()[0]
-                recs.append(
-                    {
-                        "fid": int(fid), "eas_id": int(eas), "kind": kind,
-                        "n_rings": len(rings),
-                    }
-                )
-            yield pd.DataFrame(
-                recs, columns=["fid", "eas_id", "kind", "n_rings"]
-            )
-
-    return back.mapInPandas(shape, schema)
+    return _zones_roundtrip(
+        spark, sf_dir, "gpkg", ".gpkg", partial(write_gpkg, layer="zones"),
+        read_gpkg, "zones",
+    ).drop("area_e6")
 
 
 def _o_gpkg_roundtrip() -> str:
@@ -2810,50 +3059,9 @@ def q_shp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ring counts and exact polygon areas match the fixture closed
     forms (areas survive the orientation round-trip bit-for-bit
     because reversal preserves the vertex set)."""
-    import pandas as pd
-    from pyspark.sql import types as T2
-
-    from gdal_spark.geo.geom import polygon_area
-    from gdal_spark.geo.wkb import parse_wkb
     from gdal_spark.sources.shapefile import read_shp, write_shp
 
-    zones = build_zones(spark, ids_df=_zone_ids(spark, sf_dir)).select(
-        "fid", "eas_id", "kind", "geometry"
-    )
-    base = _artifact_path(f"shp_{os.path.basename(sf_dir)}")
-    write_shp(zones, base)
-    back = read_shp(spark, base)
-    schema = T2.StructType(
-        [
-            T2.StructField("fid", T2.LongType()),
-            T2.StructField("eas_id", T2.LongType()),
-            T2.StructField("kind", T2.StringType()),
-            T2.StructField("n_rings", T2.IntegerType()),
-            T2.StructField("area_e6", T2.LongType()),
-        ]
-    )
-
-    def shape(batches):
-        import numpy as np
-
-        for pdf in batches:
-            recs = []
-            for fid, eas, kind, wkb in zip(
-                pdf["fid"], pdf["eas_id"], pdf["kind"], pdf["geometry"]
-            ):
-                rings = parse_wkb(bytes(wkb)).all_rings()[0]
-                recs.append(
-                    {
-                        "fid": int(fid), "eas_id": int(eas), "kind": kind,
-                        "n_rings": len(rings),
-                        "area_e6": int(np.floor(polygon_area(rings) * 1e6)),
-                    }
-                )
-            yield pd.DataFrame(
-                recs, columns=["fid", "eas_id", "kind", "n_rings", "area_e6"]
-            )
-
-    return back.mapInPandas(shape, schema)
+    return _zones_roundtrip(spark, sf_dir, "shp", "", write_shp, read_shp)
 
 
 def _o_shp_roundtrip() -> str:
@@ -2887,92 +3095,62 @@ def q_fgb_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     attributes, ring counts, and exact polygon areas match the
     fixture closed forms (coordinates roundtrip bit-exactly through
     the float64 xy vector)."""
-    import pandas as pd
-    from pyspark.sql import types as T2
-
-    from gdal_spark.geo.geom import polygon_area
-    from gdal_spark.geo.wkb import parse_wkb
     from gdal_spark.sources.flatgeobuf import read_fgb, write_fgb
 
+    return _zones_roundtrip(
+        spark, sf_dir, "fgb", ".fgb",
+        partial(write_fgb, layer_name="zones", geometry_type="Polygon"),
+        read_fgb,
+    )
+
+
+_o_fgb_roundtrip = _o_shp_roundtrip  # same output contract
+
+
+_ZONE_ATTRS = "fid long, eas_id long, kind string"
+
+
+def _roundtrip_shape(back: DataFrame) -> DataFrame:
+    """Shared (fid, eas_id, kind, n_rings, area_e6) projection for the
+    vector-format roundtrip family."""
+    from gdal_spark.geo.geom import polygon_area
+    from gdal_spark.geo.wkb import parse_wkb
+
+    cols = ["fid", "eas_id", "kind", "n_rings", "area_e6"]
+
+    def shape(batches):
+        import numpy as np
+
+        for pdf in batches:
+            recs = []
+            for fid, eas, kind, wkb in zip(
+                pdf["fid"], pdf["eas_id"], pdf["kind"], pdf["geometry"]
+            ):
+                rings = parse_wkb(bytes(wkb)).all_rings()[0]
+                area_e6 = int(np.floor(polygon_area(rings) * 1e6))
+                recs.append((int(fid), int(eas), kind, len(rings), area_e6))
+            yield pd.DataFrame(recs, columns=cols)
+
+    return back.mapInPandas(
+        shape,
+        "fid bigint, eas_id bigint, kind string, n_rings int, area_e6 bigint",
+    )
+
+
+def _zones_roundtrip(
+    spark: SparkSession, sf_dir: str, stem: str, ext: str,
+    write: Callable, read: Callable, *read_args,
+) -> DataFrame:
+    """The zones layer through one vector format: ``write(zones,
+    path)``, then ``read(spark, path, *read_args)`` back, projected by
+    _roundtrip_shape.  The extension ``ext`` goes after
+    _artifact_path's per-process suffix."""
     zones = build_zones(spark, ids_df=_zone_ids(spark, sf_dir)).select(
         "fid", "eas_id", "kind", "geometry"
     )
-    path = _artifact_path(f"fgb_{os.path.basename(sf_dir)}.fgb")
-    write_fgb(zones, path, layer_name="zones", geometry_type="Polygon")
-    back = read_fgb(spark, path)
-    schema = T2.StructType(
-        [
-            T2.StructField("fid", T2.LongType()),
-            T2.StructField("eas_id", T2.LongType()),
-            T2.StructField("kind", T2.StringType()),
-            T2.StructField("n_rings", T2.IntegerType()),
-            T2.StructField("area_e6", T2.LongType()),
-        ]
-    )
-
-    def shape(batches):
-        import numpy as np
-
-        for pdf in batches:
-            recs = []
-            for fid, eas, kind, wkb in zip(
-                pdf["fid"], pdf["eas_id"], pdf["kind"], pdf["geometry"]
-            ):
-                rings = parse_wkb(bytes(wkb)).all_rings()[0]
-                recs.append(
-                    {
-                        "fid": int(fid), "eas_id": int(eas), "kind": kind,
-                        "n_rings": len(rings),
-                        "area_e6": int(np.floor(polygon_area(rings) * 1e6)),
-                    }
-                )
-            yield pd.DataFrame(
-                recs, columns=["fid", "eas_id", "kind", "n_rings", "area_e6"]
-            )
-
-    return back.mapInPandas(shape, schema)
-
-
-def _roundtrip_shape(back: DataFrame):
-    """Shared (fid, eas_id, kind, n_rings, area_e6) projection for the
-    vector-format roundtrip family."""
-    import pandas as pd
-    from pyspark.sql import types as T2
-
-    from gdal_spark.geo.geom import polygon_area
-    from gdal_spark.geo.wkb import parse_wkb
-
-    schema = T2.StructType(
-        [
-            T2.StructField("fid", T2.LongType()),
-            T2.StructField("eas_id", T2.LongType()),
-            T2.StructField("kind", T2.StringType()),
-            T2.StructField("n_rings", T2.IntegerType()),
-            T2.StructField("area_e6", T2.LongType()),
-        ]
-    )
-
-    def shape(batches):
-        import numpy as np
-
-        for pdf in batches:
-            recs = []
-            for fid, eas, kind, wkb in zip(
-                pdf["fid"], pdf["eas_id"], pdf["kind"], pdf["geometry"]
-            ):
-                rings = parse_wkb(bytes(wkb)).all_rings()[0]
-                recs.append(
-                    {
-                        "fid": int(fid), "eas_id": int(eas), "kind": kind,
-                        "n_rings": len(rings),
-                        "area_e6": int(np.floor(polygon_area(rings) * 1e6)),
-                    }
-                )
-            yield pd.DataFrame(
-                recs, columns=["fid", "eas_id", "kind", "n_rings", "area_e6"]
-            )
-
-    return back.mapInPandas(shape, schema)
+    path = _artifact_path(f"{stem}_{os.path.basename(sf_dir)}") + ext
+    write(zones, path)
+    return _roundtrip_shape(read(spark, path, *read_args))
 
 
 def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2983,15 +3161,12 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     forms bit-for-bit."""
     from gdal_spark.sources.csvgeo import read_csv_wkt, write_csv_wkt
 
-    zones = build_zones(spark, ids_df=_zone_ids(spark, sf_dir)).select(
-        "fid", "eas_id", "kind", "geometry"
+    return _zones_roundtrip(
+        spark, sf_dir, "csv", ".csv", write_csv_wkt, read_csv_wkt, _ZONE_ATTRS
     )
-    path = _artifact_path(f"csv_{os.path.basename(sf_dir)}.csv")
-    write_csv_wkt(zones, path)
-    back = read_csv_wkt(
-        spark, path, "fid long, eas_id long, kind string"
-    )
-    return _roundtrip_shape(back)
+
+
+_o_csv_roundtrip = _o_shp_roundtrip  # same output contract
 
 
 def q_kml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3001,13 +3176,12 @@ def q_kml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ElementTree parse."""
     from gdal_spark.sources.kml import read_kml, write_kml
 
-    zones = build_zones(spark, ids_df=_zone_ids(spark, sf_dir)).select(
-        "fid", "eas_id", "kind", "geometry"
+    return _zones_roundtrip(
+        spark, sf_dir, "kml", ".kml", write_kml, read_kml, _ZONE_ATTRS
     )
-    path = _artifact_path(f"kml_{os.path.basename(sf_dir)}.kml")
-    write_kml(zones, path)
-    back = read_kml(spark, path, "fid long, eas_id long, kind string")
-    return _roundtrip_shape(back)
+
+
+_o_kml_roundtrip = _o_shp_roundtrip  # same output contract
 
 
 def q_pgdump_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3016,15 +3190,16 @@ def q_pgdump_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag): streamed SQL-script write, distributed COPY-row scan."""
     from gdal_spark.sources.pgdump import read_pgdump, write_pgdump
 
-    zones = build_zones(spark, ids_df=_zone_ids(spark, sf_dir)).select(
-        "fid", "eas_id", "kind", "geometry"
+    def read(spark, path):
+        return read_pgdump(spark, path, _ZONE_ATTRS).drop("srid")
+
+    return _zones_roundtrip(
+        spark, sf_dir, "pgdump", ".sql",
+        partial(write_pgdump, layer="zones", srid=4326), read,
     )
-    path = _artifact_path(f"pgdump_{os.path.basename(sf_dir)}") + ".sql"
-    write_pgdump(zones, path, layer="zones", srid=4326)
-    back = read_pgdump(
-        spark, path, "fid long, eas_id long, kind string"
-    ).drop("srid")
-    return _roundtrip_shape(back)
+
+
+_o_pgdump_roundtrip = _o_shp_roundtrip  # same output contract
 
 
 def q_gmt_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3033,13 +3208,12 @@ def q_gmt_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     separators, @D attribute rows, @P/@H outer/hole ring blocks)."""
     from gdal_spark.sources.gmt import read_gmt, write_gmt
 
-    zones = build_zones(spark, ids_df=_zone_ids(spark, sf_dir)).select(
-        "fid", "eas_id", "kind", "geometry"
+    return _zones_roundtrip(
+        spark, sf_dir, "gmt", ".gmt", write_gmt, read_gmt, _ZONE_ATTRS
     )
-    path = _artifact_path(f"gmt_{os.path.basename(sf_dir)}") + ".gmt"
-    write_gmt(zones, path)
-    back = read_gmt(spark, path, "fid long, eas_id long, kind string")
-    return _roundtrip_shape(back)
+
+
+_o_gmt_roundtrip = _o_shp_roundtrip  # same output contract
 
 
 def q_jml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3049,13 +3223,12 @@ def q_jml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     namespace-rebound line parse."""
     from gdal_spark.sources.jml import read_jml, write_jml
 
-    zones = build_zones(spark, ids_df=_zone_ids(spark, sf_dir)).select(
-        "fid", "eas_id", "kind", "geometry"
+    return _zones_roundtrip(
+        spark, sf_dir, "jml", ".jml", write_jml, read_jml, _ZONE_ATTRS
     )
-    path = _artifact_path(f"jml_{os.path.basename(sf_dir)}") + ".jml"
-    write_jml(zones, path)
-    back = read_jml(spark, path, "fid long, eas_id long, kind string")
-    return _roundtrip_shape(back)
+
+
+_o_jml_roundtrip = _o_shp_roundtrip  # same output contract
 
 
 def q_arrow_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3066,14 +3239,14 @@ def q_arrow_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     footer-indexed DISTRIBUTED by-batch scan."""
     from gdal_spark.sources.arrowipc import read_arrow_ipc, write_arrow_ipc
 
-    zones = build_zones(spark, ids_df=_zone_ids(spark, sf_dir)).select(
-        "fid", "eas_id", "kind", "geometry"
-    )
-    path = _artifact_path(f"arrow_{os.path.basename(sf_dir)}") + ".arrow"
     # small batches force the multi-batch distributed read path
-    write_arrow_ipc(zones, path, batch_rows=64)
-    back = read_arrow_ipc(spark, path)
-    return _roundtrip_shape(back)
+    return _zones_roundtrip(
+        spark, sf_dir, "arrow", ".arrow",
+        partial(write_arrow_ipc, batch_rows=64), read_arrow_ipc,
+    )
+
+
+_o_arrow_roundtrip = _o_shp_roundtrip  # same output contract
 
 
 def q_arrows_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3086,13 +3259,13 @@ def q_arrows_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_arrow_stream,
     )
 
-    zones = build_zones(spark, ids_df=_zone_ids(spark, sf_dir)).select(
-        "fid", "eas_id", "kind", "geometry"
+    return _zones_roundtrip(
+        spark, sf_dir, "arrows", ".arrows",
+        partial(write_arrow_stream, batch_rows=64), read_arrow_stream,
     )
-    path = _artifact_path(f"arrows_{os.path.basename(sf_dir)}") + ".arrows"
-    write_arrow_stream(zones, path, batch_rows=64)
-    back = read_arrow_stream(spark, path)
-    return _roundtrip_shape(back)
+
+
+_o_arrows_roundtrip = _o_shp_roundtrip  # same output contract
 
 
 def q_gml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3103,13 +3276,13 @@ def q_gml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads."""
     from gdal_spark.sources.gml import read_gml, write_gml
 
-    zones = build_zones(spark, ids_df=_zone_ids(spark, sf_dir)).select(
-        "fid", "eas_id", "kind", "geometry"
+    return _zones_roundtrip(
+        spark, sf_dir, "gml", ".gml", partial(write_gml, layer="zones"),
+        read_gml, "eas_id long, kind string",
     )
-    path = _artifact_path(f"gml_{os.path.basename(sf_dir)}.gml")
-    write_gml(zones, path, layer="zones")
-    back = read_gml(spark, path, "eas_id long, kind string")
-    return _roundtrip_shape(back)
+
+
+_o_gml_roundtrip = _o_shp_roundtrip  # same output contract
 
 
 def _points_wkb(df: DataFrame, keep: list[str]) -> DataFrame:
@@ -3311,13 +3484,12 @@ def q_mif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture closed forms."""
     from gdal_spark.sources.mif import read_mif, write_mif
 
-    zones = build_zones(spark, ids_df=_zone_ids(spark, sf_dir)).select(
-        "fid", "eas_id", "kind", "geometry"
+    return _zones_roundtrip(
+        spark, sf_dir, "mif", ".mif", write_mif, read_mif, _ZONE_ATTRS
     )
-    path = _artifact_path(f"mif_{os.path.basename(sf_dir)}") + ".mif"
-    write_mif(zones, path)
-    back = read_mif(spark, path, "fid long, eas_id long, kind string")
-    return _roundtrip_shape(back)
+
+
+_o_mif_roundtrip = _o_shp_roundtrip  # same output contract
 
 
 def q_dxf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3412,6 +3584,9 @@ def q_dxf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_o_dxf_roundtrip = _o_shp_roundtrip  # same output contract
+
+
 def q_osm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OSM XML (ogr/ogrsf_frmts/osm node/way/relation model): zones
     stream out as multipolygon relations over ways over nodes, then
@@ -3421,15 +3596,13 @@ def q_osm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     areas match the fixture closed forms."""
     from gdal_spark.sources.osmxml import read_osm_multipolygons, write_osm
 
-    zones = build_zones(spark, ids_df=_zone_ids(spark, sf_dir)).select(
-        "fid", "eas_id", "kind", "geometry"
+    return _zones_roundtrip(
+        spark, sf_dir, "osm", ".osm", partial(write_osm, id_col="fid"),
+        read_osm_multipolygons, _ZONE_ATTRS,
     )
-    path = _artifact_path(f"osm_{os.path.basename(sf_dir)}") + ".osm"
-    write_osm(zones, path, id_col="fid")
-    back = read_osm_multipolygons(
-        spark, path, "fid long, eas_id long, kind string"
-    )
-    return _roundtrip_shape(back)
+
+
+_o_osm_roundtrip = _o_shp_roundtrip  # same output contract
 
 
 def q_sozip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3445,19 +3618,22 @@ def q_sozip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from gdal_spark.sources.sozip import read_sozip_lines, write_sozip
 
-    zones = build_zones(spark, ids_df=_zone_ids(spark, sf_dir)).select(
-        "fid", "eas_id", "kind", "geometry"
-    )
-    path = _artifact_path(f"sozip_{os.path.basename(sf_dir)}") + ".zip"
-    write_sozip(
-        path, "zones.geojsonl",
-        ((row["value"] + "\n").encode()
-         for row in feature_lines(zones).toLocalIterator()),
-        chunk_size=8192,
-    )
-    lines = read_sozip_lines(spark, path, "zones.geojsonl")
-    back = lines_to_features(lines, "fid long, eas_id long, kind string")
-    return _roundtrip_shape(back)
+    def write(zones, path):
+        write_sozip(
+            path, "zones.geojsonl",
+            ((row["value"] + "\n").encode()
+             for row in feature_lines(zones).toLocalIterator()),
+            chunk_size=8192,
+        )
+
+    def read(spark, path):
+        lines = read_sozip_lines(spark, path, "zones.geojsonl")
+        return lines_to_features(lines, _ZONE_ATTRS)
+
+    return _zones_roundtrip(spark, sf_dir, "sozip", ".zip", write, read)
+
+
+_o_sozip_roundtrip = _o_shp_roundtrip  # same output contract
 
 
 def q_spatialite_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3471,13 +3647,13 @@ def q_spatialite_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_spatialite,
     )
 
-    zones = build_zones(spark, ids_df=_zone_ids(spark, sf_dir)).select(
-        "fid", "eas_id", "kind", "geometry"
+    return _zones_roundtrip(
+        spark, sf_dir, "splite", ".sqlite",
+        partial(write_spatialite, layer="zones"), read_spatialite, "zones",
     )
-    path = _artifact_path(f"splite_{os.path.basename(sf_dir)}.sqlite")
-    write_spatialite(zones, path, layer="zones")
-    back = read_spatialite(spark, path, "zones")
-    return _roundtrip_shape(back)
+
+
+_o_spatialite_roundtrip = _o_shp_roundtrip  # same output contract
 
 
 def q_rat(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3655,21 +3831,27 @@ def q_db_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gdal_spark.sources.dbscan import read_db
     from gdal_spark.sources.spatialite import write_spatialite
 
-    zones = build_zones(spark, ids_df=_zone_ids(spark, sf_dir)).select(
-        "fid", "eas_id", "kind", "geometry"
+    def read(spark, path):
+        return read_db(
+            spark,
+            f"sqlite:///{path}",
+            "zones",
+            columns=["fid", "eas_id", "kind", "geometry"],
+            predicate="eas_id % 3 <> 1",
+            partition_column="fid",
+            num_partitions=8,
+        )
+
+    return _zones_roundtrip(
+        spark, sf_dir, "dbscan", ".sqlite",
+        partial(write_spatialite, layer="zones"), read,
     )
-    path = _artifact_path(f"dbscan_{os.path.basename(sf_dir)}.sqlite")
-    write_spatialite(zones, path, layer="zones")
-    back = read_db(
-        spark,
-        f"sqlite:///{path}",
-        "zones",
-        columns=["fid", "eas_id", "kind", "geometry"],
-        predicate="eas_id % 3 <> 1",
-        partition_column="fid",
-        num_partitions=8,
-    )
-    return _roundtrip_shape(back)
+
+
+def _o_db_scan() -> str:
+    return f"""
+SELECT * FROM ({_o_shp_roundtrip()}) t WHERE t.eas_id % 3 <> 1
+"""
 
 
 def q_topojson_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3681,16 +3863,14 @@ def q_topojson_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     areas match the fixture closed forms."""
     from gdal_spark.sources.topojson import read_topojson, write_topojson
 
-    zones = build_zones(spark, ids_df=_zone_ids(spark, sf_dir)).select(
-        "fid", "eas_id", "kind", "geometry"
+    return _zones_roundtrip(
+        spark, sf_dir, "topo", ".topojson",
+        partial(write_topojson, layer="zones", id_col="fid"),
+        partial(read_topojson, id_col="fid"), "zones", _ZONE_ATTRS,
     )
-    path = _artifact_path(f"topo_{os.path.basename(sf_dir)}") + ".topojson"
-    write_topojson(zones, path, layer="zones", id_col="fid")
-    back = read_topojson(
-        spark, path, "zones", "fid long, eas_id long, kind string",
-        id_col="fid",
-    )
-    return _roundtrip_shape(back)
+
+
+_o_topojson_roundtrip = _o_shp_roundtrip  # same output contract
 
 
 def q_geoparquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3703,14 +3883,17 @@ def q_geoparquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_geoparquet, write_geoparquet,
     )
 
-    zones = build_zones(spark, ids_df=_zone_ids(spark, sf_dir)).select(
-        "fid", "eas_id", "kind", "geometry"
+    def read(spark, path):
+        back, geo = read_geoparquet(spark, path)
+        assert geo["columns"]["geometry"]["encoding"] == "WKB"
+        return back
+
+    return _zones_roundtrip(
+        spark, sf_dir, "geopq", "", write_geoparquet, read
     )
-    path = _artifact_path(f"geopq_{os.path.basename(sf_dir)}")
-    write_geoparquet(zones, path)
-    back, geo = read_geoparquet(spark, path)
-    assert geo["columns"]["geometry"]["encoding"] == "WKB"
-    return _roundtrip_shape(back)
+
+
+_o_geoparquet_roundtrip = _o_shp_roundtrip  # same output contract
 
 
 def q_geojson_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3719,15 +3902,13 @@ def q_geojson_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     write, distributed line-scan read; repr-exact coordinates."""
     from gdal_spark.sources.geojson import read_geojson, write_geojson
 
-    zones = build_zones(spark, ids_df=_zone_ids(spark, sf_dir)).select(
-        "fid", "eas_id", "kind", "geometry"
+    return _zones_roundtrip(
+        spark, sf_dir, "gj", ".geojson", write_geojson, read_geojson,
+        _ZONE_ATTRS,
     )
-    path = _artifact_path(f"gj_{os.path.basename(sf_dir)}.geojson")
-    write_geojson(zones, path)
-    back = read_geojson(
-        spark, path, "fid long, eas_id long, kind string"
-    )
-    return _roundtrip_shape(back)
+
+
+_o_geojson_roundtrip = _o_shp_roundtrip  # same output contract
 
 
 def q_geojsonseq_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3735,50 +3916,15 @@ def q_geojsonseq_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     GeoJSONSeq driver): fully DISTRIBUTED write (plain text sink) and
     read (text scan + Arrow JSON parse); repr-exact coordinate
     roundtrip, so recovered areas match the fixture closed forms."""
-    import pandas as pd
-    from pyspark.sql import types as T2
-
-    from gdal_spark.geo.geom import polygon_area
-    from gdal_spark.geo.wkb import parse_wkb
     from gdal_spark.sources.geojsonseq import read_geojsonseq, write_geojsonseq
 
-    zones = build_zones(spark, ids_df=_zone_ids(spark, sf_dir)).select(
-        "fid", "eas_id", "kind", "geometry"
-    )
-    path = _artifact_path(f"gjs_{os.path.basename(sf_dir)}")
-    write_geojsonseq(zones, path)
-    back = read_geojsonseq(spark, path, "fid long, eas_id long, kind string")
-    schema = T2.StructType(
-        [
-            T2.StructField("fid", T2.LongType()),
-            T2.StructField("eas_id", T2.LongType()),
-            T2.StructField("kind", T2.StringType()),
-            T2.StructField("n_rings", T2.IntegerType()),
-            T2.StructField("area_e6", T2.LongType()),
-        ]
+    return _zones_roundtrip(
+        spark, sf_dir, "gjs", "", write_geojsonseq, read_geojsonseq,
+        _ZONE_ATTRS,
     )
 
-    def shape(batches):
-        import numpy as np
 
-        for pdf in batches:
-            recs = []
-            for fid, eas, kind, wkb in zip(
-                pdf["fid"], pdf["eas_id"], pdf["kind"], pdf["geometry"]
-            ):
-                rings = parse_wkb(bytes(wkb)).all_rings()[0]
-                recs.append(
-                    {
-                        "fid": int(fid), "eas_id": int(eas), "kind": kind,
-                        "n_rings": len(rings),
-                        "area_e6": int(np.floor(polygon_area(rings) * 1e6)),
-                    }
-                )
-            yield pd.DataFrame(
-                recs, columns=["fid", "eas_id", "kind", "n_rings", "area_e6"]
-            )
-
-    return back.mapInPandas(shape, schema)
+_o_geojsonseq_roundtrip = _o_shp_roundtrip  # same output contract
 
 
 def q_ogr_scalar_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3799,6 +3945,18 @@ def q_ogr_scalar_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("o_totalprice")).cast("long").alias("price_int"),
         )
     )
+
+
+def _o_ogr_scalar_ops() -> str:
+    return """
+SELECT o_orderkey,
+       o_orderstatus || '-' || substr(o_orderpriority, 1, 8) AS status_prio,
+       cast(floor(o_totalprice) as bigint) AS price_int
+FROM orders
+WHERE o_orderstatus IN ('F', 'O')
+  AND o_orderpriority LIKE '1%'
+  AND o_totalprice BETWEEN 1000.0 AND 100000.0
+"""
 
 
 TRANSLATE_SRCWIN = (3, 2, 12, 9)   # -srcwin xoff yoff w h (fits 20x20)
@@ -3937,56 +4095,28 @@ def q_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode back from the real GIF bytes, and report per-band checksum
     / min / max plus the distinct-color count recovered from the
     decoded raster — all matched to the pixel-rule closed forms."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % GIF_MOD == 0)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-            T2.StructField("vmin", T2.IntegerType()),
-            T2.StructField("vmax", T2.IntegerType()),
-            T2.StructField("n_colors", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def rows(i, image_id, w, h):
         import numpy as np
 
         from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.gif import decode_gif_rgb, encode_gif_rgb
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                arr = np_image_pixels(int(i), int(w), int(h))
-                back = decode_gif_rgb(encode_gif_rgb(arr))
-                flat = back.reshape(-1, 3).astype(np.int64)
-                packed = (flat[:, 0] << 16) | (flat[:, 1] << 8) | flat[:, 2]
-                nc = int(len(np.unique(packed)))
-                for b in range(3):
-                    band = back[:, :, b]
-                    rows.append(
-                        {
-                            "image_id": img_id,
-                            "band": b,
-                            "checksum": gdal_checksum(band),
-                            "vmin": int(band.min()),
-                            "vmax": int(band.max()),
-                            "n_colors": nc,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        back = decode_gif_rgb(encode_gif_rgb(np_image_pixels(i, w, h)))
+        flat = back.reshape(-1, 3).astype(np.int64)
+        packed = (flat[:, 0] << 16) | (flat[:, 1] << 8) | flat[:, 2]
+        nc = int(len(np.unique(packed)))
+        for b in range(3):
+            band = back[:, :, b]
+            yield (image_id, b, gdal_checksum(band), int(band.min()),
+                   int(band.max()), nc)
 
-    return geo.mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 0,
+        "image_id string, band int, checksum int, vmin int, vmax int,"
+        " n_colors int", rows, mod=GIF_MOD,
+    )
 
 
 def _o_gif_roundtrip() -> str:
@@ -4017,9 +4147,6 @@ FROM px GROUP BY image_id, band, w, h
 """
 
 
-PALETTED_MOD = 499
-
-
 def q_paletted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Paletted (color-table) raster IO across all three palette
     carriers — PNG color type 3 + PLTE (frmts/png), TIFF
@@ -4028,24 +4155,8 @@ def q_paletted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity grayscale palette in each format, decodes back from the
     REAL bytes, and per-format checksums match the same closed
     form."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 7)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("checksum", T2.IntegerType()),
-            T2.StructField("vmin", T2.IntegerType()),
-            T2.StructField("vmax", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def rows(i, image_id, w, h):
         import numpy as np
 
         from gdal_spark.fixtures.georef import np_image_pixels
@@ -4058,33 +4169,20 @@ def q_paletted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         from gdal_spark.raster.tiff import decode_tiff_paletted, encode_tiff
 
         gray = np.arange(256, dtype=np.uint8)[:, None].repeat(3, 1)
+        idx = np_image_pixels(i, w, h)[:, :, 0]
+        outs = {
+            "png": decode_png_paletted(encode_png_paletted(idx, gray))[0],
+            "tiff": decode_tiff_paletted(encode_tiff(idx, palette=gray))[0],
+            "gif": decode_gif(encode_gif(idx, gray))[0],
+        }
+        for fmt, band in outs.items():
+            yield (image_id, fmt, gdal_checksum(band), int(band.min()),
+                   int(band.max()))
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                idx = np_image_pixels(int(i), int(w), int(h))[:, :, 0]
-                outs = {
-                    "png": decode_png_paletted(
-                        encode_png_paletted(idx, gray))[0],
-                    "tiff": decode_tiff_paletted(
-                        encode_tiff(idx, palette=gray))[0],
-                    "gif": decode_gif(encode_gif(idx, gray))[0],
-                }
-                for fmt, band in outs.items():
-                    rows.append(
-                        {
-                            "image_id": img_id,
-                            "fmt": fmt,
-                            "checksum": gdal_checksum(band),
-                            "vmin": int(band.min()),
-                            "vmax": int(band.max()),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    return geo.mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 7,
+        "image_id string, fmt string, checksum int, vmin int, vmax int", rows,
+    )
 
 
 def _o_paletted_roundtrip() -> str:
@@ -4119,91 +4217,31 @@ def q_flat_raster_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     .hdr key=value + bsq/bil interleaves): the pixel rule encodes
     through REAL bytes of all four variants and the decoded per-band
     checksums match one closed form."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 11)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def decode(arr):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.bmp import decode_bmp, encode_bmp
-        from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.envi import decode_envi, encode_envi
 
         gray = np.arange(256, dtype=np.uint8)[:, None].repeat(3, 1)
+        idx, pal = decode_bmp(encode_bmp(arr[:, :, 0], palette=gray))
+        outs = {
+            "bmp24": decode_bmp(encode_bmp(arr)),
+            "bmp8": pal[idx][:, :, :1],
+        }
+        for il in ("bsq", "bil"):
+            raw, hdr = encode_envi(arr, interleave=il)
+            outs[f"envi_{il}"] = decode_envi(raw, hdr)[0]
+        return outs
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                arr = np_image_pixels(int(i), int(w), int(h))
-                outs = {}
-                outs["bmp24"] = decode_bmp(encode_bmp(arr))
-                idx, pal = decode_bmp(encode_bmp(arr[:, :, 0],
-                                                 palette=gray))
-                outs["bmp8"] = pal[idx][:, :, :1]
-                for il in ("bsq", "bil"):
-                    raw, hdr = encode_envi(arr, interleave=il)
-                    outs[f"envi_{il}"] = decode_envi(raw, hdr)[0]
-                for fmt, out in outs.items():
-                    for b in range(out.shape[2]):
-                        rows.append(
-                            {
-                                "image_id": img_id, "fmt": fmt,
-                                "band": b,
-                                "checksum": gdal_checksum(out[:, :, b]),
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    return geo.mapInPandas(run, schema)
+    return _band_checksums(spark, sf_dir, 11, decode)
 
 
-def _o_flat_raster_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 11)",
-    )
-    return f"""
-WITH img AS ({img}),
-fmts AS (
-  SELECT * FROM (VALUES ('bmp24', 3), ('bmp8', 1),
-                        ('envi_bsq', 3), ('envi_bil', 3)) AS f(fmt, nb)
-),
-bands AS (
-  SELECT f.fmt, b.band,
-    CASE b.band WHEN 0 THEN 0 WHEN 1 THEN 85 ELSE 170 END AS phase
-  FROM fmts f JOIN range(0, 3) AS b(band) ON b.band < f.nb
-),
-px AS (
-  SELECT i.image_id, fb.fmt, fb.band,
-    (gx.x + gy.y + i.i + fb.phase) % 256 AS val,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-  CROSS JOIN bands fb
+_o_flat_raster_roundtrip = partial(
+    _band_checksum_oracle, 11,
+    {"bmp24": 3, "bmp8": 1, "envi_bsq": 3, "envi_bil": 3},
 )
-SELECT image_id, fmt, cast(band as int) AS band,
-  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS checksum
-FROM px GROUP BY image_id, fmt, band
-"""
 
 
 def q_interlaced_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4214,90 +4252,29 @@ def q_interlaced_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     interlaced bytes, decodes back, and per-band checksums match the
     same closed form as the progressive-free layouts — interlacing is
     a pure reordering, so outputs must be bit-identical."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 109)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def decode(arr):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
-        from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.gif import decode_gif_rgb, encode_gif_rgb
         from gdal_spark.raster.png import decode_png, encode_png
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                arr = np_image_pixels(int(i), int(w), int(h))
-                outs = {}
-                outs["png_adam7"] = decode_png(
-                    encode_png(arr, interlace=True))
-                u16 = arr[:, :, 0].astype(np.uint16) * 257
-                outs["png16_adam7"] = (
-                    decode_png(encode_png(u16, interlace=True)) >> 8
-                ).astype(np.uint8)[:, :, None]
-                outs["gif_ilace"] = decode_gif_rgb(
-                    encode_gif_rgb(arr, interlace=True))
-                for fmt, out in outs.items():
-                    for b in range(out.shape[2]):
-                        rows.append(
-                            {
-                                "image_id": img_id, "fmt": fmt,
-                                "band": b,
-                                "checksum": gdal_checksum(out[:, :, b]),
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        u16 = arr[:, :, 0].astype(np.uint16) * 257
+        return {
+            "png_adam7": decode_png(encode_png(arr, interlace=True)),
+            "png16_adam7": (
+                decode_png(encode_png(u16, interlace=True)) >> 8
+            ).astype(np.uint8),
+            "gif_ilace": decode_gif_rgb(encode_gif_rgb(arr, interlace=True)),
+        }
 
-    return geo.mapInPandas(run, schema)
+    return _band_checksums(spark, sf_dir, 109, decode)
 
 
-def _o_interlaced_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 109)",
-    )
-    return f"""
-WITH img AS ({img}),
-fmts AS (
-  SELECT * FROM (VALUES ('png_adam7', 3), ('png16_adam7', 1),
-                        ('gif_ilace', 3)) AS f(fmt, nb)
-),
-bands AS (
-  SELECT f.fmt, b.band,
-    CASE b.band WHEN 0 THEN 0 WHEN 1 THEN 85 ELSE 170 END AS phase
-  FROM fmts f JOIN range(0, 3) AS b(band) ON b.band < f.nb
-),
-px AS (
-  SELECT i.image_id, fb.fmt, fb.band,
-    (gx.x + gy.y + i.i + fb.phase) % 256 AS val,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-  CROSS JOIN bands fb
+_o_interlaced_roundtrip = partial(
+    _band_checksum_oracle, 109,
+    {"png_adam7": 3, "png16_adam7": 1, "gif_ilace": 3},
 )
-SELECT image_id, fmt, cast(band as int) AS band,
-  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS checksum
-FROM px GROUP BY image_id, fmt, band
-"""
 
 
 def q_progressive_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4312,88 +4289,53 @@ def q_progressive_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full multi-scan script (10 scans color / 6 gray), and PSNR
     vs the original pixel rule >= 40 dB (the BASELINE.json lossy
     contract)."""
-    import pandas as pd
-    from pyspark.sql import types as T2
+    import numpy as np
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 113)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("variant", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("sof_marker", T2.IntegerType()),
-            T2.StructField("n_scans", T2.IntegerType()),
-            T2.StructField("diff_checksum", T2.IntegerType()),
-            T2.StructField("psnr_ok", T2.IntegerType()),
-        ]
-    )
+    def psnr_ok(a, b):
+        mse = np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2)
+        return 1 if (mse == 0 or 10 * np.log10(255.0**2 / mse) >= 40.0) else 0
 
-    def run(batches):
-        import numpy as np
+    def sof_marker(blob):
+        import struct as _s
 
+        p = 2  # header segments all carry lengths until SOF
+        while p < len(blob) - 1:
+            m = blob[p + 1]
+            if 0xC0 <= m <= 0xCF and m not in (0xC4, 0xC8, 0xCC):
+                return m
+            (ln,) = _s.unpack_from(">H", blob, p + 2)
+            p += 2 + ln
+        return -1
+
+    def rows(i, image_id, w, h):
         from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.jpeg import (decode_jpeg, encode_jpeg,
                                             encode_jpeg_progressive)
 
-        def psnr_ok(a, b):
-            mse = np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2)
-            return 1 if (mse == 0 or 10 * np.log10(255.0**2 / mse) >= 40.0) else 0
+        arr = np_image_pixels(i, w, h)
+        for variant, src, kw in (
+            ("prog_rgb", arr, {}),
+            ("prog_gray", arr[:, :, 0], {"gray": True}),
+        ):
+            blob = encode_jpeg_progressive(src, 95, **kw)
+            prog = np.atleast_3d(decode_jpeg(blob))
+            base = np.atleast_3d(decode_jpeg(encode_jpeg(src, 95, **kw)))
+            ok = psnr_ok(np.atleast_3d(src), prog)
+            # markers never appear inside entropy data (0xFF is
+            # zero-stuffed), so counting SOS bytes is exact
+            n_scans = blob.count(b"\xff\xda")
+            for b in range(prog.shape[2]):
+                diff = (prog[:, :, b].astype(np.int32)
+                        - base[:, :, b].astype(np.int32))
+                yield (image_id, variant, b, sof_marker(blob), n_scans,
+                       gdal_checksum(diff), ok)
 
-        def sof_marker(blob):
-            import struct as _s
-
-            p = 2  # header segments all carry lengths until SOF
-            while p < len(blob) - 1:
-                m = blob[p + 1]
-                if 0xC0 <= m <= 0xCF and m not in (0xC4, 0xC8, 0xCC):
-                    return m
-                (ln,) = _s.unpack_from(">H", blob, p + 2)
-                p += 2 + ln
-            return -1
-
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                arr = np_image_pixels(int(i), int(w), int(h))
-                gray = arr[:, :, 0]
-                for variant, src, kw in (
-                    ("prog_rgb", arr, {}),
-                    ("prog_gray", gray, {"gray": True}),
-                ):
-                    blob = encode_jpeg_progressive(src, 95, **kw)
-                    prog = decode_jpeg(blob)
-                    base = decode_jpeg(encode_jpeg(src, 95, **kw))
-                    if prog.ndim == 2:
-                        prog = prog[:, :, None]
-                    if base.ndim == 2:
-                        base = base[:, :, None]
-                    ref = src if src.ndim == 3 else src[:, :, None]
-                    # markers never appear inside entropy data (0xFF is
-                    # zero-stuffed), so counting SOS bytes is exact
-                    n_scans = blob.count(b"\xff\xda")
-                    for b in range(prog.shape[2]):
-                        diff = (prog[:, :, b].astype(np.int32)
-                                - base[:, :, b].astype(np.int32))
-                        rows.append(
-                            {
-                                "image_id": img_id,
-                                "variant": variant,
-                                "band": b,
-                                "sof_marker": sof_marker(blob),
-                                "n_scans": n_scans,
-                                "diff_checksum": gdal_checksum(diff),
-                                "psnr_ok": psnr_ok(ref, prog),
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    return geo.mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 113,
+        "image_id string, variant string, band int, sof_marker int,"
+        " n_scans int, diff_checksum int, psnr_ok int", rows,
+    )
 
 
 def _o_progressive_jpeg() -> str:
@@ -4735,54 +4677,29 @@ def q_jp2_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-point symmetric extension) as integer SQL over the pixel
     rule — an independent arithmetic twin of the wavelet, not a
     re-run of the codec."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(
-        (F.col("i") % PALETTED_MOD == 149) & (F.col("i") % 5 != 4)
-    )
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("i", T2.LongType()),
-            T2.StructField("reduce", T2.IntegerType()),
-            T2.StructField("ow", T2.IntegerType()),
-            T2.StructField("oh", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-            T2.StructField("vsum", T2.LongType()),
-        ]
-    )
-
-    def run(batches):
+    def rows(i, _id, w, h):
         from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.jp2 import decode_j2k, encode_j2k
 
-        for pdf in batches:
-            recs = []
-            for i, w, h in zip(pdf["i"], pdf["w"], pdf["h"]):
-                i, w, h = int(i), int(w), int(h)
-                # 96x96 crop: EBCOT is a sequential bit-plane coder
-                # (same bound as jp2_roundtrip); the reduce semantics
-                # are size-independent
-                w, h = min(w, 96), min(h, 96)
-                g = np_image_pixels(i, w, h)[:, :, 0]
-                blob = encode_j2k(g, levels=2)
-                for r in (0, 1):
-                    out = decode_j2k(blob, reduce=r)
-                    recs.append(
-                        {
-                            "i": i, "reduce": r,
-                            "ow": out.shape[1], "oh": out.shape[0],
-                            "checksum": gdal_checksum(out),
-                            "vsum": int(out.sum(dtype="int64")),
-                        }
-                    )
-            yield pd.DataFrame(recs, columns=[f.name for f in schema.fields])
+        if i % 5 == 4:
+            return
+        # 96x96 crop: EBCOT is a sequential bit-plane coder
+        # (same bound as jp2_roundtrip); the reduce semantics
+        # are size-independent
+        w, h = min(w, 96), min(h, 96)
+        blob = encode_j2k(np_image_pixels(i, w, h)[:, :, 0], levels=2)
+        for r in (0, 1):
+            out = decode_j2k(blob, reduce=r)
+            yield (i, r, out.shape[1], out.shape[0], gdal_checksum(out),
+                   int(out.sum(dtype="int64")))
 
-    return geo.mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 149,
+        "i bigint, reduce int, ow int, oh int, checksum int, vsum bigint",
+        rows,
+    )
 
 
 def _o_jp2_reduce() -> str:
@@ -4879,28 +4796,10 @@ def q_mrf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     never written ((0,0) idx records read back as fill, :2602-2607).
     Decoded checksums, tile counts, written-tile counts and the
     parsed BoundingBox all match closed forms."""
-    import pandas as pd
-    from pyspark.sql import types as T2
-
     PX, PY = 48, 32
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 151)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h", "lon_c", "lat_c"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-            T2.StructField("n_tiles", T2.IntegerType()),
-            T2.StructField("n_written", T2.IntegerType()),
-            T2.StructField("x0_q6", T2.LongType()),
-        ]
-    )
 
-    def run(batches):
-        import math as _math
+    def rows(i, image_id, w, h, lon, lat):
+        import math
 
         import numpy as np
 
@@ -4909,50 +4808,37 @@ def q_mrf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         from gdal_spark.raster.mrf import (decode_mrf, encode_mrf,
                                            mrf_tile_entries)
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h, lon, lat in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"],
-                pdf["lon_c"], pdf["lat_c"]
-            ):
-                i, w, h = int(i), int(w), int(h)
-                rgb = np_image_pixels(i, w, h)
-                g = rgb[:, :, 0]
-                tx = np.arange(w) // PX
-                ty = np.arange(h) // PY
-                odd = ((tx[None, :] + ty[:, None]) % 2 == 1)
-                sparse = np.where(odd, g, 0).astype(np.uint8)
-                bbox = (float(lon), float(lat) - 1.0,
-                        float(lon) + 1.0, float(lat))
-                variants = {
-                    "mrf_png": (rgb, "PNG", None),
-                    "mrf_none": (g, "NONE", None),
-                    "mrf_deflate": (g, "DEFLATE", None),
-                    "mrf_lerc": (g, "LERC", None),
-                    "mrf_sparse": (sparse, "PNG", 0),
-                }
-                for fmt, (src, comp, skip) in variants.items():
-                    xml, idx, data = encode_mrf(
-                        src, page=(PX, PY), compression=comp,
-                        bbox=bbox, skip_uniform=skip)
-                    out, got_bbox = decode_mrf(xml, idx, data)
-                    ents = list(mrf_tile_entries(xml, idx))
-                    wrote = sum(1 for e in ents
-                                if (e[2], e[3]) != (0, 0))
-                    for b in range(out.shape[2]):
-                        rows.append(
-                            {
-                                "image_id": img_id, "fmt": fmt,
-                                "band": b,
-                                "checksum": gdal_checksum(out[:, :, b]),
-                                "n_tiles": len(ents),
-                                "n_written": wrote,
-                                "x0_q6": _math.floor(got_bbox[0] * 1e6),
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        rgb = np_image_pixels(i, w, h)
+        g = rgb[:, :, 0]
+        tx = np.arange(w) // PX
+        ty = np.arange(h) // PY
+        odd = ((tx[None, :] + ty[:, None]) % 2 == 1)
+        sparse = np.where(odd, g, 0).astype(np.uint8)
+        bbox = (lon, lat - 1.0, lon + 1.0, lat)
+        variants = {
+            "mrf_png": (rgb, "PNG", None),
+            "mrf_none": (g, "NONE", None),
+            "mrf_deflate": (g, "DEFLATE", None),
+            "mrf_lerc": (g, "LERC", None),
+            "mrf_sparse": (sparse, "PNG", 0),
+        }
+        for fmt, (src, comp, skip) in variants.items():
+            xml, idx, data = encode_mrf(
+                src, page=(PX, PY), compression=comp,
+                bbox=bbox, skip_uniform=skip)
+            out, got_bbox = decode_mrf(xml, idx, data)
+            ents = list(mrf_tile_entries(xml, idx))
+            wrote = sum(1 for e in ents if (e[2], e[3]) != (0, 0))
+            for b in range(out.shape[2]):
+                yield (image_id, fmt, b, gdal_checksum(out[:, :, b]),
+                       len(ents), wrote, math.floor(got_bbox[0] * 1e6))
 
-    return geo.mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 151,
+        "image_id string, fmt string, band int, checksum int, n_tiles int,"
+        " n_written int, x0_q6 bigint", rows,
+        cols=("i", "image_id", "w", "h", "lon_c", "lat_c"),
+    )
 
 
 def _o_mrf_roundtrip() -> str:
@@ -5023,108 +4909,66 @@ def q_raw_fleet2(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max-coordinate geotransform).  The pixel rule rides through
     REAL bytes of each and the decoded checksums + parsed
     geotransform origins match one closed form."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 139)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h", "lon_c", "lat_c"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-            T2.StructField("x0_q6", T2.LongType()),
-            T2.StructField("y0_q6", T2.LongType()),
-        ]
-    )
-
-    def run(batches):
-        import math as _math
+    def rows(i, image_id, w, h, lon, lat):
+        import math
 
         import numpy as np
 
         from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.rawformats import (
-            decode_gtx, decode_kro, decode_pnm, decode_snodas,
-            encode_gtx, encode_kro, encode_pnm, encode_snodas,
+            decode_gtx, decode_kro, decode_ngsgeoid, decode_pnm,
+            decode_sigdem, decode_snodas, encode_gtx, encode_kro,
+            encode_ngsgeoid, encode_pnm, encode_sigdem, encode_snodas,
         )
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h, lon, lat in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"],
-                pdf["lon_c"], pdf["lat_c"]
-            ):
-                i, w, h = int(i), int(w), int(h)
-                lon, lat = float(lon), float(lat)
-                rgb = np_image_pixels(i, w, h)
-                g = rgb[:, :, 0]
-                outs = {}
-                outs["pnm_gray"] = (decode_pnm(encode_pnm(g))[:, :, None]
-                                    .astype(np.int64), 0, 0)
-                outs["pnm_rgb"] = (decode_pnm(encode_pnm(rgb))
-                                   .astype(np.int64), 0, 0)
-                outs["pnm16"] = (
-                    decode_pnm(encode_pnm(g.astype(np.uint16) * 257))
-                    [:, :, None].astype(np.int64), 0, 0)
-                outs["kro_rgb"] = (decode_kro(encode_kro(rgb))
-                                   .astype(np.int64), 0, 0)
-                outs["kro_f32"] = (
-                    (decode_kro(encode_kro(
-                        g.astype(np.float32) + 0.25)) * 4)
-                    .astype(np.int64), 0, 0)
-                garr, ggt = decode_gtx(encode_gtx(
-                    g.astype(np.float32) + 0.5,
-                    ymin=lat, xmin=lon, dy=0.25, dx=0.5))
-                outs["gtx"] = ((garr[:, :, None] * 2).astype(np.int64),
-                               _math.floor(ggt[0] * 1e6),
-                               _math.floor(ggt[3] * 1e6))
-                sarr, sgt, _nd = decode_snodas(*encode_snodas(
-                    (g.astype(np.int16) + 100),
-                    minx=lon, miny=lat - h * 0.01,
-                    maxx=lon + w * 0.01, maxy=lat))
-                outs["snodas"] = (sarr[:, :, None].astype(np.int64),
-                                  _math.floor(sgt[0] * 1e6),
-                                  _math.floor(sgt[3] * 1e6))
-                from gdal_spark.raster.rawformats import (
-                    decode_ngsgeoid, decode_sigdem, encode_ngsgeoid,
-                    encode_sigdem,
-                )
+        def q6(gt):
+            return math.floor(gt[0] * 1e6), math.floor(gt[3] * 1e6)
 
-                darr, dgt, _crs = decode_sigdem(encode_sigdem(
-                    g.astype(np.float64), min_x=lon, max_y=lat,
-                    x_dim=0.5, y_dim=0.5))
-                outs["sigdem"] = (
-                    np.floor(darr + 0.5).astype(np.int64)[:, :, None],
-                    _math.floor(dgt[0] * 1e6),
-                    _math.floor(dgt[3] * 1e6))
-                # lat/2 keeps slat within the format's [-90, 90] gate
-                narr, ngt = decode_ngsgeoid(encode_ngsgeoid(
-                    g.astype(np.float32) + 0.5,
-                    slat=lat / 2 - h * 0.01, wlon=lon,
-                    dlat=0.01, dlon=0.01,
-                    little_endian=(i % 2 == 0)))
-                outs["ngsgeoid"] = (
-                    (narr[:, :, None] * 2).astype(np.int64),
-                    _math.floor(ngt[0] * 1e6),
-                    _math.floor(ngt[3] * 1e6))
-                for fmt, (out, x0, y0) in outs.items():
-                    for b in range(out.shape[2]):
-                        rows.append(
-                            {
-                                "image_id": img_id, "fmt": fmt,
-                                "band": b,
-                                "checksum": gdal_checksum(out[:, :, b]),
-                                "x0_q6": x0, "y0_q6": y0,
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        rgb = np_image_pixels(i, w, h)
+        g = rgb[:, :, 0]
+        outs = {}
+        outs["pnm_gray"] = (decode_pnm(encode_pnm(g)).astype(np.int64), 0, 0)
+        outs["pnm_rgb"] = (decode_pnm(encode_pnm(rgb)).astype(np.int64), 0, 0)
+        outs["pnm16"] = (
+            decode_pnm(encode_pnm(g.astype(np.uint16) * 257)).astype(np.int64),
+            0, 0)
+        outs["kro_rgb"] = (decode_kro(encode_kro(rgb)).astype(np.int64), 0, 0)
+        outs["kro_f32"] = (
+            (decode_kro(encode_kro(g.astype(np.float32) + 0.25)) * 4)
+            .astype(np.int64), 0, 0)
+        garr, ggt = decode_gtx(encode_gtx(
+            g.astype(np.float32) + 0.5,
+            ymin=lat, xmin=lon, dy=0.25, dx=0.5))
+        outs["gtx"] = ((garr * 2).astype(np.int64), *q6(ggt))
+        sarr, sgt, _nd = decode_snodas(*encode_snodas(
+            (g.astype(np.int16) + 100),
+            minx=lon, miny=lat - h * 0.01,
+            maxx=lon + w * 0.01, maxy=lat))
+        outs["snodas"] = (sarr.astype(np.int64), *q6(sgt))
+        darr, dgt, _crs = decode_sigdem(encode_sigdem(
+            g.astype(np.float64), min_x=lon, max_y=lat,
+            x_dim=0.5, y_dim=0.5))
+        outs["sigdem"] = (np.floor(darr + 0.5).astype(np.int64), *q6(dgt))
+        # lat/2 keeps slat within the format's [-90, 90] gate
+        narr, ngt = decode_ngsgeoid(encode_ngsgeoid(
+            g.astype(np.float32) + 0.5,
+            slat=lat / 2 - h * 0.01, wlon=lon,
+            dlat=0.01, dlon=0.01,
+            little_endian=(i % 2 == 0)))
+        outs["ngsgeoid"] = ((narr * 2).astype(np.int64), *q6(ngt))
+        for fmt, (out, x0, y0) in outs.items():
+            out = np.atleast_3d(out)
+            for b in range(out.shape[2]):
+                yield image_id, fmt, b, gdal_checksum(out[:, :, b]), x0, y0
 
-    return geo.mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 139,
+        "image_id string, fmt string, band int, checksum int, x0_q6 bigint,"
+        " y0_q6 bigint", rows,
+        cols=("i", "image_id", "w", "h", "lon_c", "lat_c"),
+    )
 
 
 def _o_raw_fleet2() -> str:
@@ -5197,25 +5041,9 @@ def q_raw_fleet3(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed 180/1800/... grids, little-endian float32).  Decoded
     checksums + parsed geotransform origins (including the JDEM
     second-snapping) match closed forms."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 167)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h", "lon_c", "lat_c"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("checksum", T2.IntegerType()),
-            T2.StructField("x0_q6", T2.LongType()),
-            T2.StructField("y0_q6", T2.LongType()),
-        ]
-    )
-
-    def run(batches):
-        import math as _math
+    def rows(i, image_id, w, h, lon, lat):
+        import math
 
         import numpy as np
 
@@ -5225,46 +5053,29 @@ def q_raw_fleet3(spark: SparkSession, sf_dir: str) -> DataFrame:
             decode_ace2, decode_jdem, encode_ace2, encode_jdem,
         )
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h, lon, lat in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"],
-                pdf["lon_c"], pdf["lat_c"]
-            ):
-                i = int(i)
-                jw, jh = min(int(w), 128), min(int(h), 128)
-                lon, lat = float(lon), float(lat)
-                g = np_image_pixels(i, jw, jh)[:, :, 0]
-                ll_lat = (lat + 85.0) / 2
-                ll_lon = (lon + 180.0) / 2
-                out, gt = decode_jdem(encode_jdem(
-                    g.astype(np.float64), ll_lat, ll_lon,
-                    ll_lat + jh * 0.001, ll_lon + jw * 0.001))
-                vals = np.floor(out.astype(np.float64) * 10 + 0.5)
-                rows.append(
-                    {
-                        "image_id": img_id, "fmt": "jdem",
-                        "checksum": gdal_checksum(vals.astype(np.int64)),
-                        "x0_q6": _math.floor(gt[0] * 1e6),
-                        "y0_q6": _math.floor(gt[3] * 1e6),
-                    }
-                )
-                x = np.arange(180, dtype=np.int64)[None, :]
-                y = np.arange(180, dtype=np.int64)[:, None]
-                a = (((x + y + i) % 256).astype(np.float32) + 0.25)
-                arr, agt = decode_ace2(encode_ace2(a), "30S120W_5M")
-                rows.append(
-                    {
-                        "image_id": img_id, "fmt": "ace2",
-                        "checksum": gdal_checksum(
-                            (arr * 4).astype(np.int64)),
-                        "x0_q6": _math.floor(agt[0] * 1e6),
-                        "y0_q6": _math.floor(agt[3] * 1e6),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        jw, jh = min(w, 128), min(h, 128)
+        g = np_image_pixels(i, jw, jh)[:, :, 0]
+        ll_lat = (lat + 85.0) / 2
+        ll_lon = (lon + 180.0) / 2
+        out, gt = decode_jdem(encode_jdem(
+            g.astype(np.float64), ll_lat, ll_lon,
+            ll_lat + jh * 0.001, ll_lon + jw * 0.001))
+        vals = np.floor(out.astype(np.float64) * 10 + 0.5)
+        yield (image_id, "jdem", gdal_checksum(vals.astype(np.int64)),
+               math.floor(gt[0] * 1e6), math.floor(gt[3] * 1e6))
+        x = np.arange(180, dtype=np.int64)[None, :]
+        y = np.arange(180, dtype=np.int64)[:, None]
+        a = (((x + y + i) % 256).astype(np.float32) + 0.25)
+        arr, agt = decode_ace2(encode_ace2(a), "30S120W_5M")
+        yield (image_id, "ace2", gdal_checksum((arr * 4).astype(np.int64)),
+               math.floor(agt[0] * 1e6), math.floor(agt[3] * 1e6))
 
-    return geo.mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 167,
+        "image_id string, fmt string, checksum int, x0_q6 bigint,"
+        " y0_q6 bigint", rows,
+        cols=("i", "image_id", "w", "h", "lon_c", "lat_c"),
+    )
 
 
 def _o_raw_fleet3() -> str:
@@ -5327,74 +5138,29 @@ def q_grib_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     packing (5.40, round 5: rides the from-scratch T.800 codec on a
     64x64 crop — EBCOT is a sequential bit-plane coder) — and the
     decoded per-band checksums all match one closed form."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 13)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def decode(arr):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
-        from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.grib import decode_grib2, encode_grib2
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                arr = np_image_pixels(int(i), int(w), int(h))
-                outs = {}
-                outs["grib_u8"] = decode_grib2(encode_grib2(arr))[0]
-                b0 = arr[:, :, 0].astype(np.int64)
-                outs["grib_off"] = (
-                    decode_grib2(encode_grib2(b0 - 128))[0] + 128
-                )
-                ds = decode_grib2(encode_grib2(b0 / 10.0, dscale=1))[0]
-                outs["grib_ds1"] = np.floor(ds * 10.0 + 0.5).astype(
-                    np.int64
-                )
-                outs["grib_cpx"] = decode_grib2(
-                    encode_grib2(arr, packing="complex")
-                )[0]
-                outs["grib_sd2"] = decode_grib2(
-                    encode_grib2(b0 - 50, packing="complex_diff",
-                                 diff_order=2)
-                )[0] + 50
-                p16 = decode_grib2(encode_grib2(b0 * 257,
-                                                packing="png"))[0]
-                outs["grib_png16"] = p16 // 257
-                wc, hc = min(int(w), 64), min(int(h), 64)
-                c0 = np_image_pixels(int(i), wc, hc)[:, :, 0].astype(
-                    np.int64
-                )
-                j16 = decode_grib2(encode_grib2(c0 * 257,
-                                                packing="jpeg2000"))[0]
-                outs["grib_j2k"] = j16 // 257
-                for fmt, out in outs.items():
-                    for b in range(out.shape[2]):
-                        rows.append(
-                            {
-                                "image_id": img_id, "fmt": fmt,
-                                "band": b,
-                                "checksum": gdal_checksum(out[:, :, b]),
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        def rt(a, **kw):
+            return decode_grib2(encode_grib2(a, **kw))[0]
 
-    return geo.mapInPandas(run, schema)
+        b0 = arr[:, :, 0].astype(np.int64)
+        c0 = b0[:64, :64]
+        return {
+            "grib_u8": rt(arr),
+            "grib_off": rt(b0 - 128) + 128,
+            "grib_ds1": np.floor(rt(b0 / 10.0, dscale=1) * 10.0 + 0.5)
+            .astype(np.int64),
+            "grib_cpx": rt(arr, packing="complex"),
+            "grib_sd2": rt(b0 - 50, packing="complex_diff", diff_order=2) + 50,
+            "grib_png16": rt(b0 * 257, packing="png") // 257,
+            "grib_j2k": rt(c0 * 257, packing="jpeg2000") // 257,
+        }
+
+    return _band_checksums(spark, sf_dir, 13, decode)
 
 
 def _o_grib_roundtrip() -> str:
@@ -5445,47 +5211,22 @@ def q_dted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     checksums): the pixel rule (shifted -128 so roughly half the
     elevations exercise the sign bit) rides through REAL DTED bytes
     and the decoded checksums match the closed form."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 19)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("checksum", T2.IntegerType()),
-            T2.StructField("n_negative", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def rows(i, image_id, w, h):
         import numpy as np
 
         from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.dted import decode_dted, encode_dted
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                elev = np_image_pixels(int(i), int(w), int(h))[
-                    :, :, 0
-                ].astype(np.int64) - 128
-                out, _meta = decode_dted(encode_dted(elev, lat0=45, lon0=7))
-                rows.append(
-                    {
-                        "image_id": img_id,
-                        "checksum": gdal_checksum(out + 128),
-                        "n_negative": int((out < 0).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        elev = np_image_pixels(i, w, h)[:, :, 0].astype(np.int64) - 128
+        out, _meta = decode_dted(encode_dted(elev, lat0=45, lon0=7))
+        yield image_id, gdal_checksum(out + 128), int((out < 0).sum())
 
-    return geo.mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 19,
+        "image_id string, checksum int, n_negative int", rows,
+    )
 
 
 def _o_dted_roundtrip() -> str:
@@ -5520,70 +5261,39 @@ def q_nitf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel-interleaved (odd -> P), plus a 16-bit MONO encode of
     channel 0 scaled x257 — and ICORDS=G IGEOLO corner coordinates
     round-trip exactly on the integer-arcsecond lattice."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 67)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("imode", T2.StringType()),
-            T2.StructField("cks_r", T2.IntegerType()),
-            T2.StructField("cks_g", T2.IntegerType()),
-            T2.StructField("cks_b", T2.IntegerType()),
-            T2.StructField("cks_mono16", T2.IntegerType()),
-            T2.StructField("ul_lat_as", T2.LongType()),
-            T2.StructField("ul_lon_as", T2.LongType()),
-        ]
-    )
-
-    def run(batches):
+    def rows(i, image_id, w, h):
         import numpy as np
 
         from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.nitf import decode_nitf, encode_nitf
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                i, w, h = int(i), int(w), int(h)
-                px = np_image_pixels(i, w, h).astype(np.uint8)
-                lat0 = ((i % 80) - 40) * 3600 + (i % 47)
-                lon0 = ((i % 160) - 80) * 3600 + (i % 53)
-                corners = (
-                    (lat0 + h, lon0),
-                    (lat0 + h, lon0 + w),
-                    (lat0, lon0 + w),
-                    (lat0, lon0),
-                )
-                imode = "B" if i % 2 == 0 else "P"
-                rgb, meta = decode_nitf(
-                    encode_nitf(px, imode=imode, corners_arcsec=corners)
-                )
-                m16 = (px[:, :, 0].astype(np.uint16)) * 257
-                mono, _ = decode_nitf(encode_nitf(m16))
-                ul = meta["corners_arcsec"][0]
-                rows.append(
-                    {
-                        "image_id": img_id,
-                        "imode": meta["imode"],
-                        "cks_r": gdal_checksum(rgb[:, :, 0]),
-                        "cks_g": gdal_checksum(rgb[:, :, 1]),
-                        "cks_b": gdal_checksum(rgb[:, :, 2]),
-                        "cks_mono16": gdal_checksum(mono[:, :, 0]),
-                        "ul_lat_as": ul[0],
-                        "ul_lon_as": ul[1],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        px = np_image_pixels(i, w, h).astype(np.uint8)
+        lat0 = ((i % 80) - 40) * 3600 + (i % 47)
+        lon0 = ((i % 160) - 80) * 3600 + (i % 53)
+        corners = (
+            (lat0 + h, lon0),
+            (lat0 + h, lon0 + w),
+            (lat0, lon0 + w),
+            (lat0, lon0),
+        )
+        imode = "B" if i % 2 == 0 else "P"
+        rgb, meta = decode_nitf(
+            encode_nitf(px, imode=imode, corners_arcsec=corners)
+        )
+        m16 = (px[:, :, 0].astype(np.uint16)) * 257
+        mono, _ = decode_nitf(encode_nitf(m16))
+        ul = meta["corners_arcsec"][0]
+        yield (image_id, meta["imode"], gdal_checksum(rgb[:, :, 0]),
+               gdal_checksum(rgb[:, :, 1]), gdal_checksum(rgb[:, :, 2]),
+               gdal_checksum(mono[:, :, 0]), ul[0], ul[1])
 
-    return geo.mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 67,
+        "image_id string, imode string, cks_r int, cks_g int, cks_b int,"
+        " cks_mono16 int, ul_lat_as bigint, ul_lon_as bigint", rows,
+    )
 
 
 def _o_nitf_roundtrip() -> str:
@@ -5628,56 +5338,31 @@ def q_pcidsk_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     small integers) ride through REAL .pix bytes in BOTH
     interleavings (i even -> BAND, odd -> PIXEL with 512-padded
     scanlines); checksums/sums match the closed forms."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 71)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("ilv", T2.StringType()),
-            T2.StructField("cks_8u", T2.IntegerType()),
-            T2.StructField("sum_16s", T2.LongType()),
-            T2.StructField("sum_32r", T2.LongType()),
-        ]
-    )
-
-    def run(batches):
+    def rows(i, image_id, w, h):
         import numpy as np
 
         from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.pcidsk import decode_pcidsk, encode_pcidsk
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                i, w, h = int(i), int(w), int(h)
-                px = np_image_pixels(i, w, h).astype(np.int64)
-                chans = [
-                    px[:, :, 0].astype(np.uint8),
-                    (px[:, :, 1] * 100 - 12800).astype(np.int16),
-                    (px[:, :, 2] * 3).astype(np.float32),
-                ]
-                ilv = "BAND" if i % 2 == 0 else "PIXEL"
-                out, meta = decode_pcidsk(encode_pcidsk(chans, ilv))
-                rows.append(
-                    {
-                        "image_id": img_id,
-                        "ilv": meta["interleaving"],
-                        "cks_8u": int(gdal_checksum(out[0])),
-                        "sum_16s": int(out[1].astype(np.int64).sum()),
-                        "sum_32r": int(out[2].astype(np.int64).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        px = np_image_pixels(i, w, h).astype(np.int64)
+        chans = [
+            px[:, :, 0].astype(np.uint8),
+            (px[:, :, 1] * 100 - 12800).astype(np.int16),
+            (px[:, :, 2] * 3).astype(np.float32),
+        ]
+        ilv = "BAND" if i % 2 == 0 else "PIXEL"
+        out, meta = decode_pcidsk(encode_pcidsk(chans, ilv))
+        yield (image_id, meta["interleaving"], int(gdal_checksum(out[0])),
+               int(out[1].astype(np.int64).sum()),
+               int(out[2].astype(np.int64).sum()))
 
-    return geo.mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 71,
+        "image_id string, ilv string, cks_8u int, sum_16s bigint,"
+        " sum_32r bigint", rows,
+    )
 
 
 def _o_pcidsk_roundtrip() -> str:
@@ -5715,55 +5400,30 @@ def q_hdf4_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact small integers — grouped by NDG records, written
     big-endian, decoded back through the DD-chain walker; checksums
     and sums close exactly."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 73)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("n_datasets", T2.IntegerType()),
-            T2.StructField("cks_8u", T2.IntegerType()),
-            T2.StructField("sum_16s", T2.LongType()),
-            T2.StructField("sum_f64", T2.LongType()),
-        ]
-    )
-
-    def run(batches):
+    def rows(i, image_id, w, h):
         import numpy as np
 
         from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.hdf4 import decode_hdf4, encode_hdf4
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                i, w, h = int(i), int(w), int(h)
-                px = np_image_pixels(i, w, h).astype(np.int64)
-                sets = [
-                    px[:, :, 0].astype(np.uint8),
-                    (px[:, :, 1] * 100 - 12800).astype(np.int16),
-                    (px[:, :, 2] * 7).astype(np.float64),
-                ]
-                out, meta = decode_hdf4(encode_hdf4(sets))
-                rows.append(
-                    {
-                        "image_id": img_id,
-                        "n_datasets": len(out),
-                        "cks_8u": int(gdal_checksum(out[0])),
-                        "sum_16s": int(out[1].astype(np.int64).sum()),
-                        "sum_f64": int(out[2].astype(np.int64).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        px = np_image_pixels(i, w, h).astype(np.int64)
+        sets = [
+            px[:, :, 0].astype(np.uint8),
+            (px[:, :, 1] * 100 - 12800).astype(np.int16),
+            (px[:, :, 2] * 7).astype(np.float64),
+        ]
+        out, meta = decode_hdf4(encode_hdf4(sets))
+        yield (image_id, len(out), int(gdal_checksum(out[0])),
+               int(out[1].astype(np.int64).sum()),
+               int(out[2].astype(np.int64).sum()))
 
-    return geo.mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 73,
+        "image_id string, n_datasets int, cks_8u int, sum_16s bigint,"
+        " sum_f64 bigint", rows,
+    )
 
 
 def _o_hdf4_roundtrip() -> str:
@@ -5800,22 +5460,8 @@ def q_usgsdem_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shifted -128 to exercise negative elevations and token fusing)
     rides through REAL new-format bytes; decoded checksums match the
     closed form."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 23)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("checksum", T2.IntegerType()),
-            T2.StructField("n_negative", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def rows(i, image_id, w, h):
         import numpy as np
 
         from gdal_spark.fixtures.georef import np_image_pixels
@@ -5825,27 +5471,16 @@ def q_usgsdem_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             encode_usgsdem,
         )
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                elev = np_image_pixels(int(i), int(w), int(h))[
-                    :, :, 0
-                ].astype(np.int64) - 128
-                out, _meta = decode_usgsdem(
-                    encode_usgsdem(elev, lon0_deg=-100.0, lat0_deg=40.0)
-                )
-                rows.append(
-                    {
-                        "image_id": img_id,
-                        "checksum": gdal_checksum(out + 128),
-                        "n_negative": int((out < 0).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        elev = np_image_pixels(i, w, h)[:, :, 0].astype(np.int64) - 128
+        out, _meta = decode_usgsdem(
+            encode_usgsdem(elev, lon0_deg=-100.0, lat0_deg=40.0)
+        )
+        yield image_id, gdal_checksum(out + 128), int((out < 0).sum())
 
-    return geo.mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 23,
+        "image_id string, checksum int, n_negative int", rows,
+    )
 
 
 def _o_usgsdem_roundtrip() -> str:
@@ -5878,95 +5513,30 @@ def q_pds_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     samples, SCALING_FACTOR/OFFSET): the pixel rule rides through
     REAL PDS3 bytes as 3-band uint8, signed MSB int16 (-128 shift),
     and a scaled variant (x0.5+16, quantized x2 — exact dyadics)."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 29)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def decode(arr):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
-        from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.pds import decode_pds, encode_pds
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                arr = np_image_pixels(int(i), int(w), int(h))
-                outs = {}
-                outs["pds_u8"] = decode_pds(encode_pds(arr))[0]
-                b0 = arr[:, :, 0].astype(np.int16) - 128
-                outs["pds_i16"] = (
-                    decode_pds(encode_pds(b0))[0].astype(np.int64) + 128
-                )
-                sc = decode_pds(
-                    encode_pds(b0, scale=0.5, offset=16.0)
-                )[0]
-                outs["pds_scaled"] = np.floor(sc * 2.0).astype(
-                    np.int64
-                ) + 128
-                for fmt, out in outs.items():
-                    for b in range(out.shape[2]):
-                        rows.append(
-                            {
-                                "image_id": img_id, "fmt": fmt,
-                                "band": b,
-                                "checksum": gdal_checksum(out[:, :, b]),
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        b0 = arr[:, :, 0].astype(np.int16) - 128
+        sc = decode_pds(encode_pds(b0, scale=0.5, offset=16.0))[0]
+        return {
+            "pds_u8": decode_pds(encode_pds(arr))[0],
+            "pds_i16": decode_pds(encode_pds(b0))[0].astype(np.int64) + 128,
+            "pds_scaled": np.floor(sc * 2.0).astype(np.int64) + 128,
+        }
 
-    return geo.mapInPandas(run, schema)
+    return _band_checksums(spark, sf_dir, 29, decode)
 
 
-def _o_pds_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 29)",
-    )
-    # pds_scaled: floor(((v-128)*0.5 + 16) * 2) + 128 = v + 32 exactly
-    # (dyadic halves), so all three variants share the pixel rule with
-    # a NON-NEGATIVE integer shift (no %-sign divergence)
-    return f"""
-WITH img AS ({img}),
-fmts AS (
-  SELECT * FROM (VALUES ('pds_u8', 3, 0), ('pds_i16', 1, 0),
-                        ('pds_scaled', 1, 32)) AS f(fmt, nb, shift)
-),
-bands AS (
-  SELECT f.fmt, f.shift, b.band,
-    CASE b.band WHEN 0 THEN 0 WHEN 1 THEN 85 ELSE 170 END AS phase
-  FROM fmts f JOIN range(0, 3) AS b(band) ON b.band < f.nb
-),
-px AS (
-  SELECT i.image_id, fb.fmt, fb.band,
-    (gx.x + gy.y + i.i + fb.phase) % 256 + fb.shift AS val,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-  CROSS JOIN bands fb
+# pds_scaled: floor(((v-128)*0.5 + 16) * 2) + 128 = v + 32 exactly
+# (dyadic halves), so all three variants share the pixel rule with
+# a NON-NEGATIVE integer shift (no %-sign divergence)
+_o_pds_roundtrip = partial(
+    _band_checksum_oracle, 29,
+    {"pds_u8": 3, "pds_i16": 1, "pds_scaled": 1}, shift={"pds_scaled": 32},
 )
-SELECT image_id, fmt, cast(band as int) AS band,
-  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS checksum
-FROM px GROUP BY image_id, fmt, band
-"""
 
 
 def q_idrisi_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5974,97 +5544,32 @@ def q_idrisi_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows + 12-char-key .rdc doc file; byte/integer/real/rgb24 with
     pixel-interleaved BGR): the pixel rule rides through REAL
     (.rst bytes, .rdc text) pairs in all four data types."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 31)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def decode(arr):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
-        from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.idrisi import decode_rst, encode_rst
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                arr = np_image_pixels(int(i), int(w), int(h))
-                b0 = arr[:, :, 0]
-                outs = {}
-                outs["rst_byte"] = decode_rst(*encode_rst(b0))[0][
-                    :, :, None
-                ]
-                i16 = b0.astype(np.int16) - 128
-                outs["rst_integer"] = (
-                    decode_rst(*encode_rst(i16))[0].astype(np.int64)
-                    + 128
-                )[:, :, None]
-                f32 = (b0.astype(np.float32) / 4.0)
-                dec = decode_rst(*encode_rst(f32))[0]
-                outs["rst_real"] = np.floor(
-                    dec.astype(np.float64) * 4.0
-                ).astype(np.int64)[:, :, None]
-                outs["rst_rgb24"] = decode_rst(*encode_rst(arr))[0]
-                for fmt, out in outs.items():
-                    for b in range(out.shape[2]):
-                        rows.append(
-                            {
-                                "image_id": img_id, "fmt": fmt,
-                                "band": b,
-                                "checksum": gdal_checksum(out[:, :, b]),
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        b0 = arr[:, :, 0]
+        i16 = b0.astype(np.int16) - 128
+        dec = decode_rst(*encode_rst(b0.astype(np.float32) / 4.0))[0]
+        return {
+            "rst_byte": decode_rst(*encode_rst(b0))[0],
+            "rst_integer": decode_rst(*encode_rst(i16))[0].astype(np.int64)
+            + 128,
+            "rst_real": np.floor(dec.astype(np.float64) * 4.0)
+            .astype(np.int64),
+            "rst_rgb24": decode_rst(*encode_rst(arr))[0],
+        }
 
-    return geo.mapInPandas(run, schema)
+    return _band_checksums(spark, sf_dir, 31, decode)
 
 
-def _o_idrisi_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 31)",
-    )
-    # rst_real: v/4 is exact in float32 (dyadic), floor(x*4) recovers v
-    return f"""
-WITH img AS ({img}),
-fmts AS (
-  SELECT * FROM (VALUES ('rst_byte', 1), ('rst_integer', 1),
-                        ('rst_real', 1), ('rst_rgb24', 3)) AS f(fmt, nb)
-),
-bands AS (
-  SELECT f.fmt, b.band,
-    CASE b.band WHEN 0 THEN 0 WHEN 1 THEN 85 ELSE 170 END AS phase
-  FROM fmts f JOIN range(0, 3) AS b(band) ON b.band < f.nb
-),
-px AS (
-  SELECT i.image_id, fb.fmt, fb.band,
-    (gx.x + gy.y + i.i + fb.phase) % 256 AS val,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-  CROSS JOIN bands fb
+# rst_real: v/4 is exact in float32 (dyadic), floor(x*4) recovers v
+_o_idrisi_roundtrip = partial(
+    _band_checksum_oracle, 31,
+    {"rst_byte": 1, "rst_integer": 1, "rst_real": 1, "rst_rgb24": 3},
 )
-SELECT image_id, fmt, cast(band as int) AS band,
-  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS checksum
-FROM px GROUP BY image_id, fmt, band
-"""
 
 
 def q_misc_raster_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6075,27 +5580,10 @@ def q_misc_raster_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-width text): the pixel rule rides through REAL bytes of
     all six variants and the decoded checksums match one closed
     form."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 37)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def decode(arr):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
-        from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.fits import decode_fits, encode_fits
         from gdal_spark.raster.simplegrids import (
             decode_gsag,
@@ -6107,78 +5595,24 @@ def q_misc_raster_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         from gdal_spark.raster.tga import decode_tga, encode_tga
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                arr = np_image_pixels(int(i), int(w), int(h))
-                b0 = arr[:, :, 0]
-                outs = {}
-                outs["tga24"] = decode_tga(encode_tga(arr))
-                outs["tga_rle"] = decode_tga(
-                    encode_tga(arr, rle=True, top_left=False)
-                )
-                i16 = b0.astype(np.int16) - 128
-                outs["fits16"] = (
-                    decode_fits(encode_fits(i16))[0].astype(np.int64)
-                    + 128
-                )[:, :, None]
-                outs["gsbg"] = decode_gsbg(encode_gsbg(b0))[0].astype(
-                    np.int64
-                )[:, :, None]
-                outs["gsag"] = decode_gsag(encode_gsag(b0))[0].astype(
-                    np.int64
-                )[:, :, None]
-                outs["zmap"] = decode_zmap(encode_zmap(b0))[0].astype(
-                    np.int64
-                )[:, :, None]
-                for fmt, out in outs.items():
-                    for b in range(out.shape[2]):
-                        rows.append(
-                            {
-                                "image_id": img_id, "fmt": fmt,
-                                "band": b,
-                                "checksum": gdal_checksum(out[:, :, b]),
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        b0 = arr[:, :, 0]
+        i16 = b0.astype(np.int16) - 128
+        return {
+            "tga24": decode_tga(encode_tga(arr)),
+            "tga_rle": decode_tga(encode_tga(arr, rle=True, top_left=False)),
+            "fits16": decode_fits(encode_fits(i16))[0].astype(np.int64) + 128,
+            "gsbg": decode_gsbg(encode_gsbg(b0))[0].astype(np.int64),
+            "gsag": decode_gsag(encode_gsag(b0))[0].astype(np.int64),
+            "zmap": decode_zmap(encode_zmap(b0))[0].astype(np.int64),
+        }
 
-    return geo.mapInPandas(run, schema)
+    return _band_checksums(spark, sf_dir, 37, decode)
 
 
-def _o_misc_raster_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 37)",
-    )
-    return f"""
-WITH img AS ({img}),
-fmts AS (
-  SELECT * FROM (VALUES ('tga24', 3), ('tga_rle', 3), ('fits16', 1),
-                        ('gsbg', 1), ('gsag', 1), ('zmap', 1))
-    AS f(fmt, nb)
-),
-bands AS (
-  SELECT f.fmt, b.band,
-    CASE b.band WHEN 0 THEN 0 WHEN 1 THEN 85 ELSE 170 END AS phase
-  FROM fmts f JOIN range(0, 3) AS b(band) ON b.band < f.nb
-),
-px AS (
-  SELECT i.image_id, fb.fmt, fb.band,
-    (gx.x + gy.y + i.i + fb.phase) % 256 AS val,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-  CROSS JOIN bands fb
+_o_misc_raster_roundtrip = partial(
+    _band_checksum_oracle, 37,
+    {"tga24": 3, "tga_rle": 3, "fits16": 1, "gsbg": 1, "gsag": 1, "zmap": 1},
 )
-SELECT image_id, fmt, cast(band as int) AS band,
-  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS checksum
-FROM px GROUP BY image_id, fmt, band
-"""
 
 
 def q_equalize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6186,43 +5620,18 @@ def q_equalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     zeroed extreme bins, cum[i] = total + hist[i]/2, LUT =
     (cum*256)/nTotal clamped — all integer divisions): per-image
     equalized checksums plus the LUT midpoint."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 41)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
-        import pandas as pd  # noqa: F811
-
+    def rows(i, image_id, w, h):
         from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.enhance import equalize_u8
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                b0 = np_image_pixels(int(i), int(w), int(h))[:, :, 0]
-                eq = equalize_u8(b0)
-                rows.append(
-                    {
-                        "image_id": img_id,
-                        "checksum": gdal_checksum(eq),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        b0 = np_image_pixels(i, w, h)[:, :, 0]
+        yield image_id, gdal_checksum(equalize_u8(b0))
 
-    return geo.mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 41, "image_id string, checksum int", rows
+    )
 
 
 def _o_equalize() -> str:
@@ -6275,23 +5684,8 @@ def q_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
     LCG-seeded parameters (raster/augment.py): output-local checksums
     of the transformed pixel rule match the pure coordinate-mapping
     oracle."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 43)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("out_w", T2.IntegerType()),
-            T2.StructField("out_h", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def rows(i, image_id, w, h):
         from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.augment import (
             augment_image,
@@ -6299,25 +5693,14 @@ def q_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         from gdal_spark.raster.checksum import gdal_checksum
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                b0 = np_image_pixels(int(i), int(w), int(h))[:, :, 0]
-                p = augment_params(int(i), int(w), int(h))
-                out = augment_image(b0, p)
-                rows.append(
-                    {
-                        "image_id": img_id,
-                        "out_w": out.shape[1],
-                        "out_h": out.shape[0],
-                        "checksum": gdal_checksum(out),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        b0 = np_image_pixels(i, w, h)[:, :, 0]
+        out = augment_image(b0, augment_params(i, w, h))
+        yield image_id, out.shape[1], out.shape[0], gdal_checksum(out)
 
-    return geo.mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 43,
+        "image_id string, out_w int, out_h int, checksum int", rows,
+    )
 
 
 def _o_augment() -> str:
@@ -6374,47 +5757,22 @@ def q_hf2_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta-compressed tiles with per-row 1/2/4-byte word sizes,
     georef-extents extended-header block; HFZ = gzip): the pixel rule
     (-128 shift) rides through REAL bytes both raw and gzipped."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 47)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def rows(i, image_id, w, h):
         import numpy as np
 
         from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.hf2 import decode_hf2, encode_hf2
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                elev = np_image_pixels(int(i), int(w), int(h))[
-                    :, :, 0
-                ].astype(np.int64) - 128
-                for fmt, gz in (("hf2", False), ("hfz", True)):
-                    out, _m = decode_hf2(encode_hf2(elev, gz=gz))
-                    rows.append(
-                        {
-                            "image_id": img_id, "fmt": fmt,
-                            "checksum": gdal_checksum(out + 128),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        elev = np_image_pixels(i, w, h)[:, :, 0].astype(np.int64) - 128
+        for fmt, gz in (("hf2", False), ("hfz", True)):
+            out, _m = decode_hf2(encode_hf2(elev, gz=gz))
+            yield image_id, fmt, gdal_checksum(out + 128)
 
-    return geo.mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 47, "image_id string, fmt string, checksum int", rows
+    )
 
 
 def _o_hf2_roundtrip() -> str:
@@ -6447,22 +5805,8 @@ def q_terragen_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     SCAL*(base + v*hs/65536) fixed-point physical heights): the
     pixel rule (-128) rides through REAL TER bytes; raw checksums +
     the scale/offset metadata contract."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 53)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("checksum", T2.IntegerType()),
-            T2.StructField("offset_q", T2.LongType()),
-        ]
-    )
-
-    def run(batches):
+    def rows(i, image_id, w, h):
         import numpy as np
 
         from gdal_spark.fixtures.georef import np_image_pixels
@@ -6472,33 +5816,18 @@ def q_terragen_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             encode_terragen,
         )
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                elev = (
-                    np_image_pixels(int(i), int(w), int(h))[:, :, 0]
-                    .astype(np.int16) - 128
-                )
-                bh = int(i) % 100
-                out, meta = decode_terragen(
-                    encode_terragen(elev, height_scale=2,
-                                    base_height=bh)
-                )
-                rows.append(
-                    {
-                        "image_id": img_id,
-                        "checksum": gdal_checksum(
-                            out.astype(np.int64) + 128
-                        ),
-                        # offset = SCAL * baseHeight = 30 * (i % 100)
-                        "offset_q": int(np.floor(meta["offset"])),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        elev = np_image_pixels(i, w, h)[:, :, 0].astype(np.int16) - 128
+        out, meta = decode_terragen(
+            encode_terragen(elev, height_scale=2, base_height=i % 100)
+        )
+        # offset = SCAL * baseHeight = 30 * (i % 100)
+        yield (image_id, gdal_checksum(out.astype(np.int64) + 128),
+               int(np.floor(meta["offset"])))
 
-    return geo.mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 53,
+        "image_id string, checksum int, offset_q bigint", rows,
+    )
 
 
 def _o_terragen_roundtrip() -> str:
@@ -6532,27 +5861,10 @@ def q_hdr_raster_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     and PAux (frmts/raw/pauxdataset: ChanDefinition offsets, mixed
     types, Swapped=LE): the pixel rule rides through REAL
     (header, raw) pairs in ten variants."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 59)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def decode(arr):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
-        from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.hdrpairs import (
             decode_ehdr,
             decode_ers,
@@ -6566,96 +5878,38 @@ def q_hdr_raster_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             encode_saga,
         )
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                arr = np_image_pixels(int(i), int(w), int(h))
-                b0 = arr[:, :, 0]
-                outs = {}
-                outs["ers_u8"] = decode_ers(*encode_ers(arr))[0]
-                i16 = b0.astype(np.int16) - 128
-                outs["ers_i16"] = (
-                    decode_ers(*encode_ers(i16))[0].astype(np.int64)
-                    + 128
-                )
-                outs["ilwis_byte"] = decode_ilwis(*encode_ilwis(b0))[
-                    0
-                ][:, :, None]
-                outs["ilwis_int"] = (
-                    decode_ilwis(
-                        *encode_ilwis(b0.astype(np.int32) - 128)
-                    )[0].astype(np.int64) + 128
-                )[:, :, None]
-                outs["ehdr_u8"] = decode_ehdr(*encode_ehdr(arr))[0]
-                outs["ehdr_i16"] = (
-                    decode_ehdr(*encode_ehdr(i16))[0].astype(np.int64)
-                    + 128
-                )
-                outs["saga_byte"] = decode_saga(
-                    *encode_saga(b0)
-                )[0][:, :, None]
-                outs["saga_f32"] = decode_saga(
-                    *encode_saga(b0.astype(np.float32))
-                )[0].astype(np.int64)[:, :, None]
-                px = decode_paux(
-                    *encode_paux([arr[:, :, b] for b in range(3)])
-                )
-                outs["paux_u8"] = np.stack(px, axis=2)
-                outs["paux_i16"] = (
-                    decode_paux(*encode_paux([i16]))[0]
-                    .astype(np.int64) + 128
-                )[:, :, None]
-                for fmt, out in outs.items():
-                    for b in range(out.shape[2]):
-                        rows.append(
-                            {
-                                "image_id": img_id, "fmt": fmt,
-                                "band": b,
-                                "checksum": gdal_checksum(out[:, :, b]),
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        b0 = arr[:, :, 0]
+        i16 = b0.astype(np.int16) - 128
+        i32 = b0.astype(np.int32) - 128
+        return {
+            "ers_u8": decode_ers(*encode_ers(arr))[0],
+            "ers_i16": decode_ers(*encode_ers(i16))[0].astype(np.int64) + 128,
+            "ilwis_byte": decode_ilwis(*encode_ilwis(b0))[0],
+            "ilwis_int": decode_ilwis(*encode_ilwis(i32))[0].astype(np.int64)
+            + 128,
+            "ehdr_u8": decode_ehdr(*encode_ehdr(arr))[0],
+            "ehdr_i16": decode_ehdr(*encode_ehdr(i16))[0].astype(np.int64)
+            + 128,
+            "saga_byte": decode_saga(*encode_saga(b0))[0],
+            "saga_f32": decode_saga(*encode_saga(b0.astype(np.float32)))[0]
+            .astype(np.int64),
+            "paux_u8": np.stack(
+                decode_paux(*encode_paux([arr[:, :, b] for b in range(3)])),
+                axis=2,
+            ),
+            "paux_i16": decode_paux(*encode_paux([i16]))[0].astype(np.int64)
+            + 128,
+        }
 
-    return geo.mapInPandas(run, schema)
+    return _band_checksums(spark, sf_dir, 59, decode)
 
 
-def _o_hdr_raster_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 59)",
-    )
-    return f"""
-WITH img AS ({img}),
-fmts AS (
-  SELECT * FROM (VALUES ('ers_u8', 3), ('ers_i16', 1),
-                        ('ilwis_byte', 1), ('ilwis_int', 1),
-                        ('ehdr_u8', 3), ('ehdr_i16', 1),
-                        ('saga_byte', 1), ('saga_f32', 1),
-                        ('paux_u8', 3), ('paux_i16', 1))
-    AS f(fmt, nb)
-),
-bands AS (
-  SELECT f.fmt, b.band,
-    CASE b.band WHEN 0 THEN 0 WHEN 1 THEN 85 ELSE 170 END AS phase
-  FROM fmts f JOIN range(0, 3) AS b(band) ON b.band < f.nb
-),
-px AS (
-  SELECT i.image_id, fb.fmt, fb.band,
-    (gx.x + gy.y + i.i + fb.phase) % 256 AS val,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-  CROSS JOIN bands fb
+_o_hdr_raster_roundtrip = partial(
+    _band_checksum_oracle, 59,
+    {"ers_u8": 3, "ers_i16": 1, "ilwis_byte": 1, "ilwis_int": 1,
+     "ehdr_u8": 3, "ehdr_i16": 1, "saga_byte": 1, "saga_f32": 1,
+     "paux_u8": 3, "paux_i16": 1},
 )
-SELECT image_id, fmt, cast(band as int) AS band,
-  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS checksum
-FROM px GROUP BY image_id, fmt, band
-"""
 
 
 def q_gxf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6664,56 +5918,27 @@ def q_gxf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     LL_RIGHT stores rows BOTTOM-TO-TOP): the pixel rule rides through
     real GXF text in all four row-organized senses plus the #DUMMY
     nodata path (dummies read back and zeroed before checksumming)."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 101)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def rows(i, image_id, w, h):
         import numpy as np
 
         from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.gxf import decode_gxf, encode_gxf
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                b0 = np_image_pixels(int(i), int(w), int(h))[:, :, 0]
-                outs = {}
-                for fmt, sense in (("gxf_s1", 1), ("gxf_sm2", -2),
-                                   ("gxf_s3", 3)):
-                    out, _ = decode_gxf(encode_gxf(b0, sense=sense))
-                    outs[fmt] = out.astype(np.int64)
-                dm = b0.astype(np.float64)
-                dm[b0 == 7] = -1.0
-                out, meta = decode_gxf(encode_gxf(dm, dummy=-1.0))
-                out[out == meta["dummy"]] = 0.0
-                outs["gxf_dummy"] = out.astype(np.int64)
-                for fmt, out in outs.items():
-                    rows.append(
-                        {
-                            "image_id": img_id, "fmt": fmt,
-                            "checksum": gdal_checksum(out),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in schema.fields]
-            )
+        b0 = np_image_pixels(i, w, h)[:, :, 0]
+        for fmt, sense in (("gxf_s1", 1), ("gxf_sm2", -2), ("gxf_s3", 3)):
+            out, _ = decode_gxf(encode_gxf(b0, sense=sense))
+            yield image_id, fmt, gdal_checksum(out.astype(np.int64))
+        dm = b0.astype(np.float64)
+        dm[b0 == 7] = -1.0
+        out, meta = decode_gxf(encode_gxf(dm, dummy=-1.0))
+        out[out == meta["dummy"]] = 0.0
+        yield image_id, "gxf_dummy", gdal_checksum(out.astype(np.int64))
 
-    return geo.mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 101, "image_id string, fmt string, checksum int", rows
+    )
 
 
 def _o_gxf_roundtrip() -> str:
@@ -6758,98 +5983,70 @@ def q_gtiff_industrial(spark: SparkSession, sf_dir: str) -> DataFrame:
     layouts — every combo decoding to the exact original band.
     Windows crop to 120x112 (pure-Python LZW keeps the sweep
     cheap)."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 107)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def rows(i, image_id, w, h):
         import numpy as np
 
         from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.tiff import decode_tiff, encode_tiff_ext
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                wc, hc = min(int(w), 120), min(int(h), 112)
-                arr = np_image_pixels(int(i), wc, hc)
-                b0 = arr[:, :, 0].copy()
-                combos = {
-                    # fmt -> (encoded array, kwargs, invert fn)
-                    "u8_lzw_p2_rgb": (
-                        arr, dict(compression="lzw", predictor=2),
-                        lambda o: o[:, :, 0].astype(np.int64)),
-                    "u16_deflate_p2_mm": (
-                        (b0.astype(np.uint16) * 257),
-                        dict(compression="deflate", predictor=2,
-                             big_endian=True, rows_per_strip=16),
-                        lambda o: o.astype(np.int64) // 257),
-                    "i16_lzw_mm": (
-                        (b0.astype(np.int16) - 128),
-                        dict(compression="lzw", big_endian=True),
-                        lambda o: o.astype(np.int64) + 128),
-                    "i8_packbits": (
-                        (b0.astype(np.int16) - 128).astype(np.int8),
-                        dict(compression="packbits",
-                             rows_per_strip=16),
-                        lambda o: o.astype(np.int64) + 128),
-                    "u32_none_bigtiff_mm": (
-                        (b0.astype(np.uint32) * 16843009),
-                        dict(bigtiff=True, big_endian=True),
-                        lambda o: o.astype(np.int64) // 16843009),
-                    "i32_deflate_p2": (
-                        (b0.astype(np.int32) - 1000000),
-                        dict(compression="deflate", predictor=2,
-                             rows_per_strip=16),
-                        lambda o: o.astype(np.int64) + 1000000),
-                    "f32_deflate_p3": (
-                        b0.astype(np.float32),
-                        dict(compression="deflate", predictor=3),
-                        lambda o: o.astype(np.int64)),
-                    "f64_lzw_p3_bigtiff": (
-                        (b0.astype(np.float64) - 0.5),
-                        dict(compression="lzw", predictor=3,
-                             bigtiff=True, rows_per_strip=16),
-                        lambda o: (o + 0.5).astype(np.int64)),
-                    # tiled layout (§15): grid does not divide
-                    # 120x112, so edge tiles exercise the padding
-                    "u8_tiled_lzw_p2_rgb": (
-                        arr, dict(compression="lzw", predictor=2,
-                                  tile=(64, 48)),
-                        lambda o: o[:, :, 0].astype(np.int64)),
-                    "f32_tiled_deflate_p3_mm": (
-                        b0.astype(np.float32),
-                        dict(compression="deflate", predictor=3,
-                             big_endian=True, tile=(48, 32)),
-                        lambda o: o.astype(np.int64)),
-                }
-                for fmt, (enc_arr, kw, invert) in combos.items():
-                    out = decode_tiff(encode_tiff_ext(enc_arr, **kw))
-                    rows.append(
-                        {
-                            "image_id": img_id, "fmt": fmt,
-                            "checksum": gdal_checksum(invert(out)),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in schema.fields]
-            )
+        arr = np_image_pixels(i, min(w, 120), min(h, 112))
+        b0 = arr[:, :, 0].copy()
+        combos = {
+            # fmt -> (encoded array, kwargs, invert fn)
+            "u8_lzw_p2_rgb": (
+                arr, dict(compression="lzw", predictor=2),
+                lambda o: o[:, :, 0].astype(np.int64)),
+            "u16_deflate_p2_mm": (
+                (b0.astype(np.uint16) * 257),
+                dict(compression="deflate", predictor=2,
+                     big_endian=True, rows_per_strip=16),
+                lambda o: o.astype(np.int64) // 257),
+            "i16_lzw_mm": (
+                (b0.astype(np.int16) - 128),
+                dict(compression="lzw", big_endian=True),
+                lambda o: o.astype(np.int64) + 128),
+            "i8_packbits": (
+                (b0.astype(np.int16) - 128).astype(np.int8),
+                dict(compression="packbits", rows_per_strip=16),
+                lambda o: o.astype(np.int64) + 128),
+            "u32_none_bigtiff_mm": (
+                (b0.astype(np.uint32) * 16843009),
+                dict(bigtiff=True, big_endian=True),
+                lambda o: o.astype(np.int64) // 16843009),
+            "i32_deflate_p2": (
+                (b0.astype(np.int32) - 1000000),
+                dict(compression="deflate", predictor=2,
+                     rows_per_strip=16),
+                lambda o: o.astype(np.int64) + 1000000),
+            "f32_deflate_p3": (
+                b0.astype(np.float32),
+                dict(compression="deflate", predictor=3),
+                lambda o: o.astype(np.int64)),
+            "f64_lzw_p3_bigtiff": (
+                (b0.astype(np.float64) - 0.5),
+                dict(compression="lzw", predictor=3,
+                     bigtiff=True, rows_per_strip=16),
+                lambda o: (o + 0.5).astype(np.int64)),
+            # tiled layout (§15): grid does not divide
+            # 120x112, so edge tiles exercise the padding
+            "u8_tiled_lzw_p2_rgb": (
+                arr, dict(compression="lzw", predictor=2, tile=(64, 48)),
+                lambda o: o[:, :, 0].astype(np.int64)),
+            "f32_tiled_deflate_p3_mm": (
+                b0.astype(np.float32),
+                dict(compression="deflate", predictor=3,
+                     big_endian=True, tile=(48, 32)),
+                lambda o: o.astype(np.int64)),
+        }
+        for fmt, (enc_arr, kw, invert) in combos.items():
+            out = decode_tiff(encode_tiff_ext(enc_arr, **kw))
+            yield image_id, fmt, gdal_checksum(invert(out))
 
-    return geo.mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 107, "image_id string, fmt string, checksum int", rows
+    )
 
 
 def _o_gtiff_industrial() -> str:
@@ -6897,23 +6094,8 @@ def q_gtiff_codec_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the closed-form original (the codec's documented
     contract; content is the smooth triangle transform of the pixel
     rule so quality-90 quantization has ~12 dB of margin)."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 211)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("checksum", T2.IntegerType()),
-            T2.StructField("psnr_ok", T2.BooleanType()),
-        ]
-    )
-
-    def run(batches):
+    def rows(i, image_id, w, h):
         import numpy as np
 
         from gdal_spark.fixtures.georef import np_image_pixels
@@ -6925,53 +6107,42 @@ def q_gtiff_codec_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (a.astype(np.float64) - b.astype(np.float64)) ** 2)
             return 10 * np.log10(255.0 ** 2 / max(mse, 1e-12))
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                wc, hc = min(int(w), 120), min(int(h), 112)
-                arr = np_image_pixels(int(i), wc, hc)
-                # smooth triangle content for the lossy rows: slope
-                # <= 1/px everywhere, no 255->0 wrap edges
-                xg = np.arange(wc, dtype=np.int64)
-                yg = np.arange(hc, dtype=np.int64)[:, None]
-                tri = np.abs(((xg + yg + int(i)) % 510) - 255).astype(
-                    np.uint8)
-                tri_rgb = np.stack(
-                    [np.abs(((xg + yg + int(i) + p) % 510) - 255)
-                     for p in (0, 85, 170)], axis=-1).astype(np.uint8)
-                rgba = np.dstack(
-                    [arr, ((xg + yg + int(i) + 51) % 256).astype(
-                        np.uint8)])
-                for fmt, enc_arr, kw in (
-                    ("webp_strips",
-                     arr, dict(compression="webp", rows_per_strip=16)),
-                    ("webp_tiled_mm",
-                     arr, dict(compression="webp", tile=(48, 32),
-                               bigtiff=True, big_endian=True)),
-                    ("webp_rgba_tiled",
-                     rgba, dict(compression="webp", tile=(64, 48))),
-                    ("jpeg_rgb_tiled",
-                     tri_rgb, dict(compression="jpeg", tile=(48, 32))),
-                    ("jpeg_gray_strips",
-                     tri, dict(compression="jpeg", rows_per_strip=32)),
-                ):
-                    out = decode_tiff(encode_tiff_ext(enc_arr, **kw))
-                    lossy = kw["compression"] == "jpeg"
-                    rows.append(
-                        {
-                            "image_id": img_id, "fmt": fmt,
-                            "checksum": -1 if lossy else gdal_checksum(
-                                out[:, :, 0].astype(np.int64)),
-                            "psnr_ok": bool(psnr(out, enc_arr) >= 45.0),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in schema.fields]
+        wc, hc = min(w, 120), min(h, 112)
+        arr = np_image_pixels(i, wc, hc)
+        # smooth triangle content for the lossy rows: slope
+        # <= 1/px everywhere, no 255->0 wrap edges
+        xg = np.arange(wc, dtype=np.int64)
+        yg = np.arange(hc, dtype=np.int64)[:, None]
+        tri = np.abs(((xg + yg + i) % 510) - 255).astype(np.uint8)
+        tri_rgb = np.stack(
+            [np.abs(((xg + yg + i + p) % 510) - 255)
+             for p in (0, 85, 170)], axis=-1).astype(np.uint8)
+        rgba = np.dstack([arr, ((xg + yg + i + 51) % 256).astype(np.uint8)])
+        for fmt, enc_arr, kw in (
+            ("webp_strips",
+             arr, dict(compression="webp", rows_per_strip=16)),
+            ("webp_tiled_mm",
+             arr, dict(compression="webp", tile=(48, 32),
+                       bigtiff=True, big_endian=True)),
+            ("webp_rgba_tiled",
+             rgba, dict(compression="webp", tile=(64, 48))),
+            ("jpeg_rgb_tiled",
+             tri_rgb, dict(compression="jpeg", tile=(48, 32))),
+            ("jpeg_gray_strips",
+             tri, dict(compression="jpeg", rows_per_strip=32)),
+        ):
+            out = decode_tiff(encode_tiff_ext(enc_arr, **kw))
+            lossy = kw["compression"] == "jpeg"
+            yield (
+                image_id, fmt,
+                -1 if lossy else gdal_checksum(out[:, :, 0].astype(np.int64)),
+                bool(psnr(out, enc_arr) >= 45.0),
             )
 
-    return geo.mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 211,
+        "image_id string, fmt string, checksum int, psnr_ok boolean", rows,
+    )
 
 
 def _o_gtiff_codec_chunks() -> str:
@@ -7015,27 +6186,10 @@ def q_jp2_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     directions.  Windows are cropped to 96x96 (EBCOT is a sequential
     bit-plane coder; the crop keeps the oracle sweep cheap while
     still covering multi-block grids at 2 DWT levels)."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 103)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def decode(arr):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
-        from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.jp2 import (
             decode_j2k,
             decode_jp2,
@@ -7043,47 +6197,17 @@ def q_jp2_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             encode_jp2,
         )
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                wc, hc = min(int(w), 96), min(int(h), 96)
-                arr = np_image_pixels(int(i), wc, hc)
-                b0 = arr[:, :, 0]
-                rgb = decode_jp2(encode_jp2(arr, levels=2))
-                for b in range(3):
-                    rows.append(
-                        {
-                            "image_id": img_id, "fmt": "jp2_rgb",
-                            "band": b,
-                            "checksum": gdal_checksum(rgb[:, :, b]),
-                        }
-                    )
-                outs = {
-                    "j2k_gray": decode_j2k(encode_j2k(b0, levels=2)),
-                    "j2k_cb16": decode_j2k(
-                        encode_j2k(b0, levels=2, cb_exp=4)
-                    ),
-                    "j2k_i16": decode_j2k(
-                        encode_j2k(
-                            (b0.astype(np.int16) * 37).astype(np.int16),
-                            levels=2,
-                        )
-                    ).astype(np.int64),
-                }
-                for fmt, out in outs.items():
-                    rows.append(
-                        {
-                            "image_id": img_id, "fmt": fmt, "band": 0,
-                            "checksum": gdal_checksum(out),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in schema.fields]
-            )
+        arr = np.ascontiguousarray(arr[:96, :96])
+        b0 = arr[:, :, 0]
+        i16 = (b0.astype(np.int16) * 37).astype(np.int16)
+        return {
+            "jp2_rgb": decode_jp2(encode_jp2(arr, levels=2)),
+            "j2k_gray": decode_j2k(encode_j2k(b0, levels=2)),
+            "j2k_cb16": decode_j2k(encode_j2k(b0, levels=2, cb_exp=4)),
+            "j2k_i16": decode_j2k(encode_j2k(i16, levels=2)).astype(np.int64),
+        }
 
-    return geo.mapInPandas(run, schema)
+    return _band_checksums(spark, sf_dir, 103, decode)
 
 
 def _o_jp2_roundtrip() -> str:
@@ -7126,97 +6250,30 @@ def q_isis3_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Multiplier metadata): the pixel rule rides through REAL .cub
     bytes as 3-band u8 BSQ, int16 in a non-dividing tile grid
     (exercises edge-tile padding), and Real float32."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 79)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def decode(arr):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
-        from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.isis3 import decode_isis3, encode_isis3
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                arr = np_image_pixels(int(i), int(w), int(h))
-                b0 = arr[:, :, 0]
-                outs = {}
-                outs["isis3_bsq"] = decode_isis3(encode_isis3(arr))[0]
-                outs["isis3_tile"] = (
-                    decode_isis3(
-                        encode_isis3(
-                            b0.astype(np.int16) - 128,
-                            fmt="Tile", tile=(48, 40),
-                        )
-                    )[0].astype(np.int64) + 128
-                )
-                outs["isis3_real"] = decode_isis3(
-                    encode_isis3(b0.astype(np.float32))
-                )[0].astype(np.int64)
-                for fmt, out in outs.items():
-                    for b in range(out.shape[2]):
-                        rows.append(
-                            {
-                                "image_id": img_id, "fmt": fmt,
-                                "band": b,
-                                "checksum": gdal_checksum(out[:, :, b]),
-                            }
-                        )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in schema.fields]
-            )
+        b0 = arr[:, :, 0]
+        tiled = encode_isis3(
+            b0.astype(np.int16) - 128, fmt="Tile", tile=(48, 40)
+        )
+        return {
+            "isis3_bsq": decode_isis3(encode_isis3(arr))[0],
+            "isis3_tile": decode_isis3(tiled)[0].astype(np.int64) + 128,
+            "isis3_real": decode_isis3(encode_isis3(b0.astype(np.float32)))[0]
+            .astype(np.int64),
+        }
 
-    return geo.mapInPandas(run, schema)
+    return _band_checksums(spark, sf_dir, 79, decode)
 
 
-def _o_isis3_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 79)",
-    )
-    return f"""
-WITH img AS ({img}),
-fmts AS (
-  SELECT * FROM (VALUES ('isis3_bsq', 3), ('isis3_tile', 1),
-                        ('isis3_real', 1))
-    AS f(fmt, nb)
-),
-bands AS (
-  SELECT f.fmt, b.band,
-    CASE b.band WHEN 0 THEN 0 WHEN 1 THEN 85 ELSE 170 END AS phase
-  FROM fmts f JOIN range(0, 3) AS b(band) ON b.band < f.nb
-),
-px AS (
-  SELECT i.image_id, fb.fmt, fb.band,
-    (gx.x + gy.y + i.i + fb.phase) % 256 AS val,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-  CROSS JOIN bands fb
+_o_isis3_roundtrip = partial(
+    _band_checksum_oracle, 79,
+    {"isis3_bsq": 3, "isis3_tile": 1, "isis3_real": 1},
 )
-SELECT image_id, fmt, cast(band as int) AS band,
-  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS checksum
-FROM px GROUP BY image_id, fmt, band
-"""
 
 
 def q_lan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7225,64 +6282,25 @@ def q_lan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-bit two-pixels-per-byte packing): the pixel rule rides through
     REAL .lan bytes as 3-band u8 (big AND little endian), int16, and
     the 4-bit nibble path (values v//16, width cropped even)."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 89)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def decode(arr):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
-        from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.lan import decode_lan, encode_lan
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                arr = np_image_pixels(int(i), int(w), int(h))
-                b0 = arr[:, :, 0]
-                outs = {}
-                outs["lan_u8"] = decode_lan(encode_lan(arr))[0]
-                outs["lan_u8_be"] = decode_lan(
-                    encode_lan(arr, big_endian=True)
-                )[0]
-                outs["lan_i16"] = (
-                    decode_lan(
-                        encode_lan(b0.astype(np.int16) - 128)
-                    )[0].astype(np.int64) + 128
-                )
-                we = (int(w) // 2) * 2
-                outs["lan_4bit"] = decode_lan(
-                    encode_lan((b0[:, :we] >> 4), four_bit=True)
-                )[0]
-                for fmt, out in outs.items():
-                    for b in range(out.shape[2]):
-                        rows.append(
-                            {
-                                "image_id": img_id, "fmt": fmt,
-                                "band": b,
-                                "checksum": gdal_checksum(out[:, :, b]),
-                            }
-                        )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in schema.fields]
-            )
+        b0 = arr[:, :, 0]
+        we = (b0.shape[1] // 2) * 2
+        return {
+            "lan_u8": decode_lan(encode_lan(arr))[0],
+            "lan_u8_be": decode_lan(encode_lan(arr, big_endian=True))[0],
+            "lan_i16": decode_lan(encode_lan(b0.astype(np.int16) - 128))[0]
+            .astype(np.int64) + 128,
+            "lan_4bit": decode_lan(
+                encode_lan(b0[:, :we] >> 4, four_bit=True)
+            )[0],
+        }
 
-    return geo.mapInPandas(run, schema)
+    return _band_checksums(spark, sf_dir, 89, decode)
 
 
 def _o_lan_roundtrip() -> str:
@@ -7332,57 +6350,30 @@ def q_bsb_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the pixel rule (1 + v % 127, 7-bit color size) ride through
     REAL .kap bytes with TRUE runs; checksums over both the decoded
     indices and the palette-expanded red channel."""
-    import pandas as pd
-    from pyspark.sql import types as T2
+    import numpy as np
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 61)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("idx_checksum", T2.IntegerType()),
-            T2.StructField("red_checksum", T2.IntegerType()),
-        ]
-    )
+    pal = [((3 * i) % 256, (5 * i) % 256, (7 * i) % 256)
+           for i in range(1, 128)]
+    red = np.zeros(128, dtype=np.int64)
+    for i, (r, _g, _b) in enumerate(pal, start=1):
+        red[i] = r
 
-    def run(batches):
-        import numpy as np
-
+    def rows(i, image_id, w, h):
         from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.bsb import decode_bsb, encode_bsb
         from gdal_spark.raster.checksum import gdal_checksum
 
-        pal = [((3 * i) % 256, (5 * i) % 256, (7 * i) % 256)
-               for i in range(1, 128)]
-        red = np.zeros(128, dtype=np.int64)
-        for i, (r, _g, _b) in enumerate(pal, start=1):
-            red[i] = r
+        v = np_image_pixels(i, w, h)[:, :, 0]
+        idx = (1 + (v.astype(np.int64) % 127)).astype(np.uint8)
+        out, pback, _m = decode_bsb(encode_bsb(idx, pal))
+        assert pback == pal
+        yield (image_id, gdal_checksum(out.astype(np.int64)),
+               gdal_checksum(red[out.astype(np.int64)]))
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                v = np_image_pixels(int(i), int(w), int(h))[:, :, 0]
-                idx = (1 + (v.astype(np.int64) % 127)).astype(np.uint8)
-                out, pback, _m = decode_bsb(encode_bsb(idx, pal))
-                assert pback == pal
-                rows.append(
-                    {
-                        "image_id": img_id,
-                        "idx_checksum": gdal_checksum(
-                            out.astype(np.int64)
-                        ),
-                        "red_checksum": gdal_checksum(
-                            red[out.astype(np.int64)]
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    return geo.mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 61,
+        "image_id string, idx_checksum int, red_checksum int", rows,
+    )
 
 
 def _o_bsb_roundtrip() -> str:
@@ -7743,6 +6734,15 @@ def q_zarr_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _o_zarr_roundtrip() -> str:
+    return f"""
+WITH {_MDIM_CUBE_CTE}
+SELECT t, min(value) AS vmin, max(value) AS vmax,
+       cast(sum(value) as bigint) AS vsum, count(*) AS n
+FROM cube GROUP BY t
+"""
+
+
 def q_hdf5_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HDF5 chunked+deflate IO from scratch (the reference's
     frmts/hdf5/hdf5dataset.cpp payload semantics, wire format from the
@@ -7767,6 +6767,9 @@ def q_hdf5_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vsum").cast("long"),
         F.col("n").cast("long"),
     )
+
+
+_o_hdf5_roundtrip = _o_zarr_roundtrip
 
 
 def q_netcdf4_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7795,6 +6798,9 @@ def q_netcdf4_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_o_netcdf4_roundtrip = _o_zarr_roundtrip
+
+
 def q_netcdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NetCDF classic CDF-2 chunked IO (frmts/netcdf/netcdfdataset.cpp
     classic-format handling; multidim semantics
@@ -7819,6 +6825,9 @@ def q_netcdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vsum").cast("long"),
         F.col("n").cast("long"),
     )
+
+
+_o_netcdf_roundtrip = _o_zarr_roundtrip
 
 
 OGR_SQL_LITERAL = """
@@ -8573,6 +7582,17 @@ def q_raster_attribute_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _o_raster_attribute_table() -> str:
+    return """
+SELECT cast((s % 512) // 128 as int) AS value, count(*) AS n_px
+FROM (
+  SELECT (3 * (t.tx * 256 + gx.x) + 5 * (t.ty * 256 + gy.y)) AS s
+  FROM (VALUES (0, 0), (1, 0), (0, 1), (1, 1)) AS t(tx, ty),
+       range(0, 256) AS gx(x), range(0, 256) AS gy(y)
+) GROUP BY 1
+"""
+
+
 def q_events_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anomaly flagging: per event_type trailing-20-event z-score of
     value; emits events with |z| >= 2 (training-pipeline outlier
@@ -8603,6 +7623,22 @@ def q_events_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("z") * 1000).cast("long").alias("z_e3"),
         )
     )
+
+
+def _o_events_zscore() -> str:
+    return """
+WITH scored AS (
+  SELECT event_id, event_type,
+    (value - avg(value) OVER w) / stddev_samp(value) OVER w AS z
+  FROM events
+  WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id
+               ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING)
+)
+SELECT event_id, event_type,
+  cast(floor(z * 1000) as bigint) AS z_e3
+FROM scored WHERE z IS NOT NULL AND abs(z) >= 2.0
+  AND abs(z * 1000 - round(z * 1000)) > cast('0.0001' as double)
+"""
 
 
 def q_overview_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8980,6 +8016,8 @@ def q_interpolate_point(spark: SparkSession, sf_dir: str) -> DataFrame:
 ANN_K = 10
 ANN_QUERY_MOD = 16  # vec_id % 16 == 0 -> query subset
 
+_ANN_SQL_WHERE = f"vec_id % {ANN_QUERY_MOD} = 0"  # the same subset in SQL
+
 
 def q_footprint_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Footprint-in-polygon join (§2.4): image FOOTPRINT rectangles
@@ -9132,7 +8170,7 @@ q_overlay_deg_clip = _overlay_q("clip", ("fid_a", "area_q4"), _blob_layers_deg)
 q_overlay_deg_erase = _overlay_q("erase", ("fid_a", "area_q4"), _blob_layers_deg)
 
 
-def _overlay_oracles(degenerate: bool = False) -> dict[str, str]:
+def _overlay_oracle(verb: str, degenerate: bool = False) -> str:
     from gdal_spark.fixtures import blobs
 
     cta = blobs.sql_blob_cte("s_suppkey", "supplier", "a")
@@ -9175,29 +8213,33 @@ rem_b AS (
         f"SELECT cast(NULL as bigint) AS fid_a, bb.fid AS fid_b, "
         f"cast({own_b} as bigint) AS area_q4 FROM bb"
     )
-    if degenerate:
-        names = (
-            "overlay_deg_inter", "overlay_deg_union", "overlay_deg_identity",
-            "overlay_deg_symdiff", "overlay_deg_update", "overlay_deg_clip",
-            "overlay_deg_erase",
-        )
-    else:
-        names = (
-            "overlay_geom", "overlay_union", "overlay_identity",
-            "overlay_symdiff", "overlay_update", "overlay_clip",
-            "overlay_erase",
-        )
     return {
-        names[0]: f"WITH {base} {pairs}",
-        names[1]: f"WITH {base} {pairs} UNION ALL {rem_a_rows} UNION ALL {rem_b_rows}",
-        names[2]: f"WITH {base} {pairs} UNION ALL {rem_a_rows}",
-        names[3]: f"WITH {base} {rem_a_rows} UNION ALL {rem_b_rows}",
-        names[4]: f"WITH {base} {rem_a_rows} UNION ALL {b_pass}",
-        names[5]: f"""WITH {base}
+        "intersection": f"WITH {base} {pairs}",
+        "union": f"WITH {base} {pairs} UNION ALL {rem_a_rows} UNION ALL {rem_b_rows}",
+        "identity": f"WITH {base} {pairs} UNION ALL {rem_a_rows}",
+        "symdifference": f"WITH {base} {rem_a_rows} UNION ALL {rem_b_rows}",
+        "update": f"WITH {base} {rem_a_rows} UNION ALL {b_pass}",
+        "clip": f"""WITH {base}
 SELECT fid_a, cast(sum(q4) as bigint) AS area_q4 FROM p GROUP BY fid_a HAVING sum(q4) > 0""",
-        names[6]: f"""WITH {base}
+        "erase": f"""WITH {base}
 SELECT fid_a, cast(q4 as bigint) AS area_q4 FROM rem_a WHERE q4 > 0""",
-    }
+    }[verb]
+
+
+_o_overlay_geom = partial(_overlay_oracle, "intersection")
+_o_overlay_union = partial(_overlay_oracle, "union")
+_o_overlay_identity = partial(_overlay_oracle, "identity")
+_o_overlay_symdiff = partial(_overlay_oracle, "symdifference")
+_o_overlay_update = partial(_overlay_oracle, "update")
+_o_overlay_clip = partial(_overlay_oracle, "clip")
+_o_overlay_erase = partial(_overlay_oracle, "erase")
+_o_overlay_deg_inter = partial(_overlay_oracle, "intersection", degenerate=True)
+_o_overlay_deg_union = partial(_overlay_oracle, "union", degenerate=True)
+_o_overlay_deg_identity = partial(_overlay_oracle, "identity", degenerate=True)
+_o_overlay_deg_symdiff = partial(_overlay_oracle, "symdifference", degenerate=True)
+_o_overlay_deg_update = partial(_overlay_oracle, "update", degenerate=True)
+_o_overlay_deg_clip = partial(_overlay_oracle, "clip", degenerate=True)
+_o_overlay_deg_erase = partial(_overlay_oracle, "erase", degenerate=True)
 
 
 PRED_EXPAND = 8.0  # near-miss window (units) for predicate/distance pairs
@@ -10450,7 +9492,7 @@ def _proj_cells_query(code, lon_lo, lon_hi, lat_lo, lat_hi):
     return q
 
 
-def _o_proj_cells(code, lon_lo, lon_hi, lat_lo, lat_hi) -> str:
+def _proj_cells_oracle(code, lon_lo, lon_hi, lat_lo, lat_hi) -> str:
     """Oracle: staged CTEs — sites, optional geocentric/Helmert datum
     crossing (term-for-term mirror of datum.datum_shift), then the
     projection's SQL twin over simple column names."""
@@ -10646,48 +9688,28 @@ def q_geotiff_georef(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns come back out of read_georef on those bytes.  float64
     tags roundtrip bit-exact, so the quantized origin matches the
     fixture rule recomputed in SQL."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    geo = _images_geo(spark, sf_dir).where(F.col("i") % GEOTIFF_MOD == 2)
-    schema = T2.StructType(
-        [
-            T2.StructField("i", T2.LongType()),
-            T2.StructField("epsg", T2.IntegerType()),
-            T2.StructField("x0_q3", T2.LongType()),
-            T2.StructField("y0_q3", T2.LongType()),
-            T2.StructField("res_q6", T2.LongType()),
-            T2.StructField("north_up", T2.BooleanType()),
-        ]
-    )
-
-    def run(batches):
-        import math as _math
+    def rows(i, xmin, ymax):
+        import math
 
         from gdal_spark.fixtures.georef import RES0, np_image_pixels
         from gdal_spark.raster.tiff import encode_tiff, read_georef
 
-        for pdf in batches:
-            recs = []
-            for i, xmin, ymax in zip(pdf["i"], pdf["xmin"], pdf["ymax"]):
-                gt = (float(xmin), RES0, 0.0, float(ymax), 0.0, -RES0)
-                buf = encode_tiff(
-                    np_image_pixels(int(i), 16, 16), geo=(gt, 3857)
-                )
-                got_gt, got_epsg = read_georef(buf)
-                recs.append(
-                    {
-                        "i": int(i),
-                        "epsg": int(got_epsg),
-                        "x0_q3": _math.floor(got_gt[0] * 1e3),
-                        "y0_q3": _math.floor(got_gt[3] * 1e3),
-                        "res_q6": _math.floor(got_gt[1] * 1e6),
-                        "north_up": got_gt[5] < 0.0,
-                    }
-                )
-            yield pd.DataFrame(recs, columns=[f.name for f in schema])
+        gt = (xmin, RES0, 0.0, ymax, 0.0, -RES0)
+        buf = encode_tiff(np_image_pixels(i, 16, 16), geo=(gt, 3857))
+        got_gt, got_epsg = read_georef(buf)
+        yield (
+            i, int(got_epsg), math.floor(got_gt[0] * 1e3),
+            math.floor(got_gt[3] * 1e3), math.floor(got_gt[1] * 1e6),
+            got_gt[5] < 0.0,
+        )
 
-    return geo.select("i", "xmin", "ymax").mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 2,
+        "i bigint, epsg int, x0_q3 bigint, y0_q3 bigint, res_q6 bigint,"
+        " north_up boolean",
+        rows, mod=GEOTIFF_MOD, cols=("i", "xmin", "ymax"),
+    )
 
 
 def _o_geotiff_georef() -> str:
@@ -10715,23 +9737,9 @@ def q_jp2_georef(spark: SparkSession, sf_dir: str) -> DataFrame:
     box around a REAL lossless codestream; pixels decode bit-exact
     AND the georef comes back out of read_jp2_georef — the checksum
     column proves the image survived the boxed carrier."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    geo = _images_geo(spark, sf_dir).where(F.col("i") % GEOTIFF_MOD == 7)
-    schema = T2.StructType(
-        [
-            T2.StructField("i", T2.LongType()),
-            T2.StructField("epsg", T2.IntegerType()),
-            T2.StructField("x0_q3", T2.LongType()),
-            T2.StructField("y0_q3", T2.LongType()),
-            T2.StructField("res_q6", T2.LongType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
-        import math as _math
+    def rows(i, xmin, ymax):
+        import math
 
         from gdal_spark.fixtures.georef import RES0, np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
@@ -10741,27 +9749,21 @@ def q_jp2_georef(spark: SparkSession, sf_dir: str) -> DataFrame:
             read_jp2_georef,
         )
 
-        for pdf in batches:
-            recs = []
-            for i, xmin, ymax in zip(pdf["i"], pdf["xmin"], pdf["ymax"]):
-                gt = (float(xmin), RES0, 0.0, float(ymax), 0.0, -RES0)
-                arr = np_image_pixels(int(i), 16, 16)
-                buf = encode_jp2(arr, levels=1, geo=(gt, 3857))
-                got_gt, got_epsg = read_jp2_georef(buf)
-                out = decode_jp2(buf)
-                recs.append(
-                    {
-                        "i": int(i),
-                        "epsg": int(got_epsg),
-                        "x0_q3": _math.floor(got_gt[0] * 1e3),
-                        "y0_q3": _math.floor(got_gt[3] * 1e3),
-                        "res_q6": _math.floor(got_gt[1] * 1e6),
-                        "checksum": gdal_checksum(out[:, :, 0]),
-                    }
-                )
-            yield pd.DataFrame(recs, columns=[f.name for f in schema])
+        gt = (xmin, RES0, 0.0, ymax, 0.0, -RES0)
+        buf = encode_jp2(np_image_pixels(i, 16, 16), levels=1, geo=(gt, 3857))
+        got_gt, got_epsg = read_jp2_georef(buf)
+        yield (
+            i, int(got_epsg), math.floor(got_gt[0] * 1e3),
+            math.floor(got_gt[3] * 1e3), math.floor(got_gt[1] * 1e6),
+            gdal_checksum(decode_jp2(buf)[:, :, 0]),
+        )
 
-    return geo.select("i", "xmin", "ymax").mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 7,
+        "i bigint, epsg int, x0_q3 bigint, y0_q3 bigint, res_q6 bigint,"
+        " checksum int",
+        rows, mod=GEOTIFF_MOD, cols=("i", "xmin", "ymax"),
+    )
 
 
 def _o_jp2_georef() -> str:
@@ -10800,23 +9802,9 @@ def q_geotiff_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (+2.5, -1.5) pixels, resolution doubled, CRS re-tagged 32633);
     the emitted columns come from read_georef on the PATCHED bytes,
     and the band-0 checksum proves the pixel bytes never moved."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    geo = _images_geo(spark, sf_dir).where(F.col("i") % GEOTIFF_MOD == 5)
-    schema = T2.StructType(
-        [
-            T2.StructField("i", T2.LongType()),
-            T2.StructField("epsg", T2.IntegerType()),
-            T2.StructField("x0_q3", T2.LongType()),
-            T2.StructField("y0_q3", T2.LongType()),
-            T2.StructField("res_q6", T2.LongType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
-        import math as _math
+    def rows(i, xmin, ymax):
+        import math
 
         from gdal_spark.fixtures.georef import RES0, np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
@@ -10827,34 +9815,26 @@ def q_geotiff_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
             read_georef,
         )
 
-        for pdf in batches:
-            recs = []
-            for i, xmin, ymax in zip(pdf["i"], pdf["xmin"], pdf["ymax"]):
-                gt = (float(xmin), RES0, 0.0, float(ymax), 0.0, -RES0)
-                buf = encode_tiff(
-                    np_image_pixels(int(i), 16, 16), geo=(gt, 3857)
-                )
-                new_gt = (
-                    float(xmin) + 2.5 * RES0, RES0 * 2.0, 0.0,
-                    float(ymax) - 1.5 * RES0, 0.0, -(RES0 * 2.0),
-                )
-                out = edit_georef(buf, geotransform=new_gt, epsg=32633)
-                got_gt, got_epsg = read_georef(out)
-                recs.append(
-                    {
-                        "i": int(i),
-                        "epsg": int(got_epsg),
-                        "x0_q3": _math.floor(got_gt[0] * 1e3),
-                        "y0_q3": _math.floor(got_gt[3] * 1e3),
-                        "res_q6": _math.floor(got_gt[1] * 1e6),
-                        "checksum": gdal_checksum(
-                            decode_tiff(out)[:, :, 0]
-                        ),
-                    }
-                )
-            yield pd.DataFrame(recs, columns=[f.name for f in schema])
+        gt = (xmin, RES0, 0.0, ymax, 0.0, -RES0)
+        buf = encode_tiff(np_image_pixels(i, 16, 16), geo=(gt, 3857))
+        new_gt = (
+            xmin + 2.5 * RES0, RES0 * 2.0, 0.0,
+            ymax - 1.5 * RES0, 0.0, -(RES0 * 2.0),
+        )
+        out = edit_georef(buf, geotransform=new_gt, epsg=32633)
+        got_gt, got_epsg = read_georef(out)
+        yield (
+            i, int(got_epsg), math.floor(got_gt[0] * 1e3),
+            math.floor(got_gt[3] * 1e3), math.floor(got_gt[1] * 1e6),
+            gdal_checksum(decode_tiff(out)[:, :, 0]),
+        )
 
-    return geo.select("i", "xmin", "ymax").mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 5,
+        "i bigint, epsg int, x0_q3 bigint, y0_q3 bigint, res_q6 bigint,"
+        " checksum int",
+        rows, mod=GEOTIFF_MOD, cols=("i", "xmin", "ymax"),
+    )
 
 
 def _o_geotiff_edit() -> str:
@@ -10903,45 +9883,19 @@ def q_info_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     + wgs84Extent through the registry inverse, band-0 stats +
     checksum. Every emitted value recomputes from the closed forms in
     SQL."""
-    import pandas as pd
-    from pyspark.sql import types as T2
-
     from gdal_spark.operators.info import raster_info
 
-    geo = _images_geo(spark, sf_dir).where(F.col("i") % INFO_MOD == 5)
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("bytes", T2.BinaryType()),
-        ]
-    )
-
-    def mk(batches):
+    def rows(i, image_id, w, h, xmin, ymax):
         from gdal_spark.fixtures.georef import RES0, np_image_pixels
         from gdal_spark.raster.tiff import encode_tiff
 
-        for pdf in batches:
-            recs = []
-            for i, img_id, w, h, xmin, ymax in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"],
-                pdf["xmin"], pdf["ymax"]
-            ):
-                gt = (float(xmin), RES0, 0.0, float(ymax), 0.0, -RES0)
-                recs.append(
-                    {
-                        "image_id": img_id,
-                        "bytes": encode_tiff(
-                            np_image_pixels(int(i), int(w), int(h)),
-                            geo=(gt, 3857),
-                        ),
-                    }
-                )
-            yield pd.DataFrame(recs, columns=["image_id", "bytes"])
+        gt = (xmin, RES0, 0.0, ymax, 0.0, -RES0)
+        yield image_id, encode_tiff(np_image_pixels(i, w, h), geo=(gt, 3857))
 
-    payloads = geo.select(
-        "i", "image_id", "w", "h", "xmin", "ymax"
-    ).mapInPandas(mk, schema)
-    return raster_info(payloads)
+    return raster_info(_per_image(
+        spark, sf_dir, 5, "image_id string, bytes binary", rows,
+        mod=INFO_MOD, cols=("i", "image_id", "w", "h", "xmin", "ymax"),
+    ))
 
 
 def _o_info_raster() -> str:
@@ -11063,20 +10017,8 @@ def q_raster_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixels on the same grid carrying a different rule
     ((2x+3y+i+17c) % 251) — integer alignment makes the near warp an
     exact window replacement, clipped at the dst edge."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    geo = _images_geo(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 137)
-    schema = T2.StructType(
-        [
-            T2.StructField("i", T2.LongType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-            T2.StructField("vsum", T2.LongType()),
-        ]
-    )
-
-    def run(batches):
+    def rows(i, w, h, xmin, ymax):
         import numpy as np
 
         from gdal_spark.fixtures.georef import RES0, np_image_pixels
@@ -11084,37 +10026,27 @@ def q_raster_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.tiff import decode_tiff, encode_tiff
 
-        for pdf in batches:
-            recs = []
-            for i, w, h, xmin, ymax in zip(
-                pdf["i"], pdf["w"], pdf["h"], pdf["xmin"], pdf["ymax"]
-            ):
-                i, w, h = int(i), int(w), int(h)
-                gt = (float(xmin), RES0, 0.0, float(ymax), 0.0, -RES0)
-                dst = encode_tiff(np_image_pixels(i, w, h), geo=(gt, 3857))
-                sw, sh = w // 2 + 3, h // 2 + 5
-                sx = np.arange(sw, dtype=np.int64)[None, :]
-                sy = np.arange(sh, dtype=np.int64)[:, None]
-                src_arr = np.stack(
-                    [((2 * sx + 3 * sy + i + 17 * c) % 251).astype(np.uint8)
-                     * np.ones((sh, 1), np.uint8) for c in range(3)],
-                    axis=-1,
-                )
-                sgt = (float(xmin) + 5 * RES0, RES0, 0.0,
-                       float(ymax) - 7 * RES0, 0.0, -RES0)
-                src = encode_tiff(src_arr, geo=(sgt, 3857))
-                out = decode_tiff(raster_update(dst, src))
-                for b in range(3):
-                    recs.append(
-                        {
-                            "i": i, "band": b,
-                            "checksum": gdal_checksum(out[:, :, b]),
-                            "vsum": int(out[:, :, b].sum(dtype=np.int64)),
-                        }
-                    )
-            yield pd.DataFrame(recs, columns=[f.name for f in schema.fields])
+        gt = (xmin, RES0, 0.0, ymax, 0.0, -RES0)
+        dst = encode_tiff(np_image_pixels(i, w, h), geo=(gt, 3857))
+        sw, sh = w // 2 + 3, h // 2 + 5
+        sx = np.arange(sw, dtype=np.int64)[None, :]
+        sy = np.arange(sh, dtype=np.int64)[:, None]
+        src_arr = np.stack(
+            [((2 * sx + 3 * sy + i + 17 * c) % 251).astype(np.uint8)
+             * np.ones((sh, 1), np.uint8) for c in range(3)],
+            axis=-1,
+        )
+        sgt = (xmin + 5 * RES0, RES0, 0.0, ymax - 7 * RES0, 0.0, -RES0)
+        src = encode_tiff(src_arr, geo=(sgt, 3857))
+        out = decode_tiff(raster_update(dst, src))
+        for b in range(3):
+            yield (i, b, gdal_checksum(out[:, :, b]),
+                   int(out[:, :, b].sum(dtype=np.int64)))
 
-    return geo.select("i", "w", "h", "xmin", "ymax").mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 137, "i bigint, band int, checksum int, vsum bigint",
+        rows, cols=("i", "w", "h", "xmin", "ymax"),
+    )
 
 
 def _o_raster_update() -> str:
@@ -11155,29 +10087,9 @@ def q_jpeg_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
     BYTES.  GPS coordinates are stored as exact (floor(deg*1e4),
     10000) rationals.  PixelX/YDimension carry the fixture w/h (EXIF
     dims legitimately diverge from coded dims)."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    geo = _images_geo(spark, sf_dir).where(F.col("i") % EXIF_MOD == 1)
-    schema = T2.StructType(
-        [
-            T2.StructField("i", T2.LongType()),
-            T2.StructField("make", T2.StringType()),
-            T2.StructField("model", T2.StringType()),
-            T2.StructField("orientation", T2.IntegerType()),
-            T2.StructField("iso", T2.IntegerType()),
-            T2.StructField("dt", T2.StringType()),
-            T2.StructField("px", T2.LongType()),
-            T2.StructField("py", T2.LongType()),
-            T2.StructField("lat_q4", T2.LongType()),
-            T2.StructField("lon_q4", T2.LongType()),
-        ]
-    )
-
-    def run(batches):
-        import math as _math
-
-        import numpy as np
+    def rows(i, w, h, lon, lat):
+        import math
 
         from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.exif import (
@@ -11188,53 +10100,40 @@ def q_jpeg_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         from gdal_spark.raster.jpeg import encode_jpeg
 
-        for pdf in batches:
-            recs = []
-            for i, w, h, lon, lat in zip(
-                pdf["i"], pdf["w"], pdf["h"], pdf["lon_c"], pdf["lat_c"]
-            ):
-                i = int(i)
-                lat_q4 = _math.floor(float(lat) * 1e4)
-                lon_q4 = _math.floor(float(lon) * 1e4)
-                tags = {
-                    "Make": "gdal_spark",
-                    "Model": f"cam_{i % 4}",
-                    "Orientation": 1 + i % 8,
-                    "ISOSpeedRatings": 100 * (1 + i % 16),
-                    "DateTime": f"2026:01:{1 + i % 28:02d} {i % 24:02d}"
-                                ":00:00",
-                    "PixelXDimension": int(w),
-                    "PixelYDimension": int(h),
-                    "GPSLatitudeRef": "S" if lat_q4 < 0 else "N",
-                    "GPSLatitude": ((abs(lat_q4), 10000), (0, 1), (0, 1)),
-                    "GPSLongitudeRef": "W" if lon_q4 < 0 else "E",
-                    "GPSLongitude": ((abs(lon_q4), 10000), (0, 1), (0, 1)),
-                }
-                jpg = insert_app1(
-                    encode_jpeg(np_image_pixels(i, 20, 20), 90),
-                    build_exif(tags),
-                )
-                got = parse_exif(extract_app1(jpg))
-                recs.append(
-                    {
-                        "i": i,
-                        "make": got["Make"],
-                        "model": got["Model"],
-                        "orientation": int(got["Orientation"]),
-                        "iso": int(got["ISOSpeedRatings"]),
-                        "dt": got["DateTime"],
-                        "px": int(got["PixelXDimension"]),
-                        "py": int(got["PixelYDimension"]),
-                        "lat_q4": got["GPSLatitude"][0][0]
-                        * (-1 if got["GPSLatitudeRef"] == "S" else 1),
-                        "lon_q4": got["GPSLongitude"][0][0]
-                        * (-1 if got["GPSLongitudeRef"] == "W" else 1),
-                    }
-                )
-            yield pd.DataFrame(recs, columns=[f.name for f in schema])
+        lat_q4 = math.floor(lat * 1e4)
+        lon_q4 = math.floor(lon * 1e4)
+        tags = {
+            "Make": "gdal_spark",
+            "Model": f"cam_{i % 4}",
+            "Orientation": 1 + i % 8,
+            "ISOSpeedRatings": 100 * (1 + i % 16),
+            "DateTime": f"2026:01:{1 + i % 28:02d} {i % 24:02d}:00:00",
+            "PixelXDimension": w,
+            "PixelYDimension": h,
+            "GPSLatitudeRef": "S" if lat_q4 < 0 else "N",
+            "GPSLatitude": ((abs(lat_q4), 10000), (0, 1), (0, 1)),
+            "GPSLongitudeRef": "W" if lon_q4 < 0 else "E",
+            "GPSLongitude": ((abs(lon_q4), 10000), (0, 1), (0, 1)),
+        }
+        jpg = insert_app1(
+            encode_jpeg(np_image_pixels(i, 20, 20), 90), build_exif(tags)
+        )
+        got = parse_exif(extract_app1(jpg))
+        yield (
+            i, got["Make"], got["Model"], int(got["Orientation"]),
+            int(got["ISOSpeedRatings"]), got["DateTime"],
+            int(got["PixelXDimension"]), int(got["PixelYDimension"]),
+            got["GPSLatitude"][0][0]
+            * (-1 if got["GPSLatitudeRef"] == "S" else 1),
+            got["GPSLongitude"][0][0]
+            * (-1 if got["GPSLongitudeRef"] == "W" else 1),
+        )
 
-    return geo.select("i", "w", "h", "lon_c", "lat_c").mapInPandas(
-        run, schema
+    return _per_image(
+        spark, sf_dir, 1,
+        "i bigint, make string, model string, orientation int, iso int,"
+        " dt string, px bigint, py bigint, lat_q4 bigint, lon_q4 bigint",
+        rows, mod=EXIF_MOD, cols=("i", "w", "h", "lon_c", "lat_c"),
     )
 
 
@@ -11286,6 +10185,10 @@ def q_st_transform_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
               FROM _st_transform_pts)
         """
     )
+
+
+def _o_st_transform_sql() -> str:
+    return _o_proj_laea()
 
 
 def _o_jpeg_exif() -> str:
@@ -11449,21 +10352,8 @@ def q_exif_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     BYTE-IDENTICAL to the pre-EXIF original; `orientation` is parsed
     out of the bytes before stripping (per-row rule, not a
     constant)."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    geo = _images_geo(spark, sf_dir).where(F.col("i") % EXIF_MOD == 3)
-    schema = T2.StructType(
-        [
-            T2.StructField("i", T2.LongType()),
-            T2.StructField("had_exif", T2.IntegerType()),
-            T2.StructField("has_after", T2.IntegerType()),
-            T2.StructField("bytes_identical", T2.IntegerType()),
-            T2.StructField("orientation", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def rows(i):
         from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.exif import (
             build_exif,
@@ -11474,34 +10364,24 @@ def q_exif_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         from gdal_spark.raster.jpeg import encode_jpeg
 
-        for pdf in batches:
-            recs = []
-            for i in pdf["i"]:
-                i = int(i)
-                plain = encode_jpeg(np_image_pixels(i, 20, 20), 90)
-                tagged = insert_app1(
-                    plain,
-                    build_exif({"Make": "gdal_spark",
-                                "Orientation": 1 + i % 8}),
-                )
-                before = extract_app1(tagged)
-                stripped = strip_app1(tagged)
-                recs.append(
-                    {
-                        "i": i,
-                        "had_exif": int(before is not None),
-                        "has_after": int(
-                            extract_app1(stripped) is not None
-                        ),
-                        "bytes_identical": int(stripped == plain),
-                        "orientation": int(
-                            parse_exif(before)["Orientation"]
-                        ),
-                    }
-                )
-            yield pd.DataFrame(recs, columns=[f.name for f in schema])
+        plain = encode_jpeg(np_image_pixels(i, 20, 20), 90)
+        tagged = insert_app1(
+            plain,
+            build_exif({"Make": "gdal_spark", "Orientation": 1 + i % 8}),
+        )
+        before = extract_app1(tagged)
+        stripped = strip_app1(tagged)
+        yield (
+            i, int(before is not None),
+            int(extract_app1(stripped) is not None),
+            int(stripped == plain), int(parse_exif(before)["Orientation"]),
+        )
 
-    return geo.select("i").mapInPandas(run, schema)
+    return _per_image(
+        spark, sf_dir, 3,
+        "i bigint, had_exif int, has_after int, bytes_identical int,"
+        " orientation int", rows, mod=EXIF_MOD, cols=("i",),
+    )
 
 
 def _o_exif_strip() -> str:
@@ -11518,16 +10398,31 @@ FROM imgs WHERE i % {EXIF_MOD} = 3
 
 
 q_proj_albers = _proj_cells_query(5070, -130.0, -60.0, 20.0, 50.0)
+_o_proj_albers = partial(_proj_cells_oracle, 5070, -130.0, -60.0, 20.0, 50.0)
 q_proj_laea = _proj_cells_query(3035, -60.0, 80.0, 5.0, 84.0)
+_o_proj_laea = partial(_proj_cells_oracle, 3035, -60.0, 80.0, 5.0, 84.0)
 q_proj_cea = _proj_cells_query(6933, -180.0, 180.0, -84.0, 84.0)
+_o_proj_cea = partial(_proj_cells_oracle, 6933, -180.0, 180.0, -84.0, 84.0)
 q_proj_mollweide = _proj_cells_query("ESRI:54009", -178.0, 178.0, -84.0, 84.0)
+_o_proj_mollweide = partial(
+    _proj_cells_oracle, "ESRI:54009", -178.0, 178.0, -84.0, 84.0
+)
 q_proj_sinusoidal = _proj_cells_query("ESRI:54008", -180.0, 180.0, -84.0, 84.0)
+_o_proj_sinusoidal = partial(
+    _proj_cells_oracle, "ESRI:54008", -180.0, 180.0, -84.0, 84.0
+)
 q_proj_eqc = _proj_cells_query(4087, -180.0, 180.0, -84.0, 84.0)
+_o_proj_eqc = partial(_proj_cells_oracle, 4087, -180.0, 180.0, -84.0, 84.0)
 q_proj_stereo_oblique = _proj_cells_query(28992, -15.0, 25.0, 35.0, 65.0)
+_o_proj_stereo_oblique = partial(
+    _proj_cells_oracle, 28992, -15.0, 25.0, 35.0, 65.0
+)
 # Hotine Oblique Mercator variant B (EPSG 9815): Swiss LV95, αc = 90°
 q_proj_homerc = _proj_cells_query(2056, -20.0, 40.0, 25.0, 65.0)
+_o_proj_homerc = partial(_proj_cells_oracle, 2056, -20.0, 40.0, 25.0, 65.0)
 # Krovak East North (EPSG 9819): S-JTSK, Czech/Slovak national grid
 q_proj_krovak = _proj_cells_query(5514, 5.0, 35.0, 40.0, 58.0)
+_o_proj_krovak = partial(_proj_cells_oracle, 5514, 5.0, 35.0, 40.0, 58.0)
 
 
 def q_proj_polar_stereo(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11792,7 +10687,7 @@ def q_tile_render_cassini(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _o_tile_render_proj(code: int, z: int) -> str:
+def _tile_render_proj_oracle(code: int, z: int) -> str:
     """Oracle for render_tiles(crs=code): same staged shape as
     _o_tile_render_utm — suggest samples through the SQL inverse,
     covering tiles, per-pixel SQL forward, max_by composite,
@@ -11986,6 +10881,11 @@ GROUP BY 1, 2, 3
 """
 
 
+_o_tile_render_albers = partial(_tile_render_proj_oracle, 5070, ALBERS_Z)
+_o_tile_render_polar = partial(_tile_render_proj_oracle, 3031, POLAR_Z)
+_o_tile_render_cassini = partial(_tile_render_proj_oracle, 30200, CASSINI_Z)
+
+
 def q_homography_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Homography transformer (alg/gdal_homography.cpp): normalized
     DLT fit from 8 correspondences generated by an exact INTEGER
@@ -12070,6 +10970,73 @@ def q_vector_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _o_vector_clip() -> str:
+    zn = georef.sql_zones_cte("s_suppkey", "supplier")
+    x0, y0, x1, y1 = CLIP_BBOX
+    return f"""
+WITH za AS (SELECT * FROM ({zn}) WHERE fid % 4 = 0),  -- kind='park' cycle
+ea AS (
+  SELECT z.fid, g.j,
+    z.lon0 + z.r * cos(2 * pi() * g.j / z.k) AS vx1,
+    z.lat0 + z.r * sin(2 * pi() * g.j / z.k) AS vy1,
+    z.lon0 + z.r * cos(2 * pi() * ((g.j + 1) % z.k) / z.k) AS vx2,
+    z.lat0 + z.r * sin(2 * pi() * ((g.j + 1) % z.k) / z.k) AS vy2
+  FROM za z, range(0, 8) AS g(j) WHERE g.j < z.k
+),
+re (rx1, ry1, rx2, ry2) AS (VALUES
+  ({x0}, {y0}, {x1}, {y0}), ({x1}, {y0}, {x1}, {y1}),
+  ({x1}, {y1}, {x0}, {y1}), ({x0}, {y1}, {x0}, {y0})
+),
+va_in AS (
+  SELECT fid, vx1 AS x, vy1 AS y FROM ea
+  WHERE vx1 BETWEEN {x0} AND {x1} AND vy1 BETWEEN {y0} AND {y1}
+),
+corners (cx, cy) AS (VALUES ({x0}, {y0}), ({x1}, {y0}), ({x1}, {y1}), ({x0}, {y1})),
+corner_in AS (
+  SELECT e.fid, c.cx AS x, c.cy AS y
+  FROM corners c JOIN ea e ON TRUE
+  GROUP BY e.fid, c.cx, c.cy
+  HAVING min((e.vx2 - e.vx1) * (c.cy - e.vy1) - (e.vy2 - e.vy1) * (c.cx - e.vx1)) >= 0
+),
+crossings AS (
+  SELECT e.fid,
+    e.vx1 + ((r.rx1 - e.vx1) * (r.ry2 - r.ry1) - (r.ry1 - e.vy1) * (r.rx2 - r.rx1))
+      / ((e.vx2 - e.vx1) * (r.ry2 - r.ry1) - (e.vy2 - e.vy1) * (r.rx2 - r.rx1)) * (e.vx2 - e.vx1) AS x,
+    ((r.rx1 - e.vx1) * (r.ry2 - r.ry1) - (r.ry1 - e.vy1) * (r.rx2 - r.rx1))
+      / ((e.vx2 - e.vx1) * (r.ry2 - r.ry1) - (e.vy2 - e.vy1) * (r.rx2 - r.rx1)) AS t,
+    ((r.rx1 - e.vx1) * (e.vy2 - e.vy1) - (r.ry1 - e.vy1) * (e.vx2 - e.vx1))
+      / ((e.vx2 - e.vx1) * (r.ry2 - r.ry1) - (e.vy2 - e.vy1) * (r.rx2 - r.rx1)) AS u,
+    e.vy1 + ((r.rx1 - e.vx1) * (r.ry2 - r.ry1) - (r.ry1 - e.vy1) * (r.rx2 - r.rx1))
+      / ((e.vx2 - e.vx1) * (r.ry2 - r.ry1) - (e.vy2 - e.vy1) * (r.rx2 - r.rx1)) * (e.vy2 - e.vy1) AS y
+  FROM ea e, re r
+  WHERE (e.vx2 - e.vx1) * (r.ry2 - r.ry1) - (e.vy2 - e.vy1) * (r.rx2 - r.rx1) <> 0
+),
+pts AS (
+  SELECT fid, x, y FROM va_in
+  UNION ALL SELECT fid, x, y FROM corner_in
+  UNION ALL SELECT fid, x, y FROM crossings WHERE t >= 0 AND t <= 1 AND u >= 0 AND u <= 1
+),
+ctr AS (
+  SELECT fid, avg(x) AS mx, avg(y) AS my FROM pts GROUP BY fid HAVING count(*) >= 3
+),
+ordered AS (
+  SELECT p.fid, p.x, p.y, atan2(p.y - c.my, p.x - c.mx) AS ang
+  FROM pts p JOIN ctr c ON c.fid = p.fid
+),
+shoelace AS (
+  SELECT fid,
+    x * coalesce(lead(y) OVER w, first_value(y) OVER w2)
+      - coalesce(lead(x) OVER w, first_value(x) OVER w2) * y AS term
+  FROM ordered
+  WINDOW w AS (PARTITION BY fid ORDER BY ang, x, y),
+         w2 AS (PARTITION BY fid ORDER BY ang, x, y
+                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+)
+SELECT fid, cast(floor((abs(sum(term)) / 2) * 1e4) as bigint) AS clip_area_e4
+FROM shoelace GROUP BY fid HAVING abs(sum(term)) > 0
+"""
+
+
 def q_vector_pipeline_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Executable `gdal vector pipeline` grammar
     (apps/gdalalg_vector_pipeline.cpp): the literal CLI text
@@ -12094,6 +11061,9 @@ def q_vector_pipeline_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("clip_area_e4"),
     )
+
+
+_o_vector_pipeline_exec = _o_vector_clip
 
 
 def q_driver_list(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12159,6 +11129,18 @@ def q_events_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _o_events_windowed() -> str:
+    return """
+SELECT cast(cast(ts as date) as varchar) AS day,
+       cast((hour(ts) // 6) * 6 as int) AS hour6,
+       event_type,
+       count(*) AS n,
+       cast(sum(cast(round(value * 100) as bigint)) as bigint) AS sum_cents,
+       cast(count(DISTINCT user_id) as bigint) AS n_users
+FROM events GROUP BY 1, 2, 3
+"""
+
+
 def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (1h inactivity splits) via window
     functions: per user, session count + largest session size."""
@@ -12180,6 +11162,30 @@ def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _o_events_sessionize() -> str:
+    return """
+WITH marked AS (
+  SELECT user_id, ts, event_id,
+    CASE WHEN lag(ts) OVER w IS NULL
+           OR date_diff('second', lag(ts) OVER w, ts) > 3600
+         THEN 1 ELSE 0 END AS new_sess
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+),
+sess AS (
+  SELECT user_id,
+    sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS sess_id
+  FROM marked
+),
+per_sess AS (
+  SELECT user_id, sess_id, count(*) AS sz FROM sess GROUP BY 1, 2
+)
+SELECT user_id, cast(count(*) as bigint) AS n_sessions,
+       cast(max(sz) as bigint) AS max_session_events
+FROM per_sess GROUP BY user_id
+"""
+
+
 def q_events_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON props extraction (regex, engine-neutral) + bucket rollup."""
     ev = _read(spark, sf_dir, "events")
@@ -12192,10 +11198,22 @@ def q_events_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _o_events_props() -> str:
+    return """
+SELECT cast(cast(regexp_extract(props, '"k":\\s*(\\d+)', 1) as bigint) // 10 as int) AS k_bucket,
+       count(*) AS n,
+       cast(max(cast(regexp_extract(props, '"k":\\s*(\\d+)', 1) as bigint)) as bigint) AS k_max
+FROM events GROUP BY 1
+"""
+
+
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting, quality scoring, order-sensitive document
     fingerprint — Column math only (whole-stage codegen)."""
     return txt_analysis.token_stats(_read(spark, sf_dir, "documents"))
+
+
+_o_text_stats = txt_analysis.sql_token_stats
 
 
 def q_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12293,6 +11311,9 @@ def q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_o_lm_perplexity = partial(txt_lm.sql_bigram_lm, top_v=LM_TOP_V)
+
+
 def q_nb_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multinomial Naive Bayes language classifier (text/lm.py):
     train per-(lang, token) counts on the corpus's own labels,
@@ -12303,12 +11324,18 @@ def q_nb_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     return txt_lm.train_predict_nb(_read(spark, sf_dir, "documents"))
 
 
+_o_nb_classify = txt_lm.sql_nb
+
+
 def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 TF-IDF keywords per document (text/analysis.py) — the
     keyword-extraction / data-mixing staple.  idf quantizes once per
     vocab entry (micro-nats); scores are exact integers; ties break
     on ascending token.  Broadcast idf join + per-doc window."""
     return txt_analysis.tfidf_topk(_read(spark, sf_dir, "documents"), k=3)
+
+
+_o_tfidf_topk = partial(txt_analysis.sql_tfidf_topk, k=3)
 
 
 def _pii_augment_spark(df: DataFrame) -> DataFrame:
@@ -13001,7 +12028,7 @@ def q_flac_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _o_triangle_audio_features(mod: int, prefix: str) -> str:
+def _triangle_audio_oracle(mod: int, prefix: str) -> str:
     s = "(abs((k.k * (c.i % 5 + 1)) % 8000 - 4000) - 2000)"
     sp = "(abs(((k.k - 1) * (c.i % 5 + 1)) % 8000 - 4000) - 2000)"
     return f"""
@@ -13020,7 +12047,7 @@ GROUP BY c.clip_id, c.n
 
 
 def _o_flac_audio_features() -> str:
-    return _o_triangle_audio_features(FLAC_MOD, "flac")
+    return _triangle_audio_oracle(FLAC_MOD, "flac")
 
 
 OGG_MOD = 29
@@ -13078,7 +12105,7 @@ def q_ogg_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _o_ogg_audio_features() -> str:
-    return _o_triangle_audio_features(OGG_MOD, "ogg")
+    return _triangle_audio_oracle(OGG_MOD, "ogg")
 
 
 def q_token_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13094,6 +12121,15 @@ def q_token_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _o_token_bpe() -> str:
+    return f"""
+SELECT doc_id,
+  cast(len(regexp_extract_all(text, '{BPE_PAT}')) as bigint) AS n_bpe,
+  cast(len(string_split(text, ' ')) as bigint) AS n_ws
+FROM documents
+"""
+
+
 def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE iteration-0 candidate table: top-32 weighted adjacent
     symbol pairs of the (word, count) vocabulary — ONE corpus-scale
@@ -13101,6 +12137,34 @@ def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replicates split/pair/argmax in DuckDB list algebra.
     Deterministic: (cnt desc, l, r) totally orders unique (l, r)."""
     return txt_bpe.pair_counts_top(_read(spark, sf_dir, "documents"), 32)
+
+
+def _o_bpe_pair_counts() -> str:
+    return """
+WITH words AS (
+  SELECT w, cast(count(*) as bigint) AS cnt FROM (
+    SELECT unnest(string_split(text, ' ')) AS w FROM documents
+  ) WHERE w <> '' GROUP BY w
+), syms AS (
+  SELECT list_append(
+           list_transform(generate_series(1, length(w)), i -> w[i:i]),
+           '</w>') AS s, cnt
+  FROM words
+), pairs AS (
+  SELECT p.l AS l, p.r AS r, cnt FROM (
+    SELECT unnest(list_transform(generate_series(1, len(s) - 1),
+                  j -> struct_pack(l := s[j], r := s[j + 1]))) AS p, cnt
+    FROM syms WHERE len(s) >= 2
+  )
+), agg AS (
+  SELECT l, r, cast(sum(cnt) as bigint) AS cnt FROM pairs GROUP BY l, r
+)
+SELECT * FROM (
+  SELECT cast(row_number() OVER (ORDER BY cnt DESC, l ASC, r ASC) as bigint)
+           AS rnk, l, r, cnt
+  FROM agg
+) WHERE rnk <= 32
+"""
 
 
 def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13172,15 +12236,24 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     return txt_analysis.lang_id(_read(spark, sf_dir, "documents"))
 
 
+_o_lang_id = txt_analysis.sql_lang_id
+
+
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: md5 content digest + per-digest copy counts."""
     return txt_dedup.exact_dups(_read(spark, sf_dir, "documents"))
+
+
+_o_exact_dedup = txt_dedup.sql_exact_dups
 
 
 def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16)+LSH(8x2) candidates verified by exact token-set
     Jaccard >= 0.5; oracle replicates the full pipeline in SQL."""
     return txt_dedup.minhash_lsh_pairs(_read(spark, sf_dir, "documents"))
+
+
+_o_minhash_pairs = txt_dedup.sql_minhash_lsh_pairs
 
 
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13191,12 +12264,18 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return txt_dedup.ngram_jaccard_pairs(_read(spark, sf_dir, "documents"))
 
 
+_o_ngram_jaccard = txt_dedup.sql_ngram_jaccard_pairs
+
+
 def q_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition filters: duplicate 2/3/4-gram
     milli-fractions + top-bigram share + keep decision, pure Column
     math (the top-bigram count is the max run of the sorted shingle
     array — no explode, no shuffle)."""
     return txt_analysis.repetition_signals(_read(spark, sf_dir, "documents"))
+
+
+_o_repetition_quality = txt_analysis.sql_repetition_signals
 
 
 def q_seq_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13209,11 +12288,17 @@ def q_seq_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_o_seq_packing = txt_analysis.sql_sequence_packing
+
+
 def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus vocabulary top-50: token totals + document frequency,
     deterministic (count DESC, token ASC) ranking — one explode +
     one token-key groupBy with map-side partials."""
     return txt_analysis.vocab_topk(_read(spark, sf_dir, "documents"))
+
+
+_o_vocab_topk = txt_analysis.sql_vocab_topk
 
 
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13228,6 +12313,13 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _o_decontaminate() -> str:
+    return txt_dedup.sql_decontaminate(
+        "(SELECT * FROM documents WHERE doc_id % 13 != 0)",
+        "(SELECT * FROM documents WHERE doc_id % 13 = 0)",
+    )
+
+
 def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring dedup (span level): maximal token spans whose
     every 8-word shingle repeats in the corpus — the relational
@@ -13235,6 +12327,9 @@ def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps-and-islands over positional shingle hashes, two int64-key
     shuffles, no driver state."""
     return txt_dedup.duplicate_spans(_read(spark, sf_dir, "documents"))
+
+
+_o_dup_spans = txt_dedup.sql_duplicate_spans
 
 
 def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13262,6 +12357,25 @@ def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _o_corpus_clean() -> str:
+    return f"""
+WITH stats AS ({txt_analysis.sql_token_stats()}),
+lang AS ({txt_analysis.sql_lang_id()}),
+first_ids AS (
+  SELECT doc_id FROM (
+    SELECT doc_id, row_number() OVER (
+      PARTITION BY md5(text) ORDER BY doc_id) AS rn
+    FROM documents
+  ) WHERE rn = 1
+)
+SELECT f.doc_id, l.pred_lang, s.quality_milli, s.n_tokens
+FROM first_ids f
+JOIN stats s ON s.doc_id = f.doc_id
+JOIN lang l ON l.doc_id = f.doc_id
+WHERE s.quality_milli >= 700 AND s.n_tokens >= 10
+"""
+
+
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clustering: connected components over the verified
     MinHash pair graph via distributed min-label propagation joins
@@ -13269,6 +12383,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     singletons attach by left join. Oracle: recursive reachability
     CTE computing the same per-node min reachable doc_id."""
     return txt_dedup.cluster_near_dups(_read(spark, sf_dir, "documents"))
+
+
+_o_dedup_clusters = txt_dedup.sql_cluster_near_dups
 
 
 PHASH_MOD = 7  # orderkey subset for the brute-force DuckDB twin
@@ -13337,16 +12454,25 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return txt_dedup.simhash(_read(spark, sf_dir, "documents"))
 
 
+_o_simhash = txt_dedup.sql_simhash
+
+
 def q_simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit SimHash (4 x 16-bit band columns from 64 rehashed bit
     streams) — the corpus-scale signature; vs per-bit SQL oracle."""
     return txt_dedup.simhash64(_read(spark, sf_dir, "documents"))
 
 
+_o_simhash64 = txt_dedup.sql_simhash64
+
+
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All pairs at 64-bit hamming distance <= 3 via 4-band equi-join
     (pigeonhole-exact recall) vs brute-force SQL oracle."""
     return txt_dedup.simhash_pairs(_read(spark, sf_dir, "documents"))
+
+
+_o_simhash_pairs = txt_dedup.sql_simhash_pairs
 
 
 def _ann_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13363,10 +12489,18 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.cosine_topk(emb, _ann_queries(spark, sf_dir), ANN_K)
 
 
+_o_ann_topk = partial(sim.sql_cosine_topk, _ANN_SQL_WHERE, ANN_K)
+
+
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-LSH bucketed approximate top-k (equi-join candidates)."""
     emb = _read(spark, sf_dir, "embeddings")
     return sim.cosine_topk(emb, _ann_queries(spark, sf_dir), ANN_K, bucketed=True)
+
+
+_o_ann_lsh = partial(
+    sim.sql_cosine_topk, _ANN_SQL_WHERE, ANN_K, bucketed=True
+)
 
 
 COSDUP_MOD = 7            # every 7th vector gets a planted near-copy
@@ -13383,6 +12517,10 @@ def q_cosine_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     must recover exactly the planted pairs; the oracle replicates
     planting, LSH, and verify."""
     return sim.cosine_dedup_pairs(_cosdup_corpus(spark, sf_dir))
+
+
+def _o_cosine_dedup() -> str:
+    return sim.sql_cosine_dedup_pairs(src=_cosdup_src_sql())
 
 
 def _cosdup_src_sql() -> str:
@@ -13430,6 +12568,9 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.ivf_topk(emb, _ann_queries(spark, sf_dir), ANN_K)
 
 
+_o_ann_ivf = partial(sim.sql_ivf_topk, _ANN_SQL_WHERE, ANN_K)
+
+
 def q_ann_lsh_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe LSH: candidates from buckets within 1 bit flip of
     the query's bucket (higher recall than ann_lsh at ~7x candidate
@@ -13438,6 +12579,11 @@ def q_ann_lsh_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.cosine_topk(
         emb, _ann_queries(spark, sf_dir), ANN_K, bucketed=True, ring=1
     )
+
+
+_o_ann_lsh_ring = partial(
+    sim.sql_cosine_topk, _ANN_SQL_WHERE, ANN_K, bucketed=True, ring=1
+)
 
 
 def q_dedup_cosine_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13470,6 +12616,26 @@ def q_dedup_cosine_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _o_dedup_cosine_agreement() -> str:
+    return f"""
+WITH pairs AS ({txt_dedup.sql_minhash_lsh_pairs()}),
+keep AS (SELECT * FROM pairs WHERE j_milli >= 600),
+nrm AS (
+  SELECT vec_id, embedding,
+    sqrt(list_sum(list_transform(embedding, x -> cast(x as double) * cast(x as double)))) AS norm
+  FROM embeddings
+)
+SELECT k.doc_a, k.doc_b, k.j_milli,
+  cast(floor(
+    list_sum(list_transform(list_zip(a.embedding, b.embedding),
+      p -> cast(p[1] as double) * cast(p[2] as double)))
+    / (a.norm * b.norm) * 10000) as bigint) AS cos_e4
+FROM keep k
+JOIN nrm a ON a.vec_id = k.doc_a
+JOIN nrm b ON b.vec_id = k.doc_b
+"""
+
+
 def with_norm_emb(df: DataFrame) -> DataFrame:
     return df.withColumn(
         "norm",
@@ -13489,6 +12655,9 @@ def q_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.kmeans_lloyd(_read(spark, sf_dir, "embeddings"))
 
 
+_o_kmeans_train = sim.sql_kmeans_lloyd
+
+
 def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): k-means clusters then
     intra-cluster pairwise cosine — remove a vector when a
@@ -13501,9 +12670,16 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.semdedup(_cosdup_corpus(spark, sf_dir))
 
 
+def _o_semdedup() -> str:
+    return sim.sql_semdedup(src=_cosdup_src_sql())
+
+
 def q_embed_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label elementwise centroid of the embedding vectors."""
     return sim.label_centroids(_read(spark, sf_dir, "embeddings"))
+
+
+_o_embed_centroid = sim.sql_label_centroids
 
 
 IMG_STATS_MOD = 997  # image subset for the decode-stats oracle
@@ -13875,368 +13051,6 @@ FROM q GROUP BY image_id
 """
 
 
-def _with_shipping(fn: Callable) -> Callable:
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _ensure_workers_can_import(spark)
-        return fn(spark, sf_dir)
-
-    run.__name__ = fn.__name__
-    run.__doc__ = fn.__doc__
-    return run
-
-
-# Round-5 rotation (VERDICT r4 ask #9): the driver's correctness
-# artifact covers a PREFIX of queries() (~50 rows).  These 66 are the
-# registered queries with NO driver row in CORRECTNESS_r01..r04
-# (judge/cache-green only) plus this round's new ones — they lead, in
-# retire-the-tail order, so round 5's artifact covers the
-# never-sampled set first.
-_ROTATION_FIRST = [
-    # new in round 5 (never driver-verified)
-    "progressive_jpeg", "gdaltindex", "retile", "ogrtindex",
-    "raster_update", "raw_fleet2", "url_dedup", "split_assign",
-    "jp2_reduce", "mrf_roundtrip", "gpkg_tiles", "gtfs", "jsonfg",
-    "esric", "kml_superoverlay", "stacta", "raw_fleet3",
-    "gtiff_codec_chunks", "cog_compressed",
-    "gtiff_industrial", "jp2_roundtrip", "jp2_georef",
-    "interlaced_roundtrip",
-    "geodesic_ellipsoid", "hdf5_roundtrip", "netcdf4_roundtrip",
-    "db_scan", "surface_roundtrip", "rat",
-    # judge-verified in r4's VERDICT spot-check, still no driver row
-    "proj_albers", "ogr_sql_join", "netcdf_roundtrip",
-    "pmtiles_roundtrip", "gnm_k_shortest", "sieve", "seq_packing",
-    "decontaminate", "tile_render_albers", "mvt_roundtrip",
-    "ngram_jaccard", "cosine_dedup",
-    # cache-green only, never sampled by driver or judge
-    "pds_roundtrip", "idrisi_roundtrip", "misc_raster_roundtrip",
-    "pgdump_roundtrip", "equalize", "augment", "gmt_roundtrip",
-    "jml_roundtrip", "hf2_roundtrip", "terragen_roundtrip",
-    "hdr_raster_roundtrip", "bsb_roundtrip", "vocab_topk",
-    "gpx_roundtrip", "gpx_track_points", "gif_roundtrip",
-    "mif_roundtrip", "dxf_roundtrip", "proj_homerc", "proj_krovak",
-    "info_raster", "info_vector", "topojson_roundtrip",
-    "spatialite_roundtrip", "paletted_roundtrip",
-    "tile_tree_roundtrip", "vrt_roundtrip", "raster_stack",
-    "sozip_roundtrip", "osm_roundtrip", "flat_raster_roundtrip",
-    "proj_laea", "st_transform_sql", "jpeg_exif", "geotiff_georef",
-    "tiff_overviews", "proj_cea", "proj_mollweide",
-    "proj_polar_stereo", "proj_stereo_oblique", "proj_sinusoidal",
-    "proj_eqc", "proj_mercator_ups", "reproject_chain",
-    "tile_render_polar", "geoloc_transform", "curve_fit_back",
-    "video_mjpeg",
-]
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    raw = {name: _with_shipping(fn) for name, fn in _queries_raw().items()}
-    head = {k: raw[k] for k in _ROTATION_FIRST if k in raw}
-    head.update((k, v) for k, v in raw.items() if k not in head)
-    return head
-
-
-def _queries_raw() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDER MATTERS: the external driver's correctness artifact covers
-    # a PREFIX of this dict (~50 rows). Round-4 rotation: the 6
-    # queries that were only ever judge-verified lead (VERDICT r3 ask
-    # #6 — two rounds without a driver row), then queries NEW this
-    # round (never driver-verified, newest sweep first), then the
-    # round-3 block (driver-green in r03), then older rows.  The
-    # round-4 sweeps added more new queries than one ~50-row artifact
-    # can cover; the remainder rotates forward in round 5.
-    return {
-        # -- judge-green in r3 but never driver-verified (ask #6)
-        "tile_render_sortfield": q_tile_render_sortfield,
-        "translate_outsize": q_translate_outsize,
-        "token_bpe": q_token_bpe,
-        "ogr_special_fields": q_ogr_special_fields,
-        "overview_gauss": q_overview_gauss,
-        "grid_invdistnn": q_grid_invdistnn,
-        # -- new in round 4
-        "line_locate": q_line_locate,
-        "line_subline": q_line_subline,
-        "lineref_parts": q_lineref_parts,
-        "isis3_roundtrip": q_isis3_roundtrip,
-        "image_ssim": q_image_ssim,
-        "lan_roundtrip": q_lan_roundtrip,
-        "corpus_shuffle": q_corpus_shuffle,
-        "geotiff_edit": q_geotiff_edit,
-        "proj_cassini": q_proj_cassini,
-        "exif_strip": q_exif_strip,
-        "histogram_match": q_histogram_match,
-        "g711_audio_features": q_g711_audio_features,
-        "tile_render_cassini": q_tile_render_cassini,
-        "gxf_roundtrip": q_gxf_roundtrip,
-        "gtiff_industrial": q_gtiff_industrial,
-        "gtiff_codec_chunks": q_gtiff_codec_chunks,
-        "jp2_roundtrip": q_jp2_roundtrip,
-        "gdal_compare": q_gdal_compare,
-        "semdedup": q_semdedup,
-        "bpe_pair_counts": q_bpe_pair_counts,
-        "bpe_train": q_bpe_train,
-        "arrow_roundtrip": q_arrow_roundtrip,
-        "arrows_roundtrip": q_arrows_roundtrip,
-        "nitf_roundtrip": q_nitf_roundtrip,
-        "pcidsk_roundtrip": q_pcidsk_roundtrip,
-        "hdf4_roundtrip": q_hdf4_roundtrip,
-        "raster_pipeline": q_raster_pipeline,
-        "vector_pipeline_exec": q_vector_pipeline_exec,
-        "driver_list": q_driver_list,
-        "lm_perplexity": q_lm_perplexity,
-        "nb_classify": q_nb_classify,
-        "tfidf_topk": q_tfidf_topk,
-        "pii_redact": q_pii_redact,
-        "filter_funnel": q_filter_funnel,
-        "mixing_sample": q_mixing_sample,
-        "flac_audio_features": q_flac_audio_features,
-        "ogg_audio_features": q_ogg_audio_features,
-        "mp4_frame_stats": q_mp4_frame_stats,
-        "grib_roundtrip": q_grib_roundtrip,
-        "vrt_lut": q_vrt_lut,
-        "dted_roundtrip": q_dted_roundtrip,
-        "dup_spans": q_dup_spans,
-        "kmeans_train": q_kmeans_train,
-        "repetition_quality": q_repetition_quality,
-        "usgsdem_roundtrip": q_usgsdem_roundtrip,
-        "mdim_info": q_mdim_info,
-        "wrapdateline": q_wrapdateline,
-        "pds_roundtrip": q_pds_roundtrip,
-        "idrisi_roundtrip": q_idrisi_roundtrip,
-        "mvt_roundtrip": q_mvt_roundtrip,
-        "misc_raster_roundtrip": q_misc_raster_roundtrip,
-        "seq_packing": q_seq_packing,
-        "pgdump_roundtrip": q_pgdump_roundtrip,
-        "equalize": q_equalize,
-        "augment": q_augment,
-        "gmt_roundtrip": q_gmt_roundtrip,
-        "jml_roundtrip": q_jml_roundtrip,
-        "hf2_roundtrip": q_hf2_roundtrip,
-        "terragen_roundtrip": q_terragen_roundtrip,
-        "hdr_raster_roundtrip": q_hdr_raster_roundtrip,
-        "decontaminate": q_decontaminate,
-        "bsb_roundtrip": q_bsb_roundtrip,
-        "sieve": q_sieve,
-        "vocab_topk": q_vocab_topk,
-        "gpx_roundtrip": q_gpx_roundtrip,
-        "gpx_track_points": q_gpx_track_points,
-        "gif_roundtrip": q_gif_roundtrip,
-        "mif_roundtrip": q_mif_roundtrip,
-        "dxf_roundtrip": q_dxf_roundtrip,
-        "proj_homerc": q_proj_homerc,
-        "proj_krovak": q_proj_krovak,
-        "info_raster": q_info_raster,
-        "info_vector": q_info_vector,
-        "topojson_roundtrip": q_topojson_roundtrip,
-        "spatialite_roundtrip": q_spatialite_roundtrip,
-        "db_scan": q_db_scan,
-        "surface_roundtrip": q_surface_roundtrip,
-        "rat": q_rat,
-        "paletted_roundtrip": q_paletted_roundtrip,
-        "tile_tree_roundtrip": q_tile_tree_roundtrip,
-        "vrt_roundtrip": q_vrt_roundtrip,
-        "ngram_jaccard": q_ngram_jaccard,
-        "cosine_dedup": q_cosine_dedup,
-        "pmtiles_roundtrip": q_pmtiles_roundtrip,
-        "raster_stack": q_raster_stack,
-        "sozip_roundtrip": q_sozip_roundtrip,
-        "osm_roundtrip": q_osm_roundtrip,
-        "flat_raster_roundtrip": q_flat_raster_roundtrip,
-        "interlaced_roundtrip": q_interlaced_roundtrip,
-        "progressive_jpeg": q_progressive_jpeg,
-        "gdaltindex": q_gdaltindex,
-        "retile": q_retile,
-        "ogrtindex": q_ogrtindex,
-        "raster_update": q_raster_update,
-        "raw_fleet2": q_raw_fleet2,
-        "url_dedup": q_url_dedup,
-        "split_assign": q_split_assign,
-        "jp2_reduce": q_jp2_reduce,
-        "mrf_roundtrip": q_mrf_roundtrip,
-        "gpkg_tiles": q_gpkg_tiles,
-        "gtfs": q_gtfs,
-        "jsonfg": q_jsonfg,
-        "esric": q_esric,
-        "kml_superoverlay": q_kml_superoverlay,
-        "stacta": q_stacta,
-        "raw_fleet3": q_raw_fleet3,
-        "ogr_sql_join": q_ogr_sql_join,
-        "proj_laea": q_proj_laea,
-        "st_transform_sql": q_st_transform_sql,
-        "jpeg_exif": q_jpeg_exif,
-        "geotiff_georef": q_geotiff_georef,
-        "jp2_georef": q_jp2_georef,
-        "tiff_overviews": q_tiff_overviews,
-        "proj_cea": q_proj_cea,
-        "proj_mollweide": q_proj_mollweide,
-        "proj_albers": q_proj_albers,
-        "proj_polar_stereo": q_proj_polar_stereo,
-        "proj_stereo_oblique": q_proj_stereo_oblique,
-        "proj_sinusoidal": q_proj_sinusoidal,
-        "proj_eqc": q_proj_eqc,
-        "proj_mercator_ups": q_proj_mercator_ups,
-        "reproject_chain": q_reproject_chain,
-        "tile_render_albers": q_tile_render_albers,
-        "tile_render_polar": q_tile_render_polar,
-        "netcdf_roundtrip": q_netcdf_roundtrip,
-        "hdf5_roundtrip": q_hdf5_roundtrip,
-        "netcdf4_roundtrip": q_netcdf4_roundtrip,
-        "geoloc_transform": q_geoloc_transform,
-        "gnm_k_shortest": q_gnm_k_shortest,
-        "curve_fit_back": q_curve_fit_back,
-        # -- new in round 3 (20): coincident-boundary overlay,
-        #    constructives, line predicates, contour polygons, datum
-        #    pipelines, new vector formats
-        "mdim_view": q_mdim_view,
-        "mdim_transpose": q_mdim_transpose,
-        "mdim_unscaled": q_mdim_unscaled,
-        "mdim_resample": q_mdim_resample,
-        "mdim_stats": q_mdim_stats,
-        "stac_index": q_stac_index,
-        "stac_mosaic": q_stac_mosaic,
-        "stac_latest": q_stac_latest,
-        "ntv2_shift": q_ntv2_shift,
-        "video_frame_stats": q_video_frame_stats,
-        "video_mjpeg": q_video_mjpeg,
-        "ascii_grid_roundtrip": q_ascii_grid_roundtrip,
-        "hex_cell": q_hex_cell,
-        "hex_cell_counts": q_hex_cell_counts,
-        "kml_roundtrip": q_kml_roundtrip,
-        "calc_expr": q_calc_expr,
-        "reclassify": q_reclassify,
-        "simplify_coverage": q_simplify_coverage,
-        "palette_map": q_palette_map,
-        "ogr_sql_exec": q_ogr_sql_exec,
-        "zarr_roundtrip": q_zarr_roundtrip,
-        "geoparquet_roundtrip": q_geoparquet_roundtrip,
-        "gml_roundtrip": q_gml_roundtrip,
-        "s2_cell": q_s2_cell,
-        "hillshade_modes": q_hillshade_modes,
-        "mbtiles_roundtrip": q_mbtiles_roundtrip,
-        "warp_cutline": q_warp_cutline,
-        "gnm_shortest_path": q_gnm_shortest_path,
-        "s2_cell_counts": q_s2_cell_counts,
-        "overlay_deg_inter": q_overlay_deg_inter,
-        "overlay_deg_union": q_overlay_deg_union,
-        "overlay_deg_identity": q_overlay_deg_identity,
-        "overlay_deg_symdiff": q_overlay_deg_symdiff,
-        "overlay_deg_update": q_overlay_deg_update,
-        "overlay_deg_clip": q_overlay_deg_clip,
-        "overlay_deg_erase": q_overlay_deg_erase,
-        "phash_pairs": q_phash_pairs,
-        "build_area": q_build_area,
-        "polygonize_geom": q_polygonize_geom,
-        "st_normalize": q_st_normalize,
-        "set_precision": q_set_precision,
-        "line_poly_predicates": q_line_poly_predicates,
-        "line_line_predicates": q_line_line_predicates,
-        "contour_polygons": q_contour_polygons,
-        "datum_shift": q_datum_shift,
-        "bng_transform": q_bng_transform,
-        "fgb_roundtrip": q_fgb_roundtrip,
-        "csv_roundtrip": q_csv_roundtrip,
-        "geojson_roundtrip": q_geojson_roundtrip,
-        "tile_render_webp": q_tile_render_webp,
-        # -- rows NOT in CORRECTNESS_r02.json (round-2 tail; the first
-        #    30 land inside this round's ~50-row artifact)
-        "tile_counts": q_tile_counts,
-        "quadkey": q_quadkey,
-        "knn_perk": q_knn_perk,
-        "rasterize_tile_add": q_rasterize_tile_add,
-        "rasterize_tile_checksum": q_rasterize_tile_checksum,
-        "tile_render_avg": q_tile_render_avg,
-        "tile_render_utm": q_tile_render_utm,
-        "tile_overview": q_tile_overview,
-        "overlay": q_overlay,
-        "footprint_join": q_footprint_join,
-        "vector_clip": q_vector_clip,
-        "caption_check": q_caption_check,
-        "image_stats": q_image_stats,
-        "translate": q_translate,
-        "pixel_calc": q_pixel_calc,
-        "zonal_stats": q_zonal_stats,
-        "interpolate_point": q_interpolate_point,
-        "dem_metrics": q_dem_metrics,
-        "exact_dedup": q_exact_dedup,
-        "simhash_pairs": q_simhash_pairs,
-        "ann_topk": q_ann_topk,
-        "ann_lsh": q_ann_lsh,
-        "ann_lsh_ring": q_ann_lsh_ring,
-        "corpus_clean": q_corpus_clean,
-        "events_windowed": q_events_windowed,
-        "events_sessionize": q_events_sessionize,
-        "events_props": q_events_props,
-        "text_stats": q_text_stats,
-        "lang_id": q_lang_id,
-        "simhash": q_simhash,
-        "embed_centroid": q_embed_centroid,
-        "dedup_cosine_agreement": q_dedup_cosine_agreement,
-        "histogram": q_histogram,
-        "color_relief": q_color_relief,
-        "fillnodata": q_fillnodata,
-        "geom_measures": q_geom_measures,
-        "geodesic_measures": q_geodesic_measures,
-        "geodesic_ellipsoid": q_geodesic_ellipsoid,
-        "overview_mode": q_overview_mode,
-        "overview_rms": q_overview_rms,
-        "raster_attribute_table": q_raster_attribute_table,
-        "events_zscore": q_events_zscore,
-        "grid_interp": q_grid_interp,
-        "proximity": q_proximity,
-        "contour_cells": q_contour_cells,
-        # -- driver-verified green in CORRECTNESS_r02.json
-        "overlay_geom": q_overlay_geom,
-        "overlay_union": q_overlay_union,
-        "overlay_identity": q_overlay_identity,
-        "overlay_symdiff": q_overlay_symdiff,
-        "overlay_update": q_overlay_update,
-        "overlay_clip": q_overlay_clip,
-        "overlay_erase": q_overlay_erase,
-        "dedup_clusters": q_dedup_clusters,
-        "simhash64": q_simhash64,
-        "tile_render_decoded": q_tile_render_decoded,
-        "tile_render_cubicspline": q_tile_render_cubicspline,
-        "tile_render_lanczos": q_tile_render_lanczos,
-        "geom_predicates": q_geom_predicates,
-        "st_distance": q_st_distance,
-        "contour_lines": q_contour_lines,
-        "tile_render_stats": q_tile_render_stats,
-        "curve_linearize": q_curve_linearize,
-        "grid_tin": q_grid_tin,
-        "gcp_transform": q_gcp_transform,
-        "cog_roundtrip": q_cog_roundtrip,
-        "cog_compressed": q_cog_compressed,
-        "make_valid": q_make_valid,
-        "tps_transform": q_tps_transform,
-        "rpc_transform": q_rpc_transform,
-        "homography_transform": q_homography_transform,
-        "ann_ivf": q_ann_ivf,
-        "lcc_transform": q_lcc_transform,
-        "pansharpen": q_pansharpen,
-        "nearblack": q_nearblack,
-        "audio_features": q_audio_features,
-        "gpkg_roundtrip": q_gpkg_roundtrip,
-        "shp_roundtrip": q_shp_roundtrip,
-        "geojsonseq_roundtrip": q_geojsonseq_roundtrip,
-        "polygonize": q_polygonize,
-        "dissolve": q_dissolve,
-        "footprint": q_footprint,
-        "ogr_summary": q_ogr_summary,
-        "ogr_distinct": q_ogr_distinct,
-        "ogr_first_match_join": q_ogr_first_match_join,
-        "ogr_where_orderby_limit": q_ogr_where_orderby_limit,
-        "ogr_count_star": q_ogr_count_star,
-        "ogr_ilike_exclude": q_ogr_ilike_exclude,
-        "events_quantiles": q_events_quantiles,
-        "ogr_union_all": q_ogr_union_all,
-        "ogr_scalar_ops": q_ogr_scalar_ops,
-        "tile_assign": q_tile_assign,
-        "pip_join": q_pip_join,
-        "knn": q_knn,
-        "rasterize_count": q_rasterize_count,
-        "tile_render": q_tile_render,
-        "minhash_pairs": q_minhash_pairs,
-    }
-
-
 # ---------------------------------------------------------------------------
 # oracles (DuckDB SQL over the same parquet views)
 # ---------------------------------------------------------------------------
@@ -14545,20 +13359,6 @@ SELECT cast(w.tx as int) AS tile_x, cast(w.ty as int) AS tile_y,
        cast(b.band as int) AS band,
        cast(sum(((w.base + b.phase) % 256) % ({_PRIMES_SQL})[((w.py * 256 + w.px) % 11) + 1]) % 65536 as int) AS checksum,
        count(*) AS n_px
-FROM win w CROSS JOIN bands b
-GROUP BY w.tx, w.ty, b.band
-"""
-
-
-def _o_mbtiles_roundtrip() -> str:
-    # Same closed form as the webp subset but summed over the covered
-    # pixels only (uncovered tile pixels decode to 0, contributing 0
-    # to the prime-mod sum), and no n_px (not recoverable from the
-    # decoded archive payload).
-    return f"""{_render_win_ctes(f" AND o_orderkey % {5 * RENDER_MOD} = 0")}
-SELECT cast(w.tx as int) AS tile_x, cast(w.ty as int) AS tile_y,
-       cast(b.band as int) AS band,
-       cast(sum(((w.base + b.phase) % 256) % ({_PRIMES_SQL})[((w.py * 256 + w.px) % 11) + 1]) % 65536 as int) AS checksum
 FROM win w CROSS JOIN bands b
 GROUP BY w.tx, w.ty, b.band
 """
@@ -15331,73 +14131,6 @@ FROM shoelace GROUP BY fa, fb HAVING abs(sum(term)) > 0
 """
 
 
-def _o_vector_clip() -> str:
-    zn = georef.sql_zones_cte("s_suppkey", "supplier")
-    x0, y0, x1, y1 = CLIP_BBOX
-    return f"""
-WITH za AS (SELECT * FROM ({zn}) WHERE fid % 4 = 0),  -- kind='park' cycle
-ea AS (
-  SELECT z.fid, g.j,
-    z.lon0 + z.r * cos(2 * pi() * g.j / z.k) AS vx1,
-    z.lat0 + z.r * sin(2 * pi() * g.j / z.k) AS vy1,
-    z.lon0 + z.r * cos(2 * pi() * ((g.j + 1) % z.k) / z.k) AS vx2,
-    z.lat0 + z.r * sin(2 * pi() * ((g.j + 1) % z.k) / z.k) AS vy2
-  FROM za z, range(0, 8) AS g(j) WHERE g.j < z.k
-),
-re (rx1, ry1, rx2, ry2) AS (VALUES
-  ({x0}, {y0}, {x1}, {y0}), ({x1}, {y0}, {x1}, {y1}),
-  ({x1}, {y1}, {x0}, {y1}), ({x0}, {y1}, {x0}, {y0})
-),
-va_in AS (
-  SELECT fid, vx1 AS x, vy1 AS y FROM ea
-  WHERE vx1 BETWEEN {x0} AND {x1} AND vy1 BETWEEN {y0} AND {y1}
-),
-corners (cx, cy) AS (VALUES ({x0}, {y0}), ({x1}, {y0}), ({x1}, {y1}), ({x0}, {y1})),
-corner_in AS (
-  SELECT e.fid, c.cx AS x, c.cy AS y
-  FROM corners c JOIN ea e ON TRUE
-  GROUP BY e.fid, c.cx, c.cy
-  HAVING min((e.vx2 - e.vx1) * (c.cy - e.vy1) - (e.vy2 - e.vy1) * (c.cx - e.vx1)) >= 0
-),
-crossings AS (
-  SELECT e.fid,
-    e.vx1 + ((r.rx1 - e.vx1) * (r.ry2 - r.ry1) - (r.ry1 - e.vy1) * (r.rx2 - r.rx1))
-      / ((e.vx2 - e.vx1) * (r.ry2 - r.ry1) - (e.vy2 - e.vy1) * (r.rx2 - r.rx1)) * (e.vx2 - e.vx1) AS x,
-    ((r.rx1 - e.vx1) * (r.ry2 - r.ry1) - (r.ry1 - e.vy1) * (r.rx2 - r.rx1))
-      / ((e.vx2 - e.vx1) * (r.ry2 - r.ry1) - (e.vy2 - e.vy1) * (r.rx2 - r.rx1)) AS t,
-    ((r.rx1 - e.vx1) * (e.vy2 - e.vy1) - (r.ry1 - e.vy1) * (e.vx2 - e.vx1))
-      / ((e.vx2 - e.vx1) * (r.ry2 - r.ry1) - (e.vy2 - e.vy1) * (r.rx2 - r.rx1)) AS u,
-    e.vy1 + ((r.rx1 - e.vx1) * (r.ry2 - r.ry1) - (r.ry1 - e.vy1) * (r.rx2 - r.rx1))
-      / ((e.vx2 - e.vx1) * (r.ry2 - r.ry1) - (e.vy2 - e.vy1) * (r.rx2 - r.rx1)) * (e.vy2 - e.vy1) AS y
-  FROM ea e, re r
-  WHERE (e.vx2 - e.vx1) * (r.ry2 - r.ry1) - (e.vy2 - e.vy1) * (r.rx2 - r.rx1) <> 0
-),
-pts AS (
-  SELECT fid, x, y FROM va_in
-  UNION ALL SELECT fid, x, y FROM corner_in
-  UNION ALL SELECT fid, x, y FROM crossings WHERE t >= 0 AND t <= 1 AND u >= 0 AND u <= 1
-),
-ctr AS (
-  SELECT fid, avg(x) AS mx, avg(y) AS my FROM pts GROUP BY fid HAVING count(*) >= 3
-),
-ordered AS (
-  SELECT p.fid, p.x, p.y, atan2(p.y - c.my, p.x - c.mx) AS ang
-  FROM pts p JOIN ctr c ON c.fid = p.fid
-),
-shoelace AS (
-  SELECT fid,
-    x * coalesce(lead(y) OVER w, first_value(y) OVER w2)
-      - coalesce(lead(x) OVER w, first_value(x) OVER w2) * y AS term
-  FROM ordered
-  WINDOW w AS (PARTITION BY fid ORDER BY ang, x, y),
-         w2 AS (PARTITION BY fid ORDER BY ang, x, y
-                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-)
-SELECT fid, cast(floor((abs(sum(term)) / 2) * 1e4) as bigint) AS clip_area_e4
-FROM shoelace GROUP BY fid HAVING abs(sum(term)) > 0
-"""
-
-
 def _o_caption_check() -> str:
     u1, u2 = georef.sql_lcg("o_orderkey")
     adj = georef._sql_case_cycle(u1, georef.CAPTION_ADJ, quote=True)
@@ -15931,29 +14664,6 @@ FROM d WHERE rnk <= k
 """
 
 
-_MDIM_CUBE_CTE = f"""
-cube AS (
-  SELECT cast(c_custkey // {MDIM_Y * MDIM_X} as bigint) AS t,
-         cast((c_custkey % {MDIM_Y * MDIM_X}) // {MDIM_X} as bigint) AS y,
-         cast(c_custkey % {MDIM_X} as bigint) AS x,
-         cast((7 * (c_custkey // {MDIM_Y * MDIM_X})
-             + 13 * ((c_custkey % {MDIM_Y * MDIM_X}) // {MDIM_X})
-             + 29 * (c_custkey % {MDIM_X}) + 3) % 251 as int) AS value
-  FROM customer
-)"""
-
-
-from gdal_spark.fixtures.stacfix import sql_item_params as _sql_stac_params
-
-_STAC_VALID_CTE = f"""
-sp AS ({_sql_stac_params("c_custkey", "customer")}),
-sv AS (
-  SELECT i, collection, asset, 'EPSG:' || cast(epsg as varchar) AS crs,
-         rx, ry, w, h, x0 AS xmin, ymin, xmax, y0 AS ymax, datetime
-  FROM sp WHERE skip NOT IN (1, 2, 3, 4, 5)
-)"""
-
-
 def _o_ntv2_shift() -> str:
     from gdal_spark.fixtures.shiftgrid import sql_shift_cte
 
@@ -15966,545 +14676,105 @@ FROM nshift
 """
 
 
+# ---------------------------------------------------------------------------
+# registry
+# ---------------------------------------------------------------------------
+
+def _with_shipping(fn: Callable) -> Callable:
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        _ensure_workers_can_import(spark)
+        return fn(spark, sf_dir)
+
+    run.__name__ = fn.__name__
+    run.__doc__ = fn.__doc__
+    return run
+
+
+# ORDER MATTERS: the external driver's correctness artifact samples a
+# PREFIX of queries() (~50 rows), so queries that no driver run has
+# verified yet lead.  queries() resolves q_<name> and oracle_sql()
+# resolves _o_<name> for each name here; a name is registered once.
+_ORDER = (
+    "progressive_jpeg", "gdaltindex", "retile", "ogrtindex", "raster_update",
+    "raw_fleet2", "url_dedup", "split_assign", "jp2_reduce", "mrf_roundtrip",
+    "gpkg_tiles", "gtfs", "jsonfg", "esric", "kml_superoverlay", "stacta",
+    "raw_fleet3", "gtiff_codec_chunks", "cog_compressed", "gtiff_industrial",
+    "jp2_roundtrip", "jp2_georef", "interlaced_roundtrip",
+    "geodesic_ellipsoid", "hdf5_roundtrip", "netcdf4_roundtrip", "db_scan",
+    "surface_roundtrip", "rat", "proj_albers", "ogr_sql_join",
+    "netcdf_roundtrip", "pmtiles_roundtrip", "gnm_k_shortest", "sieve",
+    "seq_packing", "decontaminate", "tile_render_albers", "mvt_roundtrip",
+    "ngram_jaccard", "cosine_dedup", "pds_roundtrip", "idrisi_roundtrip",
+    "misc_raster_roundtrip", "pgdump_roundtrip", "equalize", "augment",
+    "gmt_roundtrip", "jml_roundtrip", "hf2_roundtrip", "terragen_roundtrip",
+    "hdr_raster_roundtrip", "bsb_roundtrip", "vocab_topk", "gpx_roundtrip",
+    "gpx_track_points", "gif_roundtrip", "mif_roundtrip", "dxf_roundtrip",
+    "proj_homerc", "proj_krovak", "info_raster", "info_vector",
+    "topojson_roundtrip", "spatialite_roundtrip", "paletted_roundtrip",
+    "tile_tree_roundtrip", "vrt_roundtrip", "raster_stack", "sozip_roundtrip",
+    "osm_roundtrip", "flat_raster_roundtrip", "proj_laea", "st_transform_sql",
+    "jpeg_exif", "geotiff_georef", "tiff_overviews", "proj_cea",
+    "proj_mollweide", "proj_polar_stereo", "proj_stereo_oblique",
+    "proj_sinusoidal", "proj_eqc", "proj_mercator_ups", "reproject_chain",
+    "tile_render_polar", "geoloc_transform", "curve_fit_back", "video_mjpeg",
+    "tile_render_sortfield", "translate_outsize", "token_bpe",
+    "ogr_special_fields", "overview_gauss", "grid_invdistnn", "line_locate",
+    "line_subline", "lineref_parts", "isis3_roundtrip", "image_ssim",
+    "lan_roundtrip", "corpus_shuffle", "geotiff_edit", "proj_cassini",
+    "exif_strip", "histogram_match", "g711_audio_features",
+    "tile_render_cassini", "gxf_roundtrip", "gdal_compare", "semdedup",
+    "bpe_pair_counts", "bpe_train", "arrow_roundtrip", "arrows_roundtrip",
+    "nitf_roundtrip", "pcidsk_roundtrip", "hdf4_roundtrip", "raster_pipeline",
+    "vector_pipeline_exec", "driver_list", "lm_perplexity", "nb_classify",
+    "tfidf_topk", "pii_redact", "filter_funnel", "mixing_sample",
+    "flac_audio_features", "ogg_audio_features", "mp4_frame_stats",
+    "grib_roundtrip", "vrt_lut", "dted_roundtrip", "dup_spans", "kmeans_train",
+    "repetition_quality", "usgsdem_roundtrip", "mdim_info", "wrapdateline",
+    "mdim_view", "mdim_transpose", "mdim_unscaled", "mdim_resample",
+    "mdim_stats", "stac_index", "stac_mosaic", "stac_latest", "ntv2_shift",
+    "video_frame_stats", "ascii_grid_roundtrip", "hex_cell", "hex_cell_counts",
+    "kml_roundtrip", "calc_expr", "reclassify", "simplify_coverage",
+    "palette_map", "ogr_sql_exec", "zarr_roundtrip", "geoparquet_roundtrip",
+    "gml_roundtrip", "s2_cell", "hillshade_modes", "mbtiles_roundtrip",
+    "warp_cutline", "gnm_shortest_path", "s2_cell_counts", "overlay_deg_inter",
+    "overlay_deg_union", "overlay_deg_identity", "overlay_deg_symdiff",
+    "overlay_deg_update", "overlay_deg_clip", "overlay_deg_erase",
+    "phash_pairs", "build_area", "polygonize_geom", "st_normalize",
+    "set_precision", "line_poly_predicates", "line_line_predicates",
+    "contour_polygons", "datum_shift", "bng_transform", "fgb_roundtrip",
+    "csv_roundtrip", "geojson_roundtrip", "tile_render_webp", "tile_counts",
+    "quadkey", "knn_perk", "rasterize_tile_add", "rasterize_tile_checksum",
+    "tile_render_avg", "tile_render_utm", "tile_overview", "overlay",
+    "footprint_join", "vector_clip", "caption_check", "image_stats",
+    "translate", "pixel_calc", "zonal_stats", "interpolate_point",
+    "dem_metrics", "exact_dedup", "simhash_pairs", "ann_topk", "ann_lsh",
+    "ann_lsh_ring", "corpus_clean", "events_windowed", "events_sessionize",
+    "events_props", "text_stats", "lang_id", "simhash", "embed_centroid",
+    "dedup_cosine_agreement", "histogram", "color_relief", "fillnodata",
+    "geom_measures", "geodesic_measures", "overview_mode", "overview_rms",
+    "raster_attribute_table", "events_zscore", "grid_interp", "proximity",
+    "contour_cells", "overlay_geom", "overlay_union", "overlay_identity",
+    "overlay_symdiff", "overlay_update", "overlay_clip", "overlay_erase",
+    "dedup_clusters", "simhash64", "tile_render_decoded",
+    "tile_render_cubicspline", "tile_render_lanczos", "geom_predicates",
+    "st_distance", "contour_lines", "tile_render_stats", "curve_linearize",
+    "grid_tin", "gcp_transform", "cog_roundtrip", "make_valid",
+    "tps_transform", "rpc_transform", "homography_transform", "ann_ivf",
+    "lcc_transform", "pansharpen", "nearblack", "audio_features",
+    "gpkg_roundtrip", "shp_roundtrip", "geojsonseq_roundtrip", "polygonize",
+    "dissolve", "footprint", "ogr_summary", "ogr_distinct",
+    "ogr_first_match_join", "ogr_where_orderby_limit", "ogr_count_star",
+    "ogr_ilike_exclude", "events_quantiles", "ogr_union_all", "ogr_scalar_ops",
+    "tile_assign", "pip_join", "knn", "rasterize_count", "tile_render",
+    "minhash_pairs",
+)
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    g = globals()
+    return {n: _with_shipping(g[f"q_{n}"]) for n in _ORDER}
+
+
 def oracle_sql() -> dict[str, str]:
-    return {
-        "ntv2_shift": _o_ntv2_shift(),
-        "video_frame_stats": _o_video_frame_stats(),
-        "video_mjpeg": _o_video_mjpeg(),
-        "mp4_frame_stats": _o_mp4_frame_stats(),
-        "flac_audio_features": _o_flac_audio_features(),
-        "ogg_audio_features": _o_ogg_audio_features(),
-        "nitf_roundtrip": _o_nitf_roundtrip(),
-        "pcidsk_roundtrip": _o_pcidsk_roundtrip(),
-        "hdf4_roundtrip": _o_hdf4_roundtrip(),
-        "raster_pipeline": _o_raster_pipeline(),
-        "vector_pipeline_exec": _o_vector_clip(),
-        "driver_list": _o_driver_list(),
-        "lm_perplexity": txt_lm.sql_bigram_lm(top_v=LM_TOP_V),
-        "nb_classify": txt_lm.sql_nb(),
-        "tfidf_topk": txt_analysis.sql_tfidf_topk(k=3),
-        "pii_redact": _o_pii_redact(),
-        "filter_funnel": _o_filter_funnel(),
-        "mixing_sample": _o_mixing_sample(),
-        "ascii_grid_roundtrip": _o_ascii_grid_roundtrip(),
-        "hex_cell": _o_hex_cell(HEX_RES, counts=False),
-        "hex_cell_counts": _o_hex_cell(HEX_COUNT_RES, counts=True),
-        "stac_index": f"""
-WITH {_STAC_VALID_CTE}
-SELECT collection, asset, crs, i, datetime, xmin, ymin, xmax, ymax, w, h
-FROM sv
-""",
-        "stac_mosaic": f"""
-WITH {_STAC_VALID_CTE},
-g AS (
-  SELECT collection, asset, crs, count(*) AS n_items,
-         min(xmin) AS xmin, min(ymin) AS ymin,
-         max(xmax) AS xmax, max(ymax) AS ymax,
-         cast(sum(rx) as bigint) AS srx, cast(sum(ry) as bigint) AS sry,
-         min(rx) AS rxh, max(rx) AS rxl, min(ry) AS ryh, max(ry) AS ryl
-  FROM sv GROUP BY 1, 2, 3)
-SELECT collection, asset, crs, n_items, xmin, ymin, xmax, ymax,
-  cast(round((xmax - xmin) / (cast(srx as double) / n_items)) as bigint)
-    AS nx_avg,
-  cast(round((ymax - ymin) / (cast(sry as double) / n_items)) as bigint)
-    AS ny_avg,
-  cast(round(cast(xmax - xmin as double) / rxh) as bigint) AS nx_high,
-  cast(round(cast(ymax - ymin as double) / ryh) as bigint) AS ny_high,
-  cast(round(cast(xmax - xmin as double) / rxl) as bigint) AS nx_low,
-  cast(round(cast(ymax - ymin as double) / ryl) as bigint) AS ny_low
-FROM g
-""",
-        "stac_latest": f"""
-WITH {_STAC_VALID_CTE},
-probes AS (
-  SELECT p, 3000 + (p * 997) % 20000 AS px,
-         203000 + (p * 6007) % 20000 AS py
-  FROM range(0, 200) t(p)),
-cov AS (
-  SELECT pr.p, sv.collection, sv.asset, sv.crs, sv.i, sv.datetime
-  FROM probes pr JOIN sv
-    ON pr.px >= sv.xmin AND pr.px < sv.xmax
-   AND pr.py > sv.ymin AND pr.py <= sv.ymax)
-SELECT p, collection, asset, crs,
-       arg_max(i, datetime) AS top_i, max(datetime) AS top_datetime,
-       count(*) AS n_cover
-FROM cov GROUP BY 1, 2, 3, 4
-""",
-        "mdim_view": f"""
-WITH {_MDIM_CUBE_CTE}
-SELECT t - 1 AS t, {MDIM_Y - 1} - y AS y, (x - 2) // 3 AS x, value
-FROM cube
-WHERE t >= 1 AND x >= 2 AND x < 9 AND (x - 2) % 3 = 0
-""",
-        "mdim_transpose": f"""
-WITH {_MDIM_CUBE_CTE}
-SELECT cast(0 as bigint) AS newdim0, x, t, y, value FROM cube
-""",
-        "mdim_unscaled": f"""
-WITH {_MDIM_CUBE_CTE}
-SELECT y, x,
-       CASE WHEN value = 17 THEN NULL
-            ELSE cast(value as double) * cast('0.5' as double)
-                 + cast('10.0' as double) END AS value
-FROM cube WHERE t = 0
-""",
-        "mdim_resample": f"""
-WITH {_MDIM_CUBE_CTE}
-SELECT t, y // 2 AS y, x // 5 AS x, max(value) AS value
-FROM cube GROUP BY 1, 2, 3
-""",
-        "mdim_stats": f"""
-WITH {_MDIM_CUBE_CTE}
-SELECT t, min(value) AS vmin, max(value) AS vmax,
-       cast(sum(value) as bigint) AS vsum, count(*) AS n
-FROM cube WHERE value <> 17 GROUP BY t
-""",
-        "tile_render": _o_tile_render(),
-        # lossless roundtrip: same closed form, tighter image subset
-        "tile_render_webp": _o_tile_render_webp(),
-        "tile_render_cubicspline": _o_kernel_render("cubicspline"),
-        "tile_render_lanczos": _o_kernel_render("lanczos"),
-        "tile_render_decoded": f"""{_render_win_ctes(" AND (o_orderkey % 3) <> 1")}
-SELECT cast(w.tx as int) AS tile_x, cast(w.ty as int) AS tile_y,
-       cast(b.band as int) AS band,
-       cast(sum(((w.base + b.phase) % 256) % ({_PRIMES_SQL})[((w.py * 256 + w.px) % 11) + 1]) % 65536 as int) AS checksum,
-       count(*) AS n_px
-FROM win w CROSS JOIN bands b
-GROUP BY 1, 2, 3
-""",
-        "tile_render_avg": _o_tile_render_avg(),
-        "tile_render_utm": _o_tile_render_utm(),
-        "tile_overview": _o_tile_overview(),
-        "overlay": _o_overlay(),
-        **_overlay_oracles(),
-        **_overlay_oracles(degenerate=True),
-        "geom_predicates": _o_geom_predicates(),
-        "st_distance": _o_st_distance(),
-        "contour_lines": _o_contour_lines(),
-        "tile_render_stats": _o_tile_render_stats(),
-        "curve_linearize": _o_curve_linearize(),
-        "grid_tin": _o_grid_tin(),
-        "gcp_transform": _o_gcp_transform(),
-        "cog_roundtrip": _o_cog_roundtrip(),
-        "cog_compressed": _o_cog_compressed(),
-        "translate_outsize": _o_translate_outsize(),
-        "lcc_transform": _o_lcc_transform(),
-        "pansharpen": _o_pansharpen(),
-        "nearblack": _o_nearblack(),
-        "audio_features": _o_audio_features(),
-        "ogr_special_fields": _o_ogr_special_fields(),
-        "token_bpe": f"""
-SELECT doc_id,
-  cast(len(regexp_extract_all(text, '{BPE_PAT}')) as bigint) AS n_bpe,
-  cast(len(string_split(text, ' ')) as bigint) AS n_ws
-FROM documents
-""",
-        "bpe_pair_counts": """
-WITH words AS (
-  SELECT w, cast(count(*) as bigint) AS cnt FROM (
-    SELECT unnest(string_split(text, ' ')) AS w FROM documents
-  ) WHERE w <> '' GROUP BY w
-), syms AS (
-  SELECT list_append(
-           list_transform(generate_series(1, length(w)), i -> w[i:i]),
-           '</w>') AS s, cnt
-  FROM words
-), pairs AS (
-  SELECT p.l AS l, p.r AS r, cnt FROM (
-    SELECT unnest(list_transform(generate_series(1, len(s) - 1),
-                  j -> struct_pack(l := s[j], r := s[j + 1]))) AS p, cnt
-    FROM syms WHERE len(s) >= 2
-  )
-), agg AS (
-  SELECT l, r, cast(sum(cnt) as bigint) AS cnt FROM pairs GROUP BY l, r
-)
-SELECT * FROM (
-  SELECT cast(row_number() OVER (ORDER BY cnt DESC, l ASC, r ASC) as bigint)
-           AS rnk, l, r, cnt
-  FROM agg
-) WHERE rnk <= 32
-""",
-        "make_valid": _o_make_valid(),
-        "tps_transform": _o_tps_transform(),
-        "rpc_transform": _o_rpc_transform(),
-        "homography_transform": _o_homography_transform(),
-        "tile_render_sortfield": f"""{_render_win_ctes(winner="min_by")}
-SELECT cast(w.tx as int) AS tile_x, cast(w.ty as int) AS tile_y,
-       cast(b.band as int) AS band,
-       cast(sum(((w.base + b.phase) % 256) % ({_PRIMES_SQL})[((w.py * 256 + w.px) % 11) + 1]) % 65536 as int) AS checksum,
-       count(*) AS n_px
-FROM win w CROSS JOIN bands b
-GROUP BY 1, 2, 3
-""",
-        "footprint_join": _o_footprint_join(),
-        "vector_clip": _o_vector_clip(),
-        "caption_check": _o_caption_check(),
-        "events_windowed": """
-SELECT cast(cast(ts as date) as varchar) AS day,
-       cast((hour(ts) // 6) * 6 as int) AS hour6,
-       event_type,
-       count(*) AS n,
-       cast(sum(cast(round(value * 100) as bigint)) as bigint) AS sum_cents,
-       cast(count(DISTINCT user_id) as bigint) AS n_users
-FROM events GROUP BY 1, 2, 3
-""",
-        "events_sessionize": """
-WITH marked AS (
-  SELECT user_id, ts, event_id,
-    CASE WHEN lag(ts) OVER w IS NULL
-           OR date_diff('second', lag(ts) OVER w, ts) > 3600
-         THEN 1 ELSE 0 END AS new_sess
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sess AS (
-  SELECT user_id,
-    sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS sess_id
-  FROM marked
-),
-per_sess AS (
-  SELECT user_id, sess_id, count(*) AS sz FROM sess GROUP BY 1, 2
-)
-SELECT user_id, cast(count(*) as bigint) AS n_sessions,
-       cast(max(sz) as bigint) AS max_session_events
-FROM per_sess GROUP BY user_id
-""",
-        "events_props": """
-SELECT cast(cast(regexp_extract(props, '"k":\\s*(\\d+)', 1) as bigint) // 10 as int) AS k_bucket,
-       count(*) AS n,
-       cast(max(cast(regexp_extract(props, '"k":\\s*(\\d+)', 1) as bigint)) as bigint) AS k_max
-FROM events GROUP BY 1
-""",
-        "text_stats": txt_analysis.sql_token_stats(),
-        "lang_id": txt_analysis.sql_lang_id(),
-        "exact_dedup": txt_dedup.sql_exact_dups(),
-        "minhash_pairs": txt_dedup.sql_minhash_lsh_pairs(),
-        "corpus_clean": f"""
-WITH stats AS ({txt_analysis.sql_token_stats()}),
-lang AS ({txt_analysis.sql_lang_id()}),
-first_ids AS (
-  SELECT doc_id FROM (
-    SELECT doc_id, row_number() OVER (
-      PARTITION BY md5(text) ORDER BY doc_id) AS rn
-    FROM documents
-  ) WHERE rn = 1
-)
-SELECT f.doc_id, l.pred_lang, s.quality_milli, s.n_tokens
-FROM first_ids f
-JOIN stats s ON s.doc_id = f.doc_id
-JOIN lang l ON l.doc_id = f.doc_id
-WHERE s.quality_milli >= 700 AND s.n_tokens >= 10
-""",
-        "dedup_clusters": txt_dedup.sql_cluster_near_dups(),
-        "simhash": txt_dedup.sql_simhash(),
-        "simhash64": txt_dedup.sql_simhash64(),
-        "simhash_pairs": txt_dedup.sql_simhash_pairs(),
-        "phash_pairs": _o_phash_pairs(),
-        "build_area": _o_build_area(),
-        "polygonize_geom": _o_polygonize_geom(),
-        "st_normalize": _o_st_normalize(),
-        "set_precision": _o_set_precision(),
-        "line_poly_predicates": _o_line_poly_predicates(),
-        "line_line_predicates": _o_line_line_predicates(),
-        "contour_polygons": _o_contour_polygons(),
-        "datum_shift": _o_datum_shift(),
-        "bng_transform": _o_bng_transform(),
-        "ann_topk": sim.sql_cosine_topk(
-            f"vec_id % {ANN_QUERY_MOD} = 0", ANN_K
-        ),
-        "ann_lsh": sim.sql_cosine_topk(
-            f"vec_id % {ANN_QUERY_MOD} = 0", ANN_K, bucketed=True
-        ),
-        "ann_ivf": sim.sql_ivf_topk(f"vec_id % {ANN_QUERY_MOD} = 0", ANN_K),
-        "ann_lsh_ring": sim.sql_cosine_topk(
-            f"vec_id % {ANN_QUERY_MOD} = 0", ANN_K, bucketed=True, ring=1
-        ),
-        "embed_centroid": sim.sql_label_centroids(),
-        "dedup_cosine_agreement": f"""
-WITH pairs AS ({txt_dedup.sql_minhash_lsh_pairs()}),
-keep AS (SELECT * FROM pairs WHERE j_milli >= 600),
-nrm AS (
-  SELECT vec_id, embedding,
-    sqrt(list_sum(list_transform(embedding, x -> cast(x as double) * cast(x as double)))) AS norm
-  FROM embeddings
-)
-SELECT k.doc_a, k.doc_b, k.j_milli,
-  cast(floor(
-    list_sum(list_transform(list_zip(a.embedding, b.embedding),
-      p -> cast(p[1] as double) * cast(p[2] as double)))
-    / (a.norm * b.norm) * 10000) as bigint) AS cos_e4
-FROM keep k
-JOIN nrm a ON a.vec_id = k.doc_a
-JOIN nrm b ON b.vec_id = k.doc_b
-""",
-        "image_stats": _o_image_stats(),
-        "gdal_compare": _o_gdal_compare(),
-        "proj_cassini": _o_proj_cassini(),
-        "exif_strip": _o_exif_strip(),
-        "histogram_match": _o_histogram_match(),
-        "g711_audio_features": _o_g711_audio_features(),
-        "tile_render_cassini": _o_tile_render_proj(30200, CASSINI_Z),
-        "gxf_roundtrip": _o_gxf_roundtrip(),
-        "gtiff_industrial": _o_gtiff_industrial(),
-        "gtiff_codec_chunks": _o_gtiff_codec_chunks(),
-        "jp2_roundtrip": _o_jp2_roundtrip(),
-        "line_locate": _o_line_locate(),
-        "line_subline": _o_line_subline(),
-        "lineref_parts": _o_lineref_parts(),
-        "isis3_roundtrip": _o_isis3_roundtrip(),
-        "image_ssim": _o_image_ssim(),
-        "lan_roundtrip": _o_lan_roundtrip(),
-        "corpus_shuffle": _o_corpus_shuffle(),
-        "geotiff_edit": _o_geotiff_edit(),
-        "histogram": _o_histogram(),
-        "color_relief": _o_color_relief(),
-        "fillnodata": _o_fillnodata(),
-        "translate": _o_translate(),
-        "pixel_calc": _o_pixel_calc(),
-        "calc_expr": _o_calc_expr(),
-        "reclassify": _o_reclassify(),
-        "simplify_coverage": _o_simplify_coverage(),
-        "palette_map": _o_palette_map(),
-        "ogr_sql_exec": _o_ogr_sql_exec(),
-        "ogr_sql_join": _o_ogr_sql_join(),
-        "proj_laea": _o_proj_cells(3035, -60.0, 80.0, 5.0, 84.0),
-        "st_transform_sql": _o_proj_cells(3035, -60.0, 80.0, 5.0, 84.0),
-        "jpeg_exif": _o_jpeg_exif(),
-        "geotiff_georef": _o_geotiff_georef(),
-        "jp2_georef": _o_jp2_georef(),
-        "tiff_overviews": _o_tiff_overviews(),
-        "proj_cea": _o_proj_cells(6933, -180.0, 180.0, -84.0, 84.0),
-        "proj_mollweide": _o_proj_cells(
-            "ESRI:54009", -178.0, 178.0, -84.0, 84.0),
-        "proj_albers": _o_proj_cells(5070, -130.0, -60.0, 20.0, 50.0),
-        "proj_polar_stereo": _o_proj_polar_stereo(),
-        "proj_stereo_oblique": _o_proj_cells(28992, -15.0, 25.0, 35.0, 65.0),
-        "proj_sinusoidal": _o_proj_cells("ESRI:54008", -180.0, 180.0, -84.0, 84.0),
-        "proj_eqc": _o_proj_cells(4087, -180.0, 180.0, -84.0, 84.0),
-        "proj_mercator_ups": _o_proj_mercator_ups(),
-        "reproject_chain": _o_reproject_chain(),
-        "tile_render_albers": _o_tile_render_proj(5070, ALBERS_Z),
-        "tile_render_polar": _o_tile_render_proj(3031, POLAR_Z),
-        "geoloc_transform": _o_geoloc_transform(),
-        "gnm_k_shortest": _o_gnm_k_shortest(),
-        "curve_fit_back": _o_curve_fit_back(),
-        "gpx_roundtrip": _o_gpx_roundtrip(),
-        "gpx_track_points": _o_gpx_track_points(),
-        "gif_roundtrip": _o_gif_roundtrip(),
-        "mif_roundtrip": _o_shp_roundtrip(),  # same output contract
-        "dxf_roundtrip": _o_shp_roundtrip(),  # same output contract
-        "proj_homerc": _o_proj_cells(2056, -20.0, 40.0, 25.0, 65.0),
-        "proj_krovak": _o_proj_cells(5514, 5.0, 35.0, 40.0, 58.0),
-        "info_raster": _o_info_raster(),
-        "info_vector": _o_info_vector(),
-        "topojson_roundtrip": _o_shp_roundtrip(),  # same output contract
-        "spatialite_roundtrip": _o_shp_roundtrip(),  # same output contract
-        "db_scan": f"""
-SELECT * FROM ({_o_shp_roundtrip()}) t WHERE t.eas_id % 3 <> 1
-""",
-        "surface_roundtrip": _o_surface_roundtrip(),
-        "rat": _o_rat(),
-        "paletted_roundtrip": _o_paletted_roundtrip(),
-        "pmtiles_roundtrip": _o_mbtiles_roundtrip(),  # same contract
-        "raster_stack": _o_raster_stack(),
-        "sozip_roundtrip": _o_shp_roundtrip(),  # same output contract
-        "osm_roundtrip": _o_shp_roundtrip(),  # same output contract
-        "flat_raster_roundtrip": _o_flat_raster_roundtrip(),
-        "interlaced_roundtrip": _o_interlaced_roundtrip(),
-        "progressive_jpeg": _o_progressive_jpeg(),
-        "gdaltindex": _o_gdaltindex(),
-        "retile": _o_retile(),
-        "ogrtindex": _o_ogrtindex(),
-        "raster_update": _o_raster_update(),
-        "raw_fleet2": _o_raw_fleet2(),
-        "url_dedup": _o_url_dedup(),
-        "split_assign": _o_split_assign(),
-        "jp2_reduce": _o_jp2_reduce(),
-        "mrf_roundtrip": _o_mrf_roundtrip(),
-        "gpkg_tiles": _o_mbtiles_roundtrip(),
-        "gtfs": _o_gtfs(),
-        "jsonfg": _o_jsonfg(),
-        "esric": _o_mbtiles_roundtrip(),
-        "kml_superoverlay": _o_kml_superoverlay(),
-        "stacta": _o_mbtiles_roundtrip(),
-        "raw_fleet3": _o_raw_fleet3(),
-        "grib_roundtrip": _o_grib_roundtrip(),
-        "vrt_lut": _o_vrt_lut(),
-        "dted_roundtrip": _o_dted_roundtrip(),
-        "usgsdem_roundtrip": _o_usgsdem_roundtrip(),
-        "mdim_info": _o_mdim_info(),
-        "wrapdateline": _o_wrapdateline(),
-        "pds_roundtrip": _o_pds_roundtrip(),
-        "idrisi_roundtrip": _o_idrisi_roundtrip(),
-        "mvt_roundtrip": _o_mvt_roundtrip(),
-        "misc_raster_roundtrip": _o_misc_raster_roundtrip(),
-        "seq_packing": txt_analysis.sql_sequence_packing(),
-        "pgdump_roundtrip": _o_shp_roundtrip(),  # same output contract
-        "equalize": _o_equalize(),
-        "augment": _o_augment(),
-        "gmt_roundtrip": _o_shp_roundtrip(),  # same output contract
-        "jml_roundtrip": _o_shp_roundtrip(),  # same output contract
-        "arrow_roundtrip": _o_shp_roundtrip(),  # same output contract
-        "arrows_roundtrip": _o_shp_roundtrip(),  # same output contract
-        "hf2_roundtrip": _o_hf2_roundtrip(),
-        "terragen_roundtrip": _o_terragen_roundtrip(),
-        "hdr_raster_roundtrip": _o_hdr_raster_roundtrip(),
-        "bsb_roundtrip": _o_bsb_roundtrip(),
-        "sieve": _o_sieve(),
-        "vocab_topk": txt_analysis.sql_vocab_topk(),
-        "decontaminate": txt_dedup.sql_decontaminate(
-            "(SELECT * FROM documents WHERE doc_id % 13 != 0)",
-            "(SELECT * FROM documents WHERE doc_id % 13 = 0)",
-        ),
-        "tile_tree_roundtrip": _o_mbtiles_roundtrip(),  # same contract
-        "vrt_roundtrip": _o_vrt_roundtrip(),
-        "ngram_jaccard": txt_dedup.sql_ngram_jaccard_pairs(),
-        "dup_spans": txt_dedup.sql_duplicate_spans(),
-        "kmeans_train": sim.sql_kmeans_lloyd(),
-        "semdedup": sim.sql_semdedup(src=_cosdup_src_sql()),
-        "repetition_quality": txt_analysis.sql_repetition_signals(),
-        "cosine_dedup": sim.sql_cosine_dedup_pairs(src=_cosdup_src_sql()),
-        "zarr_roundtrip": f"""
-WITH {_MDIM_CUBE_CTE}
-SELECT t, min(value) AS vmin, max(value) AS vmax,
-       cast(sum(value) as bigint) AS vsum, count(*) AS n
-FROM cube GROUP BY t
-""",
-        "netcdf_roundtrip": f"""
-WITH {_MDIM_CUBE_CTE}
-SELECT t, min(value) AS vmin, max(value) AS vmax,
-       cast(sum(value) as bigint) AS vsum, count(*) AS n
-FROM cube GROUP BY t
-""",
-        "hdf5_roundtrip": f"""
-WITH {_MDIM_CUBE_CTE}
-SELECT t, min(value) AS vmin, max(value) AS vmax,
-       cast(sum(value) as bigint) AS vsum, count(*) AS n
-FROM cube GROUP BY t
-""",
-        "netcdf4_roundtrip": f"""
-WITH {_MDIM_CUBE_CTE}
-SELECT t, min(value) AS vmin, max(value) AS vmax,
-       cast(sum(value) as bigint) AS vsum, count(*) AS n
-FROM cube GROUP BY t
-""",
-        "zonal_stats": _o_zonal_stats(),
-        "interpolate_point": _o_interpolate_point(),
-        "geom_measures": _o_geom_measures(),
-        "geodesic_measures": _o_geodesic_measures(),
-        "geodesic_ellipsoid": _o_geodesic_ellipsoid(),
-        "dem_metrics": _o_dem_metrics(),
-        "overview_mode": _o_overview_mode(),
-        "overview_rms": _o_overview_rms(),
-        "overview_gauss": _o_overview_gauss(),
-        "raster_attribute_table": """
-SELECT cast((s % 512) // 128 as int) AS value, count(*) AS n_px
-FROM (
-  SELECT (3 * (t.tx * 256 + gx.x) + 5 * (t.ty * 256 + gy.y)) AS s
-  FROM (VALUES (0, 0), (1, 0), (0, 1), (1, 1)) AS t(tx, ty),
-       range(0, 256) AS gx(x), range(0, 256) AS gy(y)
-) GROUP BY 1
-""",
-        "events_zscore": """
-WITH scored AS (
-  SELECT event_id, event_type,
-    (value - avg(value) OVER w) / stddev_samp(value) OVER w AS z
-  FROM events
-  WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id
-               ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING)
-)
-SELECT event_id, event_type,
-  cast(floor(z * 1000) as bigint) AS z_e3
-FROM scored WHERE z IS NOT NULL AND abs(z) >= 2.0
-  AND abs(z * 1000 - round(z * 1000)) > cast('0.0001' as double)
-""",
-        "polygonize": _o_polygonize(),
-        "dissolve": _o_dissolve(),
-        "footprint": _o_footprint(),
-        "grid_interp": _o_grid_interp(),
-        "grid_invdistnn": _o_grid_invdistnn(),
-        "gpkg_roundtrip": _o_gpkg_roundtrip(),
-        "shp_roundtrip": _o_shp_roundtrip(),
-        "geojsonseq_roundtrip": _o_shp_roundtrip(),  # same output contract
-        "fgb_roundtrip": _o_shp_roundtrip(),  # same output contract
-        "csv_roundtrip": _o_shp_roundtrip(),  # same output contract
-        "geojson_roundtrip": _o_shp_roundtrip(),  # same output contract
-        "kml_roundtrip": _o_shp_roundtrip(),  # same output contract
-        "geoparquet_roundtrip": _o_shp_roundtrip(),  # same output contract
-        "gml_roundtrip": _o_shp_roundtrip(),  # same output contract
-        "proximity": _o_proximity(),
-        "contour_cells": _o_contour_cells(),
-        "rasterize_count": _o_rasterize_count(),
-        "rasterize_tile_add": _o_rasterize_tile_add(),
-        "rasterize_tile_checksum": _o_rasterize_tile_checksum(),
-        "tile_assign": _o_tile_assign(),
-        "tile_counts": _o_tile_counts(),
-        "quadkey": _o_quadkey(),
-        "s2_cell": _o_s2_cell(),
-        "hillshade_modes": _o_hillshade_modes(),
-        "mbtiles_roundtrip": _o_mbtiles_roundtrip(),
-        "warp_cutline": _o_warp_cutline(),
-        "gnm_shortest_path": _o_gnm_shortest_path(),
-        "s2_cell_counts": _o_s2_cell_counts(),
-        "pip_join": _o_pip_join(),
-        "knn": _o_knn(),
-        "knn_perk": _o_knn_perk(),
-        "ogr_summary": """
-SELECT count(*) AS cnt,
-       round(sum(l_quantity), 2) AS sum_qty,
-       min(l_shipdate) AS min_ship,
-       max(l_shipdate) AS max_ship,
-       round(avg(l_extendedprice), 4) AS avg_price,
-       round(stddev_pop(l_discount), 6) AS std_disc,
-       count(DISTINCT l_returnflag) AS n_flags
-FROM lineitem
-""",
-        "ogr_distinct": "SELECT DISTINCT c_mktsegment AS mktsegment FROM customer",
-        "ogr_first_match_join": """
-WITH first_li AS (
-  SELECT l_orderkey, l_partkey, l_quantity,
-         row_number() OVER (
-           PARTITION BY l_orderkey
-           ORDER BY l_linenumber, l_partkey, l_suppkey
-         ) AS rn
-  FROM lineitem
-)
-SELECT o.o_orderkey, f.l_partkey AS first_partkey,
-       round(f.l_quantity, 2) AS first_qty
-FROM orders o LEFT JOIN first_li f
-  ON o.o_orderkey = f.l_orderkey AND f.rn = 1
-""",
-        "ogr_where_orderby_limit": """
-SELECT p_partkey, p_name, round(p_retailprice, 2) AS price
-FROM part
-WHERE p_size BETWEEN 10 AND 20
-ORDER BY p_retailprice DESC, p_partkey ASC
-LIMIT 50 OFFSET 10
-""",
-        "ogr_count_star": "SELECT count(*) AS cnt FROM lineitem",
-        "ogr_ilike_exclude": """
-SELECT * EXCLUDE (c_acctbal, c_nationkey)
-FROM customer WHERE c_mktsegment ILIKE '%build%'
-""",
-        "events_quantiles": """
-SELECT event_type,
-  cast(floor(quantile_cont(value, 0.5) * 100) as bigint) AS p50_cents,
-  cast(floor(quantile_cont(value, 0.9) * 100) as bigint) AS p90_cents,
-  count(*) AS n
-FROM events GROUP BY event_type
-""",
-        "ogr_union_all": """
-SELECT c_name AS name, 'customer' AS src FROM customer WHERE c_custkey % 100 = 0
-UNION ALL
-SELECT s_name AS name, 'supplier' AS src FROM supplier WHERE s_suppkey % 10 = 0
-""",
-        "ogr_scalar_ops": """
-SELECT o_orderkey,
-       o_orderstatus || '-' || substr(o_orderpriority, 1, 8) AS status_prio,
-       cast(floor(o_totalprice) as bigint) AS price_int
-FROM orders
-WHERE o_orderstatus IN ('F', 'O')
-  AND o_orderpriority LIKE '1%'
-  AND o_totalprice BETWEEN 1000.0 AND 100000.0
-""",
-    }
+    g = globals()
+    return {n: g[f"_o_{n}"]() for n in _ORDER if f"_o_{n}" in g}

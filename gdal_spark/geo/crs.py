@@ -86,10 +86,6 @@ def _cosh(x: str) -> str:
     return f"((exp({x}) + exp(-({x}))) / 2.0)"
 
 
-def _atanh(x: str) -> str:
-    return f"(ln((1.0 + ({x})) / (1.0 - ({x}))) / 2.0)"
-
-
 def sql_utm_inverse(easting: str, northing: str, zone: int) -> tuple[str, str]:
     """(lon_deg, lat_deg) SQL expressions; mirrors utm_inverse."""
     xi = f"(({northing}) / {_d(K0 * _A)})"

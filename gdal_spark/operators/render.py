@@ -59,7 +59,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, GroupedData
+from pyspark.sql import DataFrame, GroupedData, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 

@@ -254,15 +254,6 @@ _IVF_LCG_A = 48271
 _IVF_LCG_M = 2147483647
 
 
-def _ivf_centroid_component(c: int, d: int) -> float:
-    """Deterministic coarse-quantizer centroid component in [-0.25,
-    0.25): an LCG over (cell, dim) — a stand-in for trained k-means
-    that keeps the assignment SQL-expressible (training is an
-    offline concern; the OPERATOR contract is assign + probe)."""
-    v = (_IVF_LCG_A * (c * 4096 + d) + 12345) % _IVF_LCG_M
-    return (v / _IVF_LCG_M - 0.5) / 2.0
-
-
 def _spark_ivf_dist2(vec: str, c: int) -> str:
     """SQL text: squared distance of `vec` to centroid c (quantized
     coords, exact integer math like the sign-LSH path)."""

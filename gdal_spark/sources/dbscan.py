@@ -76,12 +76,6 @@ def _connect(url: str):
         "environment; server engines plug in at this connect() seam)")
 
 
-def _connect_rw(url: str):
-    if url.startswith("sqlite:///"):
-        return sqlite3.connect(url[len("sqlite:///"):])
-    raise ValueError(f"db: no driver for {url!r}")
-
-
 def read_db(
     spark: SparkSession,
     url: str,

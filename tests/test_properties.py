@@ -1,5 +1,8 @@
 """Property-based tests (hypothesis) — the engine's analog of the
-reference's fuzzer harnesses (autotest fuzzers/, test_random_tiff.py)."""
+reference's fuzzer harnesses (autotest fuzzers/, test_random_tiff.py):
+geometry, tiling and checksum kernels; the reclassify, ASCII grid, AVI,
+hex cell and calc kernels; the GIF LZW, SOZip, BMP, ENVI, PMTiles tile
+id and MID quoting codecs."""
 
 import math
 
@@ -10,7 +13,20 @@ from hypothesis import strategies as st
 from gdal_spark.geo import ops
 from gdal_spark.geo.wkb import parse_wkb, wkb_linestring, wkb_point, wkb_polygon
 from gdal_spark.geo.wkt import from_wkt, to_wkt
+from gdal_spark.operators.calc import compile_calc
+from gdal_spark.raster.asciigrid import (
+    decode_aaigrid, decode_xyz, encode_aaigrid, encode_xyz,
+)
+from gdal_spark.raster.avi import decode_avi, encode_avi
+from gdal_spark.raster.bmp import decode_bmp, encode_bmp
 from gdal_spark.raster.checksum import gdal_checksum
+from gdal_spark.raster.envi import decode_envi, encode_envi
+from gdal_spark.raster.gif import decode_gif, encode_gif, lzw_decode, lzw_encode
+from gdal_spark.raster.reclassify import parse_mapping
+from gdal_spark.sources.mif import _split_mid_line
+from gdal_spark.sources.pmtiles import tileid_to_zxy, zxy_to_tileid
+from gdal_spark.sources.sozip import sozip_index, write_sozip
+from gdal_spark.tiles import hexcell as hx
 from gdal_spark.tiles import tilemath as tm
 
 coords = st.floats(
@@ -262,3 +278,208 @@ def test_make_valid_bowtie_property(fid):
     areas = sorted(abs(ring_area(p[0])) for p in polys)
     assert abs(areas[0] - w * h / 4) < 1e-9
     assert abs(areas[1] - w * h / 4) < 1e-9
+
+
+@given(
+    st.lists(
+        st.tuples(st.integers(0, 200), st.integers(1, 30),
+                  st.integers(-100, 100)),
+        min_size=1, max_size=6,
+    ),
+    st.lists(st.floats(-50, 250, allow_nan=False), min_size=1, max_size=40),
+)
+@settings(max_examples=60, deadline=None)
+def test_reclassify_matches_scalar_walk(raw_intervals, values):
+    """Vectorized apply == per-value linear scan over the parsed
+    intervals (non-overlapping by construction)."""
+    spans = []
+    cursor = -300.0
+    for gap, width, dst in raw_intervals:
+        lo = cursor + gap + 1
+        hi = lo + width
+        spans.append((lo, hi, dst))
+        cursor = hi
+    text = ";".join(f"[{lo},{hi}]={dst}" for lo, hi, dst in spans)
+    rc = parse_mapping(text + ";DEFAULT=-999")
+    got = rc.apply(np.array(values))
+    for v, g in zip(values, got):
+        want = -999.0
+        for lo, hi, dst in spans:
+            if lo <= v <= hi:
+                want = float(dst)
+                break
+        assert g == want, (v, text)
+
+
+@given(
+    st.integers(2, 12), st.integers(2, 12),
+    st.integers(-1000, 1000), st.integers(-1000, 1000), st.integers(1, 9),
+)
+@settings(max_examples=40, deadline=None)
+def test_aaigrid_xyz_roundtrip_random_grids(h, w, xll, yll, cell):
+    rng = np.random.default_rng(h * 1000 + w)
+    arr = rng.integers(-500, 500, (h, w)).astype(np.float64)
+    back, geo = decode_aaigrid(
+        encode_aaigrid(arr, xll, yll, cell, center=bool(xll % 2))
+    )
+    np.testing.assert_array_equal(back, arr)
+    back2, _ = decode_xyz(
+        encode_xyz(back, geo["x0"], geo["y0"], geo["dx"], geo["dy"],
+                   sep="," if w % 2 else " ")
+    )
+    np.testing.assert_array_equal(back2, arr)
+
+
+@given(st.integers(1, 6), st.integers(2, 10), st.integers(2, 10))
+@settings(max_examples=30, deadline=None)
+def test_avi_roundtrip_random_dims(n, h, w):
+    rng = np.random.default_rng(n * 100 + h * 10 + w)
+    frames = rng.integers(0, 256, (n, h, w, 3)).astype(np.uint8)
+    out, fps = decode_avi(encode_avi(frames, fps=12))
+    assert fps == 12
+    np.testing.assert_array_equal(out, frames)
+
+
+@given(
+    st.floats(-85, 85, allow_nan=False),
+    st.floats(-180, 180, allow_nan=False),
+    st.integers(1, 12),
+)
+@settings(max_examples=60, deadline=None)
+def test_hex_parent_is_coarser_and_nearby(lat, lon, res):
+    """parent(cell) contains-ish: the coarse cell of the point and the
+    parent of its fine cell have centers within 2 coarse cell sizes
+    (geometric aperture-7 reparenting can differ by one step, never
+    drift)."""
+    fine = hx.encode(np.array([lat]), np.array([lon]), res)
+    par = hx.parent(fine, res - 1)
+    direct = hx.encode(np.array([lat]), np.array([lon]), res - 1)
+    la1, lo1 = hx.cell_center(par)
+    la2, lo2 = hx.cell_center(direct)
+    s, _, _ = hx._res_params(res - 1)
+    # compare on the unit sphere via chord distance
+    def xyz(la, lo):
+        la, lo = np.radians(la), np.radians(lo)
+        return np.stack(
+            [np.cos(la) * np.cos(lo), np.cos(la) * np.sin(lo), np.sin(la)],
+            axis=-1,
+        )
+    chord = np.linalg.norm(xyz(la1, lo1) - xyz(la2, lo2))
+    assert chord < 4.0 * s
+
+
+@given(st.integers(0, 255), st.integers(0, 255), st.integers(0, 255))
+@settings(max_examples=60, deadline=None)
+def test_calc_scalar_semantics(a, b, c):
+    bands = {
+        "A": np.array([[a]], dtype=np.int64),
+        "B": np.array([[b]], dtype=np.int64),
+        "C": np.array([[c]], dtype=np.int64),
+    }
+    expr = "where(A > B, A - B, B - A) + minimum(B, C) % 7"
+    got = compile_calc(expr)(bands)[0, 0]
+    assert got == abs(a - b) + min(b, c) % 7
+
+
+@given(st.integers(2, 8), st.lists(st.integers(0, 255), min_size=1,
+                                   max_size=3000))
+@settings(max_examples=40, deadline=None)
+def test_lzw_roundtrip_any_stream(mcs, vals):
+    data = np.asarray([v % (1 << mcs) for v in vals], dtype=np.uint8)
+    assert np.array_equal(lzw_decode(lzw_encode(data, mcs), mcs,
+                                     len(data)), data)
+
+
+@given(st.integers(1, 40), st.integers(1, 40), st.integers(2, 256),
+       st.booleans(), st.integers(0, 2 ** 31))
+@settings(max_examples=40, deadline=None)
+def test_gif_roundtrip_any_image(h, w, ncol, interlace, seed):
+    rng = np.random.default_rng(seed)
+    idx = rng.integers(0, ncol, size=(h, w)).astype(np.uint8)
+    pal = rng.integers(0, 256, size=(ncol, 3)).astype(np.uint8)
+    i2, p2, _ = decode_gif(encode_gif(idx, pal, interlace=interlace))
+    assert np.array_equal(i2, idx)
+    assert np.array_equal(p2[:ncol], pal)
+
+
+@given(st.integers(1, 20), st.integers(1, 20), st.integers(0, 2 ** 31))
+@settings(max_examples=40, deadline=None)
+def test_bmp_roundtrip_any_shape(h, w, seed):
+    rng = np.random.default_rng(seed)
+    arr = rng.integers(0, 256, size=(h, w, 3)).astype(np.uint8)
+    assert np.array_equal(decode_bmp(encode_bmp(arr)), arr)
+
+
+@given(st.sampled_from(["bsq", "bil", "bip"]),
+       st.integers(1, 12), st.integers(1, 12), st.integers(1, 4),
+       st.integers(0, 2 ** 31))
+@settings(max_examples=40, deadline=None)
+def test_envi_roundtrip_any_layout(il, h, w, b, seed):
+    rng = np.random.default_rng(seed)
+    arr = rng.integers(0, 255, size=(h, w, b)).astype(np.uint8)
+    back, _ = decode_envi(*encode_envi(arr, interleave=il))
+    assert np.array_equal(back, arr)
+
+
+@given(st.integers(0, 14), st.integers(0, 2 ** 31), st.integers(0, 2 ** 31))
+@settings(max_examples=80, deadline=None)
+def test_pmtiles_tileid_bijection(z, xs, ys):
+    x = xs % (1 << z)
+    y = ys % (1 << z)
+    assert tileid_to_zxy(zxy_to_tileid(z, x, y)) == (z, x, y)
+
+
+@given(st.lists(
+    st.one_of(st.none(),
+              st.text(alphabet='ab",\\ ', min_size=0, max_size=8),
+              st.integers(-999, 999)),
+    min_size=1, max_size=6,
+))
+@settings(max_examples=60, deadline=None)
+def test_mid_quoting_roundtrip(vals):
+    """The MID writer's quoting rules invert through _split_mid_line."""
+    toks = []
+    for v in vals:
+        if v is None:
+            toks.append("")
+        elif isinstance(v, str):
+            toks.append('"' + v.replace('"', '""') + '"')
+        else:
+            toks.append(str(v))
+    line = ",".join(toks)
+    got = _split_mid_line(line, ",")
+    assert len(got) == len(vals)
+    for g, v in zip(got, vals):
+        if v is None:
+            assert g is None
+        elif isinstance(v, str):
+            assert g == v
+        else:
+            assert g == str(v)
+
+
+@given(st.lists(st.text(alphabet="abcxyz 0123", min_size=0, max_size=60),
+                min_size=1, max_size=60),
+       st.integers(8, 200))
+@settings(max_examples=25, deadline=None)
+def test_sozip_chunk_independence(lines, chunk_size):
+    """Every chunk inflates independently to its exact byte slice,
+    whatever the chunking (the distributed-scan precondition)."""
+    import tempfile
+    import zlib
+
+    text = "".join(ln + "\n" for ln in lines)
+    data = text.encode()
+    with tempfile.NamedTemporaryFile(suffix=".zip") as f:
+        write_sozip(f.name, "m.txt", data, chunk_size=chunk_size)
+        cs, us, csz, offs, ds = sozip_index(f.name, "m.txt")
+        blob = open(f.name, "rb").read()
+    assert us == len(data)
+    bounds = offs + [csz]
+    rec = b""
+    for i in range(len(offs)):
+        part = zlib.decompressobj(-15).decompress(
+            blob[ds + bounds[i]:ds + bounds[i + 1]])
+        assert part == data[i * cs:(i + 1) * cs]
+        rec += part
+    assert rec == data

@@ -22,6 +22,12 @@ TABLES = [
     "lineitem", "events", "documents", "embeddings",
 ]
 
+# queries checked on row count only, with no DuckDB oracle.
+# bpe_train is iterative (merge k depends on merge k-1): its value
+# truth is tests/test_bpe.py's differential suite plus the oracled
+# bpe_pair_counts twin of its corpus-scale stage.
+ROWS_ONLY = frozenset({"bpe_train"})
+
 # freshness ledger: preflight asserts every registered query has a
 # recent green row here (VERDICT r3 ask #10 — re-verification drift)
 CACHE_PATH = os.path.join(

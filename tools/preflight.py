@@ -70,16 +70,14 @@ def main() -> None:
 
     import __spark_entry__ as entry
 
+    from check_oracles import ROWS_ONLY, load_cache
+
     qs = entry.queries()
     oracles = entry.oracle_sql()
-    # rows-only exceptions mirror tests/test_entry_contract.py
-    rows_only = {"bpe_train"}
-    missing = [n for n in qs if n not in oracles and n not in rows_only]
+    missing = [n for n in qs if n not in oracles and n not in ROWS_ONLY]
     assert not missing, f"queries without oracles: {missing}"
     print(f"[ok] contract: {len(qs)} queries, all oracle-backed "
-          f"({len(rows_only)} documented rows-only)")
-
-    from check_oracles import load_cache
+          f"({len(ROWS_ONLY)} documented rows-only)")
 
     cache = load_cache()
     cutoff = time.time() - FRESH_DAYS * 86400
