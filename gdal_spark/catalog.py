@@ -52,12 +52,18 @@ class ParquetCatalog:
         return os.path.join(self.warehouse, *ident.split("."))
 
     def read(self, ident: str) -> DataFrame | None:
+        """The committed table, or None when nothing is committed: no
+        table directory, or only `_`/`.`-prefixed entries in it (the
+        snapshot log, a failed write's `_temporary`). That is decided
+        without Spark; any error reading a committed table raises."""
+        path = self._path(ident)
         try:
-            df = self.spark.read.parquet(self._path(ident))
-            _ = df.schema
-            return df
-        except Exception:
+            names = os.listdir(path)
+        except FileNotFoundError:
             return None
+        if all(n.startswith(("_", ".")) for n in names):
+            return None
+        return self.spark.read.parquet(path)
 
     def append(self, df: DataFrame, ident: str) -> str:
         path = self._path(ident)

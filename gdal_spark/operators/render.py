@@ -4,10 +4,11 @@ and overview-pyramid construction.
 Pipeline shape (SURVEY.md §2.10, §3.3; apps/gdalalg_raster_tile.cpp):
 
   images -> covering tiles (Column math)        -- no UDF, no shuffle
-         -> groupBy(tile_x, tile_y)             -- the ONE shuffle
-         -> applyInPandas warp+composite        -- 256x256 buffers
+         -> repartition(n, tile_x, tile_y)      -- the ONE shuffle
+         -> sortWithinPartitions(tile, i)       -- sources together, paint order
+         -> mapInPandas warp+composite          -- one call per partition
          -> tiles table (checksum / png bytes)
-  z-1 pass: groupBy(parent tile) of 4 children -> 2x2 average
+  z-1 pass: the same stage keyed by parent tile, 4 children -> 2x2 average
 
 One warp kernel, as the reference has one (GDALWarpKernel fed by the
 GenImgProj transformer chain, SURVEY.md §3.2): `render_tiles` takes a
@@ -36,30 +37,37 @@ tile), but it is Python work: decode, warp and checksum cost
 milliseconds per row while the row itself is a few KiB of payload or
 one 64 KiB band plane. AQE sizes coalesced shuffle partitions by
 bytes (max(1 MiB, shuffle bytes / defaultParallelism)), so a level
-whose shuffle is under 1 MiB becomes ONE task and one core renders
-it while the rest idle; larger levels are cut by bytes, not work. Every tile-keyed applyInPandas here therefore
-groups through `_tile_groups`, an explicit hash repartition on the
-tile keys: AQE never coalesces a repartition-by-number, and the hash
-partitioning already satisfies the groupBy, so it is still the ONE
-shuffle. The count is one partition per core, raised to one per
-PAIRS_PER_TASK covering pairs when the caller knows the level's size
-(build_pyramid counts it): small levels run best as a single wave
-(two and three tasks per core measured 14% and 30% slower on a
-14-image pyramid, and no faster on 300 images), while large levels
-need more, smaller tasks for load balance and for committed files
-whose row groups a reader can hold. Hot tiles (many overlapping
-images) remain the skew axis. The z-1 overview pass
-shuffles only rendered band planes, grouped 4->1 per level,
-mirroring the reference's per-level barrier.
+whose shuffle is under 1 MiB would become ONE task on one core. Every
+tile stage therefore runs through `_tile_stage`, an explicit hash
+repartition on the tile keys (AQE never coalesces a repartition-by-
+number) into one partition per core, raised to one per PAIRS_PER_TASK
+covering pairs when the caller knows the level's size (build_pyramid
+counts it): small levels run best as a single wave (two and three
+tasks per core measured 14% and 30% slower on a 14-image pyramid, and
+no faster on 300 images), while large levels need more, smaller tasks
+for load balance and for committed files whose row groups a reader can
+hold. Hot tiles (many overlapping images) remain the skew axis.
+
+Each sorted partition goes through ONE mapInPandas call, which cuts
+its Arrow batches back into whole groups (`_whole_groups`). A grouped
+applyInPandas pays the Python boundary once per group instead: on 4
+vCPUs the benchmark pyramid's two overview levels (72 + 51 groups, a
+few ms of numpy each) took 0.89 s that way against 0.63 s per
+partition (traced, seed 0). `render_tiles(decode_payload=True)` also
+decodes each payload once per Arrow batch, not per covering tile (42
+-> 25 decodes per benchmark rep). A per-image fragment stage would
+drop the remaining repeats but add a second Python stage, whose fixed
+per-task cost is about what those repeats cost at this size.
 """
 
 from __future__ import annotations
 
+from collections import Counter
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, GroupedData, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -105,14 +113,44 @@ PROJ_RENDER = {
 PAIRS_PER_TASK = 256
 
 
-def _tile_groups(df: DataFrame, keys: tuple[str, ...] = ("tile_x", "tile_y"),
-                 extra: tuple[str, ...] = (), pairs: int = 0) -> GroupedData:
-    """Group `df` by keys + extra, hash-partitioned on `keys` into one
-    partition per core, or one per PAIRS_PER_TASK of the level's
-    expected `pairs` if that is more (see Scale notes)."""
+def _tile_stage(df: DataFrame, body, schema: T.StructType | str,
+                keys: tuple[str, ...] = ("tile_x", "tile_y"), extra: tuple[str, ...] = (),
+                order: tuple = (), pairs: int = 0, on_batch=None) -> DataFrame:
+    """body(key, rows) -> DataFrame per keys + extra group of `df`, one
+    Python call per partition: hash-partitioned on `keys` into one
+    partition per core, or per PAIRS_PER_TASK of `pairs` if more (see
+    Scale notes), and sorted by the group columns, then `order` (paint
+    order). `on_batch` sees each input batch first."""
     cores = df.sparkSession.sparkContext.defaultParallelism
     n = max(cores, -(-pairs // PAIRS_PER_TASK))
-    return df.repartition(n, *keys).groupBy(*keys, *extra)
+    group = (*keys, *extra)
+
+    def tile_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for key, rows in _whole_groups(map(on_batch or (lambda b: b), batches), group):
+            yield body(key, rows)
+
+    return (df.repartition(n, *keys).sortWithinPartitions(*group, *order)
+            .mapInPandas(tile_stage, schema))
+
+
+def _whole_groups(batches: Iterator[pd.DataFrame], keys: tuple[str, ...]
+                  ) -> Iterator[tuple[tuple, pd.DataFrame]]:
+    """(key, rows) for each group of `batches` sorted by `keys`, in
+    order. A batch's last group may go on in the next batch, so it is
+    carried over: every group comes out once and whole."""
+    carry = None
+    for pdf in batches:
+        if carry is not None:
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+        if pdf.empty:
+            continue
+        k = pdf[list(keys)].to_numpy()
+        *whole, last = np.flatnonzero(np.r_[True, (k[1:] != k[:-1]).any(axis=1)]).tolist()
+        for a, b in zip(whole, [*whole[1:], last]):
+            yield tuple(k[a].tolist()), pdf.iloc[a:b]
+        carry, carry_key = pdf.iloc[last:], tuple(k[last].tolist())
+    if carry is not None:
+        yield carry_key, carry
 
 
 def covering_tiles(images: DataFrame, z: int) -> DataFrame:
@@ -202,21 +240,43 @@ def _covering_sources(images: DataFrame, z: int, crs: int,
     )
 
 
-def _paint_sources(pdf: pd.DataFrame, paint, decode_payload: bool = False,
-                   ascending: bool = True) -> int:
-    """The composite loop: paint(row, pixels) -> covered mask for one
-    tile's sources by image id (the last painted wins); returns the
-    covered pixel count. Pixels: the decoded `bytes` payload, or
-    georef.np_image_pixels."""
-    covered = np.zeros((TILE, TILE), dtype=bool)
-    for _, row in pdf.sort_values("i", ascending=ascending).iterrows():
-        if decode_payload:
-            from gdal_spark.raster.codecs import decode_image
+def _formula_pixels(row: pd.Series) -> np.ndarray:
+    return georef.np_image_pixels(int(row["i"]), int(row["w"]), int(row["h"]))
 
-            src = decode_image(bytes(row["bytes"]), str(row["fmt"]))
-        else:
-            src = georef.np_image_pixels(int(row["i"]), int(row["w"]), int(row["h"]))
-        covered |= paint(row, src)
+
+class _Decoded:
+    """row -> its decoded `bytes` payload. `expect` counts each arriving
+    batch's rows per image; an image is decoded at its first row and
+    dropped after its last, so a task holds at most one batch's images."""
+
+    def __init__(self):
+        self.left: Counter = Counter()
+        self.images: dict[int, np.ndarray] = {}
+
+    def expect(self, pdf: pd.DataFrame) -> pd.DataFrame:
+        self.left.update(pdf["i"].tolist())
+        return pdf
+
+    def __call__(self, row: pd.Series) -> np.ndarray:
+        from gdal_spark.raster.codecs import decode_image
+
+        i = int(row["i"])
+        src = self.images.get(i)
+        if src is None:
+            src = self.images[i] = decode_image(bytes(row["bytes"]), str(row["fmt"]))
+        self.left[i] -= 1
+        if self.left[i] <= 0:
+            del self.left[i], self.images[i]
+        return src
+
+
+def _paint_sources(pdf: pd.DataFrame, paint, pixels=_formula_pixels) -> int:
+    """The composite loop: paint(row, pixels(row)) -> covered mask for
+    one tile's sources, which arrive in paint order (the last painted
+    wins); returns the covered pixel count."""
+    covered = np.zeros((TILE, TILE), dtype=bool)
+    for _, row in pdf.iterrows():
+        covered |= paint(row, pixels(row))
     return int(covered.sum())
 
 
@@ -268,6 +328,11 @@ def _band_schema(*extra: T.StructField, with_data: bool = False) -> T.StructType
     if with_data:
         fields.append(T.StructField("data", T.BinaryType()))
     return T.StructType(fields)
+
+
+# a pyramid level's rows, as overview_tiles(with_data=True) emits them
+# and build_pyramid reads a committed level back
+_LEVEL = "tile_x int, tile_y int, band int, checksum int, data binary"
 
 
 def _band_records(tx: int, ty: int, planes: np.ndarray, n_px: int,
@@ -345,13 +410,16 @@ def render_tiles(
             buf[mask] = vals[mask]
             return mask
 
-        n_px = _paint_sources(pdf, paint, decode_payload, ascending)
+        n_px = _paint_sources(pdf, paint, pixels)
         recs = _band_records(tx, ty, buf, n_px, with_data)
         return pd.DataFrame(recs, columns=schema.fieldNames())
 
+    pixels = _Decoded() if decode_payload else _formula_pixels
     extra = ("bytes", "fmt") if decode_payload else ()
     tiles = _covering_sources(images, z, crs, extra)
-    return _tile_groups(tiles, pairs=pairs).applyInPandas(composite, schema)
+    return _tile_stage(tiles, composite, schema, pairs=pairs,
+                       order=(F.col("i").asc() if ascending else F.col("i").desc(),),
+                       on_batch=pixels.expect if decode_payload else None)
 
 
 def render_tiles_stats(
@@ -388,9 +456,8 @@ def render_tiles_stats(
             recs += _band_records(tx, ty, planes, n_px, stat=s)
         return pd.DataFrame(recs, columns=schema.fieldNames())
 
-    return _tile_groups(_covering_sources(images, z, WEBMERC)).applyInPandas(
-        composite, schema
-    )
+    return _tile_stage(_covering_sources(images, z, WEBMERC), composite, schema,
+                       order=("i",))
 
 
 def encode_tiles(
@@ -411,15 +478,7 @@ def encode_tiles(
     if convention not in ("xyz", "tms"):
         raise ValueError(f"unknown tile y convention: {convention}")
     ext = {"png": "png", "jpeg": "jpg", "webp": "webp", "gtiff": "tif"}[fmt]
-    out_schema = T.StructType(
-        [
-            T.StructField("tile_z", T.IntegerType()),
-            T.StructField("tile_x", T.IntegerType()),
-            T.StructField("tile_y", T.IntegerType()),
-            T.StructField("path", T.StringType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
+    out_schema = "tile_z int, tile_x int, tile_y int, path string, payload binary"
 
     def encode(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         from gdal_spark.raster.codecs import encode_image
@@ -444,17 +503,10 @@ def encode_tiles(
             payload = encode_tiff(arr, geo=(gt, 3857))
         else:
             payload = encode_image(arr, fmt, quality=quality)
-        return pd.DataFrame(
-            [
-                {
-                    "tile_z": z, "tile_x": tx, "tile_y": ty,
-                    "path": f"{z}/{tx}/{file_y}.{ext}",
-                    "payload": payload,
-                }
-            ]
-        )
+        return pd.DataFrame([{"tile_z": z, "tile_x": tx, "tile_y": ty,
+                              "path": f"{z}/{tx}/{file_y}.{ext}", "payload": payload}])
 
-    return _tile_groups(tiles).applyInPandas(encode, out_schema)
+    return _tile_stage(tiles, encode, out_schema)
 
 
 def write_tile_tree(tiles: DataFrame, out_dir: str,
@@ -580,9 +632,7 @@ def build_pyramid(
                 spark, f"{out_dir}/z={z}", keys=["tile_x", "tile_y", "band"]
             )
             writer.run(current)
-            current = spark.read.parquet(f"{out_dir}/z={z}").select(
-                "tile_x", "tile_y", "band", "checksum", "data"
-            )
+            current = spark.read.schema(_LEVEL).parquet(f"{out_dir}/z={z}")
         levels[z] = current
         if z > z_min:
             current = overview_tiles(current, with_data=True, pairs=pairs)
@@ -601,15 +651,7 @@ def overview_tiles(tiles: DataFrame, with_data: bool = False,
     z_max -> z_min is the reference's per-level loop (:3080). `pairs`
     sizes the shuffle as in render_tiles.
     """
-    fields = [
-        T.StructField("tile_x", T.IntegerType()),
-        T.StructField("tile_y", T.IntegerType()),
-        T.StructField("band", T.IntegerType()),
-        T.StructField("checksum", T.IntegerType()),
-    ]
-    if with_data:
-        fields.append(T.StructField("data", T.BinaryType()))
-    schema = T.StructType(fields)
+    schema = _LEVEL if with_data else _LEVEL.removesuffix(", data binary")
 
     def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         ptx, pty, band = int(key[0]), int(key[1]), int(key[2])
@@ -633,6 +675,4 @@ def overview_tiles(tiles: DataFrame, with_data: bool = False,
     children = tiles.withColumn(
         "ptx", (F.col("tile_x") / 2).cast("int")
     ).withColumn("pty", (F.col("tile_y") / 2).cast("int"))
-    return _tile_groups(children, ("ptx", "pty"), ("band",), pairs).applyInPandas(
-        build, schema
-    )
+    return _tile_stage(children, build, schema, ("ptx", "pty"), ("band",), pairs=pairs)

@@ -332,17 +332,132 @@ def test_tile_stages_grow_past_one_partition_per_core(spark, monkeypatch):
 
 
 def test_tile_stages_shuffle_once_per_group(spark):
-    """The per-core repartition is the groupBy's own exchange, not an
-    extra one: one shuffle exchange per FlatMapGroupsInPandas (the
-    payload fixture's broadcast exchange is not a shuffle)."""
+    """The per-core repartition is each tile stage's one shuffle, with a
+    partition-local Sort between it and the stage's MapInPandas: one
+    shuffle exchange per tile stage (the payload fixture's broadcast
+    exchange is not a shuffle, and the crs path's _suggest_bbox
+    MapInPandas is not a tile stage)."""
     cores = spark.sparkContext.defaultParallelism
     for name, df in _tile_stage_frames(spark).items():
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        groups = plan.count("FlatMapGroupsInPandas")
-        exchanges = [ln for ln in plan.splitlines() if "+- Exchange " in ln]
-        assert groups >= 1 and len(exchanges) == groups, (name, plan)
-        for ln in exchanges:
-            assert f", {cores}), REPARTITION_BY_NUM" in ln, (name, ln)
+        lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+        stages = [k for k, ln in enumerate(lines) if "MapInPandas tile_stage(" in ln]
+        exchanges = [ln for ln in lines if "+- Exchange " in ln]
+        assert stages and len(exchanges) == len(stages), (name, lines)
+        for k in stages:
+            sort, exchange = lines[k + 1], lines[k + 2]
+            assert "+- Sort [" in sort and sort.endswith("], false, 0"), (name, sort)
+            assert "+- Exchange hashpartitioning(" in exchange, (name, exchange)
+            assert f", {cores}), REPARTITION_BY_NUM" in exchange, (name, exchange)
+
+
+def _split_batches(pdf, cuts):
+    """pdf cut into batches at the row offsets `cuts`; a repeated cut
+    gives an empty batch."""
+    bounds = [0, *cuts, len(pdf)]
+    return [pdf.iloc[a:b] for a, b in zip(bounds, bounds[1:])]
+
+
+def _check_whole_groups(pdf, batches):
+    from gdal_spark.operators.render import _whole_groups
+
+    got = [(key, rows["v"].tolist())
+           for key, rows in _whole_groups(iter(batches), ("tx", "ty"))]
+    want = [(key, rows["v"].tolist())
+            for key, rows in pdf.groupby(["tx", "ty"], sort=True)]
+    assert got == want, (got, [len(b) for b in batches])
+
+
+# groups (sizes 1, 4, 2, 1, 3) of a partition sorted by (tx, ty)
+_GROUP_ROWS = [(0, 0)] + [(0, 5)] * 4 + [(1, 2)] * 2 + [(1, 3)] + [(2, 0)] * 3
+
+
+@pytest.mark.parametrize("cuts", [
+    [],                       # one batch
+    [3],                      # group (0, 5) split across two batches
+    [2, 3, 4],                # ... and across three
+    [2, 2, 2, 5, 5],          # empty batches inside a group and between groups
+    list(range(1, 11)),       # one-row batches
+    [0, 11, 11],              # empty batches at both ends
+], ids=["one", "two", "three", "empty", "one-row", "empty-ends"])
+def test_whole_groups_across_batches(cuts):
+    import pandas as pd
+
+    pdf = pd.DataFrame(_GROUP_ROWS, columns=["tx", "ty"]).assign(v=range(len(_GROUP_ROWS)))
+    _check_whole_groups(pdf, _split_batches(pdf, cuts))
+
+
+def test_whole_groups_every_split():
+    """Every way of cutting the partition into batches, and a partition
+    that is one group: each group comes out once, whole and in order."""
+    import itertools
+
+    import pandas as pd
+
+    pdf = pd.DataFrame(_GROUP_ROWS, columns=["tx", "ty"]).assign(v=range(len(_GROUP_ROWS)))
+    one = pdf.assign(tx=7, ty=7)
+    for n in range(len(pdf)):
+        for cuts in itertools.combinations(range(1, len(pdf)), n):
+            _check_whole_groups(pdf, _split_batches(pdf, list(cuts)))
+            _check_whole_groups(one, _split_batches(one, list(cuts)))
+    _check_whole_groups(pdf.iloc[:0], [pdf.iloc[:0]] * 2)
+
+
+def _overlapping_images(spark, n=6):
+    """n payload images sharing one top-left corner, so the corner's
+    tiles get groups of up to n rows."""
+    from pyspark.sql import functions as F
+
+    from gdal_spark.fixtures import georef
+    from gdal_spark.fixtures.images import build_images
+
+    x0, y0 = -8_000_000.0, 5_000_000.0
+    res = F.lit(georef.RES0)
+    return (
+        build_images(spark, n=n, with_payload=True)
+        .withColumn("xmin", F.lit(x0))
+        .withColumn("ymax", F.lit(y0))
+        .withColumn("xmax", F.lit(x0) + F.col("w").cast("double") * res)
+        .withColumn("ymin", F.lit(y0) - F.col("h").cast("double") * res)
+    )
+
+
+def test_tile_stages_same_rows_at_two_row_batches(spark):
+    """Groups cut across Arrow batches (maxRecordsPerBatch=2) give the
+    same rows as whole-batch groups, for every tile stage."""
+    from pyspark.sql import functions as F
+
+    from gdal_spark.operators.render import (
+        covering_tiles,
+        encode_tiles,
+        overview_tiles,
+        render_tiles,
+        render_tiles_stats,
+    )
+
+    images = _overlapping_images(spark)
+    deepest = covering_tiles(images, 12).groupBy("tile_x", "tile_y").count()
+    assert deepest.agg(F.max("count")).first()[0] > 2
+    base = render_tiles(images, 12, with_data=True, decode_payload=True).drop("n_px")
+    frames = {
+        "decoded": render_tiles(images, 12, decode_payload=True),
+        "decoded_desc": render_tiles(images, 12, decode_payload=True, ascending=False),
+        "synthetic": render_tiles(images, 12, resampling="bilinear"),
+        "synthetic_desc": render_tiles(images, 12, ascending=False),
+        "stats": render_tiles_stats(images, 12),
+        "encode": encode_tiles(base, 12),
+        "overview": overview_tiles(base, with_data=True),
+    }
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    whole = {name: sorted(df.collect()) for name, df in frames.items()}
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        cut = {name: sorted(df.collect()) for name, df in frames.items()}
+    finally:
+        spark.conf.set(conf, old)
+    for name in frames:
+        assert whole[name] and cut[name] == whole[name], name
+    assert whole["decoded"] != whole["decoded_desc"]
 
 
 def test_decode_jpeg_same_on_cold_and_warm_table_cache():

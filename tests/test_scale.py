@@ -102,6 +102,61 @@ def test_parquet_catalog_snapshots_advance(spark, tmp_path):
     assert cat.read("t.absent") is None
 
 
+def _jobs_started(spark, fn):
+    """(fn(), ids of the Spark jobs fn started)."""
+    sc = spark.sparkContext
+    group = "catalog-read-probe"
+    sc.setJobGroup(group, group)
+    try:
+        return fn(), sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_parquet_catalog_absent_table_starts_no_job(spark, tmp_path):
+    from gdal_spark.catalog import ParquetCatalog
+
+    cat = ParquetCatalog(spark, str(tmp_path))
+    assert _jobs_started(spark, lambda: cat.read("t.absent")) == (None, [])
+    cat.append(spark.range(3).toDF("k"), "t.present")
+    got, jobs = _jobs_started(spark, lambda: cat.read("t.present"))
+    assert got.count() == 3 and jobs  # the probe sees schema inference
+
+
+@pytest.mark.parametrize("hidden", ["_temporary", "_SUCCESS", "_snapshots", ".hidden"])
+def test_parquet_catalog_hidden_entries_only_is_no_table(spark, tmp_path, hidden):
+    from gdal_spark.catalog import ParquetCatalog
+
+    table = tmp_path / "t" / "tiles"
+    (table / hidden).mkdir(parents=True)
+    (table / "_SUCCESS").touch()
+    assert ParquetCatalog(spark, str(tmp_path)).read("t.tiles") is None
+
+
+def test_corrupt_committed_table_raises_not_reappends(spark, tmp_path):
+    """An unreadable committed table is an error, not "nothing
+    committed": a resume run must not re-append every key."""
+    import os
+
+    from py4j.protocol import Py4JJavaError
+
+    from gdal_spark.catalog import ParquetCatalog
+    from gdal_spark.operators.scale import ResumableWriter
+
+    out = tmp_path / "snap"
+    w = ResumableWriter(spark, str(out), keys=["k"])
+    w.run(spark.range(4).toDF("k").coalesce(1))
+    parts = sorted(p for p in os.listdir(out) if p.endswith(".parquet"))
+    assert len(parts) == 1
+    (out / parts[0]).write_bytes(b"not a parquet file")
+    with pytest.raises(Py4JJavaError):
+        ParquetCatalog(spark, str(out)).read(".")
+    with pytest.raises(Py4JJavaError):
+        w.run(spark.range(6).toDF("k"))
+    assert sorted(p for p in os.listdir(out) if p.endswith(".parquet")) == parts
+
+
 def test_resumable_writer_through_catalog(spark, tmp_path):
     from gdal_spark.catalog import get_catalog, iceberg_available
     from gdal_spark.operators.scale import ResumableWriter

@@ -36,7 +36,7 @@ def main() -> None:
         "pip_join (cell equi-join + broadcast edge-parity refine)": entry.q_pip_join,
         "knn (ring candidates + window re-rank)": entry.q_knn,
         "rasterize_tile_add (narrow runs -> one agg shuffle)": entry.q_rasterize_tile_add,
-        "tile_render (covering-tiles explode -> one shuffle -> applyInPandas)": entry.q_tile_render,
+        "tile_render (covering-tiles explode -> one shuffle -> sort -> one mapInPandas per partition)": entry.q_tile_render,
         "minhash_pairs (LSH bucket equi-join, no cross join)": entry.q_minhash_pairs,
         "ann_topk (broadcast queries + JVM dot products; brute-force baseline, BNLJ by design)": entry.q_ann_topk,
         "ann_lsh (banded signature equi-join; no nested loop)": entry.q_ann_lsh,
