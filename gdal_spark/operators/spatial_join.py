@@ -14,10 +14,12 @@ exactly one cell (no dedupe needed); polygons explode to their
 covering cells.
 
 At 10^12 rows: the cell join is the only shuffle. The refine explodes
-polygon edges ONCE into a tiny (zone, edge) table, broadcasts it, and
-runs the even-odd crossing test as pure Column math with map-side
-partial aggregation — the whole join stays inside whole-stage
-codegen and scales linearly with cores.
+polygon edges ONCE into a tiny (zone, edge) table and broadcasts it.
+The even-odd crossing test is in the edge-join condition, so only
+crossing edges reach the (point, zone) aggregate and an odd count is
+the parity; its division stays behind the straddle guard (horizontal
+edges, ANSI mode). Cell, bbox and crossing expressions are SQL text
+(the tilemath twins): one parse each, not py4j calls per operator.
 """
 
 from __future__ import annotations
@@ -27,20 +29,22 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from gdal_spark.tiles import tilemath as tm
 
 DEFAULT_INDEX_ZOOM = 7
 
 
+def _point_cell_sql(lon: str, lat: str, zoom: int) -> str:
+    mx = tm.sql_merc_x(tm.sql_ident(lon))
+    my = tm.sql_merc_y(tm.sql_ident(lat))
+    return tm.sql_cell_id(tm.sql_tile_x(mx, zoom), tm.sql_tile_y(my, zoom), zoom)
+
+
 def with_point_cell(
     df: DataFrame, lon: str, lat: str, zoom: int = DEFAULT_INDEX_ZOOM
 ) -> DataFrame:
-    mx = tm.merc_x(F.col(lon))
-    my = tm.merc_y(F.col(lat))
-    tx, ty = tm.tile_xy_cols(mx, my, zoom)
-    return df.withColumn("cell", tx.cast("long") * F.lit(1 << zoom) + ty.cast("long"))
+    return df.withColumn("cell", F.expr(_point_cell_sql(lon, lat, zoom)))
 
 
 def with_bbox_cells(
@@ -53,56 +57,49 @@ def with_bbox_cells(
 ) -> DataFrame:
     """Explode a degree-space bbox into covering cells at the index
     zoom (same GetTileIndices math as tiling)."""
-    mxmin = tm.merc_x(F.col(xmin_deg))
-    mxmax = tm.merc_x(F.col(xmax_deg))
+    q = tm.sql_ident
     # clamp latitudes into mercator validity before projecting
-    mymin = tm.merc_y(F.greatest(F.col(ymin_deg), F.lit(-tm.MAX_LAT)))
-    mymax = tm.merc_y(F.least(F.col(ymax_deg), F.lit(tm.MAX_LAT)))
-    min_tx, min_ty, max_tx, max_ty = tm.tile_range_cols(mxmin, mymin, mxmax, mymax, zoom)
-    df = (
-        df.withColumn("_tx", F.explode(F.sequence(min_tx, max_tx)))
-        .withColumn("_ty", F.explode(F.sequence(min_ty, max_ty)))
+    min_tx, min_ty, max_tx, max_ty = tm.sql_tile_range(
+        tm.sql_merc_x(q(xmin_deg)),
+        tm.sql_merc_y(f"greatest({q(ymin_deg)}, {tm.sql_double(-tm.MAX_LAT)})"),
+        tm.sql_merc_x(q(xmax_deg)),
+        tm.sql_merc_y(f"least({q(ymax_deg)}, {tm.sql_double(tm.MAX_LAT)})"),
+        zoom,
     )
-    return df.withColumn(
-        "cell", F.col("_tx").cast("long") * F.lit(1 << zoom) + F.col("_ty").cast("long")
-    ).drop("_tx", "_ty")
+    return (
+        df.withColumn("_tx", F.expr(f"explode(sequence({min_tx}, {max_tx}))"))
+        .withColumn("_ty", F.expr(f"explode(sequence({min_ty}, {max_ty}))"))
+        .withColumn("cell", F.expr(tm.sql_cell_id("_tx", "_ty", zoom)))
+        .drop("_tx", "_ty")
+    )
 
 
-_EDGE_SCHEMA = T.StructType(
-    [
-        T.StructField("_zk", T.LongType()),
-        T.StructField("ex1", T.DoubleType()),
-        T.StructField("ey1", T.DoubleType()),
-        T.StructField("ex2", T.DoubleType()),
-        T.StructField("ey2", T.DoubleType()),
-    ]
-)
+_EDGE_SCHEMA = "_zk long, ex1 double, ey1 double, ex2 double, ey2 double"
+
+
+def _explode_edges(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    from gdal_spark.geo.wkb import parse_wkb
+
+    for pdf in batches:
+        zks, x1s, y1s, x2s, y2s = [], [], [], [], []
+        for zk, wkb in zip(pdf["_zk"], pdf["geometry"]):
+            geom = parse_wkb(bytes(wkb))
+            for rings in geom.all_rings():
+                for ring in rings:
+                    zks.extend([int(zk)] * (len(ring) - 1))
+                    x1s.extend(ring[:-1, 0])
+                    y1s.extend(ring[:-1, 1])
+                    x2s.extend(ring[1:, 0])
+                    y2s.extend(ring[1:, 1])
+        yield pd.DataFrame({"_zk": zks, "ex1": x1s, "ey1": y1s, "ex2": x2s, "ey2": y2s})
 
 
 def zone_edges(zones_df: DataFrame, zone_key: str = "fid") -> DataFrame:
     """Explode polygon WKB into one row per ring edge (all rings —
     even-odd parity over the full edge set handles holes for free).
     Runs once over the polygon table; output is metadata-sized."""
-    from gdal_spark.geo.wkb import parse_wkb
-
-    def explode_edges(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            zks, x1s, y1s, x2s, y2s = [], [], [], [], []
-            for zk, wkb in zip(pdf[zone_key], pdf["geometry"]):
-                geom = parse_wkb(bytes(wkb))
-                for rings in geom.all_rings():
-                    for ring in rings:
-                        zks.extend([int(zk)] * (len(ring) - 1))
-                        x1s.extend(ring[:-1, 0])
-                        y1s.extend(ring[:-1, 1])
-                        x2s.extend(ring[1:, 0])
-                        y2s.extend(ring[1:, 1])
-            yield pd.DataFrame(
-                {"_zk": zks, "ex1": x1s, "ey1": y1s, "ex2": x2s, "ey2": y2s}
-            )
-
-    return zones_df.select(zone_key, "geometry").mapInPandas(
-        explode_edges, _EDGE_SCHEMA
+    return zones_df.selectExpr(f"{tm.sql_ident(zone_key)} AS _zk", "geometry").mapInPandas(
+        _explode_edges, _EDGE_SCHEMA
     )
 
 
@@ -123,36 +120,30 @@ def pip_join(
     The refine is all-JVM even-odd crossing parity over the zones'
     broadcast edge table.
     """
-    zxmin, zymin, zxmax, zymax = zone_bbox
-    pts = with_point_cell(points_df, point_lon, point_lat, index_zoom).select(
-        point_key, point_lon, point_lat, "cell"
+    q = tm.sql_ident
+    pk, px, py, zk = q(point_key), q(point_lon), q(point_lat), q(zone_key)
+    zxmin, zymin, zxmax, zymax = map(q, zone_bbox)
+    pts = points_df.selectExpr(
+        pk, px, py, f"{_point_cell_sql(point_lon, point_lat, index_zoom)} AS cell"
     )
     # WKB never ships through the candidate join; only the edges do
-    zn = with_bbox_cells(
-        zones_df.select(zone_key, *zone_bbox), zxmin, zymin, zxmax, zymax, index_zoom,
-    )
+    zn = with_bbox_cells(zones_df.select(zone_key, *zone_bbox), *zone_bbox, index_zoom)
     if broadcast_zones:
         zn = F.broadcast(zn)
-    cand = pts.join(zn, "cell")
     # ladder step 1: columnar bbox reject before any exact test
-    cand = cand.where(
-        (F.col(point_lon) >= F.col(zxmin))
-        & (F.col(point_lon) <= F.col(zxmax))
-        & (F.col(point_lat) >= F.col(zymin))
-        & (F.col(point_lat) <= F.col(zymax))
+    cand = pts.join(zn, "cell").where(
+        f"{px} >= {zxmin} AND {px} <= {zxmax} AND {py} >= {zymin} AND {py} <= {zymax}"
     )
-    cand = cand.select(point_key, point_lon, point_lat, zone_key)
-    edges = F.broadcast(zone_edges(zones_df, zone_key))
-    px, py = F.col(point_lon), F.col(point_lat)
-    straddles = (F.col("ey1") > py) != (F.col("ey2") > py)
-    xint = F.col("ex1") + (py - F.col("ey1")) * (
-        F.col("ex2") - F.col("ex1")
-    ) / (F.col("ey2") - F.col("ey1"))
-    crossing = F.when(straddles & (px < xint), F.lit(1)).otherwise(F.lit(0))
-    joined = cand.join(edges, cand[zone_key] == edges["_zk"])
+    # only crossing edges reach the aggregate: the division stays
+    # behind the straddle guard (ANSI mode, horizontal edges)
+    crosses = F.expr(
+        f"{zk} = _zk AND CASE WHEN (ey1 > {py}) <> (ey2 > {py}) "
+        f"THEN {px} < ex1 + ({py} - ey1) * (ex2 - ex1) / (ey2 - ey1) ELSE false END"
+    )
     return (
-        joined.groupBy(point_key, zone_key)
-        .agg(F.sum(crossing).alias("_crossings"))
-        .where(F.col("_crossings") % 2 == 1)
+        cand.join(F.broadcast(zone_edges(zones_df, zone_key)), crosses)
+        .groupBy(point_key, zone_key)
+        .agg(F.expr("count(1) AS _crossings"))
+        .where("_crossings % 2 = 1")
         .select(point_key, zone_key)
     )

@@ -34,36 +34,21 @@ def assign_tiles(
 
     Keeps all input columns; adds tile_z, tile_x, tile_y.
     """
-    min_tx, min_ty, max_tx, max_ty = tm.tile_range_cols(
-        F.col(xmin), F.col(ymin), F.col(xmax), F.col(ymax), z
+    q = tm.sql_ident
+    rng = tm.sql_tile_range(q(xmin), q(ymin), q(xmax), q(ymax), z)
+    names = ("_min_tx", "_min_ty", "_max_tx", "_max_ty")
+    return (
+        df.withColumns({c: F.expr(e) for c, e in zip(names, rng)})
+        .where(f"(_max_tx - _min_tx + 1) * (_max_ty - _min_ty + 1) <= {int(max_tiles_per_image)}")
+        .withColumn("tile_x", F.expr("explode(sequence(_min_tx, _max_tx))"))
+        .withColumn("tile_y_raw", F.expr("explode(sequence(_min_ty, _max_ty))"))
+        .withColumns({"tile_z": F.lit(z), "tile_y": tm.file_y(F.col("tile_y_raw"), z, convention)})
+        .drop(*names, "tile_y_raw")
     )
-    df = (
-        df.withColumn("_min_tx", min_tx)
-        .withColumn("_max_tx", max_tx)
-        .withColumn("_min_ty", min_ty)
-        .withColumn("_max_ty", max_ty)
-    )
-    n_tiles = (F.col("_max_tx") - F.col("_min_tx") + 1) * (
-        F.col("_max_ty") - F.col("_min_ty") + 1
-    )
-    df = df.where(n_tiles <= F.lit(max_tiles_per_image))
-    df = df.withColumn(
-        "tile_x", F.explode(F.sequence(F.col("_min_tx"), F.col("_max_tx")))
-    ).withColumn(
-        "tile_y_raw", F.explode(F.sequence(F.col("_min_ty"), F.col("_max_ty")))
-    )
-    df = (
-        df.withColumn("tile_z", F.lit(z))
-        .withColumn("tile_y", tm.file_y(F.col("tile_y_raw"), z, convention))
-        .drop("_min_tx", "_max_tx", "_min_ty", "_max_ty", "tile_y_raw")
-    )
-    return df
 
 
 def tile_counts(assigned: DataFrame) -> DataFrame:
     """Images per tile — the flagship aggregation. Partial (map-side)
     aggregation is automatic; the shuffle key (z,x,y) is the natural
     layout key of the output tiles table."""
-    return assigned.groupBy("tile_z", "tile_x", "tile_y").agg(
-        F.count("*").alias("n_images")
-    )
+    return assigned.groupBy("tile_z", "tile_x", "tile_y").agg(F.expr("count(1) AS n_images"))

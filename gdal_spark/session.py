@@ -9,6 +9,8 @@ is chosen so the same code scales to 1000 executors:
 - Arrow execution on: all pandas UDF traffic is Arrow-batched
   (the reference's own columnar fast path is its Arrow bridge,
   ogr/ogrsf_frmts/generic/ogrlayerarrow.cpp).
+- Arrow batches are bounded by bytes as well as rows: 4,096 rows of
+  64 KiB band planes would be 256 MiB per batch in a tile stage.
 - shuffle.partitions defaults to 2x cores locally; on a real cluster
   set it to ~2-3x total executor cores (AQE coalesces the excess).
 - Python workers start from `gdal_spark.worker`, not `pyspark.daemon`
@@ -30,6 +32,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+ARROW_MAX_BATCH_BYTES = 16 * 1024 * 1024
 
 
 def default_parallelism() -> int:
@@ -64,6 +69,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_MAX_BATCH_BYTES))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

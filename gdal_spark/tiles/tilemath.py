@@ -178,8 +178,14 @@ def tile_bounds_deg(z: int, x: int, y: int) -> tuple[float, float, float, float]
 
 
 # ---------------------------------------------------------------------------
-# SQL-text twins (shared with DuckDB oracles; both dialects parse these)
+# SQL-text twins (shared with DuckDB oracles; both dialects parse these).
+# Through F.expr they optimize to the same Catalyst as the builders above.
 # ---------------------------------------------------------------------------
+
+def sql_ident(name: str) -> str:
+    """A column name as a Spark SQL identifier (backtick-quoted)."""
+    return "`" + name.replace("`", "``") + "`"
+
 
 def sql_double(x: float) -> str:
     """A float literal that parses to the IDENTICAL double in Spark
@@ -218,3 +224,15 @@ def sql_tile_x(mx_expr: str, z: int) -> str:
 def sql_tile_y(my_expr: str, z: int) -> str:
     span = resolution(z) * TILE_SIZE
     return sql_tile_index(f"(({sql_double(ORIGIN)}) - ({my_expr})) / {sql_double(span)}", z)
+
+
+def sql_tile_range(
+    xmin: str, ymin: str, xmax: str, ymax: str, z: int
+) -> tuple[str, str, str, str]:
+    """SQL twin of `tile_range_cols`: (min_tx, min_ty, max_tx, max_ty)."""
+    return sql_tile_x(xmin, z), sql_tile_y(ymax, z), sql_tile_x(xmax, z), sql_tile_y(ymin, z)
+
+
+def sql_cell_id(x: str, y: str, z: int) -> str:
+    """SQL twin of `cell_id` (Spark SQL: `bigint` casts)."""
+    return f"cast({x} as bigint) * {1 << z} + cast({y} as bigint)"

@@ -177,3 +177,85 @@ def test_pip_prepared_equals_edges(spark):
         prepared |= {(pts["image_id"][k], z["fid"]) for k in np.nonzero(inside)[0]}
     assert edges == prepared
     assert edges  # non-trivial
+
+
+# py4j commands (calls, reflection lookups) that building the flagship
+# plans took when every operator chained per-operator Column calls and
+# withColumn steps; the SQL-text build must stay within a third of it.
+PARENT_PLAN_COMMANDS = 2227
+
+
+def test_flagship_plan_build_round_trips(spark):
+    """Building (not running) pip_join and tile_counts(assign_tiles(...))
+    costs few py4j round trips. Memory commands ("m") release JVM
+    objects of earlier plans whenever Python frees them, so they are
+    not counted."""
+    from unittest import mock
+
+    from py4j.clientserver import ClientServerConnection
+
+    from gdal_spark.operators.tiling import tile_counts
+
+    images = build_images(spark, n=100, with_payload=False)
+    zones = build_zones(spark, n=10)
+
+    def build():
+        return pip_join(images, zones), tile_counts(assign_tiles(images, 12))
+
+    build()  # first-use lookups
+    commands = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        commands.append(command[:1])
+        return send(self, command, *args, **kwargs)
+
+    with mock.patch.object(ClientServerConnection, "send_command", counting):
+        plans = build()
+    n = sum(c != "m" for c in commands)
+    assert 0 < n <= PARENT_PLAN_COMMANDS // 3, n
+    assert all(p.schema for p in plans)
+
+
+def test_pip_join_horizontal_edges_under_ansi(spark):
+    """A zone with horizontal edges, probed at exactly those edges'
+    latitudes: the crossing test's division stays behind its straddle
+    guard (no DIVIDE_BY_ZERO under ANSI mode), and the pairs equal
+    PreparedPolygon's."""
+    from gdal_spark.geo.geom import PreparedPolygon
+    from gdal_spark.geo.wkb import wkb_polygon
+
+    rings = {
+        0: [np.array([[0.0, 0.0], [10.0, 0.0], [10.0, 5.0], [4.0, 5.0], [4.0, 8.0],
+                      [10.0, 8.0], [10.0, 10.0], [0.0, 10.0], [0.0, 0.0]])],
+        1: [np.array([[20.0, 0.0], [30.0, 0.0], [30.0, 10.0], [20.0, 10.0], [20.0, 0.0]]),
+            np.array([[22.0, 5.0], [28.0, 5.0], [28.0, 7.0], [22.0, 7.0], [22.0, 5.0]])],
+    }
+    zones = spark.createDataFrame(
+        [
+            (fid, bytearray(wkb_polygon(r)), float(r[0][:, 0].min()), float(r[0][:, 1].min()),
+             float(r[0][:, 0].max()), float(r[0][:, 1].max()))
+            for fid, r in rings.items()
+        ],
+        "fid long, geometry binary, zxmin double, zymin double, zxmax double, zymax double",
+    )
+    xs = np.arange(-1.0, 31.5, 0.5)
+    ys = np.array([0.0, 2.5, 5.0, 6.0, 7.0, 8.0, 9.5, 10.0])
+    gx, gy = (a.ravel() for a in np.meshgrid(xs, ys))
+    ids = [f"p{k}" for k in range(len(gx))]
+    points = spark.createDataFrame(
+        pd.DataFrame({"image_id": ids, "lon_c": gx, "lat_c": gy})
+    )
+    exp = set()
+    for fid, r in rings.items():
+        inside = PreparedPolygon(r).contains_points(gx, gy)
+        exp |= {(ids[k], fid) for k in np.flatnonzero(inside)}
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        got = {(r[0], r[1]) for r in pip_join(points, zones).collect()}
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert got == exp
+    assert any(gy[int(p[1:])] in (0.0, 5.0, 8.0) for p, _ in got)  # on-edge rows count
+    assert {fid for _, fid in got} == {0, 1}

@@ -114,3 +114,15 @@ def test_spark_submit_with_py_files_keeps_pyspark_daemon(tmp_path):
     )
     probe = [l for l in r.stdout.splitlines() if l.startswith("PROBE")]
     assert r.returncode == 0 and probe == ["PROBE 3 -"], r.stderr[-3000:]
+
+
+def test_arrow_batches_capped_by_bytes(spark):
+    from gdal_spark.session import ARROW_MAX_BATCH_BYTES
+
+    key = "spark.sql.execution.arrow.maxBytesPerBatch"
+    assert ARROW_MAX_BATCH_BYTES == 16 * 1024 * 1024
+    assert spark.conf.get(key) == str(ARROW_MAX_BATCH_BYTES)
+    # a key Spark defines and reads, not a free-form setting it ignores
+    conf = spark._jsparkSession.sessionState().conf()
+    assert conf.isModifiable(key)
+    assert conf.arrowMaxBytesPerBatch() == ARROW_MAX_BATCH_BYTES

@@ -4,6 +4,7 @@ tile 11/354/818 (autotest/utilities/test_gdalalg_raster_tile.py:53-56).
 """
 
 import math
+import re
 
 import numpy as np
 import pytest
@@ -75,7 +76,8 @@ def test_tile_cols_against_numpy(spark):
     cy = rng.uniform(-tm.ORIGIN * 0.9, tm.ORIGIN * 0.9, n)
     half = rng.uniform(10, 50000, n)
     pdf = pd.DataFrame(
-        {"xmin": cx - half, "ymin": cy - half, "xmax": cx + half, "ymax": cy + half}
+        {"xmin": cx - half, "ymin": cy - half, "xmax": cx + half, "ymax": cy + half,
+         "k": np.arange(n)}
     )
     sdf = spark.createDataFrame(pdf)
     z = 9
@@ -103,6 +105,96 @@ def test_tile_cols_against_numpy(spark):
         axis=1,
     )
     assert np.array_equal(out, exp)
+
+    # assign_tiles' exploded rows: every (x, y) of each numpy range, TMS y
+    from gdal_spark.operators.tiling import assign_tiles
+
+    got = sorted(
+        assign_tiles(sdf, z, convention="tms").select("k", "tile_x", "tile_y").collect()
+    )
+    rows = sorted(
+        (k, tx, nmax - ty)
+        for k, (x0, y0, x1, y1) in enumerate(exp.tolist())
+        for tx in range(x0, x1 + 1)
+        for ty in range(y0, y1 + 1)
+    )
+    assert [tuple(r) for r in got] == rows
+    assert len(rows) > n  # some extents span several tiles
+
+
+def test_point_cells_against_numpy(spark):
+    """with_point_cell == numpy mercator + floor/snap/clamp cell key."""
+    import pandas as pd
+
+    from gdal_spark.operators.spatial_join import with_point_cell
+
+    rng = np.random.default_rng(5)
+    n = 500
+    pdf = pd.DataFrame(
+        {"lon c": rng.uniform(-180, 180, n), "lat.c": rng.uniform(-89.9, 89.9, n)}
+    )
+    pdf["k"] = np.arange(n)
+    for z in (7, 12):
+        got = (
+            with_point_cell(spark.createDataFrame(pdf), "lon c", "lat.c", z)
+            .select("k", "cell").toPandas().sort_values("k")["cell"].to_numpy()
+        )
+        mx = tm.EARTH_RADIUS * np.radians(pdf["lon c"].to_numpy())
+        lat = pdf["lat.c"].to_numpy()
+        my = tm.EARTH_RADIUS * np.log(np.tan(np.pi / 4 + np.radians(lat) / 2))
+        span = tm.resolution(z) * 256
+        nmax = (1 << z) - 1
+
+        def snap(v):
+            return np.clip(np.floor(v + 1e-3), 0, nmax).astype(np.int64)
+
+        exp = snap((mx + tm.ORIGIN) / span) * (1 << z) + snap((tm.ORIGIN - my) / span)
+        assert np.array_equal(got, exp)
+
+
+def _optimized(spark, names, *cols):
+    """The optimized plan of `cols` over double columns `names`, with
+    exprIds stripped. A Range source keeps the projection from being
+    folded into a local relation."""
+    from pyspark.sql import functions as F
+
+    src = spark.range(1).select(
+        *[F.col("id").cast("double").alias(n) for n in names]
+    )
+    plan = src.select(*[c.alias(f"v{k}") for k, c in enumerate(cols)])
+    return re.sub(r"#\d+", "", plan._jdf.queryExecution().optimizedPlan().toString())
+
+
+@pytest.mark.parametrize("z", [7, 12])
+@pytest.mark.parametrize("convention", ["xyz", "tms"])
+@pytest.mark.parametrize("names", [("lon", "lat"), ("lon c", "lat.c")])
+def test_sql_twins_optimize_like_column_builders(spark, z, convention, names):
+    """The SQL-text cell and tile-range expressions the join and tiling
+    operators parse optimize to the same Catalyst expressions as the
+    Column builders, identifiers with a space or dot included."""
+    from pyspark.sql import functions as F
+
+    lon, lat = names
+    q = tm.sql_ident
+    col_lon, col_lat = F.col(q(lon)), F.col(q(lat))
+    # point cell: mercator, then floor + snap + clamp, then the cell key
+    cell = tm.cell_id(*tm.tile_xy_cols(tm.merc_x(col_lon), tm.merc_y(col_lat), z), z)
+    sql_cell = tm.sql_cell_id(
+        tm.sql_tile_x(tm.sql_merc_x(q(lon)), z), tm.sql_tile_y(tm.sql_merc_y(q(lat)), z), z
+    )
+    # the latitude clamp of the zone-bbox cells
+    clamp = tm.merc_y(F.least(col_lat, F.lit(tm.MAX_LAT)))
+    sql_clamp = tm.sql_merc_y(f"least({q(lat)}, {tm.sql_double(tm.MAX_LAT)})")
+    # tile range over an EPSG:3857 extent, then the file-y convention
+    rng = list(tm.tile_range_cols(col_lon, col_lat, col_lat, col_lon, z))
+    sql_rng = list(tm.sql_tile_range(q(lon), q(lat), q(lat), q(lon), z))
+    sql_rng = [F.expr(c) for c in sql_rng]
+    for cols in (rng, sql_rng):
+        cols[1], cols[3] = (tm.file_y(c, z, convention) for c in (cols[1], cols[3]))
+    got = _optimized(spark, names, F.expr(sql_cell), F.expr(sql_clamp), *sql_rng)
+    exp = _optimized(spark, names, cell, clamp, *rng)
+    assert got == exp
+    assert str(1 << z) in got and "FLOOR" in got
 
 
 def test_quadkey_known_values(spark):

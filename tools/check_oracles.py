@@ -29,10 +29,11 @@ TABLES = [
 ROWS_ONLY = frozenset({"bpe_train"})
 
 # freshness ledger: preflight asserts every registered query has a
-# recent green row here (VERDICT r3 ask #10 — re-verification drift)
+# recent green row here (VERDICT r3 ask #10 — re-verification drift).
+# It is local state, so it lives under the git-ignored .cache/.
 CACHE_PATH = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    ".oracle_cache.json",
+    ".cache", "oracle_ledger.json",
 )
 
 
@@ -49,6 +50,7 @@ def record_green(names: list[str], sf_dir: str) -> None:
     now = time.time()
     for n in names:
         cache[n] = {"ts": now, "sf_dir": sf_dir}
+    os.makedirs(os.path.dirname(CACHE_PATH), exist_ok=True)
     tmp = CACHE_PATH + f".tmp{os.getpid()}"
     with open(tmp, "w") as fh:
         json.dump(cache, fh, indent=1, sort_keys=True)
